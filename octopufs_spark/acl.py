@@ -6,27 +6,24 @@ don't exist on a local filesystem, so the *algorithms* — tree walk,
 parent inheritance, DEFAULT→ACCESS conversion for files — run against
 an abstract ``AclStore``; the shipped local backend keeps a JSON
 sidecar per tree (chmod bits alone can't express named grantees).
-All mutations are driver-threaded with retry, like every metadata op
-in this engine (reference: 1000-thread pool helpers/implicits.scala:13,
-attempt>4 guards acl/AclManager.scala:73,162,279,308): single-HTTP-call
-operations need IO parallelism, not a cluster.
+All mutations are driver-threaded with the retry loop every metadata
+op in this engine shares, ``fs.core.retry_failed`` (reference:
+1000-thread pool helpers/implicits.scala:13, attempt>4 guards
+acl/AclManager.scala:73,162,279,308): single-HTTP-call operations need
+IO parallelism, not a cluster.
 """
 
 from __future__ import annotations
 
 import json
-import logging
 import threading
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass
 from pathlib import Path
 
-from octopufs_spark.fs.core import get_filesystem, list_tree
+from octopufs_spark.fs.core import get_filesystem, list_tree, retry_failed
+from octopufs_spark.fs.local import _run_threaded
 from octopufs_spark.fs.model import FsOperationResult
 
-log = logging.getLogger(__name__)
-
-MAX_ATTEMPTS = 5
 DEFAULT_WORKERS = 64
 
 ACCESS = "ACCESS"
@@ -205,35 +202,23 @@ class PosixChmodAclStore(AclStore):
         os.chmod(path, mode)
 
 
-def _apply_threaded(
-    fn, paths: list[str], attempt: int = 0, ignore_missing: bool = True
-) -> list[FsOperationResult]:
-    """Threaded apply with ≤5-attempt retry; failures on now-missing
-    paths are tolerated (reference: modifyAcls, acl/AclManager.scala:57-75 —
+def _apply_threaded(fn, paths: list[str]) -> list[FsOperationResult]:
+    """Threaded apply with the shared retry; a path that vanished
+    counts as success (reference: modifyAcls, acl/AclManager.scala:57-75 —
     files deleted concurrently shouldn't fail the job)."""
-    if not paths:
-        return []
 
     def one(path: str) -> FsOperationResult:
         try:
             fn(path)
-            return FsOperationResult(path, True)
         except FileNotFoundError:
-            return FsOperationResult(path, ignore_missing)
+            pass
         except Exception:
             return FsOperationResult(path, False)
+        return FsOperationResult(path, True)
 
-    with ThreadPoolExecutor(max_workers=min(DEFAULT_WORKERS, len(paths))) as pool:
-        results = list(pool.map(one, paths))
-    failed = [r.path for r in results if not r.success]
-    if failed:
-        if attempt + 1 >= MAX_ATTEMPTS:
-            raise RuntimeError(f"ACL op failed for {len(failed)} paths after {MAX_ATTEMPTS} attempts")
-        log.warning("retrying %d failed ACL ops (attempt %d)", len(failed), attempt + 1)
-        retried = _apply_threaded(fn, failed, attempt + 1, ignore_missing)
-        ok = {r.path for r in retried if r.success}
-        results = [FsOperationResult(r.path, True) if r.path in ok else r for r in results]
-    return results
+    return retry_failed(
+        lambda batch: _run_threaded(one, batch, DEFAULT_WORKERS), paths, "ACL op"
+    )
 
 
 def modify_acls(

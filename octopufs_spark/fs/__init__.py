@@ -2,7 +2,7 @@
 
 Inventory listing, sizes, tree diff, distributed copy, threaded
 metadata ops (move/delete), rerun-safety markers — re-expressed on
-pyarrow.fs + Spark DataFrames/RDDs. See SURVEY.md §2A for the
+pyarrow.fs + a Spark RDD for the distributed copy. See SURVEY.md §2A for the
 operator-by-operator mapping to the reference.
 """
 

@@ -14,7 +14,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyarrow import fs as pafs
 
-from octopufs_spark.fs.model import FsElement
+from octopufs_spark.fs.model import FsElement, FsOperationResult
 
 log = logging.getLogger(__name__)
 
@@ -22,6 +22,35 @@ log = logging.getLogger(__name__)
 # (reference: helpers/implicits.scala:13 — 1000 threads). Local FS
 # needs far less; object stores want more.
 DEFAULT_LIST_WORKERS = 64
+
+MAX_ATTEMPTS = 5  # reference: attempt > 4 guards
+
+
+def retry_failed(run_batch, items: list, what: str) -> list[FsOperationResult]:
+    """Run ``run_batch`` over ``items``, then re-run it on the failed
+    subset only, at most ``MAX_ATTEMPTS`` batches in all — the one retry
+    rule of every fan-out op (reference: README.md:6; the ``attempt > 4``
+    guards of LocalExecution, DistributedExecution and AclManager).
+
+    ``run_batch(batch)`` returns one result per item, in batch order,
+    and owns its op's own rules (rename reconciliation, missing-path
+    tolerance, abort on total failure). Returns each item's last result
+    in input order; raises once the attempts are used up.
+    """
+    results: list[FsOperationResult] = [None] * len(items)
+    pending = list(range(len(items)))
+    for attempt in range(MAX_ATTEMPTS):
+        if not pending:
+            break
+        if attempt:
+            log.warning("retrying %d failed %s ops (attempt %d)", len(pending), what, attempt + 1)
+        outcome = run_batch([items[i] for i in pending])
+        for i, r in zip(pending, outcome):
+            results[i] = r
+        pending = [i for i, r in zip(pending, outcome) if not r.success]
+    if pending:
+        raise RuntimeError(f"{what} failed for {len(pending)} paths after {MAX_ATTEMPTS} attempts")
+    return results
 
 
 def get_filesystem(uri: str) -> tuple[pafs.FileSystem, str]:

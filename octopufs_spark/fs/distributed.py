@@ -6,7 +6,9 @@ task sizes are uniform (the reference defeats default chunking with a
 custom round-robin partitioner, :51-60 — ``sc.parallelize(pairs, n)``
 round-robins a Python list the same way), the filesystem handle is
 opened once per partition (:64-66), results are collected and the
-failed subset retried up to 5 attempts (:72-83).
+failed subset re-run through the shared ``core.retry_failed`` (at most
+5 attempts, :72-83). A batch in which every pair failed aborts the
+copy at once instead of retrying, as the reference's loop does.
 
 Python workers have no py4j bridge to Hadoop FileSystems, so the
 per-task copy uses pyarrow.fs resolved from the URI inside the task
@@ -17,16 +19,10 @@ overwrite-idempotent, which makes duplicate speculative tasks safe.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import SparkSession
 
-from octopufs_spark.fs.core import list_tree
+from octopufs_spark.fs.core import list_tree, retry_failed
 from octopufs_spark.fs.model import FsOperationResult, Paths
-
-log = logging.getLogger(__name__)
-
-MAX_ATTEMPTS = 5
 
 
 def _copy_partition(pairs):
@@ -67,31 +63,23 @@ def _copy_partition(pairs):
 
 
 def copy_files(
-    spark: SparkSession, paths: list[Paths], task_count: int = -1, attempt: int = 0
+    spark: SparkSession, paths: list[Paths], task_count: int = -1
 ) -> list[FsOperationResult]:
     """Distributed copy of explicit (source, target) pairs
     (reference: copyFiles, fs/DistributedExecution.scala:42-84)."""
     if not paths:
         return []
-    n = len(paths) if task_count == -1 else task_count
     sc = spark.sparkContext
-    pairs = [(p.source_path, p.target_path) for p in paths]
-    raw = sc.parallelize(pairs, max(1, n)).mapPartitions(_copy_partition).collect()
-    results = [FsOperationResult(path, ok) for path, ok in raw]
-    failed_srcs = {r.path for r in results if not r.success}
-    if failed_srcs:
-        if len(failed_srcs) == len(paths) or attempt + 1 >= MAX_ATTEMPTS:
-            raise RuntimeError(
-                f"distributed copy failed for {len(failed_srcs)}/{len(paths)} files "
-                f"(attempt {attempt + 1})"
-            )
-        log.warning("retrying %d failed copies (attempt %d)", len(failed_srcs), attempt + 1)
-        retried = copy_files(
-            spark, [p for p in paths if p.source_path in failed_srcs], task_count, attempt + 1
-        )
-        ok = {r.path for r in retried if r.success}
-        results = [FsOperationResult(r.path, True) if r.path in ok else r for r in results]
-    return results
+
+    def copy_batch(batch: list[Paths]) -> list[FsOperationResult]:
+        n = len(batch) if task_count == -1 else task_count
+        pairs = [(p.source_path, p.target_path) for p in batch]
+        raw = sc.parallelize(pairs, max(1, n)).mapPartitions(_copy_partition).collect()
+        if not any(ok for _, ok in raw):
+            raise RuntimeError(f"distributed copy failed for {len(batch)}/{len(batch)} files")
+        return [FsOperationResult(path, ok) for path, ok in raw]
+
+    return retry_failed(copy_batch, paths, "distributed copy")
 
 
 def copy_folder(

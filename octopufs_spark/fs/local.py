@@ -5,26 +5,28 @@ fs/LocalExecution.scala). Renames and deletes on object stores are
 single metadata calls — no cluster needed; a large thread pool on the
 driver saturates the storage API instead (reference: 1000-thread pool,
 helpers/implicits.scala:13; ≈1 min for tens of thousands of paths,
-README.md:11). Every mutating loop retries failed subsets up to 5
-attempts (reference: README.md:6) and reconciles rename
-false-negatives (a "failed" rename whose source vanished and target
-exists actually succeeded — reference: fs/LocalExecution.scala:151-157).
+README.md:11). Every mutating op retries its failed subset through the
+shared ``core.retry_failed`` (at most 5 attempts, reference:
+README.md:6); renames also reconcile false-negatives (a "failed"
+rename whose source vanished and target exists actually succeeded —
+reference: fs/LocalExecution.scala:151-157).
 """
 
 from __future__ import annotations
 
-import logging
 from concurrent.futures import ThreadPoolExecutor
 
 from pyarrow import fs as pafs
 
-from octopufs_spark.fs.core import check_if_fs_is_the_same, does_move_look_safe, get_filesystem
+from octopufs_spark.fs.core import (
+    check_if_fs_is_the_same,
+    does_move_look_safe,
+    get_filesystem,
+    retry_failed,
+)
 from octopufs_spark.fs.model import FsOperationResult, Paths
 from octopufs_spark.fs.safety import SafetyFuse
 
-log = logging.getLogger(__name__)
-
-MAX_ATTEMPTS = 5  # reference: attempt > 4 guards
 OP_TIMEOUT_S = 600  # reference: helpers/implicits.scala:15
 DEFAULT_WORKERS = 256
 
@@ -37,55 +39,33 @@ def _run_threaded(fn, items, max_workers: int = DEFAULT_WORKERS) -> list:
         return [f.result(timeout=OP_TIMEOUT_S) for f in futures]
 
 
-def _get_false_negatives(fs: pafs.FileSystem, paths: list[Paths]) -> list[Paths]:
-    """Renames that reported failure but actually happened
-    (reference: getFalseNegatives, fs/LocalExecution.scala:151-157)."""
-    out = []
-    for p in paths:
-        src_gone = fs.get_file_info(p.source_path).type == pafs.FileType.NotFound
-        trg_there = fs.get_file_info(p.target_path).type != pafs.FileType.NotFound
-        if src_gone and trg_there:
-            out.append(p)
-    return out
+def _is_false_negative(fs: pafs.FileSystem, p: Paths) -> bool:
+    """A rename that reported failure but actually happened: source
+    gone, target there (reference: getFalseNegatives,
+    fs/LocalExecution.scala:151-157)."""
+    src_gone = fs.get_file_info(p.source_path).type == pafs.FileType.NotFound
+    return src_gone and fs.get_file_info(p.target_path).type != pafs.FileType.NotFound
 
 
-def move_paths(paths: list[Paths], attempt: int = 0) -> list[FsOperationResult]:
+def move_paths(paths: list[Paths]) -> list[FsOperationResult]:
     """Parallel renames with retry + false-negative reconciliation
     (reference: movePaths, fs/LocalExecution.scala:70-97)."""
     if not paths:
         return []
     fs, _ = get_filesystem(paths[0].source_path)
-    stripped = {p.source_path: _strip_pair(p) for p in paths}
 
     def mv(p: Paths) -> FsOperationResult:
-        sp = stripped[p.source_path]
+        sp = _strip_pair(p)
         try:
             fs.move(sp.source_path, sp.target_path)
             return FsOperationResult(p.source_path, True)
         except Exception:
-            return FsOperationResult(p.source_path, False)
+            return FsOperationResult(p.source_path, _is_false_negative(fs, sp))
 
-    results = _run_threaded(mv, paths)
-    failed = [p for p, r in zip(paths, results) if not r.success]
-    if failed:
-        false_neg = {
-            fn.source_path
-            for fn in _get_false_negatives(fs, [stripped[p.source_path] for p in failed])
-        }
-        fixed = {p.source_path for p in failed if stripped[p.source_path].source_path in false_neg}
-        results = [FsOperationResult(r.path, True) if r.path in fixed else r for r in results]
-        failed = [p for p in failed if p.source_path not in fixed]
-    if failed:
-        if attempt + 1 >= MAX_ATTEMPTS:
-            raise RuntimeError(f"move failed for {len(failed)} paths after {MAX_ATTEMPTS} attempts")
-        log.warning("retrying %d failed moves (attempt %d)", len(failed), attempt + 1)
-        retried = move_paths(failed, attempt + 1)
-        ok = {r.path for r in retried if r.success}
-        results = [FsOperationResult(r.path, True) if r.path in ok else r for r in results]
-    return results
+    return retry_failed(lambda batch: _run_threaded(mv, batch), paths, "move")
 
 
-def delete_paths(paths: list[str], attempt: int = 0) -> list[FsOperationResult]:
+def delete_paths(paths: list[str]) -> list[FsOperationResult]:
     """Parallel recursive deletes with retry
     (reference: deletePaths, fs/LocalExecution.scala:106-128)."""
     if not paths:
@@ -106,16 +86,7 @@ def delete_paths(paths: list[str], attempt: int = 0) -> list[FsOperationResult]:
         except Exception:
             return FsOperationResult(path, False)
 
-    results = _run_threaded(rm, paths)
-    failed = [r.path for r in results if not r.success]
-    if failed:
-        if attempt + 1 >= MAX_ATTEMPTS:
-            raise RuntimeError(f"delete failed for {len(failed)} paths after {MAX_ATTEMPTS} attempts")
-        log.warning("retrying %d failed deletes (attempt %d)", len(failed), attempt + 1)
-        retried = delete_paths(failed, attempt + 1)
-        ok = {r.path for r in retried if r.success}
-        results = [FsOperationResult(r.path, True) if r.path in ok else r for r in results]
-    return results
+    return retry_failed(lambda batch: _run_threaded(rm, batch), paths, "delete")
 
 
 def delete_folder(folder_uri: str, delete_content_only: bool = False) -> None:

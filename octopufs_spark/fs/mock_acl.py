@@ -21,8 +21,9 @@ real ADLS/HDFS ACL store has and the local stores can't model:
 State is one JSON sidecar under the shared ``MOCKFS_ROOT`` (same
 deterministic cross-process resolution the mock data plane uses),
 guarded by a process-wide lock with atomic replace, so the threaded
-ACL algorithms (`_apply_threaded`) drive it exactly like a remote
-store. The :class:`~octopufs_spark.fs.mockfs.MockRemoteHandler`
+ACL algorithms (``acl._apply_threaded``: the ``fs.local._run_threaded``
+pool under the shared ``fs.core.retry_failed`` loop) drive it exactly
+like a remote store. The :class:`~octopufs_spark.fs.mockfs.MockRemoteHandler`
 notifies this module on create/delete/move; all hooks no-op unless an
 ACL sidecar exists, so the pure-filesystem suites pay nothing.
 """

@@ -108,6 +108,12 @@ def ngram_jaccard_pairs(
     only *which pairs are discoverable* (a pair sharing exclusively
     ubiquitous n-grams is missed — by construction those carry ~zero
     Jaccard selectivity), never a reported similarity value.
+
+    ``sets`` (optional) is a caller-supplied [id_col, ngrams] frame, as
+    ``hashed_ngram_sets`` builds it. NULL elements inside its arrays
+    are dropped from the inverted index, so a shared NULL never makes a
+    pair a candidate; scoring still reads the full arrays.
+    ``ngram_sets`` never emits NULL elements.
     """
     if sets is not None:
         # pre-hashed shingle sets from hashed_ngram_sets (the caller

@@ -299,6 +299,11 @@ def cosine_near_dup_pairs_ann(
     low thresholds needs fewer planes + more tables and approaches
     all-pairs cost — which is inherent to LSH, not this implementation.
     Returns [vec_a, vec_b, cos_sim] with vec_a < vec_b.
+
+    Precondition: ``id_col`` is unique in ``vecs``. Embeddings attach to
+    the deduplicated candidate pairs by id, so a repeated id would fan
+    out into repeated output rows; dedup the input first if it may
+    hold duplicates.
     """
     b = hyperplane_lsh_multi(vecs, dim, n_planes, n_tables, seed, id_col, vec_col)
     # Decide on thin proxies, attach payloads once (r11, guide §8/§2.3):

@@ -113,8 +113,18 @@ def copy_overwrite_partitions(
     (reference: copyOverwritePartitions, Promotor.scala:259-264). SQL
     analog: dynamic-partition INSERT OVERWRITE (the engine default
     partitionOverwriteMode=dynamic exists for exactly this)."""
-    delete_table_partitions(spark, trg_table, match_strings, must_match=False)
+    _delete_partitions(spark, trg_table, match_strings)
     return copy_table_partitions(spark, src_table, trg_table, match_strings, task_count)
+
+
+def _delete_partitions(spark: SparkSession, table: str, match_strings: list[str]) -> list[str]:
+    """Delete the substring-matched partition folders of ``table`` and
+    return them; the caller refreshes the table once, after its last
+    file-level step."""
+    parts = catalog.filter_partitions(spark, table, match_strings)
+    if parts:
+        delete_paths(parts)
+    return parts
 
 
 def delete_table_partitions(
@@ -122,11 +132,8 @@ def delete_table_partitions(
 ) -> None:
     """Delete substring-matched partition folders + refresh
     (reference: deleteTablePartitions, Promotor.scala:309-316)."""
-    parts = catalog.filter_partitions(spark, table, match_strings)
-    if not parts and must_match:
+    if not _delete_partitions(spark, table, match_strings) and must_match:
         raise ValueError(f"no partitions of {table} match {match_strings}")
-    if parts:
-        delete_paths(parts)
     catalog.refresh_metadata(spark, table)
 
 
@@ -143,7 +150,7 @@ def move_table_partitions(
         raise ValueError(f"no partitions of {src_table} match {match_strings}")
     src_loc = catalog.get_table_location(spark, src_table).rstrip("/")
     trg_loc = catalog.get_table_location(spark, trg_table).rstrip("/")
-    delete_table_partitions(spark, trg_table, match_strings, must_match=False)
+    _delete_partitions(spark, trg_table, match_strings)
     results = move_folders(spark, parts, src_loc, trg_loc)
     catalog.refresh_metadata(spark, src_table)
     catalog.refresh_metadata(spark, trg_table)

@@ -55,6 +55,13 @@ REVERIFY_FROM_ROUND: dict[str, int] = {
     "q_graph_pagerank": 11,  # checkpointed statics + folded dangling mass
     "q_graph_triangles": 11,  # checkpointed oriented edges, fused report
     "q_tpch_q2": 11,  # broadcast semi-join pre-filter on lineitem
+    # r11 connected_components / cosine_near_dup_pairs_ann rewrites
+    # changed the registered plans of these five dedup queries too:
+    "q_ext_dedup_cluster": 11,
+    "q_ext_dedup_semantic": 11,
+    "q_ext_dedup_semantic_ann": 11,
+    "q_ext_dedup_semantic_det": 11,
+    "q_ext_dedup_canonical_quality": 11,
 }
 
 

@@ -8,6 +8,7 @@ from pathlib import Path
 import pytest
 
 from octopufs_spark.fs import list_tree
+from octopufs_spark.fs.core import MAX_ATTEMPTS, retry_failed
 from octopufs_spark.fs.delta import get_delta, synchronize
 from octopufs_spark.fs.distributed import copy_files, copy_folder
 from octopufs_spark.fs.local import (
@@ -16,7 +17,7 @@ from octopufs_spark.fs.local import (
     move_folder_content,
     move_paths,
 )
-from octopufs_spark.fs.model import Paths
+from octopufs_spark.fs.model import FsOperationResult, Paths
 from tests.conftest import build_random_tree
 
 
@@ -71,13 +72,58 @@ def test_distributed_copy_retry_exhaustion(spark, tmp_path):
 
 
 def test_get_delta_directions(spark, tmp_path, seeded_rng):
-    build_random_tree(tmp_path / "a", seeded_rng, depth=1)
+    files = build_random_tree(tmp_path / "a", seeded_rng, depth=1)
     copy_folder(spark, str(tmp_path / "a"), str(tmp_path / "b"))
     (tmp_path / "a" / "only_src.txt").write_text("s")
+    (tmp_path / "a" / "0_src.txt").write_text("s")
     (tmp_path / "b" / "only_trg.txt").write_text("t")
-    missing, extra = get_delta(spark, str(tmp_path / "a"), str(tmp_path / "b"))
-    assert missing == ["only_src.txt"]
-    assert extra == ["only_trg.txt"]
+    nested = tmp_path / "a" / "n1" / "n2"
+    nested.mkdir(parents=True)
+    (nested / "deep.txt").write_text("d")
+    # same relative path, new size: the diff key is (rel_path, byte_size)
+    rewritten = files[-1]
+    rewritten.write_bytes(rewritten.read_bytes() + b"grown")
+    rel = str(rewritten.relative_to(tmp_path / "a"))
+    sc = spark.sparkContext
+    group = f"get_delta_{tmp_path.name}"
+    sc.setJobGroup(group, "get_delta must not launch Spark jobs")
+    try:
+        missing, extra = get_delta(spark, str(tmp_path / "a"), str(tmp_path / "b"))
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert missing == sorted(["0_src.txt", "n1/n2/deep.txt", "only_src.txt", rel])
+    assert extra == sorted(["only_trg.txt", rel])
+    assert jobs == []
+
+
+def test_retry_failed_reruns_only_the_failed_subset():
+    fails_left = {"b": 2}
+    batches = []
+
+    def flaky(batch):
+        batches.append(list(batch))
+        out = []
+        for item in batch:
+            ok = fails_left.get(item, 0) == 0
+            if not ok:
+                fails_left[item] -= 1
+            out.append(FsOperationResult(item, ok))
+        return out
+
+    results = retry_failed(flaky, ["a", "b", "c"], "flaky op")
+    assert results == [FsOperationResult(x, True) for x in ("a", "b", "c")]
+    assert batches == [["a", "b", "c"], ["b"], ["b"]]
+
+    calls = []
+
+    def broken(batch):
+        calls.append(list(batch))
+        return [FsOperationResult(item, item != "x") for item in batch]
+
+    with pytest.raises(RuntimeError, match="flaky op failed for 1 paths"):
+        retry_failed(broken, ["x", "y"], "flaky op")
+    assert calls == [["x", "y"]] + [["x"]] * (MAX_ATTEMPTS - 1)
 
 
 def test_synchronize_preserves_sums(spark, tmp_path, seeded_rng):

@@ -10,10 +10,12 @@ TestCopyOverwriteNonpartitionedTable).
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
-from octopufs_spark import promotor
+from octopufs_spark import catalog, promotor
 from tests.conftest import SF_DIR
 
 
@@ -96,6 +98,29 @@ def test_move_table_partitions(spark, sales_tables):
     promotor.move_table_partitions(spark, src, trg, ["o_year=1996"])
     assert spark.table(trg).where("o_year = 1996").count() == n96
     assert spark.table(src).where("o_year = 1996").count() == 0
+
+
+def test_each_op_refreshes_each_table_once(spark, sales_tables, monkeypatch):
+    """A refresh is refreshTable + listColumns + a recoverPartitions
+    job, so an op refreshes each table it touched once, at its end."""
+    src, trg = sales_tables
+    calls = []
+    real = catalog.refresh_metadata
+
+    def counting_refresh(session, table):
+        calls.append(table)
+        real(session, table)
+
+    monkeypatch.setattr(catalog, "refresh_metadata", counting_refresh)
+
+    def refreshes(op, *args):
+        calls.clear()
+        op(spark, *args)
+        return Counter(calls)
+
+    assert refreshes(promotor.copy_overwrite_partitions, src, trg, ["o_year=1996"]) == {trg: 1}
+    assert refreshes(promotor.move_table_partitions, src, trg, ["o_year=1996"]) == {src: 1, trg: 1}
+    assert refreshes(promotor.delete_table_partitions, trg, ["o_year=1996"]) == {trg: 1}
 
 
 def test_validator_rejects_mismatch(spark, sales_tables, tmp_path):

@@ -65,6 +65,13 @@ def main() -> None:
         "  only accumulate green driver samples over time.",
         "- **FIX-PENDING**: the latest driver sample failed (fix landed or due).",
         "",
+        "Recording a round: regenerate this file with",
+        "`python tools/verification_ledger.py` after the round's",
+        "`CORRECTNESS_r*.json` lands. The default pytest run deselects the",
+        "`slow` tests (pytest.ini), so every few rounds, and always before a",
+        "round that touches the registry or the engine, also run",
+        "`pytest tests/ -m slow` and note its result in CHANGES.md.",
+        "",
     ]
 
     counts = {"DRIVER-VERIFIED": 0, "SWEEP-ONLY": 0, "FIX-PENDING": 0}
