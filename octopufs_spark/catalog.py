@@ -2,8 +2,11 @@
 TableMetadataValidator.scala).
 
 Table locations, first-level partition paths, substring partition
-filtering, refresh/recover, schema-compat validation — all via the
-public spark.catalog / spark.sql surface.
+filtering, refresh/recover, schema-compat validation. Location, format,
+column and partition facts are read from the table's JVM CatalogTable,
+as the reference does: spark.catalog.listColumns collects its result
+through toLocalIterator, one Spark job per result partition, so it is
+kept only for temp views, which have no CatalogTable.
 """
 
 from __future__ import annotations
@@ -38,12 +41,13 @@ def get_table_metadata(spark: SparkSession, table: str) -> dict:
     metastore/package.scala:84-86): location, provider, partition
     columns, table type."""
     meta = _catalog_table(spark, table)
+    partition_columns = [name for name, _, part in _columns(spark, table, meta) if part]
     if meta is not None:
         provider = meta.provider()
         return {
             "location": meta.location().toString(),
             "provider": provider.get() if provider.isDefined() else None,
-            "partition_columns": list(meta.partitionColumnNames()),
+            "partition_columns": partition_columns,
             "table_type": meta.tableType().name(),
         }
     rows = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
@@ -51,9 +55,7 @@ def get_table_metadata(spark: SparkSession, table: str) -> dict:
     return {
         "location": kv.get("Location"),
         "provider": kv.get("Provider"),
-        "partition_columns": [
-            c.name for c in spark.catalog.listColumns(table) if c.isPartition
-        ],
+        "partition_columns": partition_columns,
         "table_type": kv.get("Type"),
     }
 
@@ -128,8 +130,24 @@ def refresh_metadata(spark: SparkSession, table: str) -> None:
             log.info("recoverPartitions skipped for %s: %s", table, e)
 
 
+def _columns(spark: SparkSession, table: str, meta=None) -> list[tuple[str, str, bool]]:
+    """(name, type, is_partition) of each column, as
+    spark.catalog.listColumns reports them (CHAR/VARCHAR read as
+    string), from the CatalogTable ``meta``; looked up when not given.
+    listColumns itself is the fallback for temp views only."""
+    if meta is None:
+        meta = _catalog_table(spark, table)
+    if meta is None:
+        return [(c.name, c.dataType, c.isPartition) for c in spark.catalog.listColumns(table)]
+    parts = set(meta.partitionSchema().fieldNames())
+    return [
+        (f.name(), f.dataType().catalogString(), f.name() in parts)
+        for f in meta.schema().fields()
+    ]
+
+
 def _is_partitioned(spark: SparkSession, table: str) -> bool:
-    return any(c.isPartition for c in spark.catalog.listColumns(table))
+    return any(part for _, _, part in _columns(spark, table))
 
 
 def validate_compatibility(spark: SparkSession, src_table: str, trg_table: str) -> None:
@@ -137,20 +155,21 @@ def validate_compatibility(spark: SparkSession, src_table: str, trg_table: str) 
     prerequisite for file-level promotion between tables
     (reference: TableMetadataValidator.validate,
     metastore/TableMetadataValidator.scala:11-30)."""
-    src_cols = [(c.name, c.dataType, c.isPartition) for c in spark.catalog.listColumns(src_table)]
-    trg_cols = [(c.name, c.dataType, c.isPartition) for c in spark.catalog.listColumns(trg_table)]
+    src_meta = _catalog_table(spark, src_table)
+    trg_meta = _catalog_table(spark, trg_table)
+    src_cols = _columns(spark, src_table, src_meta)
+    trg_cols = _columns(spark, trg_table, trg_meta)
     if src_cols != trg_cols:
         raise ValueError(
             f"incompatible schemas/partitioning: {src_table}={src_cols} vs {trg_table}={trg_cols}"
         )
-    src_fmt = _table_format(spark, src_table)
-    trg_fmt = _table_format(spark, trg_table)
+    src_fmt = _table_format(spark, src_table, src_meta)
+    trg_fmt = _table_format(spark, trg_table, trg_meta)
     if src_fmt != trg_fmt:
         raise ValueError(f"incompatible formats: {src_fmt} vs {trg_fmt}")
 
 
-def _table_format(spark: SparkSession, table: str) -> dict[str, str]:
-    meta = _catalog_table(spark, table)
+def _table_format(spark: SparkSession, table: str, meta) -> dict[str, str]:
     if meta is not None:
         provider = meta.provider()
         storage = meta.storage()

@@ -101,8 +101,9 @@ def test_move_table_partitions(spark, sales_tables):
 
 
 def test_each_op_refreshes_each_table_once(spark, sales_tables, monkeypatch):
-    """A refresh is refreshTable + listColumns + a recoverPartitions
-    job, so an op refreshes each table it touched once, at its end."""
+    """A refresh is refreshTable + recoverPartitions, with the
+    partitioning read from the CatalogTable; an op refreshes each table
+    it touched once, at its end."""
     src, trg = sales_tables
     calls = []
     real = catalog.refresh_metadata
