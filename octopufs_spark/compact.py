@@ -34,15 +34,22 @@ def figure_out_number_of_partitions(
     """Target partition count, or -1 to skip (folder already compact)
     (reference: figureOutNumberOfPartition, Coalesce.scala:19-31).
 
-    Mirrors the reference heuristic exactly: only the folder's
-    *immediate* files count (data files of a leaf partition — nested
-    subfolder files belong to other leaves), and fewer than 2 files
-    means nothing to compact. Median is the upper median
-    (sorted[n/2]), as in the reference.
+    Mirrors the reference heuristic: only the folder's *immediate*
+    data files count (nested subfolder files belong to other leaves),
+    and fewer than 2 files means nothing to compact. Median is the
+    upper median (sorted[n/2]), as in the reference. Names starting
+    with ``_`` or ``.`` (``_SUCCESS``, ``.crc`` checksums) are not data,
+    as in Spark's file index: counting them would make the tiny
+    checksums the median of a compacted folder, which would then be
+    rewritten on every run.
     """
     fs, folder = get_filesystem(folder_uri)
     infos = fs.get_file_info(pafs.FileSelector(folder, recursive=False, allow_not_found=True))
-    sizes = sorted(i.size for i in infos if i.type == pafs.FileType.File)
+    sizes = sorted(
+        i.size
+        for i in infos
+        if i.type == pafs.FileType.File and not i.base_name.startswith(("_", "."))
+    )
     if len(sizes) < 2:
         return -1
     target_bytes = requested_mb * 1024 * 1024
@@ -95,10 +102,14 @@ def do_partition_coalesce(
     """Fire per-leaf compaction jobs concurrently
     (reference: doPartitionCoalesce, Coalesce.scala:85-93)."""
     own_pool = pool or ThreadPoolExecutor(max_workers=DEFAULT_THREADS)
-    return [
+    futures = [
         own_pool.submit(do_auto_coalesce, spark, leaf, requested_file_size_mb)
         for leaf in get_lowest_folders(top_uri)
     ]
+    if pool is None:
+        # queued work still runs; the threads exit once it is done
+        own_pool.shutdown(wait=False)
+    return futures
 
 
 def do_it_all(

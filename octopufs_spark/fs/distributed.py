@@ -15,6 +15,12 @@ per-task copy uses pyarrow.fs resolved from the URI inside the task
 (SURVEY.md §7 hard-part 1). The reference recommends disabling
 speculation for copy jobs (README.md:25); copies here are
 overwrite-idempotent, which makes duplicate speculative tasks safe.
+
+A copy task's fixed cost is PySpark's, not the copy's: each Python task
+resets the import cache, which before CPython 3.13 re-read
+``pyspark.zip`` at about 0.22 CPU-s per task. The library's worker
+daemon (``octopufs_spark.pydaemon``, set by ``session.get_spark``)
+skips that re-read for unchanged zips.
 """
 
 from __future__ import annotations

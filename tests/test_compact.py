@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor, wait
 from pathlib import Path
 
 from octopufs_spark import compact
@@ -58,3 +61,35 @@ def test_do_it_all_partitioned(spark, tmp_path):
     rewritten = compact.do_it_all(spark, [root], requested_file_size_mb=100)
     assert rewritten > 0
     assert spark.read.parquet(root).count() == n
+    # a compacted leaf holds one data file beside _SUCCESS and .crc
+    # files; only the data file counts, so a second run settles
+    names = sorted(str(p.relative_to(root)) for p in Path(root).rglob("*"))
+    assert any(name.endswith(".crc") for name in names)
+    assert compact.do_it_all(spark, [root], requested_file_size_mb=100) == 0
+    assert sorted(str(p.relative_to(root)) for p in Path(root).rglob("*")) == names
+
+
+def test_own_pool_threads_exit(tmp_path, monkeypatch):
+    """Without a caller's pool, do_partition_coalesce shuts its own pool
+    down: its threads exit once the work is done, even while something
+    still holds the pool."""
+    for i in range(4):
+        (tmp_path / "t" / f"p={i}").mkdir(parents=True)
+    pools = []
+
+    class Recorded(ThreadPoolExecutor):
+        def __init__(self, *a, **kw):
+            super().__init__(*a, **kw)
+            pools.append(self)
+
+    monkeypatch.setattr(compact, "ThreadPoolExecutor", Recorded)
+    baseline = threading.active_count()
+    # empty leaves: nothing to compact, so no Spark session is needed
+    futures = compact.do_partition_coalesce(None, str(tmp_path / "t"))
+    done, _ = wait(futures, timeout=30)
+    assert len(done) == 4 and [f.result() for f in futures] == [False] * 4
+    assert len(pools) == 1
+    deadline = time.monotonic() + 10
+    while threading.active_count() > baseline and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert threading.active_count() == baseline
