@@ -10,7 +10,12 @@ never list the data directory): each commit writes
 readers resolve the newest version. Writers never mutate a published
 manifest; data files are immutable once referenced.
 
-Atomicity story by store:
+Atomicity story. Every file in the log — version files, tags, branch
+refs and ``hint/<N>`` files — is written by ONE primitive,
+``ManifestTable._put_if_absent`` (stage, no-overwrite publish, remove
+the staged file on a lost race), and every commit goes through ONE CAS
+loop, ``ManifestTable._commit_with_retry``. What the publish means by
+store:
 
 - **Local / HDFS**: a version file is staged as ``v{N}.json.tmp.{run}``
   and published with a no-overwrite rename — POSIX/HDFS rename makes
@@ -117,15 +122,11 @@ def _content_meta(meta: dict) -> dict:
 
 class _AlreadyResolved(Exception):
     """Internal: a publish/abort walk found its outcome already
-    committed — carry that version out of the commit build."""
+    committed — ``_commit_with_retry`` returns that version instead of
+    publishing."""
 
     def __init__(self, version: int):
         self.version = version
-
-
-class _ModeChanged(Exception):
-    """Internal: publish_wap resolved fast-forward vs re-apply from a
-    head that moved before the commit built — re-resolve and retry."""
 
 
 class SnapshotVacuumedError(FileNotFoundError):
@@ -511,21 +512,14 @@ class ManifestTable:
         any race here still only costs later readers a probe or a
         listing, never correctness."""
         try:
-            final = f"{self._mdir}/hint/{version}"
-            tmp = f"{final}.tmp.{uuid.uuid4().hex[:8]}"
             try:
                 self.fs.create_dir(f"{self._mdir}/hint", recursive=True)
             except OSError:
                 pass
-            with self.fs.open_output_stream(tmp) as f:
-                f.write(str(version).encode())
             try:
-                self._no_overwrite_move(tmp, final)
-            except (FileExistsError, OSError):
-                try:
-                    self.fs.delete_file(tmp)
-                except OSError:
-                    pass
+                self._put_if_absent(f"{self._mdir}/hint/{version}", str(version).encode())
+            except OSError:
+                pass
             # sweep superseded hint FILES — pure hygiene: a failed
             # delete leaves a lower file the max simply ignores. The
             # legacy ``_latest`` file is deliberately LEFT IN PLACE:
@@ -841,18 +835,10 @@ class ManifestTable:
         # tagging a vanished version would pin nothing
         m = self.read_manifest(version)
         self.fs.create_dir(f"{self.root_path}/{_TAGS_DIR}", recursive=True)
-        final = f"{self.root_path}/{_TAGS_DIR}/{name}.json"
-        tmp = f"{final}.tmp.{uuid.uuid4().hex[:8]}"
-        with self.fs.open_output_stream(tmp) as f:
-            f.write(json.dumps({"name": name, "version": m.version}).encode())
-        try:
-            self._no_overwrite_move(tmp, final)
-        except Exception:
-            try:
-                self.fs.delete_file(tmp)
-            except FileNotFoundError:
-                pass
-            raise
+        self._put_if_absent(
+            f"{self.root_path}/{_TAGS_DIR}/{name}.json",
+            json.dumps({"name": name, "version": m.version}).encode(),
+        )
         return m.version
 
     def tags(self) -> dict[str, int]:
@@ -1264,7 +1250,6 @@ class ManifestTable:
         # below is the real gate.
         if self.fs.get_file_info(final).type != pafs.FileType.NotFound:
             raise FileExistsError(final)
-        tmp = f"{self._mdir}/v{manifest.version}.json.tmp.{uuid.uuid4().hex[:8]}"
         payload = json.dumps(
             {
                 "version": manifest.version,
@@ -1281,9 +1266,21 @@ class ManifestTable:
             },
             indent=1,
         ).encode()
+        # no-overwrite publish: losing a race on the same version raises
+        self._put_if_absent(final, payload)
+        self._write_latest_hint(manifest.version)
+        return manifest.version
+
+    def _put_if_absent(self, final: str, payload: bytes) -> None:
+        """Write ``payload`` at ``final`` unless ``final`` exists — the
+        one publish primitive for every file in the log (version
+        files, tags, branch refs, hints). The payload is staged at
+        ``{final}.tmp.<run>`` and published by :meth:`_no_overwrite_move`;
+        a lost race raises ``FileExistsError`` and removes the staged
+        file, so no tmp file outlives the call."""
+        tmp = f"{final}.tmp.{uuid.uuid4().hex[:8]}"
         with self.fs.open_output_stream(tmp) as f:
             f.write(payload)
-        # no-overwrite publish: losing a race on the same version raises
         try:
             self._no_overwrite_move(tmp, final)
         except Exception:
@@ -1292,7 +1289,6 @@ class ManifestTable:
             except FileNotFoundError:
                 pass
             raise
-        return manifest.version
 
     def _no_overwrite_move(self, tmp: str, final: str) -> None:
         """Publish ``tmp`` at ``final`` failing if ``final`` exists.
@@ -1330,9 +1326,6 @@ class ManifestTable:
             if self.fs.get_file_info(final).type != pafs.FileType.NotFound:
                 raise FileExistsError(final)
             self.fs.move(tmp, final)
-        v = _version_of(final)
-        if v is not None:
-            self._write_latest_hint(v)
 
     def _rel(self, uri: str) -> str:
         _, p = get_filesystem(uri)
@@ -1407,10 +1400,16 @@ class ManifestTable:
                 return v
         raise FileNotFoundError(f"no staged snapshot with wap_id {wap_id!r} on {self.root}")
 
-    def _walk_wap_outcome(self, start: Manifest | None, base_v: int | None, staged_v: int):
-        """Walk main lineage from ``start`` back to the staged base,
-        returning ('published', version) / ('aborted', version) if a
-        prior publish/abort of ``staged_v`` already landed, else None.
+    def _walk_wap_outcome(
+        self, start: Manifest | None, base_v: int | None, staged_v: int, done: str, error: str
+    ) -> None:
+        """Walk main lineage from ``start`` back to the staged base for
+        a prior publish/abort of ``staged_v``. An outcome of kind
+        ``done`` ('published' or 'aborted') raises
+        :class:`_AlreadyResolved` with its version, so the commit loop
+        returns it; the other kind raises ``ValueError(error)``, with
+        ``{at}`` in ``error`` filled by its version. Returns None when
+        neither landed.
         Runs INSIDE the commit build so a concurrent publisher's commit
         is seen on retry — two racing publishers converge on one
         published version instead of double-applying the batch. The
@@ -1421,19 +1420,18 @@ class ManifestTable:
         (every staged file already in the head dedups out)."""
         p = start
         while p is not None and p.version != base_v:
-            pub = p.meta.get("wap_published")
-            if pub and pub.get("staged_version") == staged_v:
-                return ("published", p.version)
-            ab = p.meta.get("wap_aborted")
-            if ab and ab.get("staged_version") == staged_v:
-                return ("aborted", p.version)
+            for kind in ("published", "aborted"):
+                mark = p.meta.get(f"wap_{kind}")
+                if mark and mark.get("staged_version") == staged_v:
+                    if kind == done:
+                        raise _AlreadyResolved(p.version)
+                    raise ValueError(error.format(at=p.version))
             if p.parent is None or p.parent == base_v:
                 break
             try:
                 p = self.read_manifest(p.parent)
             except FileNotFoundError:
                 break  # marker old enough to be vacuumed: republish dedups
-        return None
 
     def publish_wap(
         self,
@@ -1467,7 +1465,10 @@ class ManifestTable:
         Publishing is IDEMPOTENT per staged version: the conflict walk
         runs inside the commit build, so racing/replayed publishers
         return the one already-published version instead of applying
-        the batch twice. Publishing an aborted snapshot fails.
+        the batch twice. Publishing an aborted snapshot fails. The case
+        is picked in the build too, from the parent it builds on: a
+        head that advances mid-call is re-resolved by the next commit
+        attempt.
 
         ``on_conflict="force-replace"`` changes the third case for a
         REPLACE-TYPE staged snapshot only: instead of aborting, the
@@ -1508,107 +1509,71 @@ class ManifestTable:
         pure_append = wap.get("removed") == 0
         content_meta = _content_meta(s.meta)
         marker = {"wap_published": {"id": wap.get("id"), "staged_version": v}}
+        # re-apply: content metadata comes from the LIVE head via the
+        # carry; the staged commit contributes only the skipping
+        # metadata describing its own added files
+        reapply_meta = dict(marker)
+        fstats = content_meta.get("file_stats") or {}
+        sub = {f: fstats[f] for f in s_added if f in fstats}
+        if sub:
+            reapply_meta["file_stats"] = sub
+        blooms = content_meta.get("bloom_index") or {}
+        bsub = {col: {f: per[f] for f in s_added if f in per} for col, per in blooms.items()}
+        bsub = {col: per for col, per in bsub.items() if per}
+        if bsub:
+            reapply_meta["bloom_index"] = bsub
 
-        for attempt in range(_COMMIT_RETRY_ATTEMPTS):
-            head_v = self.current_version()
-            fast_forward = head_v == base_v
+        # Hidden specs compare on their LAYOUT identity (kind, src,
+        # param) only: the optional 4th element is the probe-gate dtype
+        # annotation, which upgraded writers add to otherwise-identical
+        # specs — raw list equality would spuriously conflict a pure
+        # append whose physical layout never moved.
+        def _layout(meta: dict):
+            hp = meta.get("hidden_partitions") or None
+            if hp is None:
+                return None
+            return {k: tuple(v[:3]) for k, v in hp.items()}
 
-            def build(parent: Manifest | None) -> list[str]:
-                outcome = self._walk_wap_outcome(parent, base_v, v)
-                if outcome is not None:
-                    kind, at = outcome
-                    if kind == "published":
-                        raise _AlreadyResolved(at)
-                    raise ValueError(
-                        f"staged snapshot v{v} was aborted at v{at}; re-stage to publish"
-                    )
-                if ((parent.version if parent else None) == base_v) != fast_forward:
-                    raise _ModeChanged()
-                if fast_forward:
-                    return list(s.files)
-                if not pure_append:
-                    if on_conflict == "force-replace":
-                        # the staged snapshot IS the committed truth for
-                        # this table (the caller's flip already landed):
-                        # replace the advanced head outright
-                        return list(s.files)
+        def build(parent: Manifest | None):
+            self._walk_wap_outcome(
+                parent, base_v, v, done="published",
+                error=f"staged snapshot v{v} was aborted at v{{at}}; re-stage to publish",
+            )
+            if (parent.version if parent else None) == base_v or (
+                not pure_append and on_conflict == "force-replace"
+            ):
+                # fast-forward, or a forced replace onto the advanced
+                # head (the staged snapshot IS the committed truth for
+                # this table — the caller's flip already landed): the
+                # snapshot's files and its own content metadata
+                return list(s.files), {**content_meta, **marker}
+            if not pure_append:
+                raise ConcurrentModificationError(
+                    f"staged snapshot v{v} replaces files of base v{base_v}, but "
+                    f"{self.root} advanced to v{parent.version if parent else None} "
+                    "since staging — re-stage against the new head"
+                )
+            # s carried the base's evolution log / hidden layout at
+            # stage time (a pure append never alters either), so the
+            # staged meta doubles as the base's copy for this check.
+            checks = [
+                ("schema_evolution", parent.meta.get("schema_evolution") or None,
+                 s.meta.get("schema_evolution") or None),
+                ("hidden_partitions", _layout(parent.meta), _layout(s.meta)),
+            ]
+            for key, a, b in checks:
+                if a != b:
                     raise ConcurrentModificationError(
-                        f"staged snapshot v{v} replaces files of base v{base_v}, but "
-                        f"{self.root} advanced to v{parent.version if parent else None} "
-                        "since staging — re-stage against the new head"
+                        f"table {key} changed since v{v} was staged against "
+                        f"v{base_v} — the staged files were written under the "
+                        "old contract; re-stage"
                     )
-                # s carried the base's evolution log / hidden layout at
-                # stage time (a pure append never alters either), so the
-                # staged meta doubles as the base's copy for this check.
-                # Hidden specs compare on their LAYOUT identity (kind,
-                # src, param) only: the optional 4th element is the
-                # probe-gate dtype annotation, which upgraded writers
-                # add to otherwise-identical specs — raw list equality
-                # would spuriously conflict a pure append whose physical
-                # layout never moved.
-                def _layout(meta: dict):
-                    hp = meta.get("hidden_partitions") or None
-                    if hp is None:
-                        return None
-                    return {k: tuple(v[:3]) for k, v in hp.items()}
+            pf = set(parent.files)
+            files = sorted(parent.files + [f for f in s_added if f not in pf])
+            return files, self._carry_content_meta(parent, files, reapply_meta)
 
-                checks = [
-                    ("schema_evolution", parent.meta.get("schema_evolution") or None,
-                     s.meta.get("schema_evolution") or None),
-                    ("hidden_partitions", _layout(parent.meta), _layout(s.meta)),
-                ]
-                for key, a, b in checks:
-                    if a != b:
-                        raise ConcurrentModificationError(
-                            f"table {key} changed since v{v} was staged against "
-                            f"v{base_v} — the staged files were written under the "
-                            "old contract; re-stage"
-                        )
-                pf = set(parent.files) if parent else set()
-                return sorted((parent.files if parent else []) + [f for f in s_added if f not in pf])
-
-            if fast_forward:
-                op = "wap-publish" if pure_append else "wap-publish-replace"
-                meta = {**content_meta, **marker}
-                carry = False
-            elif not pure_append and on_conflict == "force-replace":
-                # replace onto the advanced head: the snapshot's own
-                # content metadata, exactly like the fast-forward case
-                op = "wap-publish-replace"
-                meta = {**content_meta, **marker}
-                carry = False
-            else:
-                # re-apply: content metadata comes from the LIVE head via
-                # carry; the staged commit contributes only the skipping
-                # metadata describing its own added files
-                op = "wap-publish"
-                meta = dict(marker)
-                fstats = content_meta.get("file_stats") or {}
-                sub = {f: fstats[f] for f in s_added if f in fstats}
-                if sub:
-                    meta["file_stats"] = sub
-                blooms = content_meta.get("bloom_index") or {}
-                bsub = {
-                    col: {f: per[f] for f in s_added if f in per}
-                    for col, per in blooms.items()
-                }
-                bsub = {col: per for col, per in bsub.items() if per}
-                if bsub:
-                    meta["bloom_index"] = bsub
-                carry = True
-            try:
-                return self._commit_with_retry(build, op, meta, carry=carry)
-            except _AlreadyResolved as d:
-                return d.version
-            except _ModeChanged:
-                # the head crossed the fast-forward/re-apply boundary
-                # mid-build: same lost-CAS shape as a publish race, so
-                # the same jittered backoff applies
-                _lost_race_backoff(attempt)
-                continue
-        raise RuntimeError(
-            f"lost the publish race {_COMMIT_RETRY_ATTEMPTS} times on {self.root}"
-        )
+        op = "wap-publish" if pure_append else "wap-publish-replace"
+        return self._commit_with_retry(build, op, None, carry=False)
 
     def abort_wap(self, wap_id: str | None = None, version: int | None = None) -> int:
         """Mark a staged snapshot dead without publishing it. The abort
@@ -1630,21 +1595,14 @@ class ManifestTable:
         marker = {"wap_aborted": {"id": wap.get("id"), "staged_version": v}}
 
         def build(parent: Manifest | None) -> list[str]:
-            outcome = self._walk_wap_outcome(parent, base_v, v)
-            if outcome is not None:
-                kind, at = outcome
-                if kind == "aborted":
-                    raise _AlreadyResolved(at)
-                raise ValueError(
-                    f"staged snapshot v{v} was already published at v{at}; "
-                    "aborting now would not retract it"
-                )
+            self._walk_wap_outcome(
+                parent, base_v, v, done="aborted",
+                error=f"staged snapshot v{v} was already published at v{{at}}; "
+                "aborting now would not retract it",
+            )
             return list(parent.files) if parent else []
 
-        try:
-            return self._commit_with_retry(build, "wap-abort", marker)
-        except _AlreadyResolved as d:
-            return d.version
+        return self._commit_with_retry(build, "wap-abort", marker)
 
     # ---------- named branches (writable refs) ----------
 
@@ -1684,21 +1642,10 @@ class ManifestTable:
     def _cas_ref(
         self, refdir: str, seq: int, version: int, incarnation: str | None = None
     ) -> None:
-        final = f"{refdir}/{seq}.json"
-        tmp = f"{final}.tmp.{uuid.uuid4().hex[:8]}"
         payload: dict = {"version": version}
         if incarnation is not None:
             payload["incarnation"] = incarnation
-        with self.fs.open_output_stream(tmp) as f:
-            f.write(json.dumps(payload).encode())
-        try:
-            self._no_overwrite_move(tmp, final)
-        except Exception:
-            try:
-                self.fs.delete_file(tmp)
-            except FileNotFoundError:
-                pass
-            raise
+        self._put_if_absent(f"{refdir}/{seq}.json", json.dumps(payload).encode())
 
     def _branch_head_seq(self, name: str) -> tuple[int, int, str | None]:
         """(seq, version, incarnation) of the branch's newest ref
@@ -2080,6 +2027,18 @@ class ManifestTable:
             return {k: v for k, v in meta.items() if k != "hidden_partitions"}
         return {**meta, "hidden_partitions": merged}
 
+    @classmethod
+    def _carry_content_meta(cls, parent: Manifest | None, files: list[str], meta: dict) -> dict:
+        """``meta`` with every piece of the parent's CONTENT metadata
+        the new file set still needs carried in: delete vectors, the
+        schema-evolution log, hidden partitions and data-skipping
+        stats (stream high-water marks carry separately, on every
+        commit)."""
+        meta = cls._carry_delete_vectors(parent, files, meta)
+        meta = cls._carry_schema_evolution(parent, files, meta)
+        meta = cls._carry_hidden_partitions(parent, files, meta)
+        return cls._carry_skipping_meta(parent, files, meta)
+
     def _commit_with_retry(
         self,
         files_or_build,
@@ -2089,6 +2048,24 @@ class ManifestTable:
         wap_id: str | None = None,
         branch: str | None = None,
     ) -> int:
+        """The one commit loop: every commit of a version file runs
+        through it. Each attempt resolves the lineage head (main, or
+        the branch head for ``branch``), builds against it, and
+        publishes version ``latest + 1``.
+
+        ``files_or_build`` is a file list or a build ``parent ->
+        files``; a build may instead return ``(files, meta)``, whose
+        meta replaces ``meta`` for that attempt. With ``carry`` the
+        parent's content metadata carries into the commit
+        (:meth:`_carry_content_meta`); without it the meta is the
+        commit's complete content metadata. A build raising
+        :class:`ConcurrentModificationError` (or any other error)
+        aborts with nothing published; raising ``_AlreadyResolved(v)``
+        returns ``v`` — the commit's outcome already landed. A lost
+        publish or branch-ref CAS backs off (:func:`_lost_race_backoff`)
+        and re-resolves, all within one budget of
+        ``_COMMIT_RETRY_ATTEMPTS``; exhausting it raises
+        ``RuntimeError``."""
         import time
 
         if branch is not None and wap_id is not None:
@@ -2109,7 +2086,11 @@ class ManifestTable:
                 parent = self.read_manifest(bh) if bh is not None else None
             else:
                 parent = self._main_manifest_at_or_below(latest)
-            files = files_or_build(parent) if callable(files_or_build) else files_or_build
+            try:
+                built = files_or_build(parent) if callable(files_or_build) else files_or_build
+            except _AlreadyResolved as done:
+                return done.version
+            files, attempt_meta = built if isinstance(built, tuple) else (built, meta)
             parent_files = set(parent.files) if parent else set()
             # In-commit timestamp, forced strictly above the parent's —
             # AND above the newest manifest in the WHOLE log when that
@@ -2127,25 +2108,13 @@ class ManifestTable:
                 except FileNotFoundError:
                     pass
             if carry:
-                built_meta = self._carry_skipping_meta(
-                    parent,
-                    files,
-                    self._carry_hidden_partitions(
-                        parent,
-                        files,
-                        self._carry_schema_evolution(
-                            parent,
-                            files,
-                            self._carry_delete_vectors(parent, files, meta or {}),
-                        ),
-                    ),
-                )
+                built_meta = self._carry_content_meta(parent, files, attempt_meta or {})
             else:
-                # carry=False (RESTORE / WAP fast-forward): the caller
-                # supplies the COMPLETE content metadata (vectors/stats/
-                # evolution come from the restored or staged snapshot,
-                # not the abandoned parent)
-                built_meta = dict(meta or {})
+                # carry=False (RESTORE / WAP publish / fast-forward): the
+                # caller supplies the COMPLETE content metadata (vectors/
+                # stats/evolution come from the restored or staged
+                # snapshot, not the abandoned parent)
+                built_meta = dict(attempt_meta or {})
             if wap_id is not None:
                 # staged write-audit-publish snapshot: invisible to main
                 # (current_version skips it) until publish_wap re-commits

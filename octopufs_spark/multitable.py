@@ -55,15 +55,10 @@ from octopufs_spark.manifest import (
     ConcurrentModificationError,
     Manifest,
     ManifestTable,
-    _AlreadyResolved,
     _strip_dropped,
     hidden_transform_expr,
     write_and_commit,
 )
-
-
-class _Raced(Exception):
-    pass
 
 
 class WedgedConvergenceError(RuntimeError):
@@ -87,7 +82,8 @@ def _reapply_append_content(t: ManifestTable, m: Manifest, spark: SparkSession) 
     carrying the staged snapshot's ``wap_published`` marker. The
     marker walk runs INSIDE the commit build, so racing convergers
     (and publish_wap retries) settle on ONE published version —
-    content is never applied twice. Returns the published version."""
+    content is never applied twice; a loser's staging dir is an
+    invisible orphan vacuum sweeps. Returns the published version."""
     import uuid as _uuid
 
     wap = m.meta["wap"]
@@ -134,14 +130,10 @@ def _reapply_append_content(t: ManifestTable, m: Manifest, spark: SparkSession) 
     }
 
     def build(parent: Manifest | None) -> list[str]:
-        outcome = t._walk_wap_outcome(parent, base_v, staged_v)
-        if outcome is not None:
-            kind, at = outcome
-            if kind == "published":
-                raise _AlreadyResolved(at)
-            raise ValueError(
-                f"staged snapshot v{staged_v} was aborted at v{at}; nothing to re-apply"
-            )
+        t._walk_wap_outcome(
+            parent, base_v, staged_v, done="published",
+            error=f"staged snapshot v{staged_v} was aborted at v{{at}}; nothing to re-apply",
+        )
         live_hp = {
             k: tuple(v[:3])
             for k, v in ((parent.meta.get("hidden_partitions") if parent else None) or {}).items()
@@ -158,12 +150,7 @@ def _reapply_append_content(t: ManifestTable, m: Manifest, spark: SparkSession) 
         pf = set(parent.files) if parent else set()
         return sorted((parent.files if parent else []) + [f for f in content if f not in pf])
 
-    try:
-        return t._commit_with_retry(build, "wap-publish", marker, carry=True)
-    except _AlreadyResolved as d:
-        # a racing converger landed it first; our staging dir is an
-        # invisible orphan vacuum sweeps
-        return d.version
+    return t._commit_with_retry(build, "wap-publish", marker, carry=True)
 
 
 class Catalog:
@@ -201,39 +188,23 @@ class Catalog:
         ``updates``. ``expected`` holds, per updated table, the pin
         version the CALLER based its work on — if the live pin moved
         (a racing transaction re-pinned the same table), abort instead
-        of silently replacing its rows. Disjoint racers merge via
-        retry."""
-        from octopufs_spark.manifest import _COMMIT_RETRY_ATTEMPTS, _lost_race_backoff
+        of silently replacing its rows. Both the check and the merge
+        run in the commit build against the parent, so disjoint racers
+        merge through the log's own CAS retry."""
 
-        for attempt in range(_COMMIT_RETRY_ATTEMPTS):
-            base = self.snapshot()
+        def build(parent: Manifest | None):
+            live = dict(parent.meta.get("tables", {})) if parent else {}
             for name in updates:
-                cur = (base.get(name) or {}).get("version")
+                cur = (live.get(name) or {}).get("version")
                 if cur != expected[name]:
                     raise ConcurrentModificationError(
                         f"catalog {self.log.root}: table {name!r} was re-pinned "
                         f"concurrently (v{cur}, expected v{expected[name]}) — "
                         "rerun the transaction against the new snapshot"
                     )
-            merged = {**base, **updates}
+            return [], {"tables": {**live, **updates}}
 
-            def guard(parent: Manifest | None) -> list[str]:
-                live = dict(parent.meta.get("tables", {})) if parent else {}
-                if live != base:
-                    raise _Raced()  # someone committed since we merged
-                return []
-
-            try:
-                return self.log._commit_with_retry(guard, op, {"tables": merged})
-            except _Raced:
-                # a DISJOINT transaction flipped the catalog between our
-                # merge and the commit build: re-merge with the same
-                # jittered backoff the table-level CAS uses
-                _lost_race_backoff(attempt)
-                continue
-        raise RuntimeError(
-            f"lost the catalog commit race {_COMMIT_RETRY_ATTEMPTS} times on {self.log.root}"
-        )
+        return self.log._commit_with_retry(build, op, None)
 
     def register(self, name: str, table: ManifestTable, version: int | None = None) -> int:
         """Pin an existing table into the catalog (its current main

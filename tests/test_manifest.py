@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import threading
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -100,6 +101,43 @@ def test_publish_rejects_duplicate_version(spark, table):
 
     with pytest.raises(FileExistsError):
         table._publish(Manifest(version=1, files=["nope.parquet"]))
+    # past the advisory exists-check: the no-overwrite move is the gate
+    with pytest.raises(FileExistsError):
+        table._put_if_absent(f"{table._mdir}/v1.json", b"{}")
+    # a lost CAS leaves no staged file behind, and the winner stands
+    assert not list(Path(table._mdir).rglob("*.tmp.*"))
+    assert table.read_manifest(1).files != ["nope.parquet"]
+
+
+@pytest.mark.parametrize("kind", ["commit", "publish_wap", "catalog_pins"])
+def test_every_commit_kind_has_one_retry_budget(spark, table, tmp_path, monkeypatch, kind):
+    """Plain commits, WAP publishes and catalog pin flips all retry a
+    lost publish in the one commit loop: exactly
+    _COMMIT_RETRY_ATTEMPTS publish attempts, then RuntimeError."""
+    import octopufs_spark.manifest as mod
+    from octopufs_spark.multitable import Catalog
+
+    write_and_commit(_df(spark, 0, 5), table)
+    sv = write_and_commit(_df(spark, 5, 8), table, mode="append", wap_id="w1")
+    cat = Catalog(str(tmp_path / "cat"))
+    attempts = []
+
+    def lose(self, manifest):
+        attempts.append(manifest.version)
+        raise FileExistsError(f"v{manifest.version}")
+
+    monkeypatch.setattr(mod.ManifestTable, "_publish", lose)
+    monkeypatch.setattr(mod, "_lost_race_backoff", lambda attempt: None)
+    run = {
+        "commit": lambda: table._commit_with_retry(lambda p: list(p.files), "append", None),
+        "publish_wap": lambda: table.publish_wap(version=sv),
+        "catalog_pins": lambda: cat._commit_pins(
+            {"t": {"root": table.root, "version": 1}}, "catalog-register", {"t": None}
+        ),
+    }[kind]
+    with pytest.raises(RuntimeError, match="lost the commit race"):
+        run()
+    assert len(attempts) == mod._COMMIT_RETRY_ATTEMPTS
 
 
 def test_vacuum_keeps_retained_versions(spark, table):

@@ -5,6 +5,8 @@ under immutable names that vacuum must respect."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -161,6 +163,36 @@ def test_concurrent_publishers_converge(spark, table):
     assert _ids(table.read(spark)) == set(range(15))
 
 
+def test_publish_reapplies_when_head_advances_mid_call(spark, table):
+    """A direct append landing after publish_wap read the staged
+    snapshot but before its commit built: the publish must see the
+    advanced head in its build and re-apply the staged append onto it
+    in ONE commit — not fast-forward over the racer's rows."""
+    write_and_commit(_df(spark, 0, 10), table, stats=True)
+    sv = write_and_commit(_df(spark, 10, 15), table, mode="append", wap_id="w1", stats=True)
+    racer_v = {}
+
+    orig = table._commit_with_retry
+    fired = {"done": False}
+
+    def wrapped(build, operation, meta, *a, **kw):
+        if not fired["done"] and operation == "wap-publish":
+            fired["done"] = True
+            racer_v["v"] = write_and_commit(
+                _df(spark, 100, 103), ManifestTable(table.root), mode="append", stats=True
+            )
+        return orig(build, operation, meta, *a, **kw)
+
+    table._commit_with_retry = wrapped
+    pv = table.publish_wap(version=sv)
+    assert fired["done"]
+    assert pv == racer_v["v"] + 1 == table.latest_version()
+    m = table.read_manifest(pv)
+    assert m.operation == "wap-publish" and m.parent == racer_v["v"]
+    assert set(m.meta["file_stats"]) == set(m.files)
+    assert _ids(table.read(spark)) == set(range(15)) | {100, 101, 102}
+
+
 def test_publish_survives_vacuumed_base_manifest(spark, table):
     """A stale staged snapshot can outlive its BASE manifest: once main
     advances past the base, vacuum may prune it while the younger
@@ -302,6 +334,8 @@ def test_tag_create_read_delete(spark, table):
     assert _ids(table.read(spark, tag="baseline")) == set(range(10))
     with pytest.raises(FileExistsError):
         table.create_tag("baseline", version=2)  # tags never move silently
+    # the losing publish removed its staged file
+    assert not list(Path(table.root_path, "_manifest", "tags").glob("*.tmp.*"))
     table.delete_tag("baseline")
     assert table.tags() == {}
     with pytest.raises(FileNotFoundError):

@@ -30,8 +30,10 @@ import os
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def _worker(root: str, wid: int, deadline: float, q) -> None:

@@ -25,8 +25,10 @@ from __future__ import annotations
 import json
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 FLAGSHIPS = [
     ("q_agg_sum_group", "decimal hash aggregate, map-side partial combine"),
@@ -109,7 +111,7 @@ def audit(plan: str) -> list[str]:
     return notes
 
 
-def check_baselines(repo: str = "/root/repo") -> list[str]:
+def check_baselines(repo: str = str(ROOT)) -> list[str]:
     """Spark-free drift gate between the three committed plan artifacts:
     BENCH_FULL.json (the latest full record), tools/bench_baseline.json
     (the regression-gate baseline), and PLANS.md (the flagship audit).
@@ -193,12 +195,12 @@ def main() -> None:
         out.extend(line.rstrip()[:120] for line in tree)
         out.append("```")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(FLAGSHIPS)} queries)")
     if "--refresh-baseline" in flags:
-        record = json.load(open("/root/repo/BENCH_FULL.json"))
-        with open("/root/repo/tools/bench_baseline.json", "w") as f:
+        record = json.load(open(ROOT / "BENCH_FULL.json"))
+        with open(ROOT / "tools" / "bench_baseline.json", "w") as f:
             json.dump(record, f, indent=1)
         print(
             "refreshed tools/bench_baseline.json from BENCH_FULL.json "

@@ -31,15 +31,17 @@ replica — exactly the TPC-H dbgen property the queries rely on:
   not a scaling property.)
 
 Usage: python tools/make_scaled_sf.py [K] [src_sf_dir] [out_dir]
-Defaults: 10 /root/testdata/sf0.1 /root/repo/.benchdata/sf1
+Defaults: K 10, the sf0.1 test data, and .benchdata/sf1 under the checkout.
 Output layout matches the driver's: ``<out>/<table>.parquet`` (dirs).
 """
 
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -121,7 +123,7 @@ def main() -> int:
 
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     src = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    out_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/repo/.benchdata/sf1"
+    out_dir = sys.argv[3] if len(sys.argv) > 3 else str(ROOT / ".benchdata" / "sf1")
     spark = get_spark("make_scaled_sf")
     spark.sparkContext.setLogLevel("ERROR")
     for t in FIXED:

@@ -22,8 +22,10 @@ import glob
 import json
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:
@@ -37,7 +39,7 @@ def main() -> None:
     oracles = entry.oracle_sql()
 
     driver: dict[str, list[tuple[int, str]]] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(str(ROOT / "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"_r(\d+)", path).group(1))
         for name, res in json.load(open(path)).items():
             if res.get("err") == "no_oracle":
@@ -124,7 +126,7 @@ def main() -> None:
         *rows,
         "",
     ]
-    with open("/root/repo/VERIFICATION.md", "w") as f:
+    with open(ROOT / "VERIFICATION.md", "w") as f:
         f.write("\n".join(lines))
     print(
         f"wrote VERIFICATION.md: {len(queries)} queries, "

@@ -21,10 +21,12 @@ import math
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from octopufs_spark.tables import TABLE_NAMES  # noqa: E402
 
