@@ -6,19 +6,24 @@ don't exist on a local filesystem, so the *algorithms* — tree walk,
 parent inheritance, DEFAULT→ACCESS conversion for files — run against
 an abstract ``AclStore``; the shipped local backend keeps a JSON
 sidecar per tree (chmod bits alone can't express named grantees).
-All mutations are driver-threaded with the retry loop every metadata
-op in this engine shares, ``fs.core.retry_failed`` (reference:
-1000-thread pool helpers/implicits.scala:13, attempt>4 guards
+The tree ops build their whole path → entries map on the driver, where
+the listing already is, and hand it to the store in one bulk call; the
+store decides how to write it. A store where each path is its own call
+(chmod, an ADLS ``setAcl``) fans out over driver threads under the
+retry loop every metadata op in this engine shares,
+``fs.core.retry_failed`` (reference: 1000-thread pool
+helpers/implicits.scala:13, attempt>4 guards
 acl/AclManager.scala:73,162,279,308): single-HTTP-call operations need
-IO parallelism, not a cluster.
+IO parallelism, not a cluster. A store that keeps every entry in one
+file writes that file once per op.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import threading
 from dataclasses import asdict, dataclass
-from pathlib import Path
 
 from octopufs_spark.fs.core import get_filesystem, list_tree, retry_failed
 from octopufs_spark.fs.local import _run_threaded
@@ -61,8 +66,36 @@ class FsPermission:
         return FsPermission(self.scope, self.permission, ACCESS, self.grantee)
 
 
+def _apply_threaded(fn, paths: list[str]) -> list[FsOperationResult]:
+    """Threaded apply with the shared retry; a path that vanished
+    counts as success (reference: modifyAcls, acl/AclManager.scala:57-75 —
+    files deleted concurrently shouldn't fail the job)."""
+
+    def one(path: str) -> FsOperationResult:
+        try:
+            fn(path)
+        except FileNotFoundError:
+            pass
+        except Exception:
+            return FsOperationResult(path, False)
+        return FsOperationResult(path, True)
+
+    return retry_failed(
+        lambda batch: _run_threaded(one, batch, DEFAULT_WORKERS), paths, "ACL op"
+    )
+
+
 class AclStore:
-    """Abstract permission store: get/replace the ACL of a path."""
+    """Abstract permission store.
+
+    Per-path pair: ``get_acl`` / ``set_acl`` (``modify_acl`` and
+    ``remove_acl`` derive from them). Bulk pair: ``get_acls`` /
+    ``apply``, the only calls the tree algorithms make. The bulk
+    defaults fan out one path per thread under ``fs.core.retry_failed``,
+    right for stores where each path is its own call (chmod, an ADLS
+    ``setAcl``); a store that keeps every entry in one file overrides
+    them to read once and write once per op.
+    """
 
     def get_acl(self, path: str) -> list[FsPermission]:
         raise NotImplementedError
@@ -74,74 +107,130 @@ class AclStore:
     def modify_acl(self, path: str, entries: list[FsPermission]) -> None:
         """Incremental merge (reference modifyAclEntries semantics):
         same-(scope,level,grantee) entries replaced, others kept."""
-        current = {e.key(): e for e in self.get_acl(path)}
-        for e in entries:
-            current[e.key()] = e
-        self.set_acl(path, list(current.values()))
+        self.set_acl(path, _merged(self.get_acl(path), entries))
 
     def remove_acl(self, path: str) -> None:
         """Drop all entries (reference removeAcl)."""
         self.set_acl(path, [])
+
+    def get_acls(self, paths: list[str]) -> dict[str, list[FsPermission]]:
+        """ACL of every path; a path that vanished is left out
+        (reference: getAclsForPaths)."""
+        out: dict[str, list[FsPermission]] = {}
+
+        def fetch(p: str) -> None:
+            out[p] = self.get_acl(p)
+
+        _apply_threaded(fetch, list(paths))
+        return out
+
+    def apply(
+        self, updates: dict[str, list[FsPermission]], merge: bool
+    ) -> list[FsOperationResult]:
+        """Write every path's entries: ``merge`` → ``modify_acl``, else
+        ``set_acl``. One result per path, in ``updates`` order."""
+        write = self.modify_acl if merge else self.set_acl
+        return _apply_threaded(lambda p: write(p, updates[p]), list(updates))
+
+
+def _merged(current: list[FsPermission], entries: list[FsPermission]) -> list[FsPermission]:
+    by_key = {e.key(): e for e in current}
+    by_key.update((e.key(), e) for e in entries)
+    return list(by_key.values())
+
+
+# Process-wide: every sidecar store, whatever its root, and the mock://
+# data-plane hooks serialise their read-modify-write cycles on it.
+_LOCK = threading.Lock()
 
 
 class SidecarAclStore(AclStore):
     """Local backend: one JSON sidecar file per tree root.
 
     Local filesystems can't hold named-grantee POSIX ACLs, so entries
-    live in ``<root>/.octopufs_acls.json`` keyed by path. The algorithms
-    above this class are storage-agnostic — an ADLS backend would map
-    get/set to getAclStatus/setAcl HTTP calls 1:1.
+    live in ``<root>/.octopufs_acls.json`` keyed by path. Every write,
+    bulk or per-path, is one ``_edit``: under the process-wide lock it
+    re-reads the file (another store instance, or a mock:// data-plane
+    hook, may have written it since), applies the change and flushes by
+    atomic replace, so a reader or a crash sees the old file or the new
+    one, never a mix. ``apply`` is one ``_edit`` for the whole op under
+    ``fs.core.retry_failed``: an ``OSError`` fails the batch and the
+    batch is rerun. A missing sidecar reads as empty; a corrupt one
+    raises rather than reading as empty, which would let the next write
+    wipe every entry.
     """
 
     def __init__(self, root_uri: str):
         _, root = get_filesystem(root_uri)
-        self._file = Path(root) / ".octopufs_acls.json"
-        self._data: dict[str, list[dict]] = {}
-        # _apply_threaded drives this store from a many-thread pool;
-        # the shared dict + sidecar file need mutual exclusion or
-        # concurrent read-modify-write cycles lose entries and
-        # interleaved writes corrupt the JSON on disk.
-        self._lock = threading.Lock()
-        if self._file.exists():
-            self._data = json.loads(self._file.read_text())
+        self._path = os.path.join(root, ".octopufs_acls.json")
 
-    def _flush(self) -> None:
-        # Atomic replace: a reader (or a crash) never observes a
-        # half-written sidecar.
-        tmp = self._file.with_suffix(".json.tmp")
-        tmp.write_text(json.dumps(self._data, indent=0, sort_keys=True))
-        tmp.replace(self._file)
+    def _file(self) -> str:
+        return self._path
 
     def _norm(self, path: str) -> str:
         return get_filesystem(path)[1] if ":" in path.split("/", 1)[0] or "://" in path else path
 
-    def get_acl(self, path: str) -> list[FsPermission]:
-        with self._lock:
-            return [FsPermission(**d) for d in self._data.get(self._norm(path), [])]
+    def _read(self) -> tuple[str, dict[str, list[dict]]]:
+        """(file text, path → entry-dicts map)."""
+        try:
+            with open(self._file()) as f:
+                text = f.read()
+        except FileNotFoundError:
+            text = "{}"
+        return text, json.loads(text)
 
-    def modify_acl(self, path: str, entries: list[FsPermission]) -> None:
-        # Base-class modify is get→merge→set; take the lock across the
-        # whole cycle so two threads can't interleave and drop entries.
-        with self._lock:
-            current = {e.key(): e for e in self._get_acl_locked(path)}
-            for e in entries:
-                current[e.key()] = e
-            self._set_acl_locked(path, list(current.values()))
+    def _edit(self, change) -> None:
+        """``change(data)`` edits the path → entry-dicts map in place;
+        the file is rewritten only if its content changed."""
+        with _LOCK:
+            before, data = self._read()
+            change(data)
+            after = json.dumps(data, indent=0, sort_keys=True)
+            if after == before:
+                return
+            os.makedirs(os.path.dirname(self._file()), exist_ok=True)
+            tmp = self._file() + ".tmp"
+            with open(tmp, "w") as f:
+                f.write(after)
+            os.replace(tmp, self._file())
+
+    def _put(self, updates: dict[str, list[FsPermission]], merge: bool) -> None:
+        def change(data: dict[str, list[dict]]) -> None:
+            for path, entries in updates.items():
+                p = self._norm(path)
+                if merge:
+                    entries = _merged([FsPermission(**d) for d in data.get(p, [])], entries)
+                if entries:
+                    data[p] = [asdict(e) for e in sorted(entries, key=FsPermission.key)]
+                else:
+                    data.pop(p, None)
+
+        self._edit(change)
+
+    def get_acl(self, path: str) -> list[FsPermission]:
+        return self.get_acls([path])[path]
+
+    def get_acls(self, paths: list[str]) -> dict[str, list[FsPermission]]:
+        _, data = self._read()
+        return {p: [FsPermission(**d) for d in data.get(self._norm(p), [])] for p in paths}
 
     def set_acl(self, path: str, entries: list[FsPermission]) -> None:
-        with self._lock:
-            self._set_acl_locked(path, entries)
+        self._put({path: entries}, merge=False)
 
-    def _get_acl_locked(self, path: str) -> list[FsPermission]:
-        return [FsPermission(**d) for d in self._data.get(self._norm(path), [])]
+    def modify_acl(self, path: str, entries: list[FsPermission]) -> None:
+        self._put({path: entries}, merge=True)
 
-    def _set_acl_locked(self, path: str, entries: list[FsPermission]) -> None:
-        p = self._norm(path)
-        if entries:
-            self._data[p] = [asdict(e) for e in sorted(entries, key=lambda e: e.key())]
-        else:
-            self._data.pop(p, None)
-        self._flush()
+    def apply(
+        self, updates: dict[str, list[FsPermission]], merge: bool
+    ) -> list[FsOperationResult]:
+        def run(batch: list[str]) -> list[FsOperationResult]:
+            try:
+                self._put({p: updates[p] for p in batch}, merge)
+            except OSError:
+                return [FsOperationResult(p, False) for p in batch]
+            return [FsOperationResult(p, True) for p in batch]
+
+        return retry_failed(run, list(updates), "ACL op")
 
 
 class PosixChmodAclStore(AclStore):
@@ -202,31 +291,22 @@ class PosixChmodAclStore(AclStore):
         os.chmod(path, mode)
 
 
-def _apply_threaded(fn, paths: list[str]) -> list[FsOperationResult]:
-    """Threaded apply with the shared retry; a path that vanished
-    counts as success (reference: modifyAcls, acl/AclManager.scala:57-75 —
-    files deleted concurrently shouldn't fail the job)."""
-
-    def one(path: str) -> FsOperationResult:
-        try:
-            fn(path)
-        except FileNotFoundError:
-            pass
-        except Exception:
-            return FsOperationResult(path, False)
-        return FsOperationResult(path, True)
-
-    return retry_failed(
-        lambda batch: _run_threaded(one, batch, DEFAULT_WORKERS), paths, "ACL op"
-    )
-
-
 def modify_acls(
     store: AclStore, paths: list[str], permissions: list[FsPermission]
 ) -> list[FsOperationResult]:
-    """Merge entries into many paths, threaded + retried
+    """Merge entries into many paths, one result per path
     (reference: modifyAcls, acl/AclManager.scala:57-75)."""
-    return _apply_threaded(lambda p: store.modify_acl(p, permissions), paths)
+    done = {r.path: r for r in store.apply(dict.fromkeys(paths, permissions), merge=True)}
+    return [done[p] for p in paths]
+
+
+def _tree_updates(
+    dirs: list[str], files: list[str], permission: FsPermission
+) -> dict[str, list[FsPermission]]:
+    """ACCESS + DEFAULT on every dir, ACCESS on every file."""
+    access = permission.as_access()
+    default = FsPermission(permission.scope, permission.permission, DEFAULT, permission.grantee)
+    return {**dict.fromkeys(dirs, [access, default]), **dict.fromkeys(files, [access])}
 
 
 def modify_folder_acl(
@@ -239,11 +319,7 @@ def modify_folder_acl(
     _, root = get_filesystem(folder_uri)
     dirs = [root] + [e.path for e in elements if e.is_dir]
     files = [e.path for e in elements if not e.is_dir]
-    access = permission.as_access()
-    default = FsPermission(permission.scope, permission.permission, DEFAULT, permission.grantee)
-    out = _apply_threaded(lambda p: store.modify_acl(p, [access, default]), dirs)
-    out += _apply_threaded(lambda p: store.modify_acl(p, [access]), files)
-    return out
+    return store.apply(_tree_updates(dirs, files, permission), merge=True)
 
 
 def modify_table_acl(
@@ -256,11 +332,7 @@ def modify_table_acl(
 
     loc = catalog.get_table_location(spark, table)
     files = catalog.get_list_of_table_files(spark, table)
-    access = permission.as_access()
-    default = FsPermission(permission.scope, permission.permission, DEFAULT, permission.grantee)
-    out = _apply_threaded(lambda p: store.modify_acl(p, [access, default]), [loc])
-    out += _apply_threaded(lambda p: store.modify_acl(p, [access]), files)
-    return out
+    return store.apply(_tree_updates([loc], files, permission), merge=True)
 
 
 def clear_folder_acl(store: AclStore, folder_uri: str) -> list[FsOperationResult]:
@@ -269,7 +341,7 @@ def clear_folder_acl(store: AclStore, folder_uri: str) -> list[FsOperationResult
     elements = list_tree(folder_uri)
     _, root = get_filesystem(folder_uri)
     paths = [root] + [e.path for e in elements]
-    return _apply_threaded(store.remove_acl, paths)
+    return store.apply(dict.fromkeys(paths, []), merge=False)
 
 
 def reset_acl_entries(store: AclStore, path: str, entries: list[FsPermission]) -> None:
@@ -286,27 +358,23 @@ def synchronize_acls(
 
     Algorithm (identical to the reference):
     1. list both trees;
-    2. fetch source folder ACLs into a map;
+    2. fetch source folder ACLs into a map (one ``get_acls``);
     3. walk target dirs in path-length order (parents first,
        reference sorts by path length :260): a dir whose prefix-swapped
        twin exists in the source takes that ACL, otherwise it inherits
        its parent's resolved ACL;
-    4. apply to folders as remove-then-modify;
+    4. every folder's ACL is replaced by its resolved one (the
+       reference's remove-then-modify);
     5. every file gets its parent folder's DEFAULT entries converted to
        ACCESS scope (reference :297-314, :331-336).
+    Folders and files go to the store in one ``apply``.
     """
     _, src_root = get_filesystem(take_from_uri)
     _, trg_root = get_filesystem(apply_to_uri)
     src_elements = list_tree(take_from_uri)
     trg_elements = list_tree(apply_to_uri)
 
-    src_dirs = [src_root] + [e.path for e in src_elements if e.is_dir]
-    src_acls: dict[str, list[FsPermission]] = {}
-
-    def fetch(p: str) -> None:
-        src_acls[p] = store.get_acl(p)
-
-    _apply_threaded(fetch, src_dirs)
+    src_acls = store.get_acls([src_root] + [e.path for e in src_elements if e.is_dir])
 
     resolved: dict[str, list[FsPermission]] = {}
     trg_dirs = sorted(
@@ -322,22 +390,11 @@ def synchronize_acls(
             parent = d.rsplit("/", 1)[0]
             resolved[d] = resolved.get(parent, [])
 
-    def apply_dir(d: str) -> None:
-        store.remove_acl(d)
-        store.modify_acl(d, resolved[d])
-
-    results = _apply_threaded(apply_dir, trg_dirs)
-
-    file_entries: dict[str, list[FsPermission]] = {}
+    updates = dict(resolved)
     for e in trg_elements:
         if not e.is_dir:
             parent = e.path.rsplit("/", 1)[0]
-            file_entries[e.path] = [
+            updates[e.path] = [
                 p.as_access() for p in resolved.get(parent, []) if p.level == DEFAULT
             ]
-
-    def apply_file(p: str) -> None:
-        store.set_acl(p, file_entries[p])
-
-    results += _apply_threaded(apply_file, list(file_entries))
-    return results
+    return store.apply(updates, merge=False)

@@ -20,170 +20,92 @@ real ADLS/HDFS ACL store has and the local stores can't model:
 
 State is one JSON sidecar under the shared ``MOCKFS_ROOT`` (same
 deterministic cross-process resolution the mock data plane uses),
-guarded by a process-wide lock with atomic replace, so the threaded
-ACL algorithms (``acl._apply_threaded``: the ``fs.local._run_threaded``
-pool under the shared ``fs.core.retry_failed`` loop) drive it exactly
-like a remote store. The :class:`~octopufs_spark.fs.mockfs.MockRemoteHandler`
-notifies this module on create/delete/move; all hooks no-op unless an
-ACL sidecar exists, so the pure-filesystem suites pay nothing.
+persisted by :class:`~octopufs_spark.acl.SidecarAclStore` — the same
+process-wide lock, per-op re-read and atomic replace as the local
+store. The :class:`~octopufs_spark.fs.mockfs.MockRemoteHandler`
+notifies this module on create/delete/move; each hook is one sidecar
+edit, and none writes unless an ACL sidecar exists, so the
+pure-filesystem suites pay nothing.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import threading
-from dataclasses import asdict
 
+from octopufs_spark.acl import ACCESS, DEFAULT, SidecarAclStore
 from octopufs_spark.fs import mockfs
 
-_LOCK = threading.Lock()
 
-
-def _sidecar() -> str:
-    return os.path.join(mockfs.MOCKFS_ROOT, ".mock_acls.json")
-
-
-def _norm(path: str) -> str:
-    """mock://bucket/key, /bucket/key, bucket/key → bucket/key."""
-    if path.startswith(mockfs.SCHEME):
-        path = path[len(mockfs.SCHEME) :]
-    return path.strip("/")
-
-
-def _load() -> dict[str, list[dict]]:
-    try:
-        with open(_sidecar()) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return {}
-
-
-def _store(data: dict[str, list[dict]]) -> None:
-    os.makedirs(mockfs.MOCKFS_ROOT, exist_ok=True)
-    tmp = _sidecar() + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(data, f, indent=0, sort_keys=True)
-    os.replace(tmp, _sidecar())
-
-
-class MockAclStore:
+class MockAclStore(SidecarAclStore):
     """:class:`octopufs_spark.acl.AclStore` over ``mock://`` paths."""
 
-    def get_acl(self, path: str):
-        from octopufs_spark.acl import FsPermission
+    def __init__(self) -> None:
+        pass
 
-        with _LOCK:
-            return [FsPermission(**d) for d in _load().get(_norm(path), [])]
+    def _file(self) -> str:
+        # resolved per call: tests repoint MOCKFS_ROOT per fixture
+        return os.path.join(mockfs.MOCKFS_ROOT, ".mock_acls.json")
 
-    def set_acl(self, path: str, entries) -> None:
-        with _LOCK:
-            data = _load()
-            p = _norm(path)
-            if entries:
-                data[p] = [asdict(e) for e in sorted(entries, key=lambda e: e.key())]
-            else:
-                data.pop(p, None)
-            _store(data)
-
-    def modify_acl(self, path: str, entries) -> None:
-        # one lock across the read-merge-write cycle (threaded callers)
-        from octopufs_spark.acl import FsPermission
-
-        with _LOCK:
-            data = _load()
-            p = _norm(path)
-            current = {
-                (d["scope"], d["level"], d["grantee"]): FsPermission(**d)
-                for d in data.get(p, [])
-            }
-            for e in entries:
-                current[e.key()] = e
-            data[p] = [asdict(e) for e in sorted(current.values(), key=lambda e: e.key())]
-            _store(data)
-
-    def remove_acl(self, path: str) -> None:
-        self.set_acl(path, [])
+    def _norm(self, path: str) -> str:
+        """mock://bucket/key, /bucket/key, bucket/key → bucket/key."""
+        if path.startswith(mockfs.SCHEME):
+            path = path[len(mockfs.SCHEME) :]
+        return path.strip("/")
 
 
 # ---- data-plane hooks (called by MockRemoteHandler) ----------------------
-# All are best-effort and no-op without a sidecar: the ACL model only
-# engages for suites that created one via MockAclStore.
+# Each is one read-modify-write of the sidecar. On a missing sidecar the
+# map is empty, no change applies and nothing is written: the ACL model
+# only engages for suites that created one via MockAclStore.
+
+_STORE = MockAclStore()
 
 
 def _nearest_default_entries(data: dict, rel: str) -> list[dict]:
     """DEFAULT-scope entries of the nearest ancestor directory that has
     any — implicit intermediate dirs (created as key-prefix side
     effects) transparently pass their ancestor's defaults through."""
-    from octopufs_spark.acl import DEFAULT
-
-    parent = rel.rsplit("/", 1)[0] if "/" in rel else ""
-    while parent:
+    parent = rel
+    while "/" in parent:
+        parent = parent.rsplit("/", 1)[0]
         entries = [d for d in data.get(parent, []) if d["level"] == DEFAULT]
         if entries:
             return entries
-        parent = parent.rsplit("/", 1)[0] if "/" in parent else ""
     return []
 
 
-def on_create_file(rel_path: str) -> None:
-    from octopufs_spark.acl import ACCESS
+def on_create(path: str, is_dir: bool = False) -> None:
+    """A new node inherits its nearest ancestor's DEFAULT entries as
+    ACCESS; a new dir also keeps them as its own DEFAULT (propagate to
+    grandchildren). An overwrite of an existing node keeps its ACL."""
+    rel = _STORE._norm(path)
 
-    if not os.path.exists(_sidecar()):
-        return
-    with _LOCK:
-        data = _load()
-        rel = _norm(rel_path)
-        if rel in data:
-            return  # overwrite of an existing node keeps its ACL
+    def change(data: dict) -> None:
         defaults = _nearest_default_entries(data, rel)
-        if defaults:
-            data[rel] = [{**d, "level": ACCESS} for d in defaults]
-            _store(data)
+        if rel not in data and defaults:
+            data[rel] = [{**d, "level": ACCESS} for d in defaults] + (defaults if is_dir else [])
+
+    _STORE._edit(change)
 
 
-def on_create_dir(rel_path: str) -> None:
-    from octopufs_spark.acl import ACCESS
+def on_delete(path: str, contents_only: bool = False) -> None:
+    """Drop the node's entries (unless ``contents_only``) and those of
+    everything under it."""
+    rel = _STORE._norm(path)
 
-    if not os.path.exists(_sidecar()):
-        return
-    with _LOCK:
-        data = _load()
-        rel = _norm(rel_path)
-        if rel in data:
-            return
-        defaults = _nearest_default_entries(data, rel)
-        if defaults:
-            # child dir: defaults become its ACCESS entries AND its own
-            # DEFAULT entries (propagate to grandchildren)
-            data[rel] = [{**d, "level": ACCESS} for d in defaults] + defaults
-            _store(data)
+    def change(data: dict) -> None:
+        for k in [k for k in data if k.startswith(rel + "/") or (k == rel and not contents_only)]:
+            del data[k]
+
+    _STORE._edit(change)
 
 
-def on_delete(rel_path: str) -> None:
-    if not os.path.exists(_sidecar()):
-        return
-    with _LOCK:
-        data = _load()
-        rel = _norm(rel_path)
-        pruned = {
-            k: v for k, v in data.items() if k != rel and not k.startswith(rel + "/")
-        }
-        if len(pruned) != len(data):
-            _store(pruned)
+def on_move(src: str, dst: str) -> None:
+    """Entries of the node and everything under it follow the rename."""
+    src, dst = _STORE._norm(src), _STORE._norm(dst)
 
+    def change(data: dict) -> None:
+        for k in [k for k in data if k == src or k.startswith(src + "/")]:
+            data[dst + k[len(src) :]] = data.pop(k)
 
-def on_move(rel_src: str, rel_dst: str) -> None:
-    if not os.path.exists(_sidecar()):
-        return
-    with _LOCK:
-        data = _load()
-        src, dst = _norm(rel_src), _norm(rel_dst)
-        moved = {}
-        for k, v in list(data.items()):
-            if k == src or k.startswith(src + "/"):
-                moved[dst + k[len(src) :]] = v
-                del data[k]
-        if moved:
-            data.update(moved)
-            _store(data)
+    _STORE._edit(change)

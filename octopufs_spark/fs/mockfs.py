@@ -32,7 +32,6 @@ Object-store semantics emulated:
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyarrow import fs as pafs
 
@@ -105,7 +104,7 @@ class MockRemoteHandler(pafs.FileSystemHandler):
         self._local.create_dir(self._abs(path), recursive=recursive)
         from octopufs_spark.fs import mock_acl
 
-        mock_acl.on_create_dir(path)
+        mock_acl.on_create(path, is_dir=True)
 
     def delete_dir(self, path: str) -> None:
         self._local.delete_dir(self._abs(path))
@@ -121,9 +120,7 @@ class MockRemoteHandler(pafs.FileSystemHandler):
                 raise
         from octopufs_spark.fs import mock_acl
 
-        for child in list(mock_acl._load()):
-            if child.startswith(mock_acl._norm(path) + "/"):
-                mock_acl.on_delete(child)
+        mock_acl.on_delete(path, contents_only=True)
 
     def delete_root_dir_contents(self) -> None:
         # Refuse: the mock root hosts every "bucket"; wiping it from one
@@ -150,7 +147,7 @@ class MockRemoteHandler(pafs.FileSystemHandler):
         self._local.copy_file(self._abs(src), dest_abs)
         from octopufs_spark.fs import mock_acl
 
-        mock_acl.on_create_file(dest)  # copies are new nodes: inherit, don't clone
+        mock_acl.on_create(dest)  # copies are new nodes: inherit, don't clone
 
     # -- streams ------------------------------------------------------------
     def open_input_stream(self, path: str):
@@ -164,7 +161,7 @@ class MockRemoteHandler(pafs.FileSystemHandler):
         os.makedirs(os.path.dirname(abs_path), exist_ok=True)
         from octopufs_spark.fs import mock_acl
 
-        mock_acl.on_create_file(path)
+        mock_acl.on_create(path)
         return self._local.open_output_stream(abs_path)
 
     def open_append_stream(self, path: str, metadata=None):
@@ -184,9 +181,3 @@ def resolve(uri: str) -> tuple[pafs.FileSystem, str]:
     assert uri.startswith(SCHEME), uri
     return mock_filesystem(), uri[len(SCHEME) :].strip("/")
 
-
-def wipe_prefix(uri: str) -> None:
-    """Test helper: remove everything under a mock:// prefix."""
-    assert uri.startswith(SCHEME), uri
-    target = os.path.join(MOCKFS_ROOT, uri[len(SCHEME) :].strip("/"))
-    shutil.rmtree(target, ignore_errors=True)

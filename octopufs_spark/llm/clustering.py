@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -42,16 +42,6 @@ def quantize(df: DataFrame, col: str = "embedding", scale: int = 1000) -> DataFr
     return df.select(
         "vec_id",
         F.transform(F.col(col), lambda x: F.round(x * scale).cast("long")).alias("qv"),
-    )
-
-
-def _sq_dist(qv: Column, centroid: list[int]) -> Column:
-    """Exact integer squared L2 distance to a literal centroid."""
-    cen = F.array(*[F.lit(int(c)).cast("long") for c in centroid])
-    return F.aggregate(
-        F.zip_with(qv, cen, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
     )
 
 

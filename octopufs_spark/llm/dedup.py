@@ -9,12 +9,8 @@ candidate subsets, not the scale path.
 
 from __future__ import annotations
 
-import hashlib
-
-import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -610,32 +606,6 @@ def simhash64_col(text_col: str = "text") -> F.Column:
     )
 
 
-def simhash_pandas_udf():
-    """Reference Pandas-UDF SimHash (md5 token hashes) — kept as the
-    Arrow-batched UDF-surface example; ``simhash64_col`` is the fast
-    path. Built lazily: module-scope ``@pandas_udf`` needs an active
-    SparkSession at import time.
-    """
-
-    def simhash(text: str) -> str:
-        acc = [0] * 64
-        for t in text.split(" "):
-            h = int.from_bytes(hashlib.md5(t.encode("utf-8")).digest()[:8], "big")
-            for i in range(64):
-                acc[i] += 1 if (h >> i) & 1 else -1
-        v = 0
-        for i in range(64):
-            if acc[i] > 0:
-                v |= 1 << i
-        return f"{v:016x}"
-
-    @pandas_udf("string")
-    def udf(texts: pd.Series) -> pd.Series:
-        return texts.map(simhash)
-
-    return udf
-
-
 def simhash_bands(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """[id, simhash, band0..band3]: 16-bit bands for bucketed candidate join."""
     out = df.select(F.col(id_col), simhash64_col(text_col).alias("simhash"))
@@ -771,7 +741,7 @@ def simhash_bands_deterministic(
     token occurrences of ±1 by token-hash bit b, bands = fixed-width
     signature slices. 48 bits (of the 60 the hex prefix yields) in 4
     12-bit bands. Exact integer votes ⇒ deterministic signature —
-    unlike the xxhash64/Pandas-UDF paths (simhash_bands), this one
+    unlike the xxhash64 path (simhash_bands), this one
     hash-verifies against a DuckDB replay. Same plan shape: one explode
     + one grouped aggregation, no Python."""
     toks = docs.select(

@@ -235,7 +235,7 @@ def insert_into_table(spark: SparkSession, src_table: str, trg_table: str) -> No
     doesn't matter — Catalyst plans the scan+write, AQE sizes the
     output tasks."""
     catalog.validate_compatibility(spark, src_table, trg_table)
-    spark.table(src_table).writeTo(trg_table).append()
+    spark.sql(f"INSERT INTO TABLE {trg_table} SELECT * FROM {src_table}")
     catalog.refresh_metadata(spark, trg_table)
 
 

@@ -1,8 +1,9 @@
 """Streaming-shaped queries, batch-checkable on events (SURVEY.md §2C).
 
 Tumbling / sliding windows and keyed dedup expressed over the batch
-events table; the same transformations run under Structured Streaming
-in octopufs_spark/streaming.py (with watermarks), where the DuckDB
+events table; the tumbling and dedup transformations also run under
+Structured Streaming in octopufs_spark/streaming.py (with watermarks),
+where the DuckDB
 oracle can't reach — batch twins here give the correctness signal.
 """
 

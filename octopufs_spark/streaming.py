@@ -57,16 +57,6 @@ def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """1-hour window sliding 30 minutes."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
-    )
-
-
 def deduped_events(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Keyed dedup within the watermark horizon: duplicate event_ids
     arriving inside the state window are dropped."""

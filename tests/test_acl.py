@@ -93,6 +93,23 @@ def test_modify_is_merge_not_replace(tmp_path):
     store.modify_acl(p, [FsPermission("user", "r--", ACCESS, "g1")])
     entries = {e.key(): e.permission for e in store.get_acl(p)}
     assert entries[("user", ACCESS, "g1")] == "r--"
+    # reset replaces: only the given entries remain, and [] empties
+    only = FsPermission("other", "r-x", ACCESS, "g3")
+    acl.reset_acl_entries(store, p, [only])
+    assert store.get_acl(p) == [only]
+    acl.reset_acl_entries(store, p, [])
+    assert store.get_acl(p) == []
+
+
+def test_two_instances_on_one_root_lose_no_update(tmp_path):
+    """Each op re-reads the sidecar, so one instance's flush never
+    drops an entry another instance wrote."""
+    (tmp_path / "a").mkdir()
+    p = str(tmp_path / "a")
+    first, second = SidecarAclStore(str(tmp_path)), SidecarAclStore(str(tmp_path))
+    first.modify_acl(p, [FsPermission("user", "rwx", ACCESS, "g1")])
+    second.modify_acl(p, [FsPermission("user", "rwx", ACCESS, "g2")])
+    assert sorted(e.grantee for e in SidecarAclStore(str(tmp_path)).get_acl(p)) == ["g1", "g2"]
 
 
 def test_clear_folder_acl(tree, tmp_path):
@@ -146,6 +163,95 @@ def test_retry_tolerates_missing_paths(tmp_path):
     results = acl.modify_acls(Flaky(), [str(tmp_path / "a")], [FsPermission("user", "rwx")])
     assert all(r.success for r in results)
     assert calls["n"] == 3
+
+
+@pytest.fixture(params=["sidecar", "mock"])
+def any_store(request, tmp_path):
+    """(store, source uri, target uri, sidecar file) for the local
+    sidecar store over ``tree`` and the mock:// store over ``mock_tree``."""
+    import os
+
+    from octopufs_spark.fs import mockfs
+
+    if request.param == "sidecar":
+        src, trg = request.getfixturevalue("tree")
+        return SidecarAclStore(str(tmp_path)), str(src), str(trg), str(tmp_path / ".octopufs_acls.json")
+    store, src, trg = request.getfixturevalue("mock_tree")
+    return store, src, trg, os.path.join(mockfs.MOCKFS_ROOT, ".mock_acls.json")
+
+
+def _count_sidecar_replaces(monkeypatch, sidecar, fail_first=0):
+    """Counts ``os.replace`` calls onto the sidecar; the first
+    ``fail_first`` of them raise ``OSError`` instead of replacing."""
+    import os
+
+    calls = []
+    real = os.replace
+
+    def replace(src, dst):
+        if os.fspath(dst) == sidecar:
+            calls.append(dst)
+            if len(calls) <= fail_first:
+                raise OSError("injected flush failure")
+        real(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    return calls
+
+
+def test_bulk_ops_flush_the_sidecar_once(any_store, monkeypatch):
+    store, src, trg, sidecar = any_store
+    calls = _count_sidecar_replaces(monkeypatch, sidecar)
+    perm = FsPermission("user", "r-x", DEFAULT, "bulk-g")
+    results = acl.modify_folder_acl(store, src, perm)
+    assert len(results) > 10 and all(r.success for r in results)
+    assert len(calls) == 1
+    results = acl.synchronize_acls(store, trg, src)
+    assert len(results) > 10 and all(r.success for r in results)
+    assert len(calls) == 2
+    assert {e.grantee for e in store.get_acl(f"{trg}/d0/only_in_target/orphan.txt")} == {"bulk-g"}
+
+
+def test_transient_flush_failure_is_retried(any_store, monkeypatch):
+    store, src, _, sidecar = any_store
+    calls = _count_sidecar_replaces(monkeypatch, sidecar, fail_first=2)
+    perm = FsPermission("group", "rwx", ACCESS, "retry-g")
+    results = acl.modify_folder_acl(store, src, perm)
+    assert all(r.success for r in results)
+    assert len(calls) == 3
+    assert {e.grantee for e in store.get_acl(f"{src}/d1/top.txt")} == {"retry-g"}
+
+
+def test_failed_flush_leaves_the_old_sidecar(any_store, monkeypatch):
+    """A flush that keeps failing raises after the shared retry budget
+    and leaves the pre-op sidecar on disk, byte for byte: never a mix
+    of old and new entries."""
+    import json
+
+    store, src, _, sidecar = any_store
+    store.modify_acl(src, [FsPermission("user", "rwx", ACCESS, "before")])
+    with open(sidecar, "rb") as f:
+        before = f.read()
+    calls = _count_sidecar_replaces(monkeypatch, sidecar, fail_first=10**6)
+    with pytest.raises(RuntimeError, match="ACL op failed .* after 5 attempts"):
+        acl.modify_folder_acl(store, src, FsPermission("user", "r--", ACCESS, "after"))
+    assert len(calls) == 5
+    with open(sidecar, "rb") as f:
+        assert f.read() == before
+    assert json.loads(before)
+    assert {e.grantee for e in store.get_acl(src)} == {"before"}
+
+
+def test_corrupt_sidecar_raises(tmp_path):
+    """A corrupt sidecar is an error, not an empty store: reading it
+    as empty would let the next write wipe every entry."""
+    (tmp_path / ".octopufs_acls.json").write_text("{not json")
+    store = SidecarAclStore(str(tmp_path))
+    with pytest.raises(ValueError):
+        store.get_acl(str(tmp_path))
+    with pytest.raises(ValueError):
+        store.set_acl(str(tmp_path), [FsPermission("user", "rwx")])
+    assert (tmp_path / ".octopufs_acls.json").read_text() == "{not json"
 
 
 @pytest.mark.slow  # >50 s; excluded from the default driver-window run

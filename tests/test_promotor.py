@@ -100,6 +100,20 @@ def test_move_table_partitions(spark, sales_tables):
     assert spark.table(src).where("o_year = 1996").count() == 0
 
 
+def test_move_files_between_tables(spark, sales_tables):
+    """The target is emptied, then every source file is renamed into
+    it: the target holds exactly the source's rows, the source none."""
+    src, trg = sales_tables
+    n = spark.table(src).count()
+    s = spark.table(src).agg(F.sum("o_totalprice")).first()[0]
+    assert spark.table(trg).count() < n
+    results = promotor.move_files_between_tables(spark, src, trg)
+    assert results and all(r.success for r in results)
+    assert spark.table(trg).count() == n
+    assert abs(spark.table(trg).agg(F.sum("o_totalprice")).first()[0] - s) < 1e-6
+    assert spark.table(src).count() == 0
+
+
 def test_each_op_refreshes_each_table_once(spark, sales_tables, monkeypatch):
     """A refresh is refreshTable + recoverPartitions, with the
     partitioning read from the CatalogTable; an op refreshes each table
@@ -146,6 +160,17 @@ def test_sql_analog_overwrite_matches_file_level(spark, sales_tables):
     s = spark.table(src).agg(F.sum("o_totalprice")).first()[0]
     t = spark.table(trg).agg(F.sum("o_totalprice")).first()[0]
     assert abs(s - t) < 1e-6
+
+
+def test_sql_analog_insert_appends(spark, sales_tables):
+    """INSERT INTO appends: the target keeps its rows and gains every
+    source row (the relational twin of copy_files_between_tables)."""
+    src, trg = sales_tables
+    n_src, n_trg = spark.table(src).count(), spark.table(trg).count()
+    n95 = spark.table(src).where("o_year = 1995").count()
+    promotor.insert_into_table(spark, src, trg)
+    assert spark.table(trg).count() == n_src + n_trg
+    assert spark.table(trg).where("o_year = 1995").count() == 2 * n95
 
 
 def test_sql_analog_partition_exchange(spark, sales_tables):
