@@ -415,6 +415,17 @@ def _alias_chain(col: str, events: list) -> list[str]:
     return chain
 
 
+def _layout_key(hidden_partitions: dict | None) -> dict | None:
+    """A hidden-partition spec map's LAYOUT identity: (kind, src, param)
+    per column, None for no layout. The optional 4th element is the
+    probe-gate dtype annotation, which upgraded writers add to
+    otherwise-identical specs — raw list equality would spuriously
+    conflict an append whose physical layout never moved."""
+    if not hidden_partitions:
+        return None
+    return {k: tuple(v[:3]) for k, v in hidden_partitions.items()}
+
+
 def _strip_dropped(df: DataFrame) -> DataFrame:
     gone = [c for c in df.columns if c.startswith(_DROPPED_PREFIX)]
     return df.drop(*gone) if gone else df
@@ -942,16 +953,35 @@ class ManifestTable:
             self._check_not_vacuumed(m)
         if not m.files:
             raise ValueError(f"manifest v{m.version} of {self.root} lists no files")
+        df = self._read_files(
+            spark, m, m.files, collapse=at_head, merge_schema=merge_schema
+        )
+        return self._strip_hidden(df, m)
+
+    def _read_files(
+        self,
+        spark: SparkSession,
+        m: Manifest,
+        files: list[str],
+        collapse: bool = False,
+        merge_schema: bool = False,
+    ) -> DataFrame:
+        """The rows of ``files`` (a subset of snapshot ``m``) as a reader
+        of ``m`` sees them: scanned under ``m``'s schema-evolution log,
+        ``m``'s delete vectors applied, dropped columns removed. Hidden
+        partition columns stay — callers that surface logical rows strip
+        them (:meth:`_strip_hidden`); rewrites that re-stage the layout
+        keep them. ``collapse`` is for verified-head reads only (see
+        :meth:`_collapse_scan_paths`)."""
         df = self._scan_files(
             spark,
-            m.files,
+            files,
             merge_schema=merge_schema,
             annotate_positions=self._has_positional_dvs(m),
             evolution=m.meta.get("schema_evolution"),
-            collapse=at_head,
+            collapse=collapse,
         )
-        df = _strip_dropped(self._apply_delete_vectors(spark, df, m))
-        return self._strip_hidden(df, m)
+        return _strip_dropped(self._apply_delete_vectors(spark, df, m))
 
     @staticmethod
     def _strip_hidden(df: DataFrame, m: Manifest) -> DataFrame:
@@ -1156,31 +1186,52 @@ class ManifestTable:
         dvs = m.meta.get("delete_vectors", [])
         pos_dvs = [dv for dv in dvs if dv.get("type") == "positional"]
         key_dvs = [dv for dv in dvs if not dv.get("type")]
-        if pos_dvs:
-            if "_dv_file" not in df.columns:
-                # unioned scans carry the annotation already (attached
-                # per scan — _metadata does not resolve post-union)
-                df = self._annotate_positions(df)
-            for dv in pos_dvs:
-                gone = spark.read.parquet(f"{self.root}/{dv['path']}").select(
-                    _F.col("file").alias("_dv_file"), _F.col("pos").alias("_dv_pos")
-                )
-                df = df.join(_F.broadcast(gone), ["_dv_file", "_dv_pos"], "left_anti")
-            df = df.drop("_dv_file", "_dv_pos")
+        if pos_dvs and "_dv_file" not in df.columns:
+            # unioned scans carry the annotation already (attached per
+            # scan — _metadata does not resolve post-union)
+            df = self._annotate_positions(df)
         events = m.meta.get("schema_evolution", [])
-        for dv in key_dvs:
-            keys_df = spark.read.parquet(f"{self.root}/{dv['path']}")
-            join_keys = dv["keys"]
-            if events:
-                # a vector stores key columns as spelled AT DELETE TIME;
-                # the scan has current logical names — replay the same
-                # event log on both the key frame and the key-name list
-                # so later renames (or even drops, via the sentinel)
-                # cannot silently detach an existing vector
-                keys_df = _apply_evolution(keys_df, events)
-                join_keys = _evolve_names(list(join_keys), events)
-            df = df.join(_F.broadcast(keys_df), join_keys, "left_anti")
-        return df
+        for dv in pos_dvs + key_dvs:
+            frame, on = self._vector_frame(spark, dv, events)
+            df = df.join(_F.broadcast(frame), on, "left_anti")
+        return df.drop("_dv_file", "_dv_pos") if pos_dvs else df
+
+    def _vector_frame(
+        self, spark: SparkSession, dv: dict, events: list
+    ) -> tuple[DataFrame, list[str]]:
+        """One delete vector as ``(frame, join columns)``: a positional
+        vector as its ``(_dv_file, _dv_pos)`` pairs (matching
+        :meth:`_annotate_positions`), an equality vector as its key rows
+        under the snapshot's evolution ``events``. Reads anti-join the
+        frame; the MV delta fold semi-joins it to find the hit rows."""
+        from pyspark.sql import functions as _F
+
+        vec = spark.read.parquet(f"{self.root}/{dv['path']}")
+        if dv.get("type") == "positional":
+            return (
+                vec.select(_F.col("file").alias("_dv_file"), _F.col("pos").alias("_dv_pos")),
+                ["_dv_file", "_dv_pos"],
+            )
+        on = list(dv["keys"])
+        if events:
+            # a vector stores key columns as spelled AT DELETE TIME; the
+            # scan has current logical names — replay the same event log
+            # on both the key frame and the key-name list so later
+            # renames (or even drops, via the sentinel) cannot silently
+            # detach an existing vector
+            vec = _apply_evolution(vec, events)
+            on = _evolve_names(on, events)
+        return vec, on
+
+    def _vector_files(self, dv: dict) -> set[str]:
+        """The data files a positional vector names, read on the driver
+        (vectors are tiny by construction — no Spark job)."""
+        import pyarrow.parquet as pq
+
+        col = pq.read_table(
+            f"{self.root_path}/{dv['path']}", columns=["file"], filesystem=self.fs
+        ).column(0)
+        return set(col.unique().to_pylist())
 
     def _rel_path_col(self):
         """Table-relative path of the scanned file, from the parquet
@@ -1343,6 +1394,41 @@ class ManifestTable:
             if not el.is_dir and el.path.endswith(".parquet")
         )
 
+    def _stage(
+        self,
+        df: DataFrame,
+        prefix: str,
+        partition_by: list[str] | None = None,
+        expectations: list[tuple[str, str]] | None = None,
+        stats: bool = False,
+        bloom_columns: list[str] | None = None,
+    ) -> tuple[list[str], dict]:
+        """The one staging step of every Spark-written commit: write
+        ``df`` to a fresh ``{prefix}-{uuid}`` directory under the root
+        (``errorifexists``, hive-partitioned by ``partition_by``), check
+        ``expectations`` on the staged bytes, and list the staged files
+        ONCE. Returns ``(files, meta)``: root-relative parquet files and
+        the commit meta collected from them — ``file_stats`` zone maps
+        with ``stats``, a ``bloom_index`` over ``bloom_columns``. Nothing
+        is published: a failure here (or in the commit after it) leaves
+        invisible orphans for ``vacuum``."""
+        staged = f"{prefix}-{uuid.uuid4().hex[:12]}"
+        writer = df.write.mode("errorifexists")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(f"{self.root}/{staged}")
+        if expectations:
+            check_expectations(df.sparkSession, self, staged, expectations)
+        files = self._data_files_under(staged)
+        meta: dict = {}
+        if stats:
+            meta["file_stats"] = self.collect_file_stats(files)
+        if bloom_columns:
+            meta["bloom_index"] = {
+                col: self.collect_bloom_index(files, col) for col in bloom_columns
+            }
+        return files, meta
+
     def commit_overwrite(
         self,
         staged_subdir: str,
@@ -1358,6 +1444,54 @@ class ManifestTable:
         if not files:
             raise ValueError(f"nothing staged under {self.root}/{staged_subdir}")
         return self._commit_with_retry(files, operation, meta, wap_id=wap_id, branch=branch)
+
+    def commit_append(
+        self,
+        files: list[str],
+        meta: dict | None = None,
+        operation: str = "append",
+        wap_id: str | None = None,
+        branch: str | None = None,
+        txn: tuple[str, int] | None = None,
+    ) -> int | None:
+        """Publish staged ``files`` on top of the lineage head's files —
+        the one append commit (batch appends, stream micro-batches, the
+        ``format("manifest")`` writer). The parent's content metadata
+        (zone maps, blooms, vectors, evolution log) carries forward
+        against the LIVE parent at publish time.
+
+        Appends must conform to the table's hidden-partition layout:
+        ``meta["hidden_partitions"]`` is the layout the files were staged
+        under (absent for a plain append), and the build re-verifies it
+        against the live parent on every attempt. A mismatch — a layout
+        adopted or changed by a racing overwrite after the staging-time
+        check (:func:`_check_append_layout`), or a writer that never
+        checked — raises :class:`ConcurrentModificationError` with
+        nothing published: the files were written under another layout,
+        and landing them would break pruning or the by-name union every
+        read performs. The first commit of an empty table adopts any
+        layout. ``txn`` is the exactly-once pair (see
+        :meth:`_commit_with_retry`); returns None when it already
+        landed."""
+        staged_layout = _layout_key((meta or {}).get("hidden_partitions"))
+
+        def build(parent: Manifest | None) -> list[str]:
+            if parent is None:
+                return sorted(files)
+            live_layout = _layout_key(parent.meta.get("hidden_partitions"))
+            if live_layout != staged_layout:
+                raise ConcurrentModificationError(
+                    f"append does not conform to the hidden-partition layout of "
+                    f"{self.root}: live {live_layout}, staged {staged_layout} — the "
+                    "staged files were written under another layout; re-stage "
+                    "them conforming to the live one, or change the layout via "
+                    "overwrite"
+                )
+            return sorted(parent.files + files)
+
+        return self._commit_with_retry(
+            build, operation, meta, wap_id=wap_id, branch=branch, txn=txn
+        )
 
     def commit_replace(
         self,
@@ -1523,17 +1657,6 @@ class ManifestTable:
         if bsub:
             reapply_meta["bloom_index"] = bsub
 
-        # Hidden specs compare on their LAYOUT identity (kind, src,
-        # param) only: the optional 4th element is the probe-gate dtype
-        # annotation, which upgraded writers add to otherwise-identical
-        # specs — raw list equality would spuriously conflict a pure
-        # append whose physical layout never moved.
-        def _layout(meta: dict):
-            hp = meta.get("hidden_partitions") or None
-            if hp is None:
-                return None
-            return {k: tuple(v[:3]) for k, v in hp.items()}
-
         def build(parent: Manifest | None):
             self._walk_wap_outcome(
                 parent, base_v, v, done="published",
@@ -1559,7 +1682,8 @@ class ManifestTable:
             checks = [
                 ("schema_evolution", parent.meta.get("schema_evolution") or None,
                  s.meta.get("schema_evolution") or None),
-                ("hidden_partitions", _layout(parent.meta), _layout(s.meta)),
+                ("hidden_partitions", _layout_key(parent.meta.get("hidden_partitions")),
+                 _layout_key(s.meta.get("hidden_partitions"))),
             ]
             for key, a, b in checks:
                 if a != b:
@@ -2047,7 +2171,8 @@ class ManifestTable:
         carry: bool = True,
         wap_id: str | None = None,
         branch: str | None = None,
-    ) -> int:
+        txn: tuple[str, int] | None = None,
+    ) -> int | None:
         """The one commit loop: every commit of a version file runs
         through it. Each attempt resolves the lineage head (main, or
         the branch head for ``branch``), builds against it, and
@@ -2065,7 +2190,17 @@ class ManifestTable:
         publish or branch-ref CAS backs off (:func:`_lost_race_backoff`)
         and re-resolves, all within one budget of
         ``_COMMIT_RETRY_ATTEMPTS``; exhausting it raises
-        ``RuntimeError``."""
+        ``RuntimeError``.
+
+        ``txn=(writer_id, batch_id)`` makes the commit exactly-once on
+        that pair (the Delta ``txnAppId`` model): every attempt reads
+        the parent's ``stream_txn`` high-water mark for ``writer_id``
+        first, and when ``batch_id`` is at or below it returns None
+        with nothing published (a racing instance of the writer landed
+        the batch). Otherwise the commit records ``writer_id``,
+        ``batch_id`` and the new mark in its meta. Checking against the
+        parent the publish CAS is built on makes check-and-commit
+        atomic; callers keep a cheap pre-check before staging."""
         import time
 
         if branch is not None and wap_id is not None:
@@ -2086,11 +2221,22 @@ class ManifestTable:
                 parent = self.read_manifest(bh) if bh is not None else None
             else:
                 parent = self._main_manifest_at_or_below(latest)
+            if txn is not None:
+                mark = (parent.meta.get("stream_txn", {}) if parent else {}).get(txn[0])
+                if mark is not None and mark >= txn[1]:
+                    return None
             try:
                 built = files_or_build(parent) if callable(files_or_build) else files_or_build
             except _AlreadyResolved as done:
                 return done.version
             files, attempt_meta = built if isinstance(built, tuple) else (built, meta)
+            if txn is not None:
+                attempt_meta = {
+                    **(attempt_meta or {}),
+                    "writer_id": txn[0],
+                    "batch_id": txn[1],
+                    "stream_txn": {txn[0]: txn[1]},
+                }
             parent_files = set(parent.files) if parent else set()
             # In-commit timestamp, forced strictly above the parent's —
             # AND above the newest manifest in the WHOLE log when that
@@ -2611,23 +2757,15 @@ class ManifestTable:
         if not m.files:
             raise ValueError(f"manifest v{m.version} of {self.root} lists no files")
         keep, _ = self.prune_plan(predicates, version)
-        evolution = m.meta.get("schema_evolution")
         if not keep:
             # preserve the LOGICAL schema with an empty, zero-file-cost
             # scan (hidden partition columns stripped like any read)
+            evolution = m.meta.get("schema_evolution")
             empty = _strip_dropped(
                 self._scan_files(spark, [m.files[0]], evolution=evolution).limit(0)
             )
             return self._strip_hidden(empty, m)
-        df = self._scan_files(
-            spark,
-            keep,
-            annotate_positions=self._has_positional_dvs(m),
-            evolution=evolution,
-            collapse=at_head,
-        )
-        df = _strip_dropped(self._apply_delete_vectors(spark, df, m))
-        return self._strip_hidden(df, m)
+        return self._strip_hidden(self._read_files(spark, m, keep, collapse=at_head), m)
 
     # ---------- maintenance ----------
 
@@ -2918,161 +3056,118 @@ def write_and_commit(
     ``table.create_branch``: it chains off the BRANCH head (invisible
     to main like a staged snapshot) until ``table.fast_forward``
     publishes the whole branch line."""
-    staged = f"data-{uuid.uuid4().hex[:12]}"
     partition_by = list(partition_by or [])
+    stored_specs: dict[str, list] | None = None
     if hidden_partition:
         dtypes = dict(df.dtypes)
-        stored_specs: dict[str, list] = {}
+        stored_specs = {}
         for name, spec in hidden_partition.items():
-            kind, src = spec[0], spec[1]
-            param = spec[2] if len(spec) > 2 else None
-            df = df.withColumn(name, hidden_transform_expr(kind, src, param))
             entry = list(spec)
-            if kind == "bucket" and len(entry) == 3 and src in dtypes:
+            if entry[0] == "bucket" and len(entry) == 3 and entry[1] in dtypes:
                 # record the SOURCE column type so prune-side int probes
                 # can verify their str() rendering matches the CAST the
                 # write-side md5 hashed (exact only for integer types)
-                entry.append(dtypes[src])
+                entry.append(dtypes[entry[1]])
             stored_specs[name] = entry
-        df = df.repartition(*hidden_partition.keys())
-        partition_by += list(hidden_partition.keys())
+        df = _with_hidden_columns(df, hidden_partition)
+        partition_by += list(hidden_partition)
         meta = {**(meta or {}), "hidden_partitions": stored_specs}
     if mode == "append":
-        # EVERY append (hidden-spec'd or plain) must CONFORM to the live
-        # layout: a different transform under the same name would hash
-        # the same probe into different dirs per commit (one spec prunes
-        # all files — silently lost rows), a bucket source whose TYPE
-        # changed renders differently under CAST (same failure), a
-        # brand-new hidden column breaks the by-name union every read
-        # performs, and a SUBSET layout (or a plain append onto a
-        # hidden-layout table) lands files that every source-predicate
-        # prune on the omitted transform silently skips. Adopt or change
-        # a layout via overwrite, which replaces the whole file set.
-        #
-        # The reference layout comes from the COMMIT TARGET's head:
-        # a branch append conforms to the branch head (a branch may
-        # have adopted a different layout via overwrite — checking
-        # main would either spuriously reject a conforming branch
-        # append or silently pass a spec the branch head does not
-        # have, recreating the pruning-lost-rows hazard on the
-        # branch line). wap_id without branch publishes onto main,
-        # so main's head is the right staging-time reference there.
-        if branch is not None:
-            ref_version: int | None = table.branch_head(branch)
-        else:
-            ref_version = table.current_version()
-        try:
-            head_hp = (
-                table.read_manifest(ref_version).meta.get("hidden_partitions")
-                if ref_version is not None
-                else None
-            ) or {}
-        except FileNotFoundError:
-            head_hp = {}
-        if hidden_partition:
-            for name, entry in stored_specs.items():
-                old = head_hp.get(name)
-                if old is None:
-                    if head_hp or ref_version is not None:
-                        raise ValueError(
-                            f"append introduces hidden partition {name!r} the "
-                            f"table does not have — adopt a layout via overwrite"
-                        )
-                    continue
-                if tuple(old[:3]) != tuple(entry[:3]):
-                    raise ValueError(
-                        f"hidden partition {name!r} spec {tuple(entry[:3])} does not "
-                        f"match the table's {tuple(old[:3])} — appends must conform; "
-                        "change the layout via overwrite"
-                    )
-                if (
-                    entry[0] == "bucket"
-                    and len(old) > 3
-                    and len(entry) > 3
-                    and old[3] != entry[3]
-                ):
-                    raise ValueError(
-                        f"bucket source column {entry[1]!r} is {entry[3]} here but "
-                        f"{old[3]} in the table — CAST renderings differ, the same "
-                        "key would land in different buckets per commit"
-                    )
-            missing = set(head_hp) - set(stored_specs)
-            if missing:
-                # r9 ADVICE: a strict-subset layout previously passed
-                # staging (every OWN spec matched) and then always died
-                # in the build-time equality re-verify with a misleading
-                # "changed between staging and committing" race error —
-                # refuse it HERE with the conformance message instead
-                raise ValueError(
-                    f"append omits hidden partition(s) {sorted(missing)} the "
-                    "table has — appends must conform to the FULL live "
-                    "layout; change the layout via overwrite"
-                )
-        elif head_hp:
-            raise ValueError(
-                f"table has a hidden-partition layout "
-                f"{ {k: tuple(v[:3]) for k, v in head_hp.items()} } — a plain "
-                "append would land un-transformed files that source-predicate "
-                "pruning silently skips; pass a conforming hidden_partition= "
-                "or replace the layout via overwrite"
-            )
-    writer = df.write.mode("errorifexists")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(f"{table.root}/{staged}")
-    if expectations:
-        check_expectations(df.sparkSession, table, staged, expectations)
-    meta = dict(meta or {})
-    staged_files = table._data_files_under(staged)
-    if stats:
-        meta["file_stats"] = table.collect_file_stats(staged_files)
-    if bloom_columns:
-        meta["bloom_index"] = {
-            col: table.collect_bloom_index(staged_files, col) for col in bloom_columns
-        }
-    if mode == "overwrite":
-        return table.commit_overwrite(staged, meta=meta, wap_id=wap_id, branch=branch)
+        _check_append_layout(table, stored_specs, branch)
+    elif mode != "overwrite":
+        raise ValueError(f"unsupported mode {mode!r}")
+    files, staged_meta = table._stage(
+        df, "data", partition_by, expectations, stats=stats, bloom_columns=bloom_columns
+    )
+    meta = {**(meta or {}), **staged_meta}
     if mode == "append":
         # the parent's zone maps / blooms carry forward at publish time
         # (_carry_skipping_meta), against the LIVE parent rather than a
-        # pre-staging snapshot read
-        #
-        # The staging-time layout conformance check above is
-        # time-of-check-to-time-of-use: a concurrent overwrite can change
-        # the hidden layout between that check and this commit build, and
-        # the append would then land a mixed-layout snapshot. Capture
-        # the layout identity this append was staged under and re-verify
-        # against the LIVE parent inside build() — the same compare the
-        # WAP publish performs (_layout at publish time). This covers
-        # PLAIN appends too (staged_layout=None vs a live layout adopted
-        # mid-flight — r9 ADVICE: previously unchecked, the un-transformed
-        # files landed and every source-predicate prune silently skipped
-        # them). A None parent (first commit on an empty table) is the
-        # adopt-layout case and passes by construction.
-        staged_layout = (
-            {k: tuple(v[:3]) for k, v in stored_specs.items()}
-            if hidden_partition
+        # pre-staging snapshot read; the layout check above re-runs
+        # against that parent inside the commit build
+        return table.commit_append(files, meta, wap_id=wap_id, branch=branch)
+    if not files:
+        raise ValueError(f"nothing staged for {table.root}")
+    return table._commit_with_retry(files, "overwrite", meta, wap_id=wap_id, branch=branch)
+
+
+def _with_hidden_columns(df: DataFrame, specs: dict) -> DataFrame:
+    """``df`` plus one derived column per hidden-partition spec
+    ({name: (kind, src[, param])}), repartitioned on those columns so
+    each partition dir is written by exactly one task (one file per
+    dir — deterministic layout, no small-file spray)."""
+    for name, spec in specs.items():
+        param = spec[2] if len(spec) > 2 else None
+        df = df.withColumn(name, hidden_transform_expr(spec[0], spec[1], param))
+    return df.repartition(*specs)
+
+
+def _check_append_layout(
+    table: ManifestTable, specs: dict | None, branch: str | None = None
+) -> None:
+    """Staging-time check that an append CONFORMS to the live hidden-
+    partition layout (``specs``: the append's stored spec map, None for
+    a plain append); raises ``ValueError`` before any byte is staged. A
+    different transform or bucket source type under the same name
+    hashes the same probe into different dirs per commit, a new hidden
+    column breaks the by-name union every read performs, and a subset
+    layout or a plain append lands files that source-predicate pruning
+    silently skips. Adopt or change a layout via overwrite;
+    :meth:`ManifestTable.commit_append` re-verifies at commit time.
+
+    The reference is the COMMIT TARGET's head: a branch may have
+    adopted another layout via overwrite, so a branch append conforms
+    to the branch head; a WAP append without a branch publishes onto
+    main and conforms to main."""
+    ref_version = table.branch_head(branch) if branch is not None else table.current_version()
+    try:
+        head_hp = (
+            table.read_manifest(ref_version).meta.get("hidden_partitions")
+            if ref_version is not None
             else None
-        )
-
-        def build(parent):
-            if parent is not None:
-                live = parent.meta.get("hidden_partitions") or None
-                live_layout = (
-                    {k: tuple(v[:3]) for k, v in live.items()} if live else None
+        ) or {}
+    except FileNotFoundError:
+        head_hp = {}
+    if not specs:
+        if head_hp:
+            raise ValueError(
+                f"table has a hidden-partition layout {_layout_key(head_hp)} — a "
+                "plain append would land un-transformed files that source-"
+                "predicate pruning silently skips; append with a conforming "
+                "hidden_partition= or replace the layout via overwrite"
+            )
+        return
+    for name, entry in specs.items():
+        old = head_hp.get(name)
+        if old is None:
+            if head_hp or ref_version is not None:
+                raise ValueError(
+                    f"append introduces hidden partition {name!r} the "
+                    f"table does not have — adopt a layout via overwrite"
                 )
-                if live_layout != staged_layout:
-                    raise ConcurrentModificationError(
-                        f"hidden-partition layout of {table.root} changed between "
-                        f"staging this append and committing it "
-                        f"({live_layout} vs staged {staged_layout}) — the staged "
-                        "files were written under the old layout; re-stage"
-                    )
-            base = parent.files if parent else []
-            return sorted(base + table._data_files_under(staged))
-
-        return table._commit_with_retry(build, "append", meta, wap_id=wap_id, branch=branch)
-    raise ValueError(f"unsupported mode {mode!r}")
+            continue
+        if tuple(old[:3]) != tuple(entry[:3]):
+            raise ValueError(
+                f"hidden partition {name!r} spec {tuple(entry[:3])} does not "
+                f"match the table's {tuple(old[:3])} — appends must conform; "
+                "change the layout via overwrite"
+            )
+        if entry[0] == "bucket" and len(old) > 3 and len(entry) > 3 and old[3] != entry[3]:
+            raise ValueError(
+                f"bucket source column {entry[1]!r} is {entry[3]} here but "
+                f"{old[3]} in the table — CAST renderings differ, the same "
+                "key would land in different buckets per commit"
+            )
+    missing = set(head_hp) - set(specs)
+    if missing:
+        # a strict-subset layout would otherwise pass (every OWN spec
+        # matched) and then always die in the commit-build re-verify
+        # with a race error — refuse it here with the conformance message
+        raise ValueError(
+            f"append omits hidden partition(s) {sorted(missing)} the "
+            "table has — appends must conform to the FULL live "
+            "layout; change the layout via overwrite"
+        )
 
 
 def compact_and_commit(
@@ -3187,7 +3282,6 @@ def compact_and_commit(
     n = max(1, -(-total // target_file_bytes))  # ceil
     if n >= len(matched) and zorder_by is None:
         return None  # files already at/above target size
-    staged = f"compact-{uuid.uuid4().hex[:12]}"
     if not scoped:
         src_df = table.read(spark, version=m.version)
     else:
@@ -3199,18 +3293,7 @@ def compact_and_commit(
         # two spellings of the same column (hard error) or anti-join
         # vectors against the wrong names — the rewrite stages LOGICAL
         # names (drops materialized), which later replays leave intact.
-        src_df = _strip_dropped(
-            table._apply_delete_vectors(
-                spark,
-                table._scan_files(
-                    spark,
-                    matched,
-                    annotate_positions=table._has_positional_dvs(m),
-                    evolution=m.meta.get("schema_evolution"),
-                ),
-                m,
-            )
-        )
+        src_df = table._read_files(spark, m, matched)
     if zorder_by is not None:
         from pyspark.sql import functions as _F
 
@@ -3269,13 +3352,16 @@ def compact_and_commit(
         for k, dt in src_df.dtypes:
             if k in partition_values and dt == "void":
                 src_df = src_df.withColumn(k, _F.col(k).cast("string"))
-    writer = src_df.write
-    if partition_values is not None:
-        # keep the hive layout: the rewrite re-stages under k=v dirs so
-        # the partition identity survives (a later auto_optimize pass
-        # still groups these files with their partition)
-        writer = writer.partitionBy(*partition_values.keys())
-    writer.parquet(f"{table.root}/{staged}")
+    # a partition-scoped rewrite keeps the hive layout: it re-stages
+    # under k=v dirs so the partition identity survives (a later
+    # auto_optimize pass still groups these files with their partition)
+    staged_files, meta = table._stage(
+        src_df,
+        "compact",
+        partition_by=list(partition_values) if partition_values is not None else None,
+        stats=stats if stats is not None else bool(m.meta.get("file_stats")),
+        bloom_columns=list(m.meta.get("bloom_index", {})),
+    )
     src_files = set(matched)
     src_dvs = [dv["path"] for dv in m.meta.get("delete_vectors", [])]
 
@@ -3297,7 +3383,7 @@ def compact_and_commit(
                 )
             # a racer's pure appends carry forward into the compacted snapshot
             carried = sorted(parent_files - src_files)
-            return sorted(carried + table._data_files_under(staged))
+            return sorted(carried + staged_files)
         # scoped rewrite: everything outside the prefix is untouched
         # metadata, and carried vectors keep applying snapshot-wide —
         # a racer's NEW vector is only at risk when no parent file
@@ -3325,13 +3411,7 @@ def compact_and_commit(
         for dv in parent_dv_entries:
             if dv["path"] in src_dvs or dv.get("type") != "positional":
                 continue
-            touched = {
-                r["file"]
-                for r in spark.read.parquet(f"{table.root}/{dv['path']}")
-                .select("file")
-                .distinct()
-                .collect()
-            }
+            touched = table._vector_files(dv)
             if touched & src_files:
                 raise ConcurrentModificationError(
                     f"compaction of {table.root} scope {scope_desc!r} conflicts "
@@ -3339,23 +3419,15 @@ def compact_and_commit(
                     f"vector references {len(touched & src_files)} file(s) this "
                     "rewrite replaced — the staged rewrite predates the delete"
                 )
-        return sorted(kept + table._data_files_under(staged))
+        return sorted(kept + staged_files)
 
-    meta: dict = {"target_file_bytes": target_file_bytes}
+    meta["target_file_bytes"] = target_file_bytes
     if zorder_by is not None:
         meta["zorder_by"] = list(zorder_by)
     if prefix is not None:
         meta["compacted_prefix"] = prefix
     if partition_values is not None:
         meta["compacted_partition"] = dict(partition_values)
-    staged_files = table._data_files_under(staged)
-    if stats if stats is not None else bool(m.meta.get("file_stats")):
-        meta["file_stats"] = table.collect_file_stats(staged_files)
-    bloom_cols = list(m.meta.get("bloom_index", {}))
-    if bloom_cols:
-        meta["bloom_index"] = {
-            c: table.collect_bloom_index(staged_files, c) for c in bloom_cols
-        }
     return table._commit_with_retry(build, "compact", meta, branch=branch)
 
 
@@ -3594,6 +3666,10 @@ def manifest_stream_writer(
     otherwise the old incarnation's high-water mark (which every
     commit carries forward, surviving overwrites and vacuum) silently
     swallows the new stream's early batches, exactly as in Delta.
+    Appends must conform to the hidden-partition layout: micro-batches
+    land as plain files, so a table with a hidden layout refuses them
+    (the batch fails before staging any byte) — feed such a table
+    through ``write_and_commit(..., hidden_partition=...)``.
     Returns a DataStreamWriter; caller starts it with its checkpoint
     location.
     """
@@ -3602,10 +3678,6 @@ def manifest_stream_writer(
         _commit_stream_batch(table, batch_df, batch_id, writer_id, expectations)
 
     return stream_df.writeStream.foreachBatch(commit_batch)
-
-
-class _BatchAlreadyCommitted(Exception):
-    """Publish-time signal: this (writer_id, batch_id) already landed."""
 
 
 def _commit_stream_batch(
@@ -3617,43 +3689,24 @@ def _commit_stream_batch(
 ) -> None:
     """One micro-batch → one atomic append commit, idempotent on
     (writer_id, batch_id). The replay check runs TWICE: a cheap
-    pre-check (skip before staging any bytes), and again INSIDE the
-    commit's build against the live parent — two zombie instances of
-    the same writer replaying one batch can both pass the pre-check,
-    and only an atomic check-and-commit (Delta's txnAppId model)
-    stops the loser from landing the batch a second time. The loser's
-    staged files stay uncommitted for ``vacuum``, like any crashed
-    writer's."""
+    pre-check (skip before staging any bytes), and again atomically in
+    the commit loop against the live parent (``txn``) — two zombie
+    instances of the same writer replaying one batch can both pass the
+    pre-check, and only the atomic check-and-commit (Delta's txnAppId
+    model) stops the loser from landing the batch a second time. The
+    loser's staged files stay uncommitted for ``vacuum``, like any
+    crashed writer's. The batch is a plain append, so a table with a
+    hidden-partition layout refuses it (:func:`_check_append_layout`)
+    before any byte is staged."""
     committed = _max_committed_stream_batch(table, writer_id)
     if committed is not None and committed >= batch_id:
         return  # replayed batch: already committed by this writer
-    staged = f"batch-{batch_id}-{uuid.uuid4().hex[:8]}"
-    batch_df.write.mode("errorifexists").parquet(f"{table.root}/{staged}")
-    if expectations:
-        # a violating micro-batch fails the query BEFORE publish (the
-        # Delta constraints model); checkpoint recovery replays the
-        # batch once the data contract is repaired
-        check_expectations(batch_df.sparkSession, table, staged, expectations)
-
-    def build(parent):
-        mark = (parent.meta.get("stream_txn", {}) if parent else {}).get(writer_id)
-        if mark is not None and mark >= batch_id:
-            raise _BatchAlreadyCommitted()
-        base = parent.files if parent else []
-        return sorted(base + table._data_files_under(staged))
-
-    try:
-        table._commit_with_retry(
-            build,
-            "stream-append",
-            {
-                "batch_id": batch_id,
-                "writer_id": writer_id,
-                "stream_txn": {writer_id: batch_id},
-            },
-        )
-    except _BatchAlreadyCommitted:
-        return  # a racing instance of this writer landed the batch first
+    _check_append_layout(table, None)
+    # a violating micro-batch fails the query BEFORE publish (the Delta
+    # constraints model); checkpoint recovery replays the batch once
+    # the data contract is repaired
+    files, _ = table._stage(batch_df, f"batch-{batch_id}", expectations=expectations)
+    table.commit_append(files, operation="stream-append", txn=(writer_id, batch_id))
 
 
 def promote_partitions_to_manifest(
@@ -3701,6 +3754,7 @@ def promote_partitions_to_manifest(
     head = table.current_version()  # main lineage: staged WAP content is not ours to replace
     src_files = set(table.read_manifest(head).files) if head is not None else set()
     replaced_at_read = {f for f in src_files if set(f.split("/")) & set(part_names)}
+    staged_files = table._data_files_under(staged)
 
     def build(parent):
         # a file belongs to partition `year=2024` iff that path segment
@@ -3716,7 +3770,7 @@ def promote_partitions_to_manifest(
                 f"{sorted(rewritten)[0]!r}"
             )
         kept = [f for f in base if not set(f.split("/")) & set(part_names)]
-        return sorted(kept + table._data_files_under(staged))
+        return sorted(kept + staged_files)
 
     return table._commit_with_retry(
         build, "promote-partitions", {"source": source_table, "partitions": part_names, **(meta or {})}

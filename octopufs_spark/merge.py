@@ -126,15 +126,12 @@ def merge_upsert_manifest(
     ``txn=(writer_id, batch_id)`` makes the merge IDEMPOTENT on that
     pair (the Delta txnAppId model): a replayed micro-batch whose id
     the table already carries is skipped — checked cheaply up front
-    and again atomically inside the commit's build, so two zombie
-    instances of one stream cannot both land a batch. Returns None
-    when skipped. This is what makes a foreachBatch MERGE sink
+    and again atomically in the commit loop, so two zombie instances
+    of one stream cannot both land a batch. Returns None when
+    skipped. This is what makes a foreachBatch MERGE sink
     exactly-once: MERGE is not naturally idempotent under replay."""
-    import uuid
-
     from octopufs_spark.manifest import (
         ConcurrentModificationError,
-        _BatchAlreadyCommitted,
         _max_committed_stream_batch,
     )
 
@@ -166,21 +163,13 @@ def merge_upsert_manifest(
         if target is not None
         else source
     )
-    staged = f"merge-{uuid.uuid4().hex[:12]}"
-    writer = merged.write.mode("errorifexists")
-    if partition_by:
-        # keep the hive layout through the rewrite: without this a
-        # single MERGE flattens a partitioned table (identity lost,
-        # auto_optimize degrades to whole-table, pruning to zone maps)
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(f"{table.root}/{staged}")
-    if expectations:
-        # CHECK constraints hold on the post-merge snapshot (the merge
-        # stages a full rewrite, so this validates everything a reader
-        # would see); violations leave only staged orphans for vacuum
-        from octopufs_spark.manifest import check_expectations
-
-        check_expectations(spark, table, staged, expectations)
+    # partition_by keeps the hive layout through the rewrite: without it
+    # a single MERGE flattens a partitioned table (identity lost,
+    # auto_optimize degrades to whole-table, pruning to zone maps).
+    # CHECK constraints hold on the post-merge snapshot (the merge
+    # stages a full rewrite, so this validates everything a reader
+    # would see); violations leave only staged orphans for vacuum
+    staged_files, _ = table._stage(merged, "merge", partition_by, expectations)
     src_files = set(src.files) if src is not None else set()
     src_dvs = (
         {dv["path"] for dv in src.meta.get("delete_vectors", [])}
@@ -189,13 +178,7 @@ def merge_upsert_manifest(
     )
     src_version = src.version if src is not None else 0
 
-    staged_files = table._data_files_under(staged)
-
     def build(parent):
-        if txn is not None:
-            mark = (parent.meta.get("stream_txn", {}) if parent else {}).get(txn[0])
-            if mark is not None and mark >= txn[1]:
-                raise _BatchAlreadyCommitted()
         if parent is None:
             return sorted(staged_files)
         parent_files = set(parent.files)
@@ -226,15 +209,7 @@ def merge_upsert_manifest(
             )
         return sorted(staged_files + carried)
 
-    meta: dict = {"keys": keys}
-    if txn is not None:
-        meta.update(
-            {"writer_id": txn[0], "batch_id": txn[1], "stream_txn": {txn[0]: txn[1]}}
-        )
-    try:
-        return table._commit_with_retry(build, "merge", meta, branch=branch)
-    except _BatchAlreadyCommitted:
-        return None  # a racing instance of this writer merged the batch first
+    return table._commit_with_retry(build, "merge", {"keys": keys}, branch=branch, txn=txn)
 
 
 def manifest_merge_stream_writer(

@@ -55,8 +55,8 @@ from octopufs_spark.manifest import (
     ConcurrentModificationError,
     Manifest,
     ManifestTable,
-    _strip_dropped,
-    hidden_transform_expr,
+    _layout_key,
+    _with_hidden_columns,
     write_and_commit,
 )
 
@@ -84,8 +84,6 @@ def _reapply_append_content(t: ManifestTable, m: Manifest, spark: SparkSession) 
     (and publish_wap retries) settle on ONE published version —
     content is never applied twice; a loser's staging dir is an
     invisible orphan vacuum sweeps. Returns the published version."""
-    import uuid as _uuid
-
     wap = m.meta["wap"]
     base_v, staged_v, wap_id = wap.get("base"), m.version, wap.get("id")
     if m.added is None:
@@ -97,34 +95,17 @@ def _reapply_append_content(t: ManifestTable, m: Manifest, spark: SparkSession) 
             f"staged snapshot v{staged_v} of {t.root} records no added-file "
             "list; cannot re-apply it by content — re-stage the write"
         )
-    added = list(m.added)
-    df = t._scan_files(
-        spark,
-        added,
-        annotate_positions=t._has_positional_dvs(m),
-        evolution=m.meta.get("schema_evolution"),
-    )
     # equality delete vectors apply snapshot-wide: the committed truth
     # for the added rows is what read(version=staged) showed
-    df = t._strip_hidden(_strip_dropped(t._apply_delete_vectors(spark, df, m)), m)
-    head = t.read_manifest()
-    hp = {k: tuple(v[:3]) for k, v in (head.meta.get("hidden_partitions") or {}).items()}
+    df = t._strip_hidden(t._read_files(spark, m, list(m.added)), m)
+    hp = _layout_key(t.read_manifest().meta.get("hidden_partitions"))
     partition_by: list[str] = []
     if hp:
         # conform to the HEAD layout: a group missing the hidden
         # column would break the by-name union every read performs
-        for name, spec in hp.items():
-            kind, src = spec[0], spec[1]
-            param = spec[2] if len(spec) > 2 else None
-            df = df.withColumn(name, hidden_transform_expr(kind, src, param))
-        df = df.repartition(*hp.keys())
-        partition_by = list(hp.keys())
-    staged_dir = f"data-{_uuid.uuid4().hex[:12]}"
-    writer = df.write.mode("errorifexists")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(f"{t.root}/{staged_dir}")
-    content = t._data_files_under(staged_dir)
+        df = _with_hidden_columns(df, hp)
+        partition_by = list(hp)
+    content, _ = t._stage(df, "data", partition_by)
     marker = {
         "wap_published": {"id": wap_id, "staged_version": staged_v, "reapplied": True}
     }
@@ -134,10 +115,7 @@ def _reapply_append_content(t: ManifestTable, m: Manifest, spark: SparkSession) 
             parent, base_v, staged_v, done="published",
             error=f"staged snapshot v{staged_v} was aborted at v{{at}}; nothing to re-apply",
         )
-        live_hp = {
-            k: tuple(v[:3])
-            for k, v in ((parent.meta.get("hidden_partitions") if parent else None) or {}).items()
-        }
+        live_hp = _layout_key(parent.meta.get("hidden_partitions") if parent else None)
         if live_hp != hp:
             # the hidden layout moved again between our scan and this
             # commit: our rewritten files carry the OBSERVED layout's

@@ -37,8 +37,6 @@ no-ops).
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -468,13 +466,6 @@ class MaterializedView:
 
     def _added_rows_partial(self, spark: SparkSession, added: list[str], src_head: int) -> DataFrame:
         """Partial aggregates of the files ADDED in the refresh window."""
-        head_m = self.source.read_manifest(src_head)
-        src_df = self.source._scan_files(
-            spark,
-            added,
-            annotate_positions=self.source._has_positional_dvs(head_m),
-            evolution=head_m.meta.get("schema_evolution"),
-        )
         # ACTIVE delete vectors apply snapshot-wide — including to
         # newly added files (a re-inserted deleted key stays hidden
         # until a compaction, exactly as the read path documents).
@@ -483,10 +474,8 @@ class MaterializedView:
         # delta scan so the fold sees what a reader sees.
         # (Positional vectors name pre-existing files, so they
         # anti-join to nothing here — harmless.)
-        from octopufs_spark.manifest import _strip_dropped
-
-        src_df = _strip_dropped(self.source._apply_delete_vectors(spark, src_df, head_m))
-        return self._partial(src_df)
+        head_m = self.source.read_manifest(src_head)
+        return self._partial(self.source._read_files(spark, head_m, added))
 
     def _deleted_rows_partial(
         self, spark: SparkSession, v: int, entry: dict, pre_added: set
@@ -519,10 +508,8 @@ class MaterializedView:
             raise _ParentPruned() from None
         positional = entry.get("type") == "positional"
         if positional:
-            vec = spark.read.parquet(f"{self.source.root}/{entry['path']}")
             affected = sorted(
-                {r.file for r in vec.select("file").distinct().collect()}
-                & set(pm.files) - pre_added
+                self.source._vector_files(entry) & set(pm.files) - pre_added
             )
         else:
             affected = sorted(set(pm.files) - pre_added)
@@ -537,21 +524,10 @@ class MaterializedView:
             evolution=pm.meta.get("schema_evolution"),
         )
         # keep only rows the NEW vector hits...
-        if positional:
-            gone = spark.read.parquet(f"{self.source.root}/{entry['path']}").select(
-                F.col("file").alias("_dv_file"), F.col("pos").alias("_dv_pos")
-            )
-            hit = raw.join(F.broadcast(gone), ["_dv_file", "_dv_pos"], "left_semi")
-        else:
-            from octopufs_spark.manifest import _apply_evolution, _evolve_names
-
-            keys_df = spark.read.parquet(f"{self.source.root}/{entry['path']}")
-            join_keys = list(entry["keys"])
-            events = pm.meta.get("schema_evolution", [])
-            if events:
-                keys_df = _apply_evolution(keys_df, events)
-                join_keys = _evolve_names(join_keys, events)
-            hit = raw.join(F.broadcast(keys_df), join_keys, "left_semi")
+        gone, on = self.source._vector_frame(
+            spark, entry, pm.meta.get("schema_evolution", [])
+        )
+        hit = raw.join(F.broadcast(gone), on, "left_semi")
         # ...that were visible at the parent (earlier vectors applied)
         vis = _strip_dropped(self.source._apply_delete_vectors(spark, hit, pm))
         neg = self._partial(vis)
@@ -655,9 +631,7 @@ class MaterializedView:
             # __rows liveness counter makes a subtractive fold agree
             # with what a full recompute (no such group) produces
             merged = merged.where(F.col("__rows") > 0)
-            staged = f"mv-{uuid.uuid4().hex[:12]}"
-            merged.write.mode("errorifexists").parquet(f"{self.view.root}/{staged}")
-            staged_files = self.view._data_files_under(staged)
+            staged_files, _ = self.view._stage(merged, "mv")
 
         meta = {
             "mv": {

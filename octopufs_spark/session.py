@@ -62,6 +62,14 @@ DEFAULT_CONF: dict[str, str] = {
     # (see pydaemon). It must be the daemon module: pyspark.daemon
     # ignores worker modules outside ``pyspark``.
     "spark.python.daemon.module": "octopufs_spark.pydaemon",
+    # A fixed young generation (a third of the heap) for the driver JVM.
+    # G1 otherwise resizes eden from its pause-time predictions, so how
+    # much of the heap a run touches — and the driver's resident set —
+    # follows the host's timing noise: the perfbench promotion cycle
+    # (1g heap, 4-CPU x86 VM) touched 550-810 MiB of heap run to run,
+    # 543-550 MiB with this. It is the ``default`` options key, so a
+    # caller's spark.driver.extraJavaOptions adds to it, never drops it.
+    "spark.driver.defaultJavaOptions": "-XX:NewRatio=2",
 }
 
 # The directory holding the ``octopufs_spark`` package. Workers need it

@@ -892,7 +892,13 @@ class ManifestBatchWriter(DataSourceWriter):
     (driver-side footer reads). Overwriting with an EMPTY frame is
     rejected (a manifest snapshot must list files); an empty append is
     a no-op (no new version). Nested structs round-trip via recursive
-    Row conversion."""
+    Row conversion.
+
+    Appends must conform to the table's hidden-partition layout. This
+    writer stages plain files (no derived partition columns), so an
+    append onto a hidden-layout table is refused at plan time, before
+    any task writes, and the commit re-verifies the live layout
+    (``ManifestTable.commit_append``) against a racing overwrite."""
 
     _BATCH_ROWS = 65536
 
@@ -906,6 +912,10 @@ class ManifestBatchWriter(DataSourceWriter):
         # fixed on the DRIVER at plan time: all tasks share one staging
         # dir; retries of the same job stay under it
         self.staged = f"pyds-{uuid.uuid4().hex[:12]}"
+        if not overwrite:
+            from octopufs_spark.manifest import ManifestTable, _check_append_layout
+
+            _check_append_layout(ManifestTable(self.path), None)
 
     def write(self, rows: Iterator) -> _ManifestWriteMsg | None:
         import pyarrow as pa
@@ -963,11 +973,7 @@ class ManifestBatchWriter(DataSourceWriter):
         if self.overwrite:
             table._commit_with_retry(files, "overwrite", meta)
         else:
-
-            def build(parent):
-                return sorted((parent.files if parent else []) + files)
-
-            table._commit_with_retry(build, "append", meta)
+            table.commit_append(files, meta)
 
     def abort(self, messages) -> None:
         from octopufs_spark.fs.core import get_filesystem
@@ -984,7 +990,10 @@ class ManifestTableSource(DataSource):
     table's Spark-native API (the streaming read half is
     ``format("manifest_stream")``; batch reads go through
     ``ManifestTable.read``, which owns time travel, delete vectors and
-    schema evolution)."""
+    schema evolution). Appends must conform to the hidden-partition
+    layout: the writer stages plain files, so a table with a hidden
+    layout refuses ``mode("append")`` — append through
+    ``write_and_commit(..., hidden_partition=...)`` instead."""
 
     @classmethod
     def name(cls) -> str:

@@ -1572,6 +1572,51 @@ def test_stream_batch_zombie_double_commit_blocked(spark, table):
     assert table.read(spark).count() == 25
 
 
+def test_merge_txn_zombie_double_commit_blocked(spark, table):
+    """Two instances of one MERGE sink replaying the same batch can both
+    pass the cheap pre-check; the commit loop's atomic txn check must
+    turn the loser into a no-op (None) — not a conflict error, and
+    never a second landing of the batch."""
+    from octopufs_spark.merge import merge_upsert_manifest
+
+    write_and_commit(_df(spark, 0, 10), table)
+    changes = _df(spark, 5, 15).withColumn("v", F.col("id") * 3)  # updates 5..9, inserts 10..14
+
+    def zombie(t2):
+        # the other instance lands batch ("cdc", 0) first
+        merge_upsert_manifest(spark, t2, changes, keys=["id"], txn=("cdc", 0))
+
+    fired = _race(table, zombie)
+    assert merge_upsert_manifest(spark, table, changes, keys=["id"], txn=("cdc", 0)) is None
+    assert fired["done"]
+    rows = table.read(spark).collect()
+    assert sorted(r.id for r in rows) == list(range(15))  # no duplicates
+    assert {r.id: r.v for r in rows} == {i: i * (2 if i < 5 else 3) for i in range(15)}
+    assert table.latest_version() == 2
+    assert table.read_manifest().meta["stream_txn"] == {"cdc": 0}
+
+
+def _bucketed(spark, lo, hi):
+    return spark.range(lo, hi).select("id", F.col("id").cast("bigint").alias("k"))
+
+
+def test_stream_batch_refused_on_hidden_layout(spark, table):
+    """A stream micro-batch lands plain files, so a hidden-layout table
+    must refuse it, naming the layout, with nothing published: one
+    committed plain file makes every read and pruned read fail."""
+    from octopufs_spark.manifest import _commit_stream_batch
+
+    write_and_commit(
+        _bucketed(spark, 0, 40), table, hidden_partition={"kb": ("bucket", "k", 4)}
+    )
+    v = table.latest_version()
+    with pytest.raises(ValueError, match="hidden-partition layout"):
+        _commit_stream_batch(table, _bucketed(spark, 40, 50), 0, "w1")
+    assert table.latest_version() == v
+    assert table.read(spark).count() == 40
+    assert table.read_pruned(spark, [("k", ">=", 0)]).count() == 40
+
+
 def test_compaction_recollects_zone_maps_and_bloom(spark, table):
     """OPTIMIZE must not turn a pruning table into a scan-everything
     table: a compaction of a stats/bloom-tracked snapshot recollects

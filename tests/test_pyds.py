@@ -682,3 +682,29 @@ def test_manifest_writer_empty_frames(spark, tmp_path):
             "overwrite"
         ).save(root)
     assert t.read(spark).count() == 10
+
+
+def test_manifest_writer_append_refused_on_hidden_layout(spark, tmp_path):
+    """format("manifest") stages plain files, so an append onto a
+    hidden-layout table must be refused, naming the layout, with
+    nothing published: one committed plain file makes every read fail
+    to resolve the hidden column."""
+    from pyspark.sql import functions as F
+
+    from octopufs_spark.manifest import ManifestTable, write_and_commit
+    from octopufs_spark.sources import register_manifest_table_source
+
+    register_manifest_table_source(spark)
+    t = ManifestTable(str(tmp_path / "hidden"))
+    write_and_commit(
+        spark.range(0, 40).select("id", F.col("id").cast("bigint").alias("k")),
+        t,
+        hidden_partition={"kb": ("bucket", "k", 4)},
+    )
+    v = t.latest_version()
+    with pytest.raises(Exception, match="hidden-partition layout"):
+        spark.range(40, 50).select("id", F.col("id").cast("bigint").alias("k")).write.format(
+            "manifest"
+        ).mode("append").save(t.root)
+    assert t.latest_version() == v
+    assert t.read(spark).count() == 40
