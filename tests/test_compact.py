@@ -2,10 +2,15 @@
 
 from __future__ import annotations
 
+import os
 import threading
-import time
-from concurrent.futures import ThreadPoolExecutor, wait
+import zlib
 from pathlib import Path
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
 
 from octopufs_spark import compact
 from tests.conftest import SF_DIR
@@ -45,11 +50,28 @@ def test_get_lowest_folders(tmp_path):
     assert leaves == {"x", "y", "b"}
 
 
+def _tree(root) -> dict[str, int]:
+    """{relative path: crc32} of every file and folder under ``root``."""
+    out = {}
+    for dirpath, dirs, files in os.walk(root):
+        out.update({os.path.relpath(os.path.join(dirpath, d), root): -1 for d in dirs})
+        for name in files:
+            path = os.path.join(dirpath, name)
+            out[os.path.relpath(path, root)] = zlib.crc32(Path(path).read_bytes())
+    return out
+
+
+def _temps(root) -> list[str]:
+    return [d for d, dirs, _ in os.walk(root) for x in dirs if x.endswith("_temp")]
+
+
+def _data(folder) -> list[Path]:
+    return sorted(p for p in Path(folder).iterdir() if p.is_file() and not p.name.startswith(("_", ".")))
+
+
 def test_do_it_all_partitioned(spark, tmp_path):
     root = str(tmp_path / "part")
     df = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    from pyspark.sql import functions as F
-
     (
         df.withColumn("o_year", F.year("o_orderdate"))
         .repartition(10)
@@ -61,35 +83,215 @@ def test_do_it_all_partitioned(spark, tmp_path):
     rewritten = compact.do_it_all(spark, [root], requested_file_size_mb=100)
     assert rewritten > 0
     assert spark.read.parquet(root).count() == n
-    # a compacted leaf holds one data file beside _SUCCESS and .crc
-    # files; only the data file counts, so a second run settles
+    # a compacted leaf holds one data file beside _SUCCESS; a checksum
+    # beside it (Hadoop's writer leaves one) is not data either, so a
+    # second run settles
+    leaves = [p for p in Path(root).iterdir() if p.is_dir()]
+    assert all((leaf / "_SUCCESS").exists() and len(_data(leaf)) == 1 for leaf in leaves)
+    for leaf in leaves:
+        (leaf / f".{_data(leaf)[0].name}.crc").write_bytes(b"crc")
     names = sorted(str(p.relative_to(root)) for p in Path(root).rglob("*"))
-    assert any(name.endswith(".crc") for name in names)
     assert compact.do_it_all(spark, [root], requested_file_size_mb=100) == 0
     assert sorted(str(p.relative_to(root)) for p in Path(root).rglob("*")) == names
 
 
-def test_own_pool_threads_exit(tmp_path, monkeypatch):
-    """Without a caller's pool, do_partition_coalesce shuts its own pool
-    down: its threads exit once the work is done, even while something
-    still holds the pool."""
+def test_own_pool_threads_exit(tmp_path):
+    """On empty leaves compaction needs no Spark session, rewrites
+    nothing, and the listing's worker threads exit before it returns."""
     for i in range(4):
         (tmp_path / "t" / f"p={i}").mkdir(parents=True)
-    pools = []
-
-    class Recorded(ThreadPoolExecutor):
-        def __init__(self, *a, **kw):
-            super().__init__(*a, **kw)
-            pools.append(self)
-
-    monkeypatch.setattr(compact, "ThreadPoolExecutor", Recorded)
     baseline = threading.active_count()
-    # empty leaves: nothing to compact, so no Spark session is needed
-    futures = compact.do_partition_coalesce(None, str(tmp_path / "t"))
-    done, _ = wait(futures, timeout=30)
-    assert len(done) == 4 and [f.result() for f in futures] == [False] * 4
-    assert len(pools) == 1
-    deadline = time.monotonic() + 10
-    while threading.active_count() > baseline and time.monotonic() < deadline:
-        time.sleep(0.05)
+    assert compact.do_partition_coalesce(None, str(tmp_path / "t")) == 0
     assert threading.active_count() == baseline
+    assert compact.do_it_all(None, [str(tmp_path / "t")]) == 0
+    assert threading.active_count() == baseline
+
+
+def test_mixed_schema_folder_is_left_intact(spark, tmp_path):
+    """Spark's non-merging read keeps one file's schema, so rewriting a
+    schema-evolved folder would drop the other files' columns: it is
+    skipped, bytes and all."""
+    path = str(tmp_path / "t")
+    spark.range(3).repartition(3).write.parquet(path)
+    spark.range(3, 6).withColumn("extra", F.lit("x")).repartition(3).write.mode("append").parquet(path)
+    before = _tree(tmp_path)
+    assert compact.do_auto_coalesce(spark, path, requested_size_mb=100) is False
+    assert _tree(tmp_path) == before
+    assert _temps(tmp_path) == []
+
+
+def _pa_file(path, table):
+    Path(path).parent.mkdir(parents=True, exist_ok=True)
+    pq.write_table(table, path, compression="none")
+
+
+def test_leaves_that_cannot_be_rewritten_are_skipped(spark, tmp_path):
+    """Each leaf below holds files one output cannot hold; do_it_all
+    skips them all, leaves their bytes and no ``_temp``, and still
+    compacts the good leaf beside them."""
+    root = tmp_path / "t"
+    # int32 and int64 ids
+    _pa_file(root / "ints" / "a.parquet", pa.table({"id": pa.array([1], pa.int32())}))
+    _pa_file(root / "ints" / "b.parquet", pa.table({"id": pa.array([2], pa.int64())}))
+    # one file mixes INT96 with INT64 timestamps: Spark writes TIMESTAMP
+    # as INT96 and TIMESTAMP_NTZ as INT64; pyarrow's switch is per file
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        spark.range(4).select(
+            F.timestamp_seconds(F.col("id")).alias("ts"),
+            F.timestamp_seconds(F.col("id")).cast("timestamp_ntz").alias("ntz"),
+        ).repartition(2).write.parquet(str(root / "int96_ntz"))
+    finally:
+        spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    # schemas that differ only between groups (2 outputs of 2 files each;
+    # the 1000 KB and 70 KB files share a group): each group is
+    # consistent, the folder is not
+    wide = pa.table({"id": [1], "payload": [b""], "extra": ["x"]})
+    for name, kb, table in (
+        ("a1", 1000, pa.table({"id": [1], "payload": [b""]})),
+        ("a2", 70, pa.table({"id": [2], "payload": [b""]})),
+        ("b1", 980, wide),
+        ("b2", 80, wide),
+    ):
+        payload = os.urandom(kb * 1024)
+        _pa_file(root / "groups" / f"{name}.parquet", table.set_column(1, "payload", pa.array([payload])))
+    groups = compact._balanced(compact._leaf_files(str(root / "groups"))[str(root / "groups")], 2)
+    assert [[Path(f.path).stem for f in g] for g in groups] == [["a1", "a2"], ["b1", "b2"]]
+    # equal Arrow types, but Spark reads one file with the legacy
+    # calendar: a legacy-calendar flag, or a writer before Spark 3.0
+    ts = pa.table({"ts": pa.array([0], pa.timestamp("us"))})
+    for leaf, metas in (
+        ("rebase_flag", [{}, {"org.apache.spark.legacyDateTime": ""}]),
+        ("rebase_writer", [{"org.apache.spark.version": "2.4.8"}, {"org.apache.spark.version": "3.5.0"}]),
+    ):
+        for i, meta in enumerate(metas):
+            _pa_file(root / leaf / f"{i}.parquet", ts.replace_schema_metadata(meta))
+    # writers of Spark 3.0 and later read alike: this leaf is compacted
+    for i in range(3):
+        meta = {"org.apache.spark.version": ("3.5.0", "4.0.0")[i % 2]}
+        _pa_file(root / "good" / f"{i}.parquet", pa.table({"id": [i]}).replace_schema_metadata(meta))
+    before = _tree(root)
+    assert compact.do_it_all(spark, [str(root)], requested_file_size_mb=1) == 1
+    after = _tree(root)
+    assert {k: v for k, v in after.items() if not k.startswith("good")} == {
+        k: v for k, v in before.items() if not k.startswith("good")
+    }
+    assert len(_data(root / "good")) == 1
+    assert pq.read_table(root / "good").column("id").to_pylist() == [0, 1, 2]
+    assert _temps(root) == []
+
+
+def test_auto_coalesce_keeps_subfolders(spark, tmp_path):
+    """The swap replaces the whole folder, so a folder with a subfolder
+    is left as it is rather than losing the subfolder's rows."""
+    path = tmp_path / "events"
+    for i in range(3):
+        _pa_file(path / f"{i}.parquet", pa.table({"id": [i]}))
+    _pa_file(path / "sub" / "x.parquet", pa.table({"id": [9]}))
+    before = _tree(tmp_path)
+    assert compact.do_auto_coalesce(spark, str(path), requested_size_mb=100) is False
+    assert _tree(tmp_path) == before
+    assert _temps(tmp_path) == []
+
+
+def test_failed_rewrite_raises_and_cleans_up(spark, tmp_path):
+    """An unreadable file fails its group on every attempt: do_it_all
+    raises naming its leaf once the retries are used up, after it has
+    compacted the other leaf; no ``_temp`` is left and the bad leaf is
+    byte-identical."""
+    root = tmp_path / "t"
+    for leaf in ("good", "bad"):
+        for i in range(3):
+            _pa_file(root / leaf / f"{i}.parquet", pa.table({"id": [i]}))
+    whole = (root / "bad" / "1.parquet").read_bytes()
+    (root / "bad" / "1.parquet").write_bytes(whole[: len(whole) // 2])
+    before = _tree(root / "bad")
+    with pytest.raises(RuntimeError, match="compaction failed for .*/bad$"):
+        compact.do_it_all(spark, [str(root)])
+    assert _tree(root / "bad") == before
+    assert len(_data(root / "good")) == 1 and (root / "good" / "_SUCCESS").exists()
+    assert _temps(root) == []
+
+
+def test_stale_temp_is_replaced(spark, tmp_path):
+    """A crashed run's ``_temp`` sibling is neither a leaf nor kept."""
+    root = tmp_path / "t"
+    for i in range(3):
+        _pa_file(root / "p" / f"{i}.parquet", pa.table({"id": [i]}))
+        _pa_file(root / "p_temp" / f"{i}.parquet", pa.table({"id": [10 + i]}))
+    assert compact.get_lowest_folders(str(root)) == [str(root / "p")]
+    assert compact.do_it_all(spark, [str(root)]) == 1
+    assert sorted(os.listdir(root)) == ["p"]
+    assert pq.read_table(root / "p").column("id").to_pylist() == [0, 1, 2]
+
+
+def _typed(df):
+    """Every column type the rewrite must carry through."""
+    return df.select(
+        "id",
+        (F.col("id") * 1.5).cast("decimal(18,3)").alias("d18"),
+        (F.col("id") * 12345.678901).cast("decimal(38,6)").alias("d38"),
+        # a timestamp past 2262 does not fit INT96 read as nanoseconds
+        F.when(F.col("id") == 0, F.lit("2300-01-01 00:00:00").cast("timestamp"))
+        .otherwise(F.timestamp_seconds(F.col("id") * 1000003 + 1_600_000_000))
+        .alias("ts"),
+        F.timestamp_seconds(F.col("id") * 7).cast("timestamp_ntz").alias("ntz"),
+        F.date_add(F.lit("1990-01-01").cast("date"), F.col("id").cast("int")).alias("dt"),
+        F.array(F.col("id"), F.col("id") + 1).alias("arr"),
+        F.create_map(F.col("id").cast("string"), F.col("id")).alias("m"),
+        F.struct(F.col("id").alias("a"), F.lit("s").alias("b")).alias("st"),
+        F.when(F.col("id") % 3 == 0, None).otherwise(F.col("id").cast("string")).alias("s"),
+        F.col("id").cast("string").cast("binary").alias("bin"),
+        (F.col("id") / 7).cast("float").alias("f"),
+    )
+
+
+_ROW_META = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def test_compaction_keeps_spark_types(spark, tmp_path):
+    """Spark reads a compacted folder back with the identical schema and
+    rows, in exactly one row group. Under INT96 the NTZ column is left
+    out: a file that mixes INT96 with INT64 timestamps is skipped (see
+    test_leaves_that_cannot_be_rewritten_are_skipped). The allowed
+    physical change: pyarrow 16 writes DECIMAL(18,3) as
+    FIXED_LEN_BYTE_ARRAY where Spark writes INT64; every reader takes
+    both."""
+    root = tmp_path / "t"
+    leaves = {"micros": "TIMESTAMP_MICROS", "int96": "INT96"}
+    for leaf, ts_type in leaves.items():
+        df = _typed(spark.range(40))
+        if ts_type == "INT96":
+            df = df.drop("ntz")
+        spark.conf.set("spark.sql.parquet.outputTimestampType", ts_type)
+        try:
+            df.repartition(10).write.parquet(str(root / leaf))
+        finally:
+            spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    spark.sql("DROP TABLE IF EXISTS compact_chars")
+    spark.sql(
+        f"CREATE TABLE compact_chars (id BIGINT, c CHAR(5), v VARCHAR(10)) "
+        f"USING parquet LOCATION '{root / 'chars'}'"
+    )
+    chars = spark.range(40).selectExpr("id", "cast(id as string) c", "repeat('v', int(id % 11)) v")
+    chars.repartition(10).write.insertInto("compact_chars")
+    before = {leaf: spark.read.parquet(str(root / leaf)) for leaf in leaves}
+    before = {leaf: (df.schema, df.orderBy("id").collect()) for leaf, df in before.items()}
+    table_before = spark.table("compact_chars")
+    table_before = (table_before.schema, table_before.orderBy("id").collect())
+    assert all(len(_data(root / leaf)) == 10 for leaf in (*leaves, "chars"))
+    row_meta = pq.read_schema(_data(root / "chars")[0]).metadata[_ROW_META]
+    assert compact.do_it_all(spark, [str(root)]) == 3
+    for leaf in leaves:
+        df = spark.read.parquet(str(root / leaf))
+        assert (df.schema, df.orderBy("id").collect()) == before[leaf]
+    spark.sql("REFRESH TABLE compact_chars")
+    table = spark.table("compact_chars")
+    assert (table.schema, table.orderBy("id").collect()) == table_before
+    # Spark's row metadata is carried over
+    (data,) = _data(root / "chars")
+    assert pq.read_schema(data).metadata[_ROW_META] == row_meta
+    for leaf in (*leaves, "chars"):
+        (data,) = _data(root / leaf)
+        assert pq.ParquetFile(data).num_row_groups == 1
+    spark.sql("DROP TABLE compact_chars")
