@@ -18,8 +18,10 @@ Layout:
                    dedup, applyInPandasWithState stateful ops)
   acl.py         — POSIX-ACL modify/clear/sync with parent inheritance
                    (sidecar store + real chmod backend)
-  manifest.py    — manifest-committed tables (atomic publish, time travel,
-                   vacuum, catalog registration)
+  manifest_log.py — the manifest log without Spark (versions, refs, the
+                   commit loop, data-skipping metadata, vacuum)
+  manifest.py    — manifest-committed tables: the log plus Spark reads,
+                   staged writes, compaction, promotion and stream sinks
   merge.py       — row-level MERGE: CDC upsert/delete + SCD Type 2
   scale.py       — skew salting + bucketed co-located joins
   timeseries.py  — as-of / interval joins, range bucketing

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from octopufs_spark.manifest import ManifestTable
+from octopufs_spark.manifest_log import ConcurrentModificationError
 
 
 def merge_upsert(
@@ -130,10 +131,7 @@ def merge_upsert_manifest(
     of one stream cannot both land a batch. Returns None when
     skipped. This is what makes a foreachBatch MERGE sink
     exactly-once: MERGE is not naturally idempotent under replay."""
-    from octopufs_spark.manifest import (
-        ConcurrentModificationError,
-        _max_committed_stream_batch,
-    )
+    from octopufs_spark.manifest import _max_committed_stream_batch
 
     if txn is not None:
         committed = _max_committed_stream_batch(
@@ -264,8 +262,6 @@ def consolidate_delete_vectors(spark: SparkSession, table: ManifestTable) -> int
     nothing to fold."""
     import uuid as _uuid
 
-    from octopufs_spark.manifest import ConcurrentModificationError
-
     m = table.read_manifest()
     key_dvs = [dv for dv in m.meta.get("delete_vectors", []) if not dv.get("type")]
     groups: dict[tuple, list[dict]] = {}
@@ -393,8 +389,6 @@ def delete_where_mor_positional(
     APPENDS add files the vector never references and pass through).
     """
     import uuid
-
-    from octopufs_spark.manifest import ConcurrentModificationError
 
     m = table.read_manifest()
     scanned = set(m.files)

@@ -51,13 +51,12 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from octopufs_spark.manifest import (
+from octopufs_spark.manifest import ManifestTable, _with_hidden_columns, write_and_commit
+from octopufs_spark.manifest_log import (
     ConcurrentModificationError,
     Manifest,
-    ManifestTable,
+    ManifestLog,
     _layout_key,
-    _with_hidden_columns,
-    write_and_commit,
 )
 
 
@@ -136,7 +135,7 @@ class Catalog:
     files). Tables are registered by name with their root path."""
 
     def __init__(self, root: str):
-        self.log = ManifestTable(root)
+        self.log = ManifestLog(root)
 
     # ---------- state ----------
 

@@ -40,27 +40,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from octopufs_spark.manifest import (
+from octopufs_spark.manifest import ManifestTable
+from octopufs_spark.manifest_log import (
+    _APPEND_OPS,
+    _NOOP_OPS,
     ConcurrentModificationError,
     Manifest,
-    ManifestTable,
+    ManifestLog,
 )
-
-# ops that add rows only (the view can fold their added files);
-# branch-fastforward carries a publish-time added list and is chosen
-# ONLY when nothing on the branch line changed rows — the same
-# contract the stream source folds it under
-_APPEND_OPS = {
-    "commit",
-    "append",
-    "seed",
-    "stream-append",
-    "wap-publish",
-    "branch-fastforward",
-    "clone",
-}
-# ops that change nothing a grouped aggregate can see
-_NOOP_OPS = {"dv-consolidate", "wap-abort", "rename_column", "drop_column", "add_column"}
 
 
 class _ParentPruned(Exception):
@@ -338,8 +325,8 @@ class MaterializedView:
                 except (FileNotFoundError, OSError):
                     incremental = False  # history pruned under the view
                     break
-                if "wap" in m.meta or "branch" in m.meta:
-                    continue  # not on main
+                if not ManifestLog._is_main(m):
+                    continue
                 op_changes_rows = (
                     m.operation not in _APPEND_OPS and m.operation not in _NOOP_OPS
                 )
@@ -350,15 +337,15 @@ class MaterializedView:
                     if m.added is None:
                         incremental = False
                         break
-                    prev = self._vector_paths_of(m.parent)
-                    n_parent = self._file_count_of(m.parent)
-                    if prev is None or n_parent is None:
+                    try:
+                        pm = self.source.read_manifest(m.parent) if m.parent is not None else None
+                    except (FileNotFoundError, OSError):
                         incremental = False  # parent pruned under the walk
                         break
-                    if self._vector_paths(m) != prev:
+                    if self._vector_paths(m) != (self._vector_paths(pm) if pm else ()):
                         incremental = False  # new/changed delete vectors
                         break
-                    if len(m.files) != n_parent + len(m.added):
+                    if len(m.files) != (len(pm.files) if pm else 0) + len(m.added):
                         incremental = False  # files were also removed
                         break
                     added.extend(m.added)
@@ -539,22 +526,6 @@ class MaterializedView:
 
     def _vector_paths(self, m: Manifest) -> tuple:
         return tuple(sorted(dv["path"] for dv in m.meta.get("delete_vectors", [])))
-
-    def _vector_paths_of(self, version: int | None):
-        if version is None:
-            return ()
-        try:
-            return self._vector_paths(self.source.read_manifest(version))
-        except (FileNotFoundError, OSError):
-            return None
-
-    def _file_count_of(self, version: int | None) -> int | None:
-        if version is None:
-            return 0
-        try:
-            return len(self.source.read_manifest(version).files)
-        except (FileNotFoundError, OSError):
-            return None
 
     def _prune_equality_affected(self, affected: list[str], pm, entry: dict) -> list[str]:
         """Equality vectors apply snapshot-wide, but the files a

@@ -37,6 +37,15 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from octopufs_spark.manifest_log import (
+    _APPEND_OPS,
+    _DROPPED_PREFIX,
+    _NOOP_OPS,
+    ManifestLog,
+    _evolution_dtype,
+    _hive_segments_of,
+)
+
 # Row-id → value formulas (Knuth multiplicative hash; all-integer, so
 # every engine computes identical values — the double division by 100
 # is a single IEEE op, bit-identical everywhere).
@@ -298,16 +307,6 @@ class ManifestStreamReader(DataSourceStreamReader):
     option ``skipChangeCommits=true`` (Delta's escape hatch, with the
     same downstream-staleness caveat)."""
 
-    _APPEND_OPS = (
-        "commit",
-        "append",
-        "seed",
-        "overwrite",
-        "stream-append",
-        "wap-publish",
-        "branch-fastforward",
-    )
-
     def __init__(self, options, schema_names: list[str] | None = None):
         self.path = options.get("path")
         if not self.path:
@@ -388,10 +387,8 @@ class ManifestStreamReader(DataSourceStreamReader):
             self._evolution = []
             self._hidden = []
 
-    def _table(self):
-        from octopufs_spark.manifest import ManifestTable
-
-        return ManifestTable(self.path)
+    def _table(self) -> ManifestLog:
+        return ManifestLog(self.path)
 
     @staticmethod
     def _pos_key(v: int, i: int | None) -> tuple[int, float]:
@@ -436,8 +433,7 @@ class ManifestStreamReader(DataSourceStreamReader):
                 )
             )
             pre_fork_main = (
-                bmeta is None
-                and "wap" not in m.meta
+                ManifestLog._is_main(m)
                 and self._branch_base is not None
                 and v <= self._branch_base
             )
@@ -447,7 +443,7 @@ class ManifestStreamReader(DataSourceStreamReader):
                 # other branches, CAS orphans, staged WAP snapshots
                 return []
             # member commits fall through to the op validation below
-        elif "wap" in m.meta or bmeta is not None:
+        elif not ManifestLog._is_main(m):
             # STAGED write-audit-publish snapshot or BRANCH commit: its
             # files are not on main (and may never be — an audit can
             # abort, a branch can be dropped), so the main stream emits
@@ -455,8 +451,16 @@ class ManifestStreamReader(DataSourceStreamReader):
             # re-adds the files vs its parent and streams them exactly
             # once then.
             return []
-        if m.operation in ("dv-consolidate", "wap-abort"):
-            return []  # maintenance markers: no files added, no visible-row change
+        if m.operation in _NOOP_OPS:
+            # maintenance markers: no files added, no visible-row change.
+            # Metadata-only schema evolution adds no files and changes
+            # no row either. Events BEFORE the stream started are
+            # replayed per batch (the pinned log); an event committed
+            # MID-STREAM changes the logical schema out from under a
+            # fixed-schema query, so post-event files will fail the
+            # schema match — the restart-to-pick-up-schema contract,
+            # same as Delta.
+            return []
         if m.operation in ("wap-publish-replace", "branch-fastforward-replace"):
             # a published staged/branch line that REPLACED base files:
             # rows changed beyond pure addition — same contract as
@@ -468,14 +472,6 @@ class ManifestStreamReader(DataSourceStreamReader):
                 "commit (published staged content removed base files); set "
                 "skipChangeCommits=true to skip change commits"
             )
-        if m.operation in ("rename_column", "drop_column", "add_column"):
-            # metadata-only schema evolution: no files added, no row
-            # change. Events BEFORE the stream started are replayed per
-            # batch (the pinned log); an event committed MID-STREAM
-            # changes the logical schema out from under a fixed-schema
-            # query, so post-event files will fail the schema match —
-            # the restart-to-pick-up-schema contract, same as Delta.
-            return []
         if m.operation == "delete_mor":
             if self.skip_change_commits:
                 return []  # adds no files; visible-row change skipped by opt-in
@@ -491,7 +487,7 @@ class ManifestStreamReader(DataSourceStreamReader):
             # (Every row is by definition "added" here; the op-name
             # check below only guards REWRITES of prior history.)
             return list(m.added) if m.added is not None else list(m.files)
-        if m.operation not in self._APPEND_OPS:
+        if m.operation not in _APPEND_OPS:
             # merge / compact / restore / replace / promote commits all
             # change rows beyond pure addition; skipChangeCommits skips
             # them like Delta's escape hatch — without it, a table
@@ -501,13 +497,6 @@ class ManifestStreamReader(DataSourceStreamReader):
                 return []
             raise ValueError(
                 f"manifest_stream is append-only: v{v} is a {m.operation!r} commit; "
-                "set skipChangeCommits=true to skip change commits"
-            )
-        if m.operation == "overwrite":
-            if self.skip_change_commits:
-                return []
-            raise ValueError(
-                f"manifest_stream is append-only: v{v} is a 'overwrite' commit; "
                 "set skipChangeCommits=true to skip change commits"
             )
         if m.added is not None:
@@ -666,14 +655,12 @@ class ManifestStreamReader(DataSourceStreamReader):
             return [ManifestFilePartition(self.path, f) for f in added]
         import pyarrow.parquet as pq
 
-        from octopufs_spark.fs.core import get_filesystem
-
-        fs, root = get_filesystem(self.path)
+        table = self._table()
         parts = []
         for f in added:
             try:
                 n = pq.ParquetFile(
-                    fs.open_input_file(f"{root}/{f}")
+                    table.fs.open_input_file(f"{table.root_path}/{f}")
                 ).metadata.num_row_groups
             except OSError:
                 n = 1  # unreadable footer: executor surfaces the real error
@@ -703,7 +690,7 @@ class ManifestStreamReader(DataSourceStreamReader):
         # names, not file bytes) are re-attached as constant string
         # columns, matching schema()'s contract.
         hidden = set(getattr(self, "_hidden", []))
-        parts = [(k, v) for k, v in _hive_segments(partition.rel_file) if k not in hidden]
+        parts = [(k, v) for k, v in _hive_segments_of(partition.rel_file) if k not in hidden]
         evolution = getattr(self, "_evolution", [])
         order = self._schema_names
         pf = pq.ParquetFile(fs.open_input_file(f"{root}/{partition.rel_file}"))
@@ -742,14 +729,6 @@ class ManifestStreamReader(DataSourceStreamReader):
         self._advance(end["version"], end.get("index"))
 
 
-def _hive_segments(rel_file: str) -> list[tuple[str, str]]:
-    """k=v dir segments of a snapshot-relative path (canonical impl
-    lives with the manifest's partition pruning)."""
-    from octopufs_spark.manifest import _hive_segments_of
-
-    return _hive_segments_of(rel_file)
-
-
 def _evolved_columns(names: list[str], arrays: list, evolution: list, num_rows: int):
     """Replay the table's schema-evolution log on an Arrow batch's
     column list, mirroring the batch read's ``_apply_evolution``:
@@ -757,8 +736,6 @@ def _evolved_columns(names: list[str], arrays: list, evolution: list, num_rows: 
     vanish, and ``add`` events materialize their default as a constant
     column (canonical semantics live with the manifest module)."""
     import pyarrow as pa
-
-    from octopufs_spark.manifest import _DROPPED_PREFIX
 
     names = list(names)
     arrays = list(arrays)
@@ -772,8 +749,6 @@ def _evolved_columns(names: list[str], arrays: list, evolution: list, num_rows: 
                 names[names.index(args[0])] = f"{_DROPPED_PREFIX}{i}"
         elif kind == "add" and args[0] not in names:
             from pyspark.sql.pandas.types import to_arrow_type
-
-            from octopufs_spark.manifest import _evolution_dtype
 
             at = to_arrow_type(_evolution_dtype(args[2]))
             names.append(args[0])
@@ -804,10 +779,7 @@ class ManifestStreamSource(DataSource):
         from pyspark.sql.pandas.types import from_arrow_schema
         from pyspark.sql.types import StringType, StructField
 
-        from octopufs_spark.fs.core import get_filesystem
-        from octopufs_spark.manifest import ManifestTable
-
-        table = ManifestTable(self.options["path"])
+        table = ManifestLog(self.options["path"])
         # a BRANCH stream's schema contract comes from the branch head
         # (its carried evolution log / hidden layout), exactly like the
         # reader pins it — deriving from main would declare columns the
@@ -818,10 +790,11 @@ class ManifestStreamSource(DataSource):
             if branch
             else table.read_manifest()
         )
-        fs, root = get_filesystem(self.options["path"])
         hidden = set(m.meta.get("hidden_partitions", {}))
-        st = from_arrow_schema(pq.read_schema(f"{root}/{m.files[0]}", filesystem=fs))
-        for k, _ in _hive_segments(m.files[0]):
+        st = from_arrow_schema(
+            pq.read_schema(f"{table.root_path}/{m.files[0]}", filesystem=table.fs)
+        )
+        for k, _ in _hive_segments_of(m.files[0]):
             if k in hidden:
                 continue  # storage layout, not data — dropped like the batch read
             # nullable: __HIVE_DEFAULT_PARTITION__ segments decode to
@@ -833,7 +806,6 @@ class ManifestStreamSource(DataSource):
             # shows current LOGICAL names, dropped columns omitted,
             # added columns appended with their declared type (same
             # order the per-batch replay appends them)
-            from octopufs_spark.manifest import _DROPPED_PREFIX, _evolution_dtype
             from pyspark.sql.types import StructType
 
             fields = [(f.name, f.dataType, f.nullable) for f in st.fields]

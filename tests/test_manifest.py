@@ -114,7 +114,7 @@ def test_every_commit_kind_has_one_retry_budget(spark, table, tmp_path, monkeypa
     """Plain commits, WAP publishes and catalog pin flips all retry a
     lost publish in the one commit loop: exactly
     _COMMIT_RETRY_ATTEMPTS publish attempts, then RuntimeError."""
-    import octopufs_spark.manifest as mod
+    import octopufs_spark.manifest_log as mod
     from octopufs_spark.multitable import Catalog
 
     write_and_commit(_df(spark, 0, 5), table)
@@ -126,7 +126,7 @@ def test_every_commit_kind_has_one_retry_budget(spark, table, tmp_path, monkeypa
         attempts.append(manifest.version)
         raise FileExistsError(f"v{manifest.version}")
 
-    monkeypatch.setattr(mod.ManifestTable, "_publish", lose)
+    monkeypatch.setattr(mod.ManifestLog, "_publish", lose)
     monkeypatch.setattr(mod, "_lost_race_backoff", lambda attempt: None)
     run = {
         "commit": lambda: table._commit_with_retry(lambda p: list(p.files), "append", None),

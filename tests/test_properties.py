@@ -354,7 +354,7 @@ def test_evolution_name_algebra_roundtrip(log_live):
     via replay, to that same name — i.e. _alias_chain (used by
     pruning) and _evolve_names (used by reads and delete vectors) are
     inverses over every intermediate spelling a file could carry."""
-    from octopufs_spark.manifest import _DROPPED_PREFIX, _alias_chain, _evolve_names
+    from octopufs_spark.manifest_log import _DROPPED_PREFIX, _alias_chain, _evolve_names
 
     events, live = log_live
     evolved = _evolve_names(["a", "b", "c"], events)
