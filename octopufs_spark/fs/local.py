@@ -14,6 +14,8 @@ reference: fs/LocalExecution.scala:151-157).
 
 from __future__ import annotations
 
+import re
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyarrow import fs as pafs
@@ -52,10 +54,10 @@ def move_paths(paths: list[Paths]) -> list[FsOperationResult]:
     (reference: movePaths, fs/LocalExecution.scala:70-97)."""
     if not paths:
         return []
-    fs, _ = get_filesystem(paths[0].source_path)
+    fs, in_fs = _resolver(paths[0].source_path)
 
     def mv(p: Paths) -> FsOperationResult:
-        sp = _strip_pair(p)
+        sp = Paths(in_fs(p.source_path), in_fs(p.target_path))
         try:
             fs.move(sp.source_path, sp.target_path)
             return FsOperationResult(p.source_path, True)
@@ -67,13 +69,21 @@ def move_paths(paths: list[Paths]) -> list[FsOperationResult]:
 
 def delete_paths(paths: list[str]) -> list[FsOperationResult]:
     """Parallel recursive deletes with retry
-    (reference: deletePaths, fs/LocalExecution.scala:106-128)."""
+    (reference: deletePaths, fs/LocalExecution.scala:106-128). The
+    filesystem is resolved once, from the first path (see
+    :func:`_resolver`)."""
     if not paths:
         return []
-    fs, _ = get_filesystem(paths[0])
+    fs, in_fs = _resolver(paths[0])
+    return _delete(fs, paths, in_fs)
+
+
+def _delete(fs: pafs.FileSystem, paths: list[str], in_fs=lambda p: p) -> list[FsOperationResult]:
+    """Delete each of ``paths`` (``in_fs`` maps one to its path on
+    ``fs``); a path that is already gone counts as deleted."""
 
     def rm(path: str) -> FsOperationResult:
-        p = _strip(path)
+        p = in_fs(path)
         try:
             info = fs.get_file_info(p)
             if info.type == pafs.FileType.NotFound:
@@ -96,7 +106,7 @@ def delete_folder(folder_uri: str, delete_content_only: bool = False) -> None:
     fs, folder = get_filesystem(folder_uri)
     if delete_content_only:
         children = fs.get_file_info(pafs.FileSelector(folder, recursive=False, allow_not_found=True))
-        delete_paths([c.path for c in children])
+        _delete(fs, [c.path for c in children])
     else:
         info = fs.get_file_info(folder)
         if info.type != pafs.FileType.NotFound:
@@ -142,15 +152,18 @@ def move_folder_content(
     return results
 
 
-def _strip(uri: str) -> str:
-    """URI → in-filesystem path (pyarrow APIs want fs-relative paths).
-
-    Always resolves via from_uri: Spark's catalog spells local URIs as
-    ``file:/x`` (single slash, no ``://``), which pyarrow rejects as a
-    raw path.
-    """
-    return get_filesystem(uri)[1]
-
-
-def _strip_pair(p: Paths) -> Paths:
-    return Paths(_strip(p.source_path), _strip(p.target_path))
+def _resolver(uri: str) -> tuple[pafs.FileSystem, Callable[[str], str]]:
+    """The filesystem ``uri`` lives on, and a function that maps a path
+    on it to its in-filesystem path by cutting off the scheme and
+    authority ``uri`` starts with. The rest is kept as written: paths
+    come from listings, where a Hive ``k=a%3Ab`` dir is named just so,
+    and parsing them as URIs would percent-decode that (and reject a
+    space). A path with no scheme is a local path and maps to itself.
+    Spark's catalog spells local URIs ``file:/x``, which works too."""
+    scheme = re.match(r"[A-Za-z][A-Za-z0-9+.-]+:(//[^/]*)?", uri)
+    if scheme is None:
+        return pafs.LocalFileSystem(), lambda path: path
+    head = scheme.group(0)
+    fs, base = get_filesystem(head + "/")
+    base = base.rstrip("/")
+    return fs, lambda path: f"{base}/{path[len(head):].lstrip('/')}"

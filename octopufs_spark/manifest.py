@@ -43,6 +43,13 @@ from octopufs_spark.manifest_log import (
     hidden_transform_value,  # noqa: F401 — re-exported
 )
 
+# the size a staged or compacted data file aims for
+TARGET_FILE_BYTES = 100 * 1024 * 1024
+# plan roots whose partitioning the caller chose, and the narrow unary
+# nodes that may sit above one without changing the written layout
+_CHOSEN_LAYOUT = {"Repartition", "RepartitionByExpression", "RebalancePartitions"}
+_NARROW = {"Project", "Filter", "SubqueryAlias", "Sort"}
+
 
 def _apply_evolution(df: DataFrame, events: list) -> DataFrame:
     """Apply the schema-evolution event log to one scan group (or a
@@ -455,9 +462,15 @@ class ManifestTable(ManifestLog):
         the commit meta collected from them — ``file_stats`` zone maps
         with ``stats``, a ``bloom_index`` over ``bloom_columns``. Nothing
         is published: a failure here (or in the commit after it) leaves
-        invisible orphans for ``vacuum``."""
+        invisible orphans for ``vacuum``.
+
+        The write stages ceil(estimated bytes / ``TARGET_FILE_BYTES``)
+        files (with ``partition_by``, up to that many per partition
+        dir), not one per input partition (:func:`_right_sized`); an
+        explicit ``repartition`` / ``repartitionByRange`` /
+        ``coalesce`` of ``df`` is respected."""
         staged = f"{prefix}-{uuid.uuid4().hex[:12]}"
-        writer = df.write.mode("errorifexists")
+        writer = _right_sized(df).write.mode("errorifexists")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(f"{self.root}/{staged}")
@@ -503,6 +516,30 @@ class ManifestTable(ManifestLog):
             )
             return self._strip_hidden(empty, m)
         return self._strip_hidden(self._read_files(spark, m, keep, collapse=at_head), m)
+
+
+def _right_sized(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to ceil(estimated bytes / ``TARGET_FILE_BYTES``)
+    partitions, so a write stages that many files rather than one per
+    input partition: a small append is one file. The estimate is
+    Catalyst's plan statistics (no Spark job), and ``coalesce`` adds no
+    shuffle and never raises the partition count. A frame whose
+    partitioning the caller chose (a repartition, coalesce or rebalance
+    at the root, under narrow unary nodes only) is returned as it is,
+    and so is one whose estimate is unknown (Spark's ``Long.MaxValue``
+    default) or needs more partitions than a JVM ``int`` holds."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    node = plan
+    while True:
+        name = node.getClass().getSimpleName()
+        if name in _CHOSEN_LAYOUT:
+            return df
+        # a global sort range-partitions: past it the layout is Spark's
+        if name not in _NARROW or (name == "Sort" and getattr(node, "global")()):
+            break
+        node = node.child()
+    n = -(-int(plan.stats().sizeInBytes()) // TARGET_FILE_BYTES)
+    return df if n > 2**31 - 1 else df.coalesce(max(1, n))
 
 
 def check_expectations(
@@ -560,6 +597,11 @@ def write_and_commit(
     with ``expectations`` ([(name, sql_condition), ...]) the commit is
     REJECTED if any staged row violates a condition — CHECK
     constraints enforced at the publish boundary.
+
+    The commit stages ceil(estimated bytes / ``TARGET_FILE_BYTES``)
+    files, so a small append is one file; a ``df`` the caller
+    repartitioned (``repartition(k)``, ``repartitionByRange``) keeps
+    its k-file layout.
 
     ``hidden_partition`` ({name: (kind, src_col[, param])}) is
     Iceberg-style HIDDEN partitioning: the table is laid out by a
@@ -699,7 +741,7 @@ def _check_append_layout(
 def compact_and_commit(
     spark: SparkSession,
     table: ManifestTable,
-    target_file_bytes: int = 100 * 1024 * 1024,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     zorder_by: tuple[str, str] | None = None,
     stats: bool | None = None,
     prefix: str | None = None,
@@ -714,9 +756,12 @@ def compact_and_commit(
     (reference: Coalesce.scala:33-46 has the same window; SafetyFuse
     only protects the writer's rerun).
 
-    Returns the committed version, or None when the snapshot is already
-    a single file (nothing to do). Old files stay until ``vacuum`` —
-    time travel keeps working.
+    Returns the committed version, or None when there is nothing to
+    do: the files would not shrink in number and, for a full rewrite,
+    no merge-on-read delete vector is live. A live vector makes every
+    read pay its anti-join, so a full rewrite materializes it even on a
+    single-file snapshot. Old files stay until ``vacuum`` — time travel
+    keeps working.
 
     Concurrency: the publish-time ``build`` reconciles against the
     LATEST manifest, not the snapshot that was read. A concurrent
@@ -796,7 +841,8 @@ def compact_and_commit(
     matched = m.files if not scoped else [f for f in m.files if _in_scope(f)]
     if not matched:
         return None
-    if len(matched) < 2 and zorder_by is None:
+    relayout = zorder_by is not None or (not scoped and bool(m.meta.get("delete_vectors")))
+    if len(matched) < 2 and not relayout:
         return None
     import pyarrow.fs as pafs
 
@@ -806,7 +852,7 @@ def compact_and_commit(
         if info.type == pafs.FileType.File:
             total += info.size or 0
     n = max(1, -(-total // target_file_bytes))  # ceil
-    if n >= len(matched) and zorder_by is None:
+    if n >= len(matched) and not relayout:
         return None  # files already at/above target size
     if not scoped:
         src_df = table.read(spark, version=m.version)
@@ -960,7 +1006,7 @@ def compact_and_commit(
 def auto_optimize(
     spark: SparkSession,
     table: ManifestTable,
-    target_file_bytes: int = 100 * 1024 * 1024,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     min_files: int = 8,
     zorder_by: tuple[str, str] | None = None,
     stats: bool | None = None,

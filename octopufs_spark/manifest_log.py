@@ -2448,8 +2448,14 @@ class ManifestLog:
         ``_temporary`` constantly) — an already-deleted dir correctly
         contributes nothing to a DELETION pass, and a file a racing
         vacuum already deleted counts as deleted (:func:`_plan_vacuum`
-        decides what to delete; this method does the I/O)."""
+        decides what to delete; this method does the I/O). A directory
+        this pass empties (a dead staging dir, a dead vector's dir) is
+        removed too when it is past the retention window; ``_manifest``,
+        ``_dv`` and the root never are. The return value lists the
+        deleted files."""
         import datetime as _dt
+
+        import pyarrow.fs as pafs
 
         if keep_versions < 1:
             # keep_versions=0 past the retention window would delete the
@@ -2519,6 +2525,11 @@ class ManifestLog:
                 except FileNotFoundError:
                     pass  # a racing vacuum deleted it first
 
+        # the dirs holding a dropped data file (staging dirs, their hive
+        # dirs, dead vector dirs; never the root or _manifest), aged
+        # BEFORE the deletes touch their mtime
+        dirs = {rel[:i] for rel in data_drops for i, c in enumerate(rel) if c == "/"}
+        dirs = [d for d in dirs - {"_dv"} if not _too_young(d)]
         _delete(manifest_drops)
         # Re-anchor the latest-version hint above any gap this pass
         # punched (tag/branch pins retain OLD versions while the middle
@@ -2527,4 +2538,11 @@ class ManifestLog:
         if survivors:
             self._write_latest_hint(max(survivors))
         _delete(data_drops)
+        for d in sorted(dirs, key=lambda d: -d.count("/")):  # children first
+            path = f"{self.root_path}/{d}"
+            try:
+                if not self.fs.get_file_info(pafs.FileSelector(path)):
+                    self.fs.delete_dir(path)  # emptied by this pass
+            except FileNotFoundError:
+                pass  # a racing vacuum removed it first
         return manifest_drops + data_drops

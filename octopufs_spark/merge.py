@@ -14,6 +14,14 @@ At 100 TB the win comes from partition pruning the carried-forward
 side: pass ``partition_pruning_filter`` to rewrite only affected
 partitions (copy-on-write at partition granularity, same model as
 Delta/Iceberg COW).
+
+A manifest MERGE stages its rewrite through ``ManifestTable._stage``:
+ceil(estimated bytes / ``manifest.TARGET_FILE_BYTES``) files (with
+``partition_by``, up to that many per partition dir), so a merge into
+a small table publishes one file, however many partitions its input
+had. A repartition the caller chose is respected by ``_stage``, but the
+merged frame is a union this module builds, so a repartition of
+``source`` does not carry into the staged layout.
 """
 
 from __future__ import annotations

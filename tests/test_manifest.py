@@ -192,6 +192,153 @@ def test_compact_and_commit(spark, table):
     assert compact_and_commit(spark, table) is None
 
 
+# ---------- right-sized staged writes ----------
+
+
+def _arrow_df(spark, lo: int, hi: int):
+    """A small in-memory frame spread over several input partitions,
+    built the way a pipeline hands over a pyarrow batch."""
+    import pyarrow as pa
+
+    ids = list(range(lo, hi))
+    return spark.createDataFrame(pa.table({"id": ids, "v": [float(i) for i in ids]}))
+
+
+def test_small_commits_stage_one_file(spark, table, tmp_path):
+    """An append, a MERGE and a stream micro-batch each stage
+    ceil(estimated bytes / TARGET_FILE_BYTES) files — one for a few
+    thousand rows — not one per input partition."""
+    from octopufs_spark import streaming
+    from octopufs_spark.manifest import manifest_stream_writer
+    from octopufs_spark.merge import merge_upsert_manifest
+    from octopufs_spark.tables import load
+    from tests.conftest import SF_DIR
+
+    df = _arrow_df(spark, 0, 4000)
+    assert df.rdd.getNumPartitions() > 1
+    write_and_commit(df, table, mode="append", stats=True)
+    assert len(table.read_manifest().files) == 1
+    write_and_commit(_arrow_df(spark, 4000, 8000), table, mode="append", stats=True)
+    assert len(table.read_manifest().added) == 1
+    src = _arrow_df(spark, 3800, 4200).withColumn("v", F.col("v") + 0.5)
+    merge_upsert_manifest(spark, table, src, ["id"])
+    m = table.read_manifest()
+    assert m.operation == "merge" and len(m.files) == 1
+    got = table.read(spark)
+    assert got.count() == 8000 and got.where("v - floor(v) = 0.5").count() == 400
+
+    events_src = str(tmp_path / "events_src")
+    load(spark, SF_DIR, "events").withColumn("ts", F.col("ts").cast("timestamp")).limit(
+        300
+    ).repartition(3).write.parquet(events_src)
+    stream_table = ManifestTable(str(tmp_path / "stream_tbl"))
+    q = (
+        manifest_stream_writer(streaming.read_events_stream(spark, events_src, 3), stream_table)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    m = stream_table.read_manifest()
+    assert m.operation == "stream-append" and len(m.files) == 1
+    assert stream_table.read(spark).count() == 300
+
+
+def test_explicit_layouts_are_kept(spark, table, tmp_path):
+    """A frame whose partitioning the caller chose keeps its k-file
+    layout: repartition(k), repartitionByRange (zone-map pruning),
+    hidden-partition writes and a z-order compaction."""
+    from octopufs_spark.manifest import (
+        _right_sized,
+        _with_hidden_columns,
+        compact_and_commit,
+    )
+
+    write_and_commit(_arrow_df(spark, 0, 4000).repartition(5), table)
+    assert len(table.read_manifest().files) == 5
+
+    ranged = ManifestTable(str(tmp_path / "ranged"))
+    write_and_commit(_arrow_df(spark, 0, 4000).repartitionByRange(4, "id"), ranged, stats=True)
+    assert len(ranged.read_manifest().files) == 4
+    keep, skipped = ranged.prune_plan([("id", "=", 5)])
+    assert (len(keep), skipped) == (1, 3)
+
+    hidden = _with_hidden_columns(_arrow_df(spark, 0, 4000), {"b": ("bucket", "id", 4)})
+    narrowed = hidden.where("v > 1").select("id", "b")
+    assert _right_sized(hidden) is hidden and _right_sized(narrowed) is narrowed
+
+    z = ManifestTable(str(tmp_path / "z"))
+    xy = _arrow_df(spark, 0, 4000).withColumn("x", F.col("id") % 64)
+    write_and_commit(xy.withColumn("y", F.col("id") % 61).repartition(6), z, stats=True)
+    total = sum(z.fs.get_file_info(f"{z.root_path}/{f}").size for f in z.read_manifest().files)
+    compact_and_commit(spark, z, target_file_bytes=-(-total // 3), zorder_by=("x", "y"))
+    m = z.read_manifest()
+    assert m.operation == "compact" and len(m.files) == 3
+    assert z.read(spark).count() == 4000
+
+
+def test_sizing_estimate_above_target_and_unknown(spark, table, tmp_path, monkeypatch):
+    """An estimate above the target stages more than one file (never
+    more than the input partitions: coalesce does not shuffle); a frame
+    whose estimate Spark does not know keeps its partitioning."""
+    from octopufs_spark import manifest
+
+    monkeypatch.setattr(manifest, "TARGET_FILE_BYTES", 1024)
+    df = _arrow_df(spark, 0, 4000)
+    write_and_commit(df, table)
+    assert 1 < len(table.read_manifest().files) <= df.rdd.getNumPartitions()
+    monkeypatch.undo()
+
+    unknown = ManifestTable(str(tmp_path / "unknown"))
+    rows = spark.sparkContext.parallelize([(i, float(i)) for i in range(30)], 3)
+    write_and_commit(spark.createDataFrame(rows, "id long, v double"), unknown)
+    assert len(unknown.read_manifest().files) == 3
+
+
+def test_compaction_materializes_vectors_of_a_single_file(spark, table):
+    """A live delete vector makes every read pay its anti-join, so a
+    full compaction rewrites a single-file snapshot to drop it."""
+    from octopufs_spark.manifest import compact_and_commit
+    from octopufs_spark.merge import delete_where_mor
+
+    write_and_commit(_df(spark, 0, 100), table)
+    assert len(table.read_manifest().files) == 1
+    assert compact_and_commit(spark, table) is None  # nothing to do yet
+    delete_where_mor(spark, table, spark.range(0, 10).select("id"), keys=["id"])
+    v = compact_and_commit(spark, table)
+    assert v is not None
+    m = table.read_manifest()
+    assert m.operation == "compact" and not m.meta.get("delete_vectors")
+    assert len(m.files) == 1
+    assert {r.id for r in table.read(spark).collect()} == set(range(10, 100))
+    assert compact_and_commit(spark, table) is None
+
+
+def test_vacuum_removes_the_staging_dirs_it_empties(spark, table):
+    """Vacuum removes the dirs it empties (dead staging dirs, dead
+    vector dirs), never ``_manifest``, ``_dv`` or the root."""
+    from octopufs_spark.manifest import compact_and_commit
+    from octopufs_spark.merge import delete_where_mor
+
+    for i in range(4):
+        write_and_commit(_df(spark, 10 * i, 10 * i + 10), table)
+    table.vacuum(keep_versions=1, retention_seconds=0)
+    live = {f.split("/")[0] for f in table.read_manifest().files}
+    assert len(live) == 1
+    assert sorted(p.name for p in Path(table.root).iterdir()) == sorted({"_manifest", *live})
+
+    delete_where_mor(spark, table, spark.range(30, 35).select("id"), keys=["id"])
+    compact_and_commit(spark, table)
+    table.vacuum(keep_versions=1, retention_seconds=0)
+    live = {f.split("/")[0] for f in table.read_manifest().files}
+    assert sorted(p.name for p in Path(table.root).iterdir()) == sorted(
+        {"_manifest", "_dv", *live}
+    )
+    assert list((Path(table.root) / "_dv").iterdir()) == []
+    assert {r.id for r in table.read(spark).collect()} == set(range(35, 40))
+    assert table.vacuum(keep_versions=1, retention_seconds=0) == []
+
+
 def test_promote_table_to_manifest(spark, table, tmp_path):
     from octopufs_spark.manifest import promote_table_to_manifest
 
@@ -2085,8 +2232,15 @@ def test_merge_preserves_hive_layout_with_partition_by(spark, table):
     got = table.read(spark)
     assert got.count() == 400
     assert got.where(F.col("v") == 2).count() == 10
+    # the merge stages one file per partition; an append adds a second
+    # one under its own staging dir for auto_optimize to group
+    more = spark.range(400, 440).select(
+        F.col("id"), (F.col("id") % 4).cast("int").alias("p"), F.lit(3).alias("v")
+    )
+    write_and_commit(more, table, mode="append", partition_by=["p"])
     done = auto_optimize(spark, table, target_file_bytes=512 * 1024 * 1024, min_files=1)
     assert set(done) == {f"p={i}" for i in range(4)}
+    assert table.read(spark).count() == 440
 
 
 def test_scoped_compaction_aborts_racing_positional_delete(spark, table):
@@ -2481,7 +2635,7 @@ def test_full_rewrite_materializes_evolution_and_frees_names(spark, table):
     """An unscoped compaction writes files under the LOGICAL schema and
     drops the event log (same lifecycle as delete vectors), so retired
     names become reusable and replay cost stops accumulating."""
-    write_and_commit(_df(spark, 0, 100), table)
+    write_and_commit(_df(spark, 0, 100).repartition(2), table)
     table.rename_column("v", "val")
     compact_and_commit_v = __import__(
         "octopufs_spark.manifest", fromlist=["compact_and_commit"]

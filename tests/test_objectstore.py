@@ -123,6 +123,45 @@ def test_move_delete_remote(remote_prefix):
     assert names == {"a2.bin"}
 
 
+@pytest.mark.parametrize("scheme", ["file", "remote"])
+def test_escaped_and_spaced_paths(spark, scheme, remote_prefix, tmp_path):
+    """Paths are taken as listed: a Hive ``k=a%3Ab`` dir and a name
+    with a space are deleted and moved as named, never percent-decoded
+    into a path that does not exist (which reads as "already gone"),
+    and a folder's listed children are deleted on every scheme."""
+    from octopufs_spark.fs.core import get_filesystem, list_tree
+    from octopufs_spark.fs.delta import synchronize
+    from octopufs_spark.fs.local import delete_folder, delete_paths, move_paths
+    from octopufs_spark.fs.model import Paths
+
+    prefix = f"file://{tmp_path}" if scheme == "file" else remote_prefix
+    fs, base = get_filesystem(prefix)
+    names = ["k=a%3Ab/part-0.bin", "k=a%3Ab/keep.bin", "with space/part 1.bin",
+             "m/a%3Ab.bin", "src/keep.bin", "trg/keep.bin",
+             "trg/ts=2024-01-01 00%3A00%3A00/x.bin"]  # fmt: skip
+    for rel in names:
+        fs.create_dir(f"{base}/{rel}".rsplit("/", 1)[0], recursive=True)
+        with fs.open_output_stream(f"{base}/{rel}") as f:
+            f.write(b"x")
+
+    def listed() -> set[str]:
+        return {e.path[len(base) + 1 :] for e in list_tree(prefix) if not e.is_dir}
+
+    res = delete_paths([f"{prefix}/k=a%3Ab/part-0.bin", f"{prefix}/with space/part 1.bin"])
+    assert all(r.success for r in res)
+    res = move_paths([Paths(f"{prefix}/m/a%3Ab.bin", f"{prefix}/m/b%3Ac.bin")])
+    assert all(r.success for r in res)
+    rest = {"src/keep.bin", "trg/keep.bin", "trg/ts=2024-01-01 00%3A00%3A00/x.bin"}
+    assert listed() == {"k=a%3Ab/keep.bin", "m/b%3Ac.bin", *rest}
+    delete_paths([f"{prefix}/k=a%3Ab"])  # a directory, recursively
+    assert listed() == {"m/b%3Ac.bin", *rest}
+    # synchronize deletes the target's extras by their listed names
+    synchronize(spark, f"{prefix}/src", f"{prefix}/trg")
+    assert listed() == {"m/b%3Ac.bin", "src/keep.bin", "trg/keep.bin"}
+    delete_folder(f"{prefix}/trg", delete_content_only=True)
+    assert listed() == {"m/b%3Ac.bin", "src/keep.bin"}
+
+
 def test_delta_synchronize_remote(spark, remote_prefix):
     from octopufs_spark.fs.delta import get_delta, synchronize
 

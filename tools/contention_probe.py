@@ -14,8 +14,9 @@ duration. Reported per run:
   - fairness: min/max successful commits per worker (a starved writer
     shows up as min << max)
 
-Workers are Spark-free (pyarrow-written files + manifest-layer
-commits), so the numbers isolate the CAS + retry policy itself.
+Workers are Spark-free (pyarrow-written files committed through
+``manifest_log.ManifestLog``, which imports no pyspark), so the
+numbers isolate the CAS + retry policy itself.
 
 Run: python tools/contention_probe.py [n_procs] [seconds]
 Results land in SCALE.md; the liveness assertion lives in
@@ -40,18 +41,18 @@ def _worker(root: str, wid: int, deadline: float, q) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    import octopufs_spark.manifest as M
+    from octopufs_spark.manifest_log import ManifestLog
 
     attempts = {"n": 0}
-    orig_publish = M.ManifestTable._publish
+    orig_publish = ManifestLog._publish
 
     def counting_publish(self, m):
         attempts["n"] += 1
         return orig_publish(self, m)
 
-    M.ManifestTable._publish = counting_publish
+    ManifestLog._publish = counting_publish
 
-    t = M.ManifestTable(root)
+    t = ManifestLog(root)
     ok = fail = 0
     i = 0
     while time.time() < deadline:
@@ -97,9 +98,9 @@ def main() -> None:
         p.join()
     wall = time.time() - t0
 
-    from octopufs_spark.manifest import ManifestTable
+    from octopufs_spark.manifest_log import ManifestLog
 
-    t = ManifestTable(root)
+    t = ManifestLog(root)
     head = t.latest_version() or 0
     total_ok = sum(r["ok"] for r in results)
     total_fail = sum(r["fail"] for r in results)
