@@ -52,12 +52,21 @@ def _is_false_negative(fs: pafs.FileSystem, p: Paths) -> bool:
 def move_paths(paths: list[Paths]) -> list[FsOperationResult]:
     """Parallel renames with retry + false-negative reconciliation
     (reference: movePaths, fs/LocalExecution.scala:70-97)."""
-    if not paths:
-        return []
-    fs, in_fs = _resolver(paths[0].source_path)
+    return _move(paths, _resolver())
+
+
+def _move(
+    paths: list[Paths], resolve: Callable[[str], tuple[pafs.FileSystem, str]]
+) -> list[FsOperationResult]:
+    """Rename each of ``paths`` (``resolve`` maps a path to its
+    filesystem and its path there)."""
 
     def mv(p: Paths) -> FsOperationResult:
-        sp = Paths(in_fs(p.source_path), in_fs(p.target_path))
+        fs, src = resolve(p.source_path)
+        trg_fs, trg = resolve(p.target_path)
+        if trg_fs.type_name != fs.type_name:
+            raise ValueError(f"cannot rename across filesystems: {p.source_path} -> {p.target_path}")
+        sp = Paths(src, trg)
         try:
             fs.move(sp.source_path, sp.target_path)
             return FsOperationResult(p.source_path, True)
@@ -69,21 +78,19 @@ def move_paths(paths: list[Paths]) -> list[FsOperationResult]:
 
 def delete_paths(paths: list[str]) -> list[FsOperationResult]:
     """Parallel recursive deletes with retry
-    (reference: deletePaths, fs/LocalExecution.scala:106-128). The
-    filesystem is resolved once, from the first path (see
-    :func:`_resolver`)."""
-    if not paths:
-        return []
-    fs, in_fs = _resolver(paths[0])
-    return _delete(fs, paths, in_fs)
+    (reference: deletePaths, fs/LocalExecution.scala:106-128). Each
+    path is resolved on its own filesystem (see :func:`_resolver`)."""
+    return _delete(paths, _resolver())
 
 
-def _delete(fs: pafs.FileSystem, paths: list[str], in_fs=lambda p: p) -> list[FsOperationResult]:
-    """Delete each of ``paths`` (``in_fs`` maps one to its path on
-    ``fs``); a path that is already gone counts as deleted."""
+def _delete(
+    paths: list[str], resolve: Callable[[str], tuple[pafs.FileSystem, str]]
+) -> list[FsOperationResult]:
+    """Delete each of ``paths`` (``resolve`` maps one to its filesystem
+    and its path there); a path that is already gone counts as deleted."""
 
     def rm(path: str) -> FsOperationResult:
-        p = in_fs(path)
+        fs, p = resolve(path)
         try:
             info = fs.get_file_info(p)
             if info.type == pafs.FileType.NotFound:
@@ -106,7 +113,7 @@ def delete_folder(folder_uri: str, delete_content_only: bool = False) -> None:
     fs, folder = get_filesystem(folder_uri)
     if delete_content_only:
         children = fs.get_file_info(pafs.FileSelector(folder, recursive=False, allow_not_found=True))
-        _delete(fs, [c.path for c in children])
+        _delete([c.path for c in children], lambda p: (fs, p))
     else:
         info = fs.get_file_info(folder)
         if info.type != pafs.FileType.NotFound:
@@ -145,25 +152,37 @@ def move_folder_content(
         if not c.path.endswith("_open_transaction")
     ]
     fs.create_dir(trg, recursive=True)
-    results = move_paths(pairs)
+    results = _move(pairs, lambda p: (fs, p))  # listed paths carry no scheme
     fuse.end_transaction()
     if not keep_source_folder:
         delete_folder(src_uri)
     return results
 
 
-def _resolver(uri: str) -> tuple[pafs.FileSystem, Callable[[str], str]]:
-    """The filesystem ``uri`` lives on, and a function that maps a path
-    on it to its in-filesystem path by cutting off the scheme and
-    authority ``uri`` starts with. The rest is kept as written: paths
-    come from listings, where a Hive ``k=a%3Ab`` dir is named just so,
-    and parsing them as URIs would percent-decode that (and reject a
-    space). A path with no scheme is a local path and maps to itself.
-    Spark's catalog spells local URIs ``file:/x``, which works too."""
-    scheme = re.match(r"[A-Za-z][A-Za-z0-9+.-]+:(//[^/]*)?", uri)
-    if scheme is None:
-        return pafs.LocalFileSystem(), lambda path: path
-    head = scheme.group(0)
-    fs, base = get_filesystem(head + "/")
-    base = base.rstrip("/")
-    return fs, lambda path: f"{base}/{path[len(head):].lstrip('/')}"
+_HEAD = re.compile(r"[A-Za-z][A-Za-z0-9+.-]+:(//[^/]*)?")
+
+
+def _resolver() -> Callable[[str], tuple[pafs.FileSystem, str]]:
+    """A function that maps a path to the filesystem it lives on and
+    its in-filesystem path, by cutting off the path's own scheme and
+    authority. The rest is kept as written: paths come from listings,
+    where a Hive ``k=a%3Ab`` dir is named just so, and parsing them as
+    URIs would percent-decode that (and reject a space). A path with no
+    scheme is a local path and maps to itself. Spark's catalog spells
+    local URIs ``file:/x``, which works too. Each distinct scheme and
+    authority (bucket, container) is resolved once per function."""
+    local = pafs.LocalFileSystem()
+    heads: dict[str, tuple[pafs.FileSystem, str]] = {}
+
+    def resolve(path: str) -> tuple[pafs.FileSystem, str]:
+        m = _HEAD.match(path)
+        if m is None:
+            return local, path
+        head = m.group(0)
+        if head not in heads:
+            fs, base = get_filesystem(head + "/")
+            heads[head] = fs, base.rstrip("/")
+        fs, base = heads[head]
+        return fs, f"{base}/{path[len(head):].lstrip('/')}"
+
+    return resolve

@@ -21,6 +21,7 @@ garbage collection safe to defer (``vacuum``).
 
 from __future__ import annotations
 
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,10 +46,17 @@ from octopufs_spark.manifest_log import (
 
 # the size a staged or compacted data file aims for
 TARGET_FILE_BYTES = 100 * 1024 * 1024
-# plan roots whose partitioning the caller chose, and the narrow unary
-# nodes that may sit above one without changing the written layout
-_CHOSEN_LAYOUT = {"Repartition", "RepartitionByExpression", "RebalancePartitions"}
-_NARROW = {"Project", "Filter", "SubqueryAlias", "Sort"}
+# plan roots whose partitioning (or per-partition order) the caller
+# chose, and the narrow unary nodes that may sit above one without
+# changing the written layout: coalescing sorted partitions end to end
+# would leave no file sorted, or spread a range over every file
+_CHOSEN_LAYOUT = {"Repartition", "RepartitionByExpression", "RebalancePartitions", "Sort"}
+_NARROW = {"Project", "Filter", "SubqueryAlias"}
+# plan nodes that can emit more rows or bytes than Catalyst's estimate
+# (their input's size), named at the start of a ``treeString`` line
+_UNSIZED = re.compile(
+    r"^[\s:|+-]*(Generate|\w*EvalPythonUDTF|MapIn\w+|FlatMap\w+|MapPartitions\w*)\b", re.M
+)
 
 
 def _apply_evolution(df: DataFrame, events: list) -> DataFrame:
@@ -466,9 +474,11 @@ class ManifestTable(ManifestLog):
 
         The write stages ceil(estimated bytes / ``TARGET_FILE_BYTES``)
         files (with ``partition_by``, up to that many per partition
-        dir), not one per input partition (:func:`_right_sized`); an
-        explicit ``repartition`` / ``repartitionByRange`` /
-        ``coalesce`` of ``df`` is respected."""
+        dir), not one per input partition, but keeps as many tasks as
+        Spark would read those bytes with (:func:`_right_sized`): a
+        commit of a few MiB is one file. An explicit ``repartition`` /
+        ``repartitionByRange`` / ``coalesce`` / sort of ``df`` is
+        respected."""
         staged = f"{prefix}-{uuid.uuid4().hex[:12]}"
         writer = _right_sized(df).write.mode("errorifexists")
         if partition_by:
@@ -519,26 +529,39 @@ class ManifestTable(ManifestLog):
 
 
 def _right_sized(df: DataFrame) -> DataFrame:
-    """``df`` coalesced to ceil(estimated bytes / ``TARGET_FILE_BYTES``)
-    partitions, so a write stages that many files rather than one per
-    input partition: a small append is one file. The estimate is
-    Catalyst's plan statistics (no Spark job), and ``coalesce`` adds no
-    shuffle and never raises the partition count. A frame whose
-    partitioning the caller chose (a repartition, coalesce or rebalance
-    at the root, under narrow unary nodes only) is returned as it is,
-    and so is one whose estimate is unknown (Spark's ``Long.MaxValue``
-    default) or needs more partitions than a JVM ``int`` holds."""
-    plan = df._jdf.queryExecution().optimizedPlan()
+    """``df`` coalesced to as few partitions as its estimated bytes
+    need, so a write stages that many files rather than one per input
+    partition: a small append is one file. That is ceil(bytes /
+    ``TARGET_FILE_BYTES``), but never fewer than the tasks Spark would
+    split a read of those bytes into (one per core, each of at least
+    ``spark.sql.files.openCostInBytes``, 4 MiB by default), because
+    ``coalesce`` also narrows the stage that computes the frame. The
+    estimate is Catalyst's plan statistics (no Spark job), and
+    ``coalesce`` adds no shuffle and never raises the partition count.
+
+    ``df`` is returned as it is when the caller chose its partitioning
+    (a repartition, coalesce, rebalance or sort at the root, under
+    narrow unary nodes only), when its estimate is unknown (Spark's
+    ``Long.MaxValue`` default) or needs more partitions than a JVM
+    ``int`` holds, and when its plan has a node whose output Catalyst
+    sizes as its input's (an explode, a Python UDTF, ``mapInPandas``):
+    there the estimate is no bound on the bytes written."""
+    qe = df._jdf.queryExecution()
+    plan = qe.optimizedPlan()
     node = plan
     while True:
         name = node.getClass().getSimpleName()
         if name in _CHOSEN_LAYOUT:
             return df
-        # a global sort range-partitions: past it the layout is Spark's
-        if name not in _NARROW or (name == "Sort" and getattr(node, "global")()):
+        if name not in _NARROW:
             break
         node = node.child()
-    n = -(-int(plan.stats().sizeInBytes()) // TARGET_FILE_BYTES)
+    if _UNSIZED.search(plan.treeString()):
+        return df
+    size = int(plan.stats().sizeInBytes())
+    jspark = qe.sparkSession()
+    split = -(-size // jspark.sessionState().conf().filesOpenCostInBytes())
+    n = max(-(-size // TARGET_FILE_BYTES), min(split, jspark.sparkContext().defaultParallelism()))
     return df if n > 2**31 - 1 else df.coalesce(max(1, n))
 
 
@@ -599,9 +622,10 @@ def write_and_commit(
     constraints enforced at the publish boundary.
 
     The commit stages ceil(estimated bytes / ``TARGET_FILE_BYTES``)
-    files, so a small append is one file; a ``df`` the caller
-    repartitioned (``repartition(k)``, ``repartitionByRange``) keeps
-    its k-file layout.
+    files, or one per core when the bytes would fill that many of
+    Spark's read splits, so an append of a few MiB is one file; a
+    ``df`` the caller repartitioned (``repartition(k)``,
+    ``repartitionByRange``) or sorted keeps its layout.
 
     ``hidden_partition`` ({name: (kind, src_col[, param])}) is
     Iceberg-style HIDDEN partitioning: the table is laid out by a

@@ -17,7 +17,8 @@ Delta/Iceberg COW).
 
 A manifest MERGE stages its rewrite through ``ManifestTable._stage``:
 ceil(estimated bytes / ``manifest.TARGET_FILE_BYTES``) files (with
-``partition_by``, up to that many per partition dir), so a merge into
+``partition_by``, up to that many per partition dir), or one per core
+once the bytes fill that many of Spark's read splits, so a merge into
 a small table publishes one file, however many partitions its input
 had. A repartition the caller chose is respected by ``_stage``, but the
 merged frame is a union this module builds, so a repartition of

@@ -246,8 +246,8 @@ def test_small_commits_stage_one_file(spark, table, tmp_path):
 
 def test_explicit_layouts_are_kept(spark, table, tmp_path):
     """A frame whose partitioning the caller chose keeps its k-file
-    layout: repartition(k), repartitionByRange (zone-map pruning),
-    hidden-partition writes and a z-order compaction."""
+    layout: repartition(k), repartitionByRange (zone-map pruning), a
+    sorted frame, hidden-partition writes and a z-order compaction."""
     from octopufs_spark.manifest import (
         _right_sized,
         _with_hidden_columns,
@@ -262,6 +262,23 @@ def test_explicit_layouts_are_kept(spark, table, tmp_path):
     assert len(ranged.read_manifest().files) == 4
     keep, skipped = ranged.prune_plan([("id", "=", 5)])
     assert (len(keep), skipped) == (1, 3)
+
+    # a sort keeps its layout: coalescing would join sorted runs end to
+    # end (a global sort's ranges would spread over every file)
+    by_range = _arrow_df(spark, 0, 4000).orderBy("id")
+    by_part = _arrow_df(spark, 0, 4000).sortWithinPartitions("id").select("id", "v")
+    assert _right_sized(by_range) is by_range and _right_sized(by_part) is by_part
+    ordered = ManifestTable(str(tmp_path / "ordered"))
+    coalescing = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalescing)
+    spark.conf.set(coalescing, "false")  # keep every range partition
+    try:
+        write_and_commit(by_range, ordered, stats=True)
+    finally:
+        spark.conf.set(coalescing, prev)
+    files = ordered.read_manifest().files
+    keep, skipped = ordered.prune_plan([("id", "=", 5)])
+    assert len(files) > 1 and (len(keep), skipped) == (1, len(files) - 1)
 
     hidden = _with_hidden_columns(_arrow_df(spark, 0, 4000), {"b": ("bucket", "id", 4)})
     narrowed = hidden.where("v > 1").select("id", "b")
@@ -279,8 +296,10 @@ def test_explicit_layouts_are_kept(spark, table, tmp_path):
 
 def test_sizing_estimate_above_target_and_unknown(spark, table, tmp_path, monkeypatch):
     """An estimate above the target stages more than one file (never
-    more than the input partitions: coalesce does not shuffle); a frame
-    whose estimate Spark does not know keeps its partitioning."""
+    more than the input partitions: coalesce does not shuffle); the
+    write keeps as many tasks as Spark would split a read of the same
+    bytes into; a frame whose estimate Spark does not know, or does not
+    bound (an explode), keeps its partitioning."""
     from octopufs_spark import manifest
 
     monkeypatch.setattr(manifest, "TARGET_FILE_BYTES", 1024)
@@ -289,10 +308,27 @@ def test_sizing_estimate_above_target_and_unknown(spark, table, tmp_path, monkey
     assert 1 < len(table.read_manifest().files) <= df.rdd.getNumPartitions()
     monkeypatch.undo()
 
+    split = ManifestTable(str(tmp_path / "split"))
+    open_cost = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(open_cost)
+    spark.conf.set(open_cost, "1024")  # every KiB of the estimate earns a task
+    try:
+        write_and_commit(df, split)
+    finally:
+        spark.conf.set(open_cost, prev)
+    cores = spark.sparkContext.defaultParallelism
+    assert len(split.read_manifest().files) == min(cores, df.rdd.getNumPartitions())
+
     unknown = ManifestTable(str(tmp_path / "unknown"))
     rows = spark.sparkContext.parallelize([(i, float(i)) for i in range(30)], 3)
     write_and_commit(spark.createDataFrame(rows, "id long, v double"), unknown)
     assert len(unknown.read_manifest().files) == 3
+
+    exploded = ManifestTable(str(tmp_path / "exploded"))
+    seq = F.explode(F.sequence(F.lit(1), F.lit(50))).alias("k")
+    write_and_commit(spark.range(0, 200, numPartitions=3).select("id", seq), exploded)
+    assert len(exploded.read_manifest().files) == 3
+    assert exploded.read(spark).count() == 10_000
 
 
 def test_compaction_materializes_vectors_of_a_single_file(spark, table):

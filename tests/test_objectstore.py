@@ -162,6 +162,54 @@ def test_escaped_and_spaced_paths(spark, scheme, remote_prefix, tmp_path):
     assert listed() == {"m/b%3Ac.bin", "src/keep.bin"}
 
 
+def test_batches_span_buckets_and_schemes(monkeypatch, tmp_path):
+    """Each path of a batch is resolved on its own: a delete or rename
+    batch whose paths live in two buckets, or that mixes a ``file://``
+    URI with a plain local path, touches exactly the named objects."""
+    from octopufs_spark.fs import mockfs
+    from octopufs_spark.fs.local import delete_paths, move_paths
+    from octopufs_spark.fs.model import Paths
+
+    monkeypatch.setattr(mockfs, "MOCKFS_ROOT", str(tmp_path / "mock"))
+    for uri in ["mock://a/t/x.bin", "mock://b/t/y.bin", "mock://a/t/m.bin", "mock://b/t/keep.bin"]:
+        _put(uri, b"x")
+
+    def on_disk(root) -> set[str]:
+        return {str(p.relative_to(root)) for p in root.rglob("*") if p.is_file()}
+
+    res = delete_paths(["mock://a/t/x.bin", "mock://b/t/y.bin"])
+    assert all(r.success for r in res)
+    assert on_disk(tmp_path / "mock") == {"a/t/m.bin", "b/t/keep.bin"}
+    res = move_paths([Paths("mock://a/t/m.bin", "mock://b/t/m.bin")])
+    assert all(r.success for r in res)
+    assert on_disk(tmp_path / "mock") == {"b/t/m.bin", "b/t/keep.bin"}
+
+    local = tmp_path / "local"
+    for rel in ["a/x.bin", "b/y.bin", "c/keep.bin"]:
+        (local / rel).parent.mkdir(parents=True, exist_ok=True)
+        (local / rel).write_bytes(b"x")
+    res = delete_paths([f"file://{local}/a/x.bin", f"{local}/b"])
+    assert all(r.success for r in res)
+    assert on_disk(local) == {"c/keep.bin"}
+    with pytest.raises(ValueError, match="across filesystems"):
+        move_paths([Paths(f"file://{local}/c/keep.bin", "mock://b/t/keep2.bin")])
+
+
+def test_move_folder_content_on_mock(monkeypatch, tmp_path):
+    """A folder's children move on the object-store scheme too (the
+    listed paths carry no scheme), and the safety marker is cleared."""
+    from octopufs_spark.fs import mockfs
+    from octopufs_spark.fs.local import move_folder_content
+
+    monkeypatch.setattr(mockfs, "MOCKFS_ROOT", str(tmp_path))
+    for uri in ["mock://b/src/a.bin", "mock://b/src/k=a%3Ab/x.bin", "mock://b/trg/old.bin"]:
+        _put(uri, b"x")
+    res = move_folder_content("mock://b/src", "mock://b/trg")
+    assert len(res) == 2 and all(r.success for r in res)
+    got = {str(p.relative_to(tmp_path)) for p in tmp_path.rglob("*") if p.is_file()}
+    assert got == {"b/trg/a.bin", "b/trg/k=a%3Ab/x.bin"}
+
+
 def test_delta_synchronize_remote(spark, remote_prefix):
     from octopufs_spark.fs.delta import get_delta, synchronize
 
