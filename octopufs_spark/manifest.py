@@ -30,7 +30,7 @@ from octopufs_spark.fs.core import list_tree
 from octopufs_spark.manifest_log import (
     _DROPPED_PREFIX,
     _HIVE_NULL,
-    ConcurrentModificationError,
+    ConcurrentModificationError,  # noqa: F401 — re-exported
     Manifest,
     ManifestLog,
     SnapshotVacuumedError,
@@ -787,14 +787,12 @@ def compact_and_commit(
     single-file snapshot. Old files stay until ``vacuum`` — time travel
     keeps working.
 
-    Concurrency: the publish-time ``build`` reconciles against the
-    LATEST manifest, not the snapshot that was read. A concurrent
-    append landing between the snapshot read and the publish has its
-    files carried forward into the compacted commit (no lost update);
-    a concurrent rewrite/second-compaction that removed files this
-    compaction sourced — or a MOR delete adding vectors the rewrite
-    did not apply — aborts with :class:`ConcurrentModificationError`
-    (Delta aborts OPTIMIZE on conflicting commits the same way).
+    Concurrency: the rewrite replaces the files it compacted through
+    :meth:`ManifestLog.commit_rewrite` — a full rewrite is the scope
+    of every file. Racing appends carry forward, and so does a racing
+    delete vector while a carried file survives to keep it in force
+    (the compacted rows never re-insert a key); a racing rewrite of
+    the compacted files aborts.
 
     ``zorder_by=(c1, c2)`` re-clusters the rewrite on the Morton curve
     of the two columns (range-partition + sort on the interleaved-bit
@@ -819,9 +817,7 @@ def compact_and_commit(
     is untouched metadata. Unlike the full rewrite, a partial rewrite
     RETAINS the other parent files, so merge-on-read delete vectors
     stay in force for the whole snapshot (the rewritten files simply
-    no longer contain the deleted keys), and a vector landed by a
-    racing delete still applies — only a race that would DROP such a
-    vector (the rewrite consumed every remaining file) aborts.
+    no longer contain the deleted keys).
 
     ``partition_values`` scopes by hive PARTITION IDENTITY instead of
     path: {"bucket": "3"} matches every file whose k=v dir segments
@@ -838,11 +834,7 @@ def compact_and_commit(
     removes fork-base files from the branch's view, so a later
     ``fast_forward`` is (correctly) the replace-flavored op.
     """
-    m = (
-        table.read_manifest(table.branch_head(branch))
-        if branch is not None
-        else table.read_manifest()
-    )
+    m = table.read_head(branch)
     scoped = prefix is not None or partition_values is not None
 
     def _in_scope(f: str) -> bool:
@@ -862,7 +854,7 @@ def compact_and_commit(
                     return False
         return True
 
-    matched = m.files if not scoped else [f for f in m.files if _in_scope(f)]
+    matched = [f for f in m.files if _in_scope(f)]
     if not matched:
         return None
     relayout = zorder_by is not None or (not scoped and bool(m.meta.get("delete_vectors")))
@@ -958,65 +950,6 @@ def compact_and_commit(
         stats=stats if stats is not None else bool(m.meta.get("file_stats")),
         bloom_columns=list(m.meta.get("bloom_index", {})),
     )
-    src_files = set(matched)
-    src_dvs = [dv["path"] for dv in m.meta.get("delete_vectors", [])]
-
-    def build(parent):
-        parent_files = set(parent.files) if parent else set()
-        parent_dv_entries = parent.meta.get("delete_vectors", []) if parent else []
-        parent_dvs = [dv["path"] for dv in parent_dv_entries]
-        compacted_away = src_files - parent_files
-        new_vectors = [p for p in parent_dvs if p not in src_dvs]
-        if not scoped:
-            # full rewrite: retains no parent files, so vectors DROP at
-            # publish — a racer's new vector (or removed source file)
-            # would be silently lost; abort instead
-            if compacted_away or new_vectors:
-                raise ConcurrentModificationError(
-                    f"compaction of {table.root} conflicts with a concurrent commit: "
-                    f"{len(compacted_away)} sourced file(s) removed, "
-                    f"{len(new_vectors)} new delete vector(s) since v{m.version}"
-                )
-            # a racer's pure appends carry forward into the compacted snapshot
-            carried = sorted(parent_files - src_files)
-            return sorted(carried + staged_files)
-        # scoped rewrite: everything outside the prefix is untouched
-        # metadata, and carried vectors keep applying snapshot-wide —
-        # a racer's NEW vector is only at risk when no parent file
-        # survives to carry it on
-        scope_desc = prefix if prefix is not None else partition_values
-        if compacted_away:
-            raise ConcurrentModificationError(
-                f"compaction of {table.root} scope {scope_desc!r} conflicts with a "
-                f"concurrent commit: {len(compacted_away)} sourced file(s) removed"
-            )
-        kept = [f for f in parent.files if f not in src_files]
-        if new_vectors and not kept:
-            raise ConcurrentModificationError(
-                f"compaction of {table.root} scope {scope_desc!r} would drop "
-                f"{len(new_vectors)} delete vector(s) landed since v{m.version}"
-            )
-        # a racing POSITIONAL vector is a lost update even when other
-        # files survive to carry it: it names (file, row) pairs, and if
-        # any named file is one this rewrite replaces, the staged files
-        # were materialized from a PRE-delete read — the carried vector
-        # points at paths the new snapshot no longer scans, so the
-        # deleted rows silently resurrect. Key-granular vectors apply
-        # snapshot-wide and keep working; positional vectors scoped
-        # entirely to out-of-scope files also carry safely.
-        for dv in parent_dv_entries:
-            if dv["path"] in src_dvs or dv.get("type") != "positional":
-                continue
-            touched = table._vector_files(dv)
-            if touched & src_files:
-                raise ConcurrentModificationError(
-                    f"compaction of {table.root} scope {scope_desc!r} conflicts "
-                    f"with a concurrent positional delete {dv['path']!r}: the "
-                    f"vector references {len(touched & src_files)} file(s) this "
-                    "rewrite replaced — the staged rewrite predates the delete"
-                )
-        return sorted(kept + staged_files)
-
     meta["target_file_bytes"] = target_file_bytes
     if zorder_by is not None:
         meta["zorder_by"] = list(zorder_by)
@@ -1024,7 +957,7 @@ def compact_and_commit(
         meta["compacted_prefix"] = prefix
     if partition_values is not None:
         meta["compacted_partition"] = dict(partition_values)
-    return table._commit_with_retry(build, "compact", meta, branch=branch)
+    return table.commit_rewrite(m, matched, staged_files, "compact", meta, branch=branch)
 
 
 def auto_optimize(
@@ -1048,11 +981,7 @@ def auto_optimize(
     ``branch`` runs the whole policy against a branch's head (each
     partition's rewrite publishing as a branch commit).
     """
-    m = (
-        table.read_manifest(table.branch_head(branch))
-        if branch is not None
-        else table.read_manifest()
-    )
+    m = table.read_head(branch)
     groups: dict[tuple, list[str]] = {}
     for f in m.files:
         groups.setdefault(tuple(_hive_segments_of(f)), []).append(f)
@@ -1320,15 +1249,10 @@ def promote_partitions_to_manifest(
     prefixes. Readers never see a half-replaced partition; a failed
     copy aborts with nothing committed.
 
-    Concurrency: the segment-match drop runs against the LATEST
-    manifest, so racing pure appends carry forward. But if a
-    concurrent compaction consumed the replaced partition's files into
-    rewritten files whose paths no longer carry the partition segment,
-    the segment filter would KEEP those files (they still contain the
-    old partition's rows) next to the staged replacement — duplicated
-    rows. The build therefore verifies every partition file it read is
-    either still present (and thus dropped by the filter) at publish
-    and aborts with :class:`ConcurrentModificationError` otherwise.
+    Concurrency: the commit replaces the matched partitions' files it
+    read (:meth:`ManifestLog.commit_rewrite`). A racing append carries
+    forward even into a promoted partition — the promote-then-append
+    order — and a racing rewrite of those files aborts.
     """
     from octopufs_spark import catalog
     from octopufs_spark.fs.distributed import copy_folder
@@ -1348,26 +1272,15 @@ def promote_partitions_to_manifest(
             raise RuntimeError(f"copy failed for partition {name}: {failed[0].path}")
 
     head = table.current_version()  # main lineage: staged WAP content is not ours to replace
-    src_files = set(table.read_manifest(head).files) if head is not None else set()
-    replaced_at_read = {f for f in src_files if set(f.split("/")) & set(part_names)}
-    staged_files = table._data_files_under(staged)
-
-    def build(parent):
-        # a file belongs to partition `year=2024` iff that path segment
-        # appears in its root-relative path (staging prefixes don't
-        # collide: they never contain '=')
-        base = parent.files if parent else []
-        rewritten = replaced_at_read - set(base)
-        if rewritten:
-            raise ConcurrentModificationError(
-                f"partition promote into {table.root} conflicts with a "
-                f"concurrent rewrite: {len(rewritten)} file(s) of the "
-                f"replaced partition(s) left the snapshot, e.g. "
-                f"{sorted(rewritten)[0]!r}"
-            )
-        kept = [f for f in base if not set(f.split("/")) & set(part_names)]
-        return sorted(kept + staged_files)
-
-    return table._commit_with_retry(
-        build, "promote-partitions", {"source": source_table, "partitions": part_names, **(meta or {})}
+    read = table.read_manifest(head) if head is not None else None
+    # a file belongs to partition `year=2024` iff that path segment
+    # appears in its root-relative path (staging prefixes don't
+    # collide: they never contain '=')
+    replaced = [f for f in (read.files if read else []) if set(f.split("/")) & set(part_names)]
+    return table.commit_rewrite(
+        read,
+        replaced,
+        table._data_files_under(staged),
+        "promote-partitions",
+        {"source": source_table, "partitions": part_names, **(meta or {})},
     )

@@ -17,6 +17,28 @@ store:
   resolved by the exists-check-then-put pattern the respective SDKs
   expose (conditional put / ETag if-none-match). The pyarrow backend
   here models it as create-exclusive.
+
+A REWRITE — a commit that replaces files it read (MERGE, compaction,
+partition promotion) — publishes through ONE method,
+``ManifestLog.commit_rewrite``, the one home of the read-set rule
+(the validation phase of optimistic concurrency). Each attempt
+validates the snapshot it read against the live parent:
+
+1. A replaced file that has left the parent (a racing rewrite took
+   it) aborts: the staged rows would duplicate or resurrect it.
+2. The commit publishes ``kept + staged``, ``kept`` = the parent's
+   files minus the replaced ones, so racing appends carry forward.
+3. A parent delete vector the rewrite did not read aborts when
+   ``kept`` is empty (the vector would drop unapplied) or when it is
+   positional and names a replaced file (the staged rows predate the
+   delete); otherwise it carries and applies to the whole snapshot.
+4. A rewrite that may re-insert keys (``inserts``, MERGE) aborts when
+   ``kept`` is non-empty while its read snapshot had a live equality
+   vector: the kept files need the vector, the re-inserted rows must
+   escape it, and a snapshot-wide vector cannot do both.
+
+Every abort raises ``ConcurrentModificationError`` with nothing
+published.
 """
 
 from __future__ import annotations
@@ -658,6 +680,10 @@ class ManifestLog:
             committed_at=d.get("committed_at"),
         )
 
+    def read_head(self, branch: str | None = None) -> Manifest:
+        """The head snapshot of main, or of ``branch`` when given."""
+        return self.read_manifest(self.branch_head(branch) if branch is not None else None)
+
     def commit_timestamp(self, version: int) -> float:
         """When ``version`` committed (epoch seconds): the in-commit
         timestamp when present, else the manifest file's store mtime
@@ -1125,28 +1151,60 @@ class ManifestLog:
             build, operation, meta, wap_id=wap_id, branch=branch, txn=txn
         )
 
-    def commit_replace(
+    def commit_rewrite(
         self,
-        remove_prefix: str,
-        staged_subdir: str,
-        operation: str = "replace",
+        read: Manifest | None,
+        replaced: list[str],
+        staged: list[str],
+        operation: str,
         meta: dict | None = None,
-    ) -> int:
-        """Atomic partial rewrite (the compaction/promotion commit):
-        keep the parent snapshot's files except those under
-        ``remove_prefix``, plus everything staged under
-        ``staged_subdir``. Readers see either the whole old set or the
-        whole new set — never a mix."""
-        staged = self._data_files_under(staged_subdir)
-        if not staged:
-            raise ValueError(f"nothing staged under {self.root}/{staged_subdir}")
+        *,
+        inserts: bool = False,
+        branch: str | None = None,
+        txn: tuple[str, int] | None = None,
+    ) -> int | None:
+        """Publish ``staged`` in place of the ``replaced`` files of the
+        snapshot ``read`` (None: the table was empty) — the one rewrite
+        commit, under the read-set rule of the module docstring.
+        ``inserts``: the staged rows may re-insert keys an equality
+        vector of ``read`` deletes. ``branch`` and ``txn`` are those of
+        :meth:`_commit_with_retry`; returns the committed version, or
+        None when ``txn`` already landed."""
+        replaced_set = set(replaced)
+        read_vectors = read.meta.get("delete_vectors", []) if read else []
+        read_paths = {dv["path"] for dv in read_vectors}
+        shadows = inserts and any(not dv.get("type") for dv in read_vectors)
+        since = f"v{read.version}" if read else "an empty table"
+
+        def conflict(why: str) -> ConcurrentModificationError:
+            return ConcurrentModificationError(
+                f"{operation} of {self.root} conflicts with a commit since it read "
+                f"{since}: {why} — re-run it against the new snapshot"
+            )
 
         def build(parent: Manifest | None) -> list[str]:
-            base = parent.files if parent else []
-            kept = [f for f in base if not f.startswith(remove_prefix.rstrip("/") + "/")]
+            live = parent.files if parent else []
+            gone = replaced_set.difference(live)
+            if gone:
+                raise conflict(f"{len(gone)} replaced file(s) left, e.g. {min(gone)!r}")
+            kept = [f for f in live if f not in replaced_set]
+            for dv in parent.meta.get("delete_vectors", []) if parent else []:
+                if dv["path"] in read_paths:
+                    continue
+                if not kept:
+                    raise conflict(f"delete vector {dv['path']!r} would drop unapplied")
+                if dv.get("type") == "positional" and self._vector_files(dv) & replaced_set:
+                    raise conflict(
+                        f"positional delete vector {dv['path']!r} names replaced files"
+                    )
+            if kept and shadows:
+                raise conflict(
+                    f"{len(kept)} carried file(s) need the equality vectors "
+                    "the re-inserted rows must escape"
+                )
             return sorted(kept + staged)
 
-        return self._commit_with_retry(build, operation, meta)
+        return self._commit_with_retry(build, operation, meta, branch=branch, txn=txn)
 
     # ---------- write-audit-publish (staged snapshots) ----------
 

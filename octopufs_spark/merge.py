@@ -120,18 +120,12 @@ def merge_upsert_manifest(
     post-merge snapshot in a single manifest version; a crashed merge
     leaves only an uncommitted staging dir for ``vacuum``.
 
-    Concurrency (same publish-time reconciliation as
-    ``compact_and_commit``, from the MERGE side): the build runs
-    against the LATEST manifest, not the snapshot that was merged. A
-    concurrent APPEND landing between the merge's read and its publish
-    has its files carried forward into the merged commit — without
-    this, the full-snapshot publish would silently drop the racer's
-    committed rows (the Delta model: MERGE rewrites its read set and
-    leaves unread files alone). A concurrent rewrite of files this
-    merge sourced, or a MOR delete vector the merge did not apply,
-    is a true conflict and aborts with
-    :class:`ConcurrentModificationError` — carrying on would duplicate
-    the rewritten rows / resurrect the racer's deleted keys.
+    Concurrency: the merge replaces every file it read through
+    :meth:`ManifestLog.commit_rewrite`, so a racing append carries
+    forward and a racing rewrite of those files aborts. It may
+    re-insert keys, so a racing append aborts while an equality vector
+    of the merged snapshot is live (positional vectors name only the
+    files the merge replaced, and do not block it).
 
     ``txn=(writer_id, batch_id)`` makes the merge IDEMPOTENT on that
     pair (the Delta txnAppId model): a replayed micro-batch whose id
@@ -177,46 +171,16 @@ def merge_upsert_manifest(
     # stages a full rewrite, so this validates everything a reader
     # would see); violations leave only staged orphans for vacuum
     staged_files, _ = table._stage(merged, "merge", partition_by, expectations)
-    src_files = set(src.files) if src is not None else set()
-    src_dvs = (
-        {dv["path"] for dv in src.meta.get("delete_vectors", [])}
-        if src is not None
-        else set()
+    return table.commit_rewrite(
+        src,
+        src.files if src is not None else [],
+        staged_files,
+        "merge",
+        {"keys": keys},
+        inserts=True,
+        branch=branch,
+        txn=txn,
     )
-    src_version = src.version if src is not None else 0
-
-    def build(parent):
-        if parent is None:
-            return sorted(staged_files)
-        parent_files = set(parent.files)
-        rewritten = src_files - parent_files
-        new_vectors = [
-            dv["path"]
-            for dv in parent.meta.get("delete_vectors", [])
-            if dv["path"] not in src_dvs
-        ]
-        if rewritten or new_vectors:
-            raise ConcurrentModificationError(
-                f"merge into {table.root} conflicts with a concurrent commit: "
-                f"{len(rewritten)} sourced file(s) rewritten, "
-                f"{len(new_vectors)} new delete vector(s) since v{src_version}"
-            )
-        carried = sorted(parent_files - src_files)
-        if carried and src_dvs:
-            # The staged rewrite MATERIALIZED src's vectors (so they
-            # must not apply to it — a merge may re-insert a deleted
-            # key), but the carried appends were never filtered (so the
-            # vectors MUST still apply to them). Snapshot-global
-            # equality vectors cannot express both; surface the race
-            # instead of silently picking a side.
-            raise ConcurrentModificationError(
-                f"merge into {table.root} raced an append while "
-                f"{len(src_dvs)} merge-on-read vector(s) were live — "
-                "re-run the merge against the new snapshot"
-            )
-        return sorted(staged_files + carried)
-
-    return table._commit_with_retry(build, "merge", {"keys": keys}, branch=branch, txn=txn)
 
 
 def manifest_merge_stream_writer(

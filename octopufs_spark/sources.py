@@ -784,12 +784,7 @@ class ManifestStreamSource(DataSource):
         # (its carried evolution log / hidden layout), exactly like the
         # reader pins it — deriving from main would declare columns the
         # branch's batches don't carry once main evolves past the fork
-        branch = self.options.get("branch")
-        m = (
-            table.read_manifest(table.branch_head(branch))
-            if branch
-            else table.read_manifest()
-        )
+        m = table.read_head(self.options.get("branch"))
         hidden = set(m.meta.get("hidden_partitions", {}))
         st = from_arrow_schema(
             pq.read_schema(f"{table.root_path}/{m.files[0]}", filesystem=table.fs)

@@ -59,18 +59,25 @@ def test_uncommitted_staging_invisible(spark, table):
     assert table.read(spark).count() == 10
 
 
-def test_commit_replace_is_all_or_nothing(spark, table):
-    """Compaction-style commit: new compact file replaces a prefix;
-    reader set flips from old to new with no intermediate mix."""
+def test_commit_rewrite_is_all_or_nothing(spark, table):
+    """Compaction-style commit: a new compact file replaces the files
+    it was read from; the reader set flips from old to new with no
+    intermediate mix, and a stale rewrite publishes nothing."""
     write_and_commit(_df(spark, 0, 50), table)
     m1 = table.read_manifest()
     # stage a compacted rewrite of the whole snapshot
     table.read(spark).coalesce(1).write.parquet(f"{table.root}/compact-1")
-    old_prefix = m1.files[0].split("/")[0]
-    v = table.commit_replace(old_prefix, "compact-1", operation="compact")
+    staged = table._data_files_under("compact-1")
+    v = table.commit_rewrite(m1, m1.files, staged, "compact")
     m2 = table.read_manifest(v)
     assert all(f.startswith("compact-1/") for f in m2.files)
     assert {r.id for r in table.read(spark).collect()} == set(range(50))
+    # m1's files have left: a second rewrite of them aborts unpublished
+    from octopufs_spark.manifest import ConcurrentModificationError
+
+    with pytest.raises(ConcurrentModificationError):
+        table.commit_rewrite(m1, m1.files, staged, "compact")
+    assert table.latest_version() == v
 
 
 def test_version_race_one_winner(spark, table):
@@ -1729,6 +1736,88 @@ def test_promote_partitions_races(spark, table, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS mfdb4.src_part4")
         spark.sql("DROP DATABASE IF EXISTS mfdb4")
+
+
+def test_merge_carries_racing_append_past_positional_vectors(spark, table):
+    """Positional vectors name only files the MERGE replaces, so a
+    racing append carries forward: the serial order is delete, merge,
+    append, and the keys the merge re-inserts stay visible."""
+    from octopufs_spark.merge import delete_where_mor_positional, merge_upsert_manifest
+
+    write_and_commit(_df(spark, 0, 50), table)
+    delete_where_mor_positional(spark, table, "id < 5")
+
+    def racer(t2):
+        write_and_commit(_df(spark, 500, 510), t2, mode="append")
+
+    fired = _race(table, racer)
+    changes = _df(spark, 0, 3).unionByName(_df(spark, 40, 60))
+    merge_upsert_manifest(spark, table, changes, keys=["id"])
+    assert fired["done"]
+    got = sorted(r.id for r in table.read(spark).collect())
+    assert got == [0, 1, 2] + list(range(5, 60)) + list(range(500, 510))
+
+
+def test_full_compaction_carries_racing_append_and_equality_delete(spark, table):
+    """A full compaction racing an append and then an equality delete
+    publishes: the appended file survives to keep the vector in force,
+    and the vector applies to the compacted rows too — the serial order
+    is compact, append, delete."""
+    from octopufs_spark.manifest import compact_and_commit
+    from octopufs_spark.merge import delete_where_mor
+
+    for lo in range(0, 40, 10):
+        write_and_commit(_df(spark, lo, lo + 10), table, mode="append" if lo else "overwrite")
+
+    def racer(t2):
+        write_and_commit(_df(spark, 900, 910), t2, mode="append")
+        delete_where_mor(spark, t2, spark.range(0, 5).union(spark.range(900, 902)), ["id"])
+
+    fired = _race(table, racer)
+    assert compact_and_commit(spark, table, target_file_bytes=512 * 1024 * 1024)
+    assert fired["done"]
+    got = sorted(r.id for r in table.read(spark).collect())
+    assert got == list(range(5, 40)) + list(range(902, 910))
+
+
+def test_promote_partitions_carries_racing_append_into_promoted_partition(
+    spark, table, tmp_path
+):
+    """A racing append into a partition being promoted survives: the
+    promotion replaces the partition files it read, so the serial order
+    is promote, then append."""
+    from octopufs_spark.manifest import promote_partitions_to_manifest
+
+    spark.sql("CREATE DATABASE IF NOT EXISTS mfdb_race")
+    loc = tmp_path / "src_part_race"
+    src = _df(spark, 0, 60).withColumn("year", (2020 + F.col("id") % 3).cast("int"))
+    src.write.partitionBy("year").option("path", str(loc)).saveAsTable(
+        "mfdb_race.src_part", mode="overwrite"
+    )
+    try:
+        spark.table("mfdb_race.src_part").write.partitionBy("year").parquet(
+            f"{table.root}/data-full"
+        )
+        table.commit_overwrite("data-full")
+
+        def appender(t2):
+            write_and_commit(
+                _df(spark, 900, 910).withColumn("year", F.lit(2020)),
+                t2,
+                mode="append",
+                partition_by=["year"],
+            )
+
+        fired = _race(table, appender)
+        promote_partitions_to_manifest(spark, "mfdb_race.src_part", ["year=2020"], table)
+        assert fired["done"]
+        got = sorted((r.id, r.year) for r in table.read(spark).collect())
+        assert got == sorted(
+            [(i, 2020 + i % 3) for i in range(60)] + [(i, 2020) for i in range(900, 910)]
+        )
+    finally:
+        spark.sql("DROP TABLE IF EXISTS mfdb_race.src_part")
+        spark.sql("DROP DATABASE IF EXISTS mfdb_race")
 
 
 def test_stream_batch_zombie_double_commit_blocked(spark, table):

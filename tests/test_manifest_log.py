@@ -1,5 +1,6 @@
 """The manifest log without Spark: the log module's import surface, the
-vacuum planner, and vacuum racing itself. No test here starts a JVM."""
+vacuum planner, vacuum racing itself, and the rewrite commit's read-set
+rule. No test here starts a JVM."""
 
 from __future__ import annotations
 
@@ -10,8 +11,14 @@ from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
-from octopufs_spark.manifest_log import Manifest, ManifestLog, _plan_vacuum
+from octopufs_spark.manifest_log import (
+    ConcurrentModificationError,
+    Manifest,
+    ManifestLog,
+    _plan_vacuum,
+)
 
 
 def _log_with_versions(root: Path, versions: int, files: int) -> ManifestLog:
@@ -155,3 +162,95 @@ def test_vacuum_deletes_hive_escaped_paths_under_a_uri_root(tmp_path):
     removed = ManifestLog(root.as_uri()).vacuum(retention_seconds=0)
     assert "data-0/k=a%3Ab c/part-0000.parquet" in removed
     assert not dead.exists()
+
+
+_A, _B = "data-0/part-0000.parquet", "data-0/part-0001.parquet"
+_REWRITE, _APPENDED = "rw/part-0000.parquet", "app/part-0000.parquet"
+
+
+def _commit(log: ManifestLog, step: str) -> str | None:
+    """Commit one racer or setup step on ``log``: ``append`` (one
+    file), ``overwrite`` (a new snapshot of fresh files), ``eq`` (an
+    equality delete vector on id 1) or ``pos:<file>`` (a positional
+    vector naming row 0 of that file). Returns a vector's path."""
+    root = Path(log.root_path)
+    if step == "append":
+        (root / "app").mkdir()
+        pq.write_table(pa.table({"id": [7]}), root / _APPENDED)
+        log.commit_append([_APPENDED])
+        return None
+    if step == "overwrite":
+        (root / "ow").mkdir()
+        pq.write_table(pa.table({"id": [9]}), root / "ow" / "part-0000.parquet")
+        log.commit_overwrite("ow")
+        return None
+    (root / "_dv").mkdir(exist_ok=True)
+    path = f"_dv/dv-{len(list((root / '_dv').iterdir()))}.parquet"
+    if step == "eq":
+        pq.write_table(pa.table({"id": [1]}), root / path)
+        dv = {"path": path, "keys": ["id"]}
+    else:
+        pq.write_table(pa.table({"file": [step[4:]], "pos": [0]}), root / path)
+        dv = {"path": path, "type": "positional"}
+    log._commit_with_retry(lambda p: list(p.files), "delete_mor", {"delete_vectors": [dv]})
+    return path
+
+
+@pytest.mark.parametrize(
+    "before, racers, replaced, inserts, published",
+    [
+        # a racing append carries forward
+        ([], ["append"], [_A, _B], False, [_APPENDED, _REWRITE]),
+        # a replaced file left the snapshot
+        ([], ["overwrite"], [_A, _B], False, None),
+        # a new equality vector would drop with nothing kept...
+        ([], ["eq"], [_A, _B], False, None),
+        # ...and carries while a kept file keeps it in force
+        ([], ["eq"], [_A], False, [_B, _REWRITE]),
+        ([], ["append", "eq"], [_A, _B], False, [_APPENDED, _REWRITE]),
+        # a new positional vector naming a replaced file...
+        ([], [f"pos:{_A}"], [_A], False, None),
+        # ...or only a kept one
+        ([], [f"pos:{_B}"], [_A], False, [_B, _REWRITE]),
+        # re-inserting rows next to a carried file under a live equality vector
+        (["eq"], ["append"], [_A, _B], True, None),
+        (["eq"], [], [_A, _B], True, [_REWRITE]),
+        ([f"pos:{_A}"], ["append"], [_A, _B], True, [_APPENDED, _REWRITE]),
+    ],
+    ids=[
+        "append-carried",
+        "replaced-rewritten",
+        "eq-nothing-kept",
+        "eq-kept",
+        "append-and-eq",
+        "pos-names-replaced",
+        "pos-names-kept",
+        "inserts-eq-carried-file",
+        "inserts-eq-nothing-kept",
+        "inserts-pos-carried-file",
+    ],
+)
+def test_commit_rewrite_rule(tmp_path, before, racers, replaced, inserts, published):
+    """The read-set rule of ``commit_rewrite``, one row per case: each
+    racer commits between the read and the rewrite. An abort publishes
+    nothing; a publish keeps every racer's vector and, with a kept
+    file, the read's vectors too."""
+    root = tmp_path / "t"
+    log = _log_with_versions(root, versions=1, files=2)
+    (root / "rw").mkdir()
+    pq.write_table(pa.table({"id": [0, 1]}), root / _REWRITE)
+    vectors = [_commit(log, step) for step in before]
+    read = log.read_manifest()
+    vectors += [_commit(log, step) for step in racers]
+    head = log.latest_version()
+    if published is None:
+        with pytest.raises(ConcurrentModificationError):
+            log.commit_rewrite(read, replaced, [_REWRITE], "rewrite", inserts=inserts)
+        assert log.latest_version() == head
+        return
+    v = log.commit_rewrite(read, replaced, [_REWRITE], "rewrite", inserts=inserts)
+    m = log.read_manifest(v)
+    assert (m.version, m.operation, m.files) == (head + 1, "rewrite", published)
+    live = [dv["path"] for dv in m.meta.get("delete_vectors", [])]
+    kept = [f for f in published if f != _REWRITE]
+    assert live == ([p for p in vectors if p] if kept else [])
