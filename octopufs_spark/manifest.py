@@ -14,9 +14,12 @@ The log itself lives in ``octopufs_spark.manifest_log`` (no Spark);
 ``ManifestTable`` adds the Spark read and stage side.
 
 Readers: ``latest_version`` → ``read_manifest`` → exact file list →
-``spark.read.parquet(*files)``. No directory listing of data, so
-uncommitted/leftover files are invisible — which also makes compaction
-garbage collection safe to defer (``vacuum``).
+``spark.read.schema(data_schema).parquet(*files)``, with the schema the
+log recorded when the files were staged, so building the read launches
+no Spark job; a snapshot without ``data_schema`` (promoted or foreign
+files) infers it from a footer as Spark does. No directory listing of
+data, so uncommitted/leftover files are invisible — which also makes
+compaction garbage collection safe to defer (``vacuum``).
 """
 
 from __future__ import annotations
@@ -57,6 +60,45 @@ _NARROW = {"Project", "Filter", "SubqueryAlias"}
 _UNSIZED = re.compile(
     r"^[\s:|+-]*(Generate|\w*EvalPythonUDTF|MapIn\w+|FlatMap\w+|MapPartitions\w*)\b", re.M
 )
+# the footer entry Spark writes the row schema to, and infers it from
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+# the columns of every positional delete vector
+_POSITIONAL_SCHEMA = "file STRING, pos BIGINT"
+
+
+def _as_nullable(dt):
+    """Spark's ``DataType.asNullable`` on the JSON form of a type: every
+    field, array element and map value nullable. Spark reads file
+    sources this way, so a recorded schema in this form is what an
+    inferred read reports."""
+    if not isinstance(dt, dict):
+        return dt
+    if dt.get("type") == "struct":
+        fields = [{**f, "nullable": True, "type": _as_nullable(f["type"])} for f in dt["fields"]]
+        return {**dt, "fields": fields}
+    if dt.get("type") == "array":
+        return {**dt, "elementType": _as_nullable(dt["elementType"]), "containsNull": True}
+    if dt.get("type") == "map":
+        return {
+            **dt,
+            "keyType": _as_nullable(dt["keyType"]),
+            "valueType": _as_nullable(dt["valueType"]),
+            "valueContainsNull": True,
+        }
+    return dt
+
+
+def _reader(spark: SparkSession, schema: dict | str | None):
+    """``spark.read`` given ``schema`` (a recorded schema's JSON, or a
+    DDL string) when it is known: the read then plans without a
+    schema-inference Spark job."""
+    if schema is None:
+        return spark.read
+    if isinstance(schema, dict):
+        from pyspark.sql.types import StructType
+
+        schema = StructType.fromJson(schema)
+    return spark.read.schema(schema)
 
 
 def _apply_evolution(df: DataFrame, events: list) -> DataFrame:
@@ -180,6 +222,7 @@ class ManifestTable(ManifestLog):
             annotate_positions=self._has_positional_dvs(m),
             evolution=m.meta.get("schema_evolution"),
             collapse=collapse,
+            schema=m.meta.get("data_schema"),
         )
         return _strip_dropped(self._apply_delete_vectors(spark, df, m))
 
@@ -208,6 +251,7 @@ class ManifestTable(ManifestLog):
         annotate_positions: bool = False,
         evolution: list | None = None,
         collapse: bool = False,
+        schema: dict | None = None,
     ) -> DataFrame:
         """Parquet scan over snapshot-relative files with hive partition
         columns RECOVERED. Explicit file lists disable Spark's partition
@@ -222,15 +266,21 @@ class ManifestTable(ManifestLog):
         bounded by log length and collapsed by compaction. A group
         missing a column another group has (pre-evolution commits)
         unions only under ``merge_schema`` (NULL-filled), else errors —
-        the same contract as the flat read."""
+        the same contract as the flat read.
+
+        ``schema`` is the snapshot's recorded ``data_schema``: the flat
+        scan and every group read with it instead of inferring it from a
+        footer (one Spark job each); partition columns are still
+        discovered from the paths. ``merge_schema`` always infers."""
         has_parts = any(
             "=" in seg for f in rel_files for seg in f.split("/")[1:-1]
         )
 
         def reader(base: str | None = None):
-            r = spark.read
             if merge_schema:
-                r = r.option("mergeSchema", "true")
+                r = spark.read.option("mergeSchema", "true")
+            else:
+                r = _reader(spark, schema)
             if base is not None:
                 r = r.option("basePath", base)
             return r
@@ -385,10 +435,12 @@ class ManifestTable(ManifestLog):
             # scan — _metadata does not resolve post-union)
             df = self._annotate_positions(df)
         events = m.meta.get("schema_evolution", [])
+        # a join on column names puts them first: keep the scan's order
+        columns = [c for c in df.columns if c not in ("_dv_file", "_dv_pos")]
         for dv in pos_dvs + key_dvs:
             frame, on = self._vector_frame(spark, dv, events)
             df = df.join(_F.broadcast(frame), on, "left_anti")
-        return df.drop("_dv_file", "_dv_pos") if pos_dvs else df
+        return df.select(*columns) if dvs else df
 
     def _vector_frame(
         self, spark: SparkSession, dv: dict, events: list
@@ -397,11 +449,16 @@ class ManifestTable(ManifestLog):
         vector as its ``(_dv_file, _dv_pos)`` pairs (matching
         :meth:`_annotate_positions`), an equality vector as its key rows
         under the snapshot's evolution ``events``. Reads anti-join the
-        frame; the MV delta fold semi-joins it to find the hit rows."""
+        frame; the MV delta fold semi-joins it to find the hit rows.
+        The vector is read with its known schema (positional vectors
+        have one; an equality vector records its own), so only a
+        vector written without a recorded schema is inferred."""
         from pyspark.sql import functions as _F
 
-        vec = spark.read.parquet(f"{self.root}/{dv['path']}")
-        if dv.get("type") == "positional":
+        positional = dv.get("type") == "positional"
+        schema = _POSITIONAL_SCHEMA if positional else dv.get("schema")
+        vec = _reader(spark, schema).parquet(f"{self.root}/{dv['path']}")
+        if positional:
             return (
                 vec.select(_F.col("file").alias("_dv_file"), _F.col("pos").alias("_dv_pos")),
                 ["_dv_file", "_dv_pos"],
@@ -464,11 +521,13 @@ class ManifestTable(ManifestLog):
     ) -> tuple[list[str], dict]:
         """The one staging step of every Spark-written commit: write
         ``df`` to a fresh ``{prefix}-{uuid}`` directory under the root
-        (``errorifexists``, hive-partitioned by ``partition_by``), check
-        ``expectations`` on the staged bytes, and list the staged files
-        ONCE. Returns ``(files, meta)``: root-relative parquet files and
-        the commit meta collected from them — ``file_stats`` zone maps
-        with ``stats``, a ``bloom_index`` over ``bloom_columns``. Nothing
+        (``errorifexists``, hive-partitioned by ``partition_by``), list
+        the staged files ONCE, and check ``expectations`` on the staged
+        bytes. Returns ``(files, meta)``: root-relative parquet files and
+        the commit meta collected from them — ``data_schema`` (the Spark
+        schema of the staged files, from one footer read on the driver),
+        ``file_stats`` zone maps with ``stats``, a ``bloom_index`` over
+        ``bloom_columns``. Nothing
         is published: a failure here (or in the commit after it) leaves
         invisible orphans for ``vacuum``.
 
@@ -484,10 +543,15 @@ class ManifestTable(ManifestLog):
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(f"{self.root}/{staged}")
-        if expectations:
-            check_expectations(df.sparkSession, self, staged, expectations)
         files = self._data_files_under(staged)
         meta: dict = {}
+        schema = self._footer_schema(files[0]) if files else None
+        if schema is not None:
+            meta["data_schema"] = schema
+        if expectations:
+            check_expectations(
+                df.sparkSession, self, staged, expectations, meta.get("data_schema")
+            )
         if stats:
             meta["file_stats"] = self.collect_file_stats(files)
         if bloom_columns:
@@ -495,6 +559,20 @@ class ManifestTable(ManifestLog):
                 col: self.collect_bloom_index(files, col) for col in bloom_columns
             }
         return files, meta
+
+    def _footer_schema(self, rel_file: str) -> dict | None:
+        """The Spark schema of a Spark-written data file, as the JSON of
+        its row-schema footer entry with every nullable flag set, or
+        None for a file without that entry. This is the entry Spark's
+        own inference reads."""
+        import json
+
+        import pyarrow.parquet as pq
+
+        with self.fs.open_input_file(f"{self.root_path}/{rel_file}") as f:
+            kv = pq.read_metadata(f).metadata or {}
+        raw = kv.get(_SPARK_ROW_SCHEMA)
+        return _as_nullable(json.loads(raw)) if raw is not None else None
 
     def read_pruned(
         self, spark: SparkSession, predicates: list[tuple], version: int | None = None
@@ -520,10 +598,13 @@ class ManifestTable(ManifestLog):
         if not keep:
             # preserve the LOGICAL schema with an empty, zero-file-cost
             # scan (hidden partition columns stripped like any read)
-            evolution = m.meta.get("schema_evolution")
-            empty = _strip_dropped(
-                self._scan_files(spark, [m.files[0]], evolution=evolution).limit(0)
+            empty = self._scan_files(
+                spark,
+                [m.files[0]],
+                evolution=m.meta.get("schema_evolution"),
+                schema=m.meta.get("data_schema"),
             )
+            empty = _strip_dropped(empty.limit(0))
             return self._strip_hidden(empty, m)
         return self._strip_hidden(self._read_files(spark, m, keep, collapse=at_head), m)
 
@@ -570,16 +651,19 @@ def check_expectations(
     table: ManifestTable,
     staged: str,
     expectations: list[tuple[str, str]],
+    schema: dict | None = None,
 ) -> None:
     """CHECK-constraint enforcement at the commit boundary (the Delta
     constraints model): violations abort BEFORE publish, so no reader
     can ever observe a snapshot breaking the contract — the staged
     files stay invisible orphans for ``vacuum``. Checked on the STAGED
     bytes (not the input plan), so what was validated is exactly what
-    would publish; all constraints evaluate in one aggregate scan."""
+    would publish; all constraints evaluate in one aggregate scan.
+    ``schema`` is the staged files' data schema: given, the scan plans
+    without inferring it."""
     from pyspark.sql import functions as _F
 
-    staged_df = spark.read.parquet(f"{table.root}/{staged}")
+    staged_df = _reader(spark, schema).parquet(f"{table.root}/{staged}")
     checks = staged_df.agg(
         *[
             _F.count(_F.when(~_F.expr(cond), 1)).alias(name)
@@ -1230,8 +1314,8 @@ def _commit_stream_batch(
     # a violating micro-batch fails the query BEFORE publish (the Delta
     # constraints model); checkpoint recovery replays the batch once
     # the data contract is repaired
-    files, _ = table._stage(batch_df, f"batch-{batch_id}", expectations=expectations)
-    table.commit_append(files, operation="stream-append", txn=(writer_id, batch_id))
+    files, meta = table._stage(batch_df, f"batch-{batch_id}", expectations=expectations)
+    table.commit_append(files, meta, operation="stream-append", txn=(writer_id, batch_id))
 
 
 def promote_partitions_to_manifest(

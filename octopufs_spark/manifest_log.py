@@ -38,7 +38,24 @@ validates the snapshot it read against the live parent:
    escape it, and a snapshot-wide vector cannot do both.
 
 Every abort raises ``ConcurrentModificationError`` with nothing
-published.
+published. A positional vector of ``read`` that names only replaced
+files is dead once the rewrite lands (every row it hides was
+rewritten without it), so the rewrite drops it instead of carrying it.
+
+The log also records the Spark schema of the data files, so readers
+plan without a schema-inference Spark job: meta ``data_schema`` is the
+schema JSON of Spark's ``org.apache.spark.sql.parquet.row.metadata``
+footer entry, every nullable flag set (Spark reads file sources
+``asNullable``), so two schemas compare as plain JSON. A snapshot has
+``data_schema`` only while EVERY live data file was staged with that
+schema (``ManifestLog._carry_data_schema``):
+
+- a commit that adds files staged with schema S publishes S when it
+  keeps no parent file or the parent's schema is also S, else none;
+- a commit that adds no file (a merge-on-read delete, column
+  evolution) carries the parent's schema while it keeps files;
+- files added without a schema (promotion, foreign writers) publish
+  none, and readers infer as before.
 """
 
 from __future__ import annotations
@@ -1169,10 +1186,18 @@ class ManifestLog:
         ``inserts``: the staged rows may re-insert keys an equality
         vector of ``read`` deletes. ``branch`` and ``txn`` are those of
         :meth:`_commit_with_retry`; returns the committed version, or
-        None when ``txn`` already landed."""
+        None when ``txn`` already landed. A positional vector of
+        ``read`` naming only replaced files is dropped, not carried."""
         replaced_set = set(replaced)
         read_vectors = read.meta.get("delete_vectors", []) if read else []
         read_paths = {dv["path"] for dv in read_vectors}
+        dead = [
+            dv["path"]
+            for dv in read_vectors
+            if dv.get("type") == "positional" and self._vector_files(dv) <= replaced_set
+        ]
+        if dead:
+            meta = {**(meta or {}), "replaced_vector_paths": dead}
         shadows = inserts and any(not dv.get("type") for dv in read_vectors)
         since = f"v{read.version}" if read else "an empty table"
 
@@ -1334,9 +1359,12 @@ class ManifestLog:
         content_meta = _content_meta(s.meta)
         marker = {"wap_published": {"id": wap.get("id"), "staged_version": v}}
         # re-apply: content metadata comes from the LIVE head via the
-        # carry; the staged commit contributes only the skipping
-        # metadata describing its own added files
+        # carry; the staged commit contributes only what describes its
+        # own added files: skipping metadata, and its data schema (a
+        # snapshot's schema holds for every file in it)
         reapply_meta = dict(marker)
+        if "data_schema" in content_meta:
+            reapply_meta["data_schema"] = content_meta["data_schema"]
         fstats = content_meta.get("file_stats") or {}
         sub = {f: fstats[f] for f in s_added if f in fstats}
         if sub:
@@ -1734,6 +1762,8 @@ class ManifestLog:
         for dv in meta.get("delete_vectors", []):
             if dv["path"] not in seen:
                 merged.append(dv)
+        if not merged:
+            return {k: v for k, v in meta.items() if k != "delete_vectors"}
         return {**meta, "delete_vectors": merged}
 
     @staticmethod
@@ -1833,18 +1863,39 @@ class ManifestLog:
             return {k: v for k, v in meta.items() if k != "hidden_partitions"}
         return {**meta, "hidden_partitions": merged}
 
+    @staticmethod
+    def _carry_data_schema(
+        parent: Manifest | None, files: list[str], meta: dict, retains: bool
+    ) -> dict:
+        """``meta`` with the ``data_schema`` the new file set has, by the
+        rule of the module docstring: ``meta["data_schema"]`` describes
+        the files this commit adds (absent: unknown), and the parent's
+        describes every file it keeps."""
+        staged = meta.get("data_schema")
+        out = {k: v for k, v in meta.items() if k != "data_schema"}
+        kept = parent.meta.get("data_schema") if parent is not None and retains else None
+        parent_files = set(parent.files) if parent is not None else set()
+        if any(f not in parent_files for f in files):
+            schema = staged if not retains or kept == staged else None
+        else:
+            schema = kept
+        if schema is not None:
+            out["data_schema"] = schema
+        return out
+
     @classmethod
     def _carry_content_meta(
         cls, parent: Manifest | None, files: list[str], meta: dict, retains: bool
     ) -> dict:
         """``meta`` with every piece of the parent's CONTENT metadata
         the new file set still needs carried in: delete vectors, the
-        schema-evolution log, hidden partitions and data-skipping
-        stats (stream high-water marks carry separately, on every
-        commit). ``retains``: ``files`` keeps a parent file (else a full rewrite)."""
+        schema-evolution log, hidden partitions, the data schema and
+        data-skipping stats (stream high-water marks carry separately,
+        on every commit). ``retains``: ``files`` keeps a parent file (else a full rewrite)."""
         meta = cls._carry_delete_vectors(parent, retains, meta)
         meta = cls._carry_schema_evolution(parent, retains, meta)
         meta = cls._carry_hidden_partitions(parent, retains, meta)
+        meta = cls._carry_data_schema(parent, files, meta, retains)
         return cls._carry_skipping_meta(parent, files, meta)
 
     def _commit_with_retry(

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from octopufs_spark.manifest import ManifestTable
+from octopufs_spark.manifest import ManifestTable, _as_nullable, _reader
 from octopufs_spark.manifest_log import ConcurrentModificationError
 
 
@@ -159,8 +159,11 @@ def merge_upsert_manifest(
         # skip the per-file existence pre-check a time-traveled read
         # pays (a CDC sink would otherwise pay it per micro-batch)
         target = table.read(spark, version=src.version, check_vacuumed=False)
+    # the anti-join puts the keys first: restore the table's column
+    # order, so the staged files keep the schema the table's other
+    # files have (and the snapshot keeps its recorded data schema)
     merged = (
-        merge_upsert(target, source, keys, deletes=deletes)
+        merge_upsert(target, source, keys, deletes=deletes).select(*target.columns)
         if target is not None
         else source
     )
@@ -170,13 +173,13 @@ def merge_upsert_manifest(
     # CHECK constraints hold on the post-merge snapshot (the merge
     # stages a full rewrite, so this validates everything a reader
     # would see); violations leave only staged orphans for vacuum
-    staged_files, _ = table._stage(merged, "merge", partition_by, expectations)
+    staged_files, staged_meta = table._stage(merged, "merge", partition_by, expectations)
     return table.commit_rewrite(
         src,
         src.files if src is not None else [],
         staged_files,
         "merge",
-        {"keys": keys},
+        {"keys": keys, **staged_meta},
         inserts=True,
         branch=branch,
         txn=txn,
@@ -245,10 +248,17 @@ def consolidate_delete_vectors(spark: SparkSession, table: ManifestTable) -> int
     for keys, dvs in sorted(groups.items()):
         if len(dvs) < 2:
             continue  # singleton: nothing to fold
-        union = spark.read.parquet(*[f"{table.root}/{dv['path']}" for dv in dvs])
+        # one recorded schema for all of them reads without inferring
+        schema = dvs[0].get("schema")
+        if any(dv.get("schema") != schema for dv in dvs):
+            schema = None
+        union = _reader(spark, schema).parquet(*[f"{table.root}/{dv['path']}" for dv in dvs])
         path = f"dv-consolidated-{_uuid.uuid4().hex[:12]}"
-        union.select(*keys).distinct().coalesce(1).write.parquet(f"{table.root}/{path}")
-        staged_vectors.append({"path": path, "keys": list(keys)})
+        folded = union.select(*keys).distinct()
+        folded.coalesce(1).write.parquet(f"{table.root}/{path}")
+        staged_vectors.append(
+            {"path": path, "keys": list(keys), "schema": _as_nullable(folded.schema.jsonValue())}
+        )
         replaced.extend(dv["path"] for dv in dvs)
     if not staged_vectors:
         return None
@@ -306,9 +316,8 @@ def delete_where_mor(
     import uuid
 
     dv_rel = f"_dv/dv-{uuid.uuid4().hex[:12]}.parquet"
-    delete_keys.select(*keys).dropDuplicates(keys).write.mode("errorifexists").parquet(
-        f"{table.root}/{dv_rel}"
-    )
+    vector = delete_keys.select(*keys).dropDuplicates(keys)
+    vector.write.mode("errorifexists").parquet(f"{table.root}/{dv_rel}")
 
     def build(parent):
         if parent is None:
@@ -321,7 +330,9 @@ def delete_where_mor(
     # let a racing full rewrite's retired metadata resurface — the
     # carry helpers give meta entries precedence, so a stale copy of
     # hidden_partitions or untrimmed stats would override the truth.
-    meta = {"delete_vectors": [{"path": dv_rel, "keys": keys}]}
+    # the vector records its schema, so reads plan it without inferring
+    schema = _as_nullable(vector.schema.jsonValue())
+    meta = {"delete_vectors": [{"path": dv_rel, "keys": keys, "schema": schema}]}
     return table._commit_with_retry(build, "delete_mor", meta, branch=branch)
 
 
@@ -376,6 +387,7 @@ def delete_where_mor_positional(
         m.files,
         annotate_positions=True,
         evolution=m.meta.get("schema_evolution"),
+        schema=m.meta.get("data_schema"),
     )
     dv_rel = f"_dv/dvp-{uuid.uuid4().hex[:12]}.parquet"
     hits = scan.where(F.expr(predicate)).select(

@@ -104,9 +104,11 @@ def _reapply_append_content(t: ManifestTable, m: Manifest, spark: SparkSession) 
         # column would break the by-name union every read performs
         df = _with_hidden_columns(df, hp)
         partition_by = list(hp)
-    content, _ = t._stage(df, "data", partition_by)
+    content, staged_meta = t._stage(df, "data", partition_by)
+    # the carry sets the rewritten files' data schema against the live head
     marker = {
-        "wap_published": {"id": wap_id, "staged_version": staged_v, "reapplied": True}
+        **staged_meta,
+        "wap_published": {"id": wap_id, "staged_version": staged_v, "reapplied": True},
     }
 
     def build(parent: Manifest | None) -> list[str]:

@@ -509,6 +509,7 @@ class MaterializedView:
             affected,
             annotate_positions=need_pos,
             evolution=pm.meta.get("schema_evolution"),
+            schema=pm.meta.get("data_schema"),
         )
         # keep only rows the NEW vector hits...
         gone, on = self.source._vector_frame(
@@ -582,6 +583,7 @@ class MaterializedView:
         NULLed min/max is wrong exactly there, and the head partials
         are what a full recompute would say for them."""
         expected = (view_m.meta["mv"]["source_version"] if view_m else None)
+        staged_meta: dict = {}
         if delta is None:
             staged_files = list(view_m.files) if view_m else []
         else:
@@ -602,9 +604,10 @@ class MaterializedView:
             # __rows liveness counter makes a subtractive fold agree
             # with what a full recompute (no such group) produces
             merged = merged.where(F.col("__rows") > 0)
-            staged_files, _ = self.view._stage(merged, "mv")
+            staged_files, staged_meta = self.view._stage(merged, "mv")
 
         meta = {
+            **staged_meta,
             "mv": {
                 "source": self.source.root,
                 "source_version": src_head,
@@ -613,7 +616,7 @@ class MaterializedView:
                 "mode": mode,
                 # physical layout generation: 2 == carries __rows
                 "phys": 2,
-            }
+            },
         }
         if rescan is not None:
             meta["mv"]["minmax_rescan_groups"] = len(rescan[0])

@@ -7,7 +7,11 @@ documents embeddings — one parquet file (or directory) per table under
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -22,8 +26,46 @@ TABLE_NAMES = (
     "embeddings",
 )
 
+# the session confs that change what Spark infers from a parquet footer
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+# fixture path -> (key, schema Spark inferred under that key)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """What an inferred schema of ``path`` depends on: the
+    ``(st_ino, st_size, st_mtime_ns)`` of the file, or of each data file
+    of a directory, and the session's inference confs. None when
+    ``path`` is not a local path."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if stat.S_ISDIR(st.st_mode):
+        stats = []
+        for dirpath, dirs, names in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            for n in sorted(names):
+                if not n.startswith(("_", ".")):
+                    stats.append(os.stat(os.path.join(dirpath, n)))
+    else:
+        stats = [st]
+    files = tuple((s.st_ino, s.st_size, s.st_mtime_ns) for s in stats)
+    return files, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS)
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The fixture ``name`` under ``sf_dir``. Spark infers its schema
+    once, from a footer (one Spark job); the schema is cached per path
+    and later loads pass it to the reader, so they launch no job while
+    the fixture's files and the session's inference confs are
+    unchanged. A changed file or conf infers again and replaces the
+    entry."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     # Deterministic semantics under ANY caller's session (the
@@ -35,7 +77,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # unless nanosAsLong is set. Sessions built by get_spark have it;
         # set it here too.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key = _schema_key(spark, path)
+    cached = _SCHEMAS.get(path)
+    if key is not None and cached is not None and cached[0] == key:
+        df = spark.read.schema(cached[1]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key is not None:
+            _SCHEMAS[path] = (key, df.schema)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # events.ts is parquet TIMESTAMP(NANOS): read as long nanos
         # (spark.sql.legacy.parquet.nanosAsLong) and truncated to µs —

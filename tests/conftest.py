@@ -8,6 +8,7 @@ source) — here the RNG is always seeded.
 from __future__ import annotations
 
 import random
+import uuid
 from pathlib import Path
 
 import pytest
@@ -22,6 +23,18 @@ def spark():
     s = get_spark("octopufs_tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+def jobs_of(spark, fn):
+    """``fn()`` and the ids of the Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 @pytest.fixture()

@@ -3,11 +3,13 @@ concurrency, time travel, partial replace, vacuum."""
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import threading
 from pathlib import Path
 
 import pytest
+from conftest import jobs_of
 from pyspark.sql import functions as F
 
 from octopufs_spark.manifest import ManifestTable, write_and_commit
@@ -177,7 +179,8 @@ def test_manifest_json_shape(spark, table):
     with open(f"{table.root}/_manifest/v1.json") as f:
         d = json.load(f)
     assert d["version"] == 1
-    assert d["meta"] == {"writer": "test"}
+    # the data files' Spark schema, as every read reports it
+    assert d["meta"] == {"writer": "test", "data_schema": table.read(spark).schema.jsonValue()}
     assert all(f.endswith(".parquet") for f in d["files"])
 
 
@@ -3502,3 +3505,216 @@ def test_latest_hint_cas_cannot_regress(spark, table):
     sel = pafs.FileSelector(f"{table._mdir}/hint")
     names = {i.path.rsplit("/", 1)[-1] for i in table.fs.get_file_info(sel)}
     assert names == {str(head)}
+
+
+def _without_schemas(m):
+    """Snapshot ``m`` as a log without recorded schemas states it."""
+    meta = {k: v for k, v in m.meta.items() if k != "data_schema"}
+    if "delete_vectors" in meta:
+        meta["delete_vectors"] = [
+            {k: v for k, v in dv.items() if k != "schema"} for dv in meta["delete_vectors"]
+        ]
+    return dataclasses.replace(m, meta=meta)
+
+
+def _assert_planned_like_inference(spark, table, monkeypatch, build):
+    """``build(table)`` plans with the recorded schemas in 0 Spark jobs,
+    with the schema and rows of the same read inferred."""
+    assert table.read_manifest().meta.get("data_schema")
+    recorded, jobs = jobs_of(spark, lambda: build(table))
+    assert jobs == []
+    read_manifest = table.read_manifest
+    monkeypatch.setattr(table, "read_manifest", lambda v=None: _without_schemas(read_manifest(v)))
+    inferred, jobs = jobs_of(spark, lambda: build(table))
+    assert jobs, "the inferred read infers with a Spark job"
+    monkeypatch.undo()
+    assert recorded.schema == inferred.schema
+    key = recorded.columns
+    assert sorted(recorded.select(key).collect()) == sorted(inferred.select(key).collect())
+    return recorded
+
+
+def test_read_plans_with_recorded_schema_plain(spark, table, monkeypatch):
+    write_and_commit(_df(spark, 0, 50), table)
+    write_and_commit(_df(spark, 50, 80), table, mode="append", stats=True)
+    got = _assert_planned_like_inference(spark, table, monkeypatch, lambda t: t.read(spark))
+    assert got.count() == 80
+    _assert_planned_like_inference(
+        spark, table, monkeypatch, lambda t: t.read_pruned(spark, [("id", ">=", 60)])
+    )
+
+
+def test_read_plans_with_recorded_schema_hive(spark, table, monkeypatch):
+    """Partition columns, an escaped ``%3A`` value among them, are still
+    discovered from the paths of every staging group."""
+    df = _df(spark, 0, 60).withColumn(
+        "k", F.when(F.col("id") % 2 == 0, F.lit("a:b")).otherwise(F.lit("c"))
+    )
+    write_and_commit(df, table, partition_by=["k"])
+    write_and_commit(df.where("id < 10"), table, mode="append", partition_by=["k"])
+    assert any("%3A" in f for f in table.read_manifest().files)
+    got = _assert_planned_like_inference(spark, table, monkeypatch, lambda t: t.read(spark))
+    assert got.where("k = 'a:b'").count() == 35
+    _assert_planned_like_inference(
+        spark, table, monkeypatch, lambda t: t.read_pruned(spark, [("k", "=", "c")])
+    )
+
+
+def test_read_plans_with_recorded_schema_hidden_layout(spark, table, monkeypatch):
+    write_and_commit(_df(spark, 0, 40), table, hidden_partition={"b": ("bucket", "id", 4)})
+    write_and_commit(
+        _df(spark, 40, 50), table, mode="append", hidden_partition={"b": ("bucket", "id", 4)}
+    )
+    got = _assert_planned_like_inference(spark, table, monkeypatch, lambda t: t.read(spark))
+    assert got.columns == ["id", "v"] and got.count() == 50
+
+
+def test_read_plans_with_recorded_schema_evolved(spark, table, monkeypatch):
+    """A rename and an added column replay on top of the recorded
+    schema of the files, which keep their old names."""
+    write_and_commit(_df(spark, 0, 30), table)
+    table.rename_column("v", "w")
+    table.add_column("z", "long", 7)
+    got = _assert_planned_like_inference(spark, table, monkeypatch, lambda t: t.read(spark))
+    assert got.columns == ["id", "w", "z"]
+    assert got.where("id = 3").first() == (3, 6, 7)
+
+
+def test_read_plans_with_recorded_schema_delete_vectors(spark, table, monkeypatch):
+    """Live equality and positional vectors read with their own known
+    schemas; the recorded equality-vector schema is what Spark infers."""
+    from octopufs_spark.merge import delete_where_mor, delete_where_mor_positional
+
+    write_and_commit(_df(spark, 0, 40), table)
+    delete_where_mor(spark, table, _df(spark, 0, 5).select("id"), ["id"])
+    delete_where_mor_positional(spark, table, "id BETWEEN 10 AND 12")
+    dvs = table.read_manifest().meta["delete_vectors"]
+    eq = next(dv for dv in dvs if not dv.get("type"))
+    assert eq["schema"] == spark.read.parquet(f"{table.root}/{eq['path']}").schema.jsonValue()
+    got = _assert_planned_like_inference(spark, table, monkeypatch, lambda t: t.read(spark))
+    assert sorted(r.id for r in got.collect()) == list(range(5, 10)) + list(range(13, 40))
+
+
+def test_read_plans_with_recorded_schema_branch_and_time_travel(spark, table, monkeypatch):
+    write_and_commit(_df(spark, 0, 20), table)
+    table.create_branch("b")
+    write_and_commit(_df(spark, 20, 30), table, mode="append", branch="b")
+    write_and_commit(_df(spark, 100, 110), table)
+    got = _assert_planned_like_inference(
+        spark, table, monkeypatch, lambda t: t.read(spark, branch="b")
+    )
+    assert got.count() == 30
+    got = _assert_planned_like_inference(
+        spark, table, monkeypatch, lambda t: t.read(spark, version=1)
+    )
+    assert sorted(r.id for r in got.collect()) == list(range(20))
+
+
+def test_read_plans_with_recorded_schema_char_varchar_ntz(spark, table, monkeypatch):
+    """CHAR/VARCHAR columns of a catalog table and a TIMESTAMP_NTZ
+    column record the schema Spark infers for them."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS mfdb")
+    try:
+        spark.sql(
+            "CREATE TABLE mfdb.typed (id BIGINT, c CHAR(5), vc VARCHAR(9), t TIMESTAMP_NTZ) "
+            f"USING parquet LOCATION '{table.root_path}-src'"
+        )
+        spark.sql(
+            "INSERT INTO mfdb.typed VALUES "
+            "(1, 'ab', 'xyz', TIMESTAMP_NTZ'2024-01-01 10:00:00'), (2, 'c', 'uv', NULL)"
+        )
+        write_and_commit(spark.table("mfdb.typed"), table)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS mfdb.typed")
+        spark.sql("DROP DATABASE IF EXISTS mfdb")
+    got = _assert_planned_like_inference(spark, table, monkeypatch, lambda t: t.read(spark))
+    assert dict(got.dtypes)["t"] == "timestamp_ntz"
+    assert sorted(got.collect())[0].c.rstrip() == "ab"
+
+
+def test_logs_without_schema_still_infer(spark, table, tmp_path):
+    """A log written by pyarrow and a promoted table record no schema:
+    their reads infer it, and read the right rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from octopufs_spark.manifest import promote_table_to_manifest
+
+    (Path(table.root_path) / "ext").mkdir(parents=True)
+    pq.write_table(pa.table({"id": [1, 2, 3]}), f"{table.root_path}/ext/part-0.parquet")
+    table.commit_overwrite("ext")
+    assert "data_schema" not in table.read_manifest().meta
+    got, jobs = jobs_of(spark, lambda: table.read(spark))
+    assert jobs and sorted(r.id for r in got.collect()) == [1, 2, 3]
+
+    promoted = ManifestTable(str(tmp_path / "promoted"))
+    spark.sql("CREATE DATABASE IF NOT EXISTS mfdb")
+    _df(spark, 0, 20).write.option("path", str(tmp_path / "src")).saveAsTable("mfdb.src")
+    try:
+        promote_table_to_manifest(spark, "mfdb.src", promoted)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS mfdb.src")
+        spark.sql("DROP DATABASE IF EXISTS mfdb")
+    assert "data_schema" not in promoted.read_manifest().meta
+    assert sorted(r.id for r in promoted.read(spark).collect()) == list(range(20))
+
+
+def test_expectations_check_launches_no_inference_job(spark, table):
+    """A commit with expectations runs the write job and the check's
+    aggregate and nothing else: the check reads the staged files with
+    the footer schema ``_stage`` took. (Adaptive execution runs the
+    aggregate as two jobs, its shuffle stage and its result.)"""
+    write_and_commit(_df(spark, 0, 10), table)
+    df = _df(spark, 10, 20)
+    v, jobs = jobs_of(
+        spark,
+        lambda: write_and_commit(df, table, mode="append", expectations=[("pos", "id >= 0")]),
+    )
+    tracker = spark.sparkContext.statusTracker()
+    calls = sorted(
+        tracker.getStageInfo(tracker.getJobInfo(j).stageIds[0]).name.split(" at ")[0]
+        for j in jobs
+    )
+    assert v == 2 and calls == ["collect", "collect", "parquet"]
+    assert table.read(spark).count() == 20
+
+
+def test_rewrite_racing_append_drops_dead_positional_vector(spark, table):
+    """A MERGE that raced an append while a positional vector was live
+    drops the vector (it names only files the merge replaced), so the
+    next read plans no position annotation."""
+    from octopufs_spark.merge import delete_where_mor_positional, merge_upsert_manifest
+
+    write_and_commit(_df(spark, 0, 50), table)
+    delete_where_mor_positional(spark, table, "id < 5")
+
+    def racer(t2):
+        write_and_commit(_df(spark, 500, 510), t2, mode="append")
+
+    fired = _race(table, racer)
+    merge_upsert_manifest(spark, table, _df(spark, 40, 60), keys=["id"])
+    assert fired["done"]
+    m = table.read_manifest()
+    assert not m.meta.get("delete_vectors") and len(m.files) == 2
+    df = table.read(spark)
+    assert "_dv_file" not in df._jdf.queryExecution().analyzed().toString()
+    got = sorted(r.id for r in df.collect())
+    assert got == list(range(5, 60)) + list(range(500, 510))
+
+
+def test_vectors_and_merge_keep_the_column_order(spark, table):
+    """Reads applying delete vectors and MERGE rewrites keep the table's
+    column order (a join on the key columns would put them first), so a
+    merged snapshot keeps the schema the appends after it record."""
+    from octopufs_spark.merge import delete_where_mor, merge_upsert_manifest
+
+    write_and_commit(_df(spark, 0, 20), table)
+    delete_where_mor(spark, table, spark.createDataFrame([(4,)], "v BIGINT"), ["v"])
+    assert table.read(spark).columns == ["id", "v"]
+    merge_upsert_manifest(spark, table, _df(spark, 15, 25), keys=["v"])
+    assert table.read(spark).columns == ["id", "v"]
+    write_and_commit(_df(spark, 30, 35), table, mode="append")
+    m = table.read_manifest()
+    assert m.operation == "append" and m.meta["data_schema"]["fields"][0]["name"] == "id"
+    got = sorted(r.id for r in table.read(spark).collect())
+    assert got == [0, 1] + list(range(3, 25)) + list(range(30, 35))

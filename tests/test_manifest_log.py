@@ -197,25 +197,29 @@ def _commit(log: ManifestLog, step: str) -> str | None:
 
 
 @pytest.mark.parametrize(
-    "before, racers, replaced, inserts, published",
+    "before, racers, replaced, inserts, published, vectors",
     [
         # a racing append carries forward
-        ([], ["append"], [_A, _B], False, [_APPENDED, _REWRITE]),
+        ([], ["append"], [_A, _B], False, [_APPENDED, _REWRITE], "carried"),
         # a replaced file left the snapshot
-        ([], ["overwrite"], [_A, _B], False, None),
+        ([], ["overwrite"], [_A, _B], False, None, None),
         # a new equality vector would drop with nothing kept...
-        ([], ["eq"], [_A, _B], False, None),
+        ([], ["eq"], [_A, _B], False, None, None),
         # ...and carries while a kept file keeps it in force
-        ([], ["eq"], [_A], False, [_B, _REWRITE]),
-        ([], ["append", "eq"], [_A, _B], False, [_APPENDED, _REWRITE]),
+        ([], ["eq"], [_A], False, [_B, _REWRITE], "carried"),
+        ([], ["append", "eq"], [_A, _B], False, [_APPENDED, _REWRITE], "carried"),
         # a new positional vector naming a replaced file...
-        ([], [f"pos:{_A}"], [_A], False, None),
+        ([], [f"pos:{_A}"], [_A], False, None, None),
         # ...or only a kept one
-        ([], [f"pos:{_B}"], [_A], False, [_B, _REWRITE]),
+        ([], [f"pos:{_B}"], [_A], False, [_B, _REWRITE], "carried"),
         # re-inserting rows next to a carried file under a live equality vector
-        (["eq"], ["append"], [_A, _B], True, None),
-        (["eq"], [], [_A, _B], True, [_REWRITE]),
-        ([f"pos:{_A}"], ["append"], [_A, _B], True, [_APPENDED, _REWRITE]),
+        (["eq"], ["append"], [_A, _B], True, None, None),
+        (["eq"], [], [_A, _B], True, [_REWRITE], "dropped"),
+        # a read positional vector naming only replaced files is dead
+        ([f"pos:{_A}"], ["append"], [_A, _B], True, [_APPENDED, _REWRITE], "dropped"),
+        ([f"pos:{_A}"], [], [_A], False, [_B, _REWRITE], "dropped"),
+        # ...and one naming a kept file still hides its rows
+        ([f"pos:{_B}"], [], [_A], False, [_B, _REWRITE], "carried"),
     ],
     ids=[
         "append-carried",
@@ -228,20 +232,23 @@ def _commit(log: ManifestLog, step: str) -> str | None:
         "inserts-eq-carried-file",
         "inserts-eq-nothing-kept",
         "inserts-pos-carried-file",
+        "read-pos-names-replaced",
+        "read-pos-names-kept",
     ],
 )
-def test_commit_rewrite_rule(tmp_path, before, racers, replaced, inserts, published):
+def test_commit_rewrite_rule(tmp_path, before, racers, replaced, inserts, published, vectors):
     """The read-set rule of ``commit_rewrite``, one row per case: each
     racer commits between the read and the rewrite. An abort publishes
-    nothing; a publish keeps every racer's vector and, with a kept
-    file, the read's vectors too."""
+    nothing; a publish keeps every racer's vector, and the read's
+    vectors too unless nothing is kept or a positional vector names
+    only replaced files (``vectors``: "carried" or "dropped")."""
     root = tmp_path / "t"
     log = _log_with_versions(root, versions=1, files=2)
     (root / "rw").mkdir()
     pq.write_table(pa.table({"id": [0, 1]}), root / _REWRITE)
-    vectors = [_commit(log, step) for step in before]
+    paths = [_commit(log, step) for step in before]
     read = log.read_manifest()
-    vectors += [_commit(log, step) for step in racers]
+    paths += [_commit(log, step) for step in racers]
     head = log.latest_version()
     if published is None:
         with pytest.raises(ConcurrentModificationError):
@@ -252,5 +259,167 @@ def test_commit_rewrite_rule(tmp_path, before, racers, replaced, inserts, publis
     m = log.read_manifest(v)
     assert (m.version, m.operation, m.files) == (head + 1, "rewrite", published)
     live = [dv["path"] for dv in m.meta.get("delete_vectors", [])]
-    kept = [f for f in published if f != _REWRITE]
-    assert live == ([p for p in vectors if p] if kept else [])
+    assert live == ([p for p in paths if p] if vectors == "carried" else [])
+
+
+def _schema(*cols: str) -> dict:
+    """A recorded ``data_schema``: nullable bigint columns ``cols``."""
+    fields = [{"name": c, "type": "long", "nullable": True, "metadata": {}} for c in cols]
+    return {"type": "struct", "fields": fields}
+
+
+_S1, _S2 = _schema("id"), _schema("id", "x")
+
+
+def _stage(log: ManifestLog, prefix: str, schema: dict | None) -> tuple[list[str], dict]:
+    """Write one pyarrow file under a fresh ``prefix`` dir; returns the
+    files and the commit meta a stager of ``schema`` records."""
+    root = Path(log.root_path)
+    n = len(list(root.glob(f"{prefix}*")))
+    rel = f"{prefix}{n}/part-0000.parquet"
+    (root / rel).parent.mkdir(parents=True)
+    pq.write_table(pa.table({"id": [n]}), root / rel)
+    return [rel], ({"data_schema": schema} if schema is not None else {})
+
+
+def _append(log: ManifestLog, schema: dict | None, **kw) -> int:
+    files, meta = _stage(log, "app", schema)
+    return log.commit_append(files, meta, **kw)
+
+
+def _overwrite(log: ManifestLog, schema: dict | None, **kw) -> int:
+    files, meta = _stage(log, "ow", schema)
+    return log._commit_with_retry(files, "overwrite", meta, **kw)
+
+
+def _data_schema(log: ManifestLog, version: int | None = None) -> dict | None:
+    return log.read_manifest(version).meta.get("data_schema")
+
+
+@pytest.mark.parametrize(
+    "appended, expected",
+    [(_S1, _S1), (_S2, None), (None, None)],
+    ids=["same-schema", "other-schema", "no-schema"],
+)
+def test_append_keeps_data_schema_only_when_equal(tmp_path, appended, expected):
+    """An append keeps the snapshot's schema when its files were staged
+    with the same one; another schema or none leaves the snapshot with
+    no schema, and it never comes back while those files are live."""
+    log = ManifestLog(str(tmp_path / "t"))
+    _overwrite(log, _S1)
+    assert _data_schema(log) == _S1
+    _append(log, appended)
+    assert _data_schema(log) == expected
+    _append(log, _S1)
+    assert _data_schema(log) == expected
+
+
+def test_full_rewrite_sets_the_new_schema(tmp_path):
+    """A commit that keeps no parent file publishes the schema of what
+    it staged, whatever the parent had."""
+    log = ManifestLog(str(tmp_path / "t"))
+    _overwrite(log, _S1)
+    _append(log, None)
+    assert _data_schema(log) is None
+    _overwrite(log, _S2)
+    assert _data_schema(log) == _S2
+    read = log.read_manifest()
+    files, meta = _stage(log, "rw", _S1)
+    v = log.commit_rewrite(read, read.files, files, "compact", meta)
+    assert _data_schema(log, v) == _S1
+    # a rewrite that keeps a file of another schema publishes none
+    _append(log, _S2)
+    read = log.read_manifest()
+    files, meta = _stage(log, "rw", _S2)
+    v = log.commit_rewrite(read, read.added, files, "compact", meta)
+    assert _data_schema(log, v) is None
+
+
+def test_commits_that_stage_nothing_carry_the_schema(tmp_path):
+    """A merge-on-read delete and a rename keep every file: the schema
+    carries. Reads replay the rename on top of it."""
+    log = ManifestLog(str(tmp_path / "t"))
+    _overwrite(log, _S1)
+    _commit(log, "eq")
+    assert _data_schema(log) == _S1
+    log.rename_column("id", "key")
+    m = log.read_manifest()
+    assert (m.operation, m.meta["data_schema"]) == ("rename_column", _S1)
+    _append(log, _S1)
+    assert _data_schema(log) == _S1
+
+
+@pytest.mark.parametrize("head_schema", [_S1, _S2], ids=["head-same", "head-changed"])
+def test_publish_wap_reapply_schema_from_live_head(tmp_path, head_schema):
+    """A pure-append WAP snapshot re-applied on an advanced head keeps
+    its schema only if the LIVE head has the same one: the base's
+    schema at staging time does not decide."""
+    log = ManifestLog(str(tmp_path / "t"))
+    _overwrite(log, _S1)
+    staged = _append(log, _S1, wap_id="w")
+    assert _data_schema(log, staged) == _S1
+    _overwrite(log, head_schema)
+    v = log.publish_wap(wap_id="w")
+    m = log.read_manifest(v)
+    assert m.operation == "wap-publish" and len(m.files) == 2
+    assert m.meta.get("data_schema") == (_S1 if head_schema == _S1 else None)
+
+
+@pytest.mark.parametrize("head_schema", [_S2, _S1], ids=["head-same", "head-changed"])
+def test_reapply_append_content_schema_from_live_head(tmp_path, head_schema):
+    """``multitable._reapply_append_content`` re-stages the rows under
+    the head's contract (here: schema ``_S2``); the commit keeps that
+    schema only when the live head has it too."""
+    from octopufs_spark import multitable
+
+    class Table(ManifestLog):
+        """The Spark side of a table, stubbed: the rows are re-staged
+        as one pyarrow file with schema ``_S2``."""
+
+        def _read_files(self, spark, m, files):
+            return None
+
+        @staticmethod
+        def _strip_hidden(df, m):
+            return df
+
+        def _stage(self, df, prefix, partition_by):
+            return _stage(self, prefix, _S2)
+
+    log = Table(str(tmp_path / "t"))
+    _overwrite(log, _S1)
+    staged = _append(log, _S1, wap_id="w")
+    _overwrite(log, head_schema)
+    v = multitable._reapply_append_content(log, log.read_manifest(staged), spark=None)
+    m = log.read_manifest(v)
+    assert m.meta["wap_published"]["reapplied"] and len(m.files) == 2
+    assert m.meta.get("data_schema") == (_S2 if head_schema == _S2 else None)
+
+
+def test_restore_and_clone_publish_only_a_valid_schema(tmp_path):
+    """Restore and clone republish a snapshot's own files, so they
+    publish that snapshot's schema — none for a snapshot without one —
+    never the schema of the head they replace."""
+    from octopufs_spark.manifest import ManifestTable, clone_table
+
+    log = ManifestTable(str(tmp_path / "t"))
+    v1 = _overwrite(log, _S1)
+    v2 = _append(log, None)
+    _overwrite(log, _S2)
+    assert _data_schema(log, log.restore(v1)) == _S1
+    assert _data_schema(log, log.restore(v2)) is None
+    assert _data_schema(clone_table(log, str(tmp_path / "c1"), version=v1)) == _S1
+    assert _data_schema(clone_table(log, str(tmp_path / "c2"), version=v2)) is None
+    assert _data_schema(clone_table(log, str(tmp_path / "c3"))) is None
+
+
+def test_files_without_a_schema_publish_none(tmp_path):
+    """Files no stager described (promotion, foreign writers) leave the
+    snapshot without a schema, even next to files that have one."""
+    log = ManifestLog(str(tmp_path / "t"))
+    _overwrite(log, _S1)
+    files, _ = _stage(log, "promote", None)
+    v = log.commit_rewrite(log.read_manifest(), [], files, "promote-partitions")
+    assert _data_schema(log, v) is None
+    _overwrite(log, None)
+    assert _data_schema(log) is None

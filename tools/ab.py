@@ -14,9 +14,11 @@ snapshot of ``--base`` and B imports the working tree. Each trial
 times build+exec (plan construction, eager build jobs, and one
 noop-sink execution — the same quantity bench.py times), purging
 ``octopufs_spark*`` from sys.modules between trials so each side's
-module code is really the one measured. The shared SparkSession (and
-its JIT/warm-up state) is reused by both sides — that sharing is the
-point.
+module code is really the one measured. The purge also empties
+``tables.load``'s schema cache, so every trial of either side pays one
+schema-inference Spark job per fixture table it loads, where a warm
+session pays none. The shared SparkSession (and its JIT/warm-up state)
+is reused by both sides — that sharing is the point.
 
 Output per query: both sample lists, medians, and the B/A speedup.
 
