@@ -18,9 +18,14 @@ overwrite-idempotent, which makes duplicate speculative tasks safe.
 
 A copy task's fixed cost is PySpark's, not the copy's: each Python task
 resets the import cache, which before CPython 3.13 re-read
-``pyspark.zip`` at about 0.22 CPU-s per task. The library's worker
-daemon (``octopufs_spark.pydaemon``, set by ``session.get_spark``)
-skips that re-read for unchanged zips.
+``pyspark.zip`` at about 0.22 CPU-s per task, and a reused worker runs
+a full garbage collection after each task, which walked the whole heap
+it inherited from the daemon. The library's worker daemon
+(``octopufs_spark.pydaemon``, set by ``session.get_spark``) skips the
+re-read for unchanged zips and freezes its heap before it forks, so
+the collection walks only what the worker allocated: a 4-task copy of
+80 files of 2–6 KB went from 130–180 ms of worker CPU to 50–80 ms on
+a 4-CPU x86 VM.
 """
 
 from __future__ import annotations

@@ -658,24 +658,28 @@ def check_expectations(
     can ever observe a snapshot breaking the contract — the staged
     files stay invisible orphans for ``vacuum``. Checked on the STAGED
     bytes (not the input plan), so what was validated is exactly what
-    would publish; all constraints evaluate in one aggregate scan.
-    ``schema`` is the staged files' data schema: given, the scan plans
-    without inferring it."""
+    would publish. A commit that breaks nothing pays one scan for a
+    single violating row (a filtered limit, no exchange); only when it
+    finds one do all constraints count their violations, in one
+    aggregate scan, for the error. A condition that evaluates to NULL
+    is not a violation. ``schema`` is the staged files' data schema:
+    given, the scan plans without inferring it."""
+    from functools import reduce
+
     from pyspark.sql import functions as _F
 
     staged_df = _reader(spark, schema).parquet(f"{table.root}/{staged}")
+    broken = [~_F.expr(cond) for _, cond in expectations]
+    if not staged_df.where(reduce(lambda a, b: a | b, broken)).limit(1).collect():
+        return
     checks = staged_df.agg(
-        *[
-            _F.count(_F.when(~_F.expr(cond), 1)).alias(name)
-            for name, cond in expectations
-        ]
+        *[_F.count(_F.when(b, 1)).alias(name) for b, (name, _) in zip(broken, expectations)]
     ).collect()[0]
     violated = {name: int(checks[name]) for name, _ in expectations if checks[name]}
-    if violated:
-        raise ValueError(
-            f"commit rejected: constraint violations {violated} "
-            f"(staged under {staged}, unpublished)"
-        )
+    raise ValueError(
+        f"commit rejected: constraint violations {violated} "
+        f"(staged under {staged}, unpublished)"
+    )
 
 
 def write_and_commit(

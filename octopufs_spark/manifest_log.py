@@ -1031,7 +1031,7 @@ class ManifestLog:
                     else {}
                 ),
             },
-            indent=1,
+            separators=(",", ":"),
         ).encode()
         # no-overwrite publish: losing a race on the same version raises
         self._put_if_absent(final, payload)

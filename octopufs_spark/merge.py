@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from octopufs_spark.manifest import ManifestTable, _as_nullable, _reader
+from octopufs_spark.manifest import ManifestTable, _as_nullable, _reader, _right_sized
 from octopufs_spark.manifest_log import ConcurrentModificationError
 
 
@@ -309,6 +309,13 @@ def delete_where_mor(
     across MOR deletes and each version applies exactly the vectors
     recorded up to it (time travel stays consistent).
 
+    The vector is the key projection as given, duplicates included:
+    reads anti-join it and the MV delta fold semi-joins it, and both
+    ignore a repeated key, while :func:`consolidate_delete_vectors`
+    folds with ``distinct``. Deduplicating here would cost a shuffle;
+    instead the projection is right-sized like a staged write
+    (``manifest._right_sized``), so a small delete writes one file.
+
     ``spark`` is unused (the vector is written by the delete_keys
     frame's own session; no driver-side scan happens here) — kept for
     signature symmetry with :func:`delete_where_mor_positional`, which
@@ -316,7 +323,7 @@ def delete_where_mor(
     import uuid
 
     dv_rel = f"_dv/dv-{uuid.uuid4().hex[:12]}.parquet"
-    vector = delete_keys.select(*keys).dropDuplicates(keys)
+    vector = _right_sized(delete_keys.select(*keys))
     vector.write.mode("errorifexists").parquet(f"{table.root}/{dv_rel}")
 
     def build(parent):

@@ -15,7 +15,11 @@ The stock PySpark daemon's workers re-read ``pyspark.zip``'s directory
 on every task when the import cache is reset: a trivial Python task
 cost 0.25 CPU-s on a 4-CPU x86 VM (CPython 3.11), 0.025 CPU-s with the
 library daemon, which re-reads a zip only when it changed. CPython 3.13
-made the reset lazy upstream; there the daemon is the stock one. Because the workers now start from a library module,
+made the reset lazy upstream; there the daemon leaves it alone. On
+every version the daemon freezes its heap before it forks, so the full
+collection a reused worker runs after each task skips what it
+inherited: a trivial 4-task job went from 120–130 ms of worker CPU to
+10 ms on the same VM. Because the workers start from a library module,
 ``get_spark`` puts the library's root first on the workers' PYTHONPATH.
 """
 
@@ -58,9 +62,10 @@ DEFAULT_CONF: dict[str, str] = {
     # catalyst predicates (synthgen narrows its generated id range).
     "spark.sql.python.filterPushdown.enabled": "true",
     # Python workers fork from the library's daemon, which skips
-    # re-reading unchanged zips on every task's import-cache reset
-    # (see pydaemon). It must be the daemon module: pyspark.daemon
-    # ignores worker modules outside ``pyspark``.
+    # re-reading unchanged zips on every task's import-cache reset and
+    # freezes its heap before forking (see pydaemon). It must be the
+    # daemon module: pyspark.daemon ignores worker modules outside
+    # ``pyspark``.
     "spark.python.daemon.module": "octopufs_spark.pydaemon",
     # A fixed young generation (a third of the heap) for the driver JVM.
     # G1 otherwise resizes eden from its pause-time predictions, so how

@@ -174,10 +174,13 @@ def test_partitioned_layout_round_trip(spark, table):
 
 
 def test_manifest_json_shape(spark, table):
-    """The on-disk manifest is plain JSON a non-Spark reader can use."""
+    """The on-disk manifest is plain, compact JSON a non-Spark reader
+    can use."""
     write_and_commit(_df(spark, 0, 10), table, meta={"writer": "test"})
     with open(f"{table.root}/_manifest/v1.json") as f:
-        d = json.load(f)
+        raw = f.read()
+    d = json.loads(raw)
+    assert raw == json.dumps(d, separators=(",", ":"))
     assert d["version"] == 1
     # the data files' Spark schema, as every read reports it
     assert d["meta"] == {"writer": "test", "data_schema": table.read(spark).schema.jsonValue()}
@@ -3660,10 +3663,10 @@ def test_logs_without_schema_still_infer(spark, table, tmp_path):
 
 
 def test_expectations_check_launches_no_inference_job(spark, table):
-    """A commit with expectations runs the write job and the check's
-    aggregate and nothing else: the check reads the staged files with
-    the footer schema ``_stage`` took. (Adaptive execution runs the
-    aggregate as two jobs, its shuffle stage and its result.)"""
+    """A commit with expectations that breaks none runs the write job
+    and one check job, the search for a violating row, and nothing
+    else: the check reads the staged files with the footer schema
+    ``_stage`` took, and counts nothing when no row violates."""
     write_and_commit(_df(spark, 0, 10), table)
     df = _df(spark, 10, 20)
     v, jobs = jobs_of(
@@ -3675,8 +3678,22 @@ def test_expectations_check_launches_no_inference_job(spark, table):
         tracker.getStageInfo(tracker.getJobInfo(j).stageIds[0]).name.split(" at ")[0]
         for j in jobs
     )
-    assert v == 2 and calls == ["collect", "collect", "parquet"]
+    assert v == 2 and calls == ["collect", "parquet"]
     assert table.read(spark).count() == 20
+
+
+def test_expectations_report_every_count_and_pass_nulls(spark, table):
+    """A violating commit is rejected with each broken constraint's
+    count; a row whose condition is NULL violates nothing."""
+    import pytest as _pytest
+
+    rules = [("v_nonneg", "v >= 0"), ("small", "id < 8"), ("kept", "id >= 0")]
+    nulls = spark.range(0, 10).withColumn("v", F.lit(None).cast("long"))
+    assert write_and_commit(nulls, table, expectations=rules[:1]) == 1
+    bad = spark.range(0, 10).withColumn("v", F.when(F.col("id") < 3, -1).otherwise(None))
+    with _pytest.raises(ValueError, match=r"\{'v_nonneg': 3, 'small': 2\}"):
+        write_and_commit(bad, table, mode="append", expectations=rules)
+    assert table.latest_version() == 1
 
 
 def test_rewrite_racing_append_drops_dead_positional_vector(spark, table):

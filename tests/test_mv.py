@@ -133,6 +133,35 @@ def test_mor_delete_folds_but_compaction_forces_full_recompute(spark, src, tmp_p
     )
 
 
+def test_mor_delete_keeps_duplicate_keys_once_each(spark, src, tmp_path):
+    """``delete_keys`` may repeat a key, and the vector keeps the
+    repeats (one job, no dedup shuffle, one file): each matching row,
+    duplicated rows included, is still deleted once, the MV delta fold
+    subtracts it once, and time travel sees the rows before."""
+    from conftest import jobs_of
+
+    from octopufs_spark.merge import delete_where_mor
+
+    rows = _df(spark, 0, 100).unionByName(_df(spark, 0, 20))
+    write_and_commit(rows, src)
+    mv = _mv(src, tmp_path)
+    mv.refresh(spark)
+    keys = spark.range(0, 10).union(spark.range(5, 15)).union(spark.range(0, 3))
+    v, jobs = jobs_of(spark, lambda: delete_where_mor(spark, src, keys, ["id"]))
+    assert len(jobs) == 1
+    (dv,) = src.read_manifest(v).meta["delete_vectors"]
+    vector = spark.read.parquet(f"{src.root}/{dv['path']}")
+    assert vector.count() == 23 and len(vector.inputFiles()) == 1
+    left = _df(spark, 15, 100).unionByName(_df(spark, 15, 20))
+    assert sorted(r.id for r in src.read(spark).collect()) == sorted(
+        r.id for r in left.collect()
+    )
+    mv.refresh(spark)
+    assert mv.view.read_manifest().meta["mv"]["mode"] == "incremental"
+    assert _got(mv, spark) == _expect(left)
+    assert src.read(spark, version=v - 1).count() == 120
+
+
 def test_maintenance_noops_advance_pointer_without_scan(spark, src, tmp_path):
     write_and_commit(_df(spark, 0, 50), src)
     mv = _mv(src, tmp_path)

@@ -1,16 +1,20 @@
 """The library's PySpark daemon (octopufs_spark.pydaemon): an import-cache
-reset does not re-read unchanged zips, workers really run it, and a
-driver that reaches the library only through ``sys.path`` still runs
-Python tasks, with a caller's worker PYTHONPATH kept after the
-library root."""
+reset does not re-read unchanged zips, the daemon freezes its heap
+before it forks workers while a task's garbage is still collected,
+workers really run it, and a driver that reaches the library only
+through ``sys.path`` still runs Python tasks, with a caller's worker
+PYTHONPATH kept after the library root."""
 
 from __future__ import annotations
 
+import gc
 import importlib.util
 import os
+import runpy
 import subprocess
 import sys
 import textwrap
+import warnings
 import zipfile
 import zipimport
 
@@ -80,6 +84,71 @@ def test_worker_runs_library_daemon(spark):
         yield reads[0]
 
     assert spark.sparkContext.parallelize(range(2), 2).mapPartitions(reads_on_reset).collect() == [0, 0]
+
+
+def test_daemon_freezes_its_heap_before_serving(monkeypatch):
+    from pyspark import daemon
+
+    counts = []
+    monkeypatch.setattr(daemon, "manager", lambda: counts.append(gc.get_freeze_count()))
+    # before 3.13 the block patches zipimporter class-wide: undo it after
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches
+    )
+    try:
+        with warnings.catch_warnings():
+            # this module already imported pydaemon; running it again is fine
+            warnings.simplefilter("ignore", RuntimeWarning)
+            runpy.run_module("octopufs_spark.pydaemon", run_name="__main__")
+    finally:
+        gc.unfreeze()
+    assert len(counts) == 1 and counts[0] > 0
+
+
+def test_workers_start_with_a_frozen_heap(spark):
+    def freeze_count(_):
+        import gc
+
+        yield gc.get_freeze_count()
+
+    counts = spark.sparkContext.parallelize(range(4), 4).mapPartitions(freeze_count).collect()
+    assert len(counts) == 4 and all(c > 0 for c in counts), counts
+
+
+def test_cycle_a_task_leaves_is_freed_between_tasks(spark):
+    """The freeze covers only the daemon's heap: a reference cycle one
+    task leaves behind in a reused worker is collected before the
+    worker's next task."""
+
+    def leave_cycle(_):
+        import os
+        import sys
+        import weakref
+
+        class Node:
+            pass
+
+        node = Node()
+        node.me = node
+        sys._octopufs_cycle_ref = weakref.ref(node)
+        yield os.getpid()
+
+    def cycle_freed(_):
+        import os
+        import sys
+
+        ref = sys.__dict__.pop("_octopufs_cycle_ref", None)
+        yield os.getpid(), None if ref is None else ref() is None
+
+    sc = spark.sparkContext
+    recorded = set(sc.parallelize(range(4), 4).mapPartitions(leave_cycle).collect())
+    for _ in range(20):  # until a later task lands on a recording worker
+        out = sc.parallelize(range(4), 4).mapPartitions(cycle_freed).collect()
+        seen = [(pid, freed) for pid, freed in out if freed is not None]
+        if seen:
+            break
+    assert seen and {pid for pid, _ in seen} <= recorded, (seen, recorded)
+    assert all(freed for _, freed in seen), seen
 
 
 DRIVER = textwrap.dedent(
