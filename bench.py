@@ -31,7 +31,13 @@ class StageMetrics:
     Wall-clock at sf0.1 is ±20% noisy (BENCH.md); shuffle bytes and
     peak-task shuffle size are deterministic plan properties, so a plan
     regression (new exchange, skewed partition) surfaces in
-    BENCH_FULL.json even when timing noise hides it. Read through py4j
+    BENCH_FULL.json even when timing noise hides it. That holds only
+    where no join between sides of similar runtime size is left to
+    AQE's runtime broadcast conversion: AQE converts whichever join's
+    stages finish first, so such a query meters differently from run
+    to run (q_ext_ann_ivfpq_residual did, until its joins were
+    hinted). The mend for a query that flips is to pin its joins with
+    hints, not to widen the gate. Read through py4j
     after each query — no listener registration, no callback server.
     Every call is fail-soft: a py4j API drift degrades to no metrics,
     never a broken bench.
@@ -44,6 +50,16 @@ class StageMetrics:
             self._store = sc._jsc.sc().statusStore()
             self._jvm = spark._jvm
             self._gw = sc._gateway
+            # Every status but SKIPPED. A skipped stage never ran (its
+            # shuffle output already existed), and once the store holds
+            # spark.ui.retainedStages (default 1000) it evicts skipped
+            # stages first, the current query's included: counting them
+            # made ``stages`` depend on how many stages the session had
+            # run before (36, 33 or 26 for one plan).
+            self._ran = self._jvm.java.util.ArrayList()
+            status = self._jvm.org.apache.spark.status.api.v1.StageStatus
+            for name in ("ACTIVE", "COMPLETE", "FAILED", "PENDING"):
+                self._ran.add(status.valueOf(name))
         except Exception:
             self._ok = False
         self._max_seen = -1
@@ -52,8 +68,7 @@ class StageMetrics:
         quant = self._gw.new_array(self._jvm.double, 1)
         quant[0] = 1.0  # single quantile: the max task
         return self._store.stageList(
-            self._jvm.java.util.ArrayList(), False, True, quant,
-            self._jvm.java.util.ArrayList(),
+            self._ran, False, True, quant, self._jvm.java.util.ArrayList(),
         )
 
     def snapshot(self) -> None:
@@ -137,6 +152,8 @@ def plans_unchanged(a: dict | None, b: dict | None) -> bool:
     61/78/72 stages across three r9 runs with byte-identical shuffle
     metrics, and the old exact-stage requirement denied 4 legitimate
     load-spike re-times in the official r9 record (r9 verdict #1).
+    Until StageMetrics stopped counting skipped stages, the count also
+    moved with the status store's eviction of them.
     Stages stay in the snapshots as advisory output only. Missing
     metrics on either side read as changed — an outlier without plan
     evidence is not re-timed."""

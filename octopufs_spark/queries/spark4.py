@@ -1905,7 +1905,18 @@ def q_ext_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     own residual, so code error follows local cell geometry. All
     integer arithmetic → the full train/encode/probe/score pipeline
     hash-verifies. Compare q_ext_ann_ivfpq (absolute-position PQ) for
-    the accuracy delta on the same fixture."""
+    the accuracy delta on the same fixture.
+
+    Both scoring joins carry a hint, so the plan is the same in every
+    run. Unhinted, both plan as sort-merge joins from large static
+    estimates, every side is ~1 MB at run time, and AQE converts
+    whichever join's stages finish first into a broadcast join: one
+    session at sf0.1 ran three final plans (108,845 to 133,720
+    shuffle records). ``lut`` is broadcast because it is bounded at
+    any scale (50 queries × 2 probed cells × 8 subspaces × 4 codes =
+    3,200 rows). ``codes`` is merge-hinted because it has 8 rows per
+    vector and grows with the corpus, so it must neither be broadcast
+    nor left to AQE's completion-order conversion."""
     from pyspark.sql.window import Window
 
     from octopufs_spark.llm import clustering
@@ -1961,8 +1972,8 @@ def q_ext_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p.vec_id").alias("qid"), F.col("h.vec_id").alias("xid"), F.col("p.cell").alias("cell")
     )
     adc = (
-        cand.join(codes, "xid")
-        .join(lut, ["qid", "cell", "subspace", "code"])
+        cand.join(codes.hint("merge"), "xid")
+        .join(F.broadcast(lut), ["qid", "cell", "subspace", "code"])
         .groupBy("qid", "xid")
         .agg(F.sum("d").alias("adist"))
     )

@@ -5,6 +5,7 @@ these would still pass correctness — these tests make it fail fast."""
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -279,6 +280,42 @@ def test_det_similarity_no_pair_product(plans, qname):
     (query block, centroid/codebook table)."""
     plan = plans(qname)
     assert "CartesianProduct" not in plan
+
+
+SF01_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.1")  # the bench scale
+
+
+@pytest.mark.skipif(not os.path.isdir(SF01_DIR), reason=f"no fixture at {SF01_DIR}")
+def test_ivfpq_residual_plan_is_stable_across_runs(spark):
+    """The shuffle metrics the bench gate reads are plan properties, so
+    repeated runs of one query in one session must meter the same.
+    q_ext_ann_ivfpq_residual once left its two scoring joins to AQE,
+    which converted whichever join's stages finished first into a
+    broadcast join: three final plans in one session. It takes sf0.1,
+    where every join side is ~1 MB; at sf0.001 and sf0.01 the unpinned
+    plan kept one shape. The race depends on timing: on the unpinned
+    query this test failed in each of 2 sessions, so it is likely, not
+    certain, to catch a return of the race. The first run launches one
+    more job (stages are compared from the second run on). This session
+    has usually run more than spark.ui.retainedStages stages by now, so
+    the store evicts skipped stages as the query runs; StageMetrics
+    counts only stages that ran, which eviction leaves alone."""
+    import bench
+
+    fn = all_queries()["q_ext_ann_ivfpq_residual"]
+    metrics = bench.StageMetrics(spark)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    runs = []
+    for _ in range(5):
+        bus.waitUntilEmpty()
+        metrics.snapshot()
+        bench.execute(fn(spark, SF01_DIR))
+        bus.waitUntilEmpty()
+        runs.append(metrics.collect())
+    assert all(runs), runs
+    for key in ("shuffle_write_bytes", "shuffle_write_records", "peak_task_shuffle_write_bytes"):
+        assert len({r[key] for r in runs}) == 1, (key, runs)
+    assert len({r["stages"] for r in runs[1:]}) == 1, runs
 
 
 def test_weighted_median_plan_is_pure_jvm(plans):
