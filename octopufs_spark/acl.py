@@ -168,7 +168,7 @@ class SidecarAclStore(AclStore):
         return self._path
 
     def _norm(self, path: str) -> str:
-        return get_filesystem(path)[1] if ":" in path.split("/", 1)[0] or "://" in path else path
+        return get_filesystem(path)[1]
 
     def _read(self) -> tuple[str, dict[str, list[dict]]]:
         """(file text, path → entry-dicts map)."""

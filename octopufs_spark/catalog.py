@@ -7,16 +7,22 @@ column and partition facts are read from the table's JVM CatalogTable,
 as the reference does: spark.catalog.listColumns collects its result
 through toLocalIterator, one Spark job per result partition, so it is
 kept only for temp views, which have no CatalogTable.
+
+Spark hands out locations and file lists as percent-encoded URIs
+(``file:///t/my%20tbl/p=a%253Ab``). This module is the one place they
+are decoded (see the path contract in ``fs.core``): every location and
+file it returns is spelled as Spark prints it, ``file:/t/my tbl/p=a%3Ab``.
 """
 
 from __future__ import annotations
 
 import logging
+from urllib.parse import unquote, urlsplit
 
 from pyarrow import fs as pafs
 from pyspark.sql import SparkSession
 
-from octopufs_spark.fs.core import get_filesystem, list_tree
+from octopufs_spark.fs.core import get_filesystem, list_tree, to_uri
 from octopufs_spark.fs.model import FsElement
 
 log = logging.getLogger(__name__)
@@ -36,6 +42,17 @@ def _catalog_table(spark: SparkSession, table: str):
         return None
 
 
+def _uri_to_string(uri: str) -> str:
+    """Spark's ``CatalogUtils.URIToString`` (Hadoop's
+    ``Path(URI).toString()``) of an encoded URI string: the scheme, the
+    authority when there is one, and the decoded path."""
+    parts = urlsplit(uri)
+    head = f"{parts.scheme}:" if parts.scheme else ""
+    if parts.netloc:
+        head += f"//{unquote(parts.netloc)}"
+    return head + unquote(parts.path)
+
+
 def get_table_metadata(spark: SparkSession, table: str) -> dict:
     """Structured table metadata (reference: getTableMetadata,
     metastore/package.scala:84-86): location, provider, partition
@@ -45,7 +62,7 @@ def get_table_metadata(spark: SparkSession, table: str) -> dict:
     if meta is not None:
         provider = meta.provider()
         return {
-            "location": meta.location().toString(),
+            "location": _uri_to_string(meta.location().toString()),
             "provider": provider.get() if provider.isDefined() else None,
             "partition_columns": partition_columns,
             "table_type": meta.tableType().name(),
@@ -65,7 +82,7 @@ def get_table_location(spark: SparkSession, table: str) -> str:
     metastore/package.scala:70-74)."""
     meta = _catalog_table(spark, table)
     if meta is not None:
-        return meta.location().toString()
+        return _uri_to_string(meta.location().toString())
     rows = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
     for r in rows:
         if r.col_name.strip() == "Location":
@@ -87,8 +104,7 @@ def get_subfolder_paths(uri: str) -> list[str]:
     metastore/package.scala:48-52)."""
     fs, root = get_filesystem(uri)
     infos = fs.get_file_info(pafs.FileSelector(root, recursive=False, allow_not_found=True))
-    scheme = uri[: len(uri) - len(root)] if uri.endswith(root) else ""
-    return [scheme + i.path for i in infos if i.type == pafs.FileType.Directory]
+    return [to_uri(uri, i.path) for i in infos if i.type == pafs.FileType.Directory]
 
 
 def filter_paths(paths: list[str], likes: list[str]) -> list[str]:
@@ -115,7 +131,7 @@ def get_files_only_of_folders(folders: list[str]) -> list[FsElement]:
 def get_list_of_table_files(spark: SparkSession, table: str) -> list[str]:
     """Files of a table from the catalog's own cache
     (reference: getListOfTableFiles, metastore/package.scala:111-113)."""
-    return list(spark.table(table).inputFiles())
+    return [_uri_to_string(f) for f in spark.table(table).inputFiles()]
 
 
 def refresh_metadata(spark: SparkSession, table: str) -> None:

@@ -49,7 +49,7 @@ import pyarrow.parquet as pq
 from pyarrow import fs as pafs
 from pyspark.sql import SparkSession
 
-from octopufs_spark.fs.core import get_filesystem, list_tree, retry_failed
+from octopufs_spark.fs.core import get_filesystem, list_tree, retry_failed, to_uri
 from octopufs_spark.fs.local import _run_threaded
 from octopufs_spark.fs.model import FsElement, FsOperationResult
 
@@ -107,7 +107,6 @@ def _leaf_files(top_uri: str) -> dict[str, list[FsElement]]:
     """Each leaf directory of a tree (as a URI) with its data files,
     from one listing. A leaf's ``_temp`` sibling is a crashed run's
     leftover, not a leaf."""
-    top_uri = top_uri.rstrip("/")
     _, root = get_filesystem(top_uri)
     elements = list_tree(top_uri)
     dirs = {e.path for e in elements if e.is_dir}
@@ -122,8 +121,7 @@ def _leaf_files(top_uri: str) -> dict[str, list[FsElement]]:
         parent, name = e.path.rsplit("/", 1)
         if not e.is_dir and _is_data(name):
             files[parent].append(e)
-    scheme = top_uri[: len(top_uri) - len(root)] if top_uri.endswith(root) else ""
-    return {scheme + leaf: files[leaf] for leaf in sorted(leaves)}
+    return {to_uri(top_uri, leaf): files[leaf] for leaf in sorted(leaves)}
 
 
 def get_lowest_folders(top_uri: str) -> list[str]:
@@ -279,7 +277,8 @@ def _compact(spark: SparkSession, leaves: dict[str, list[FsElement]], requested_
 
     def finish(leaf: str) -> str:
         """Swap the leaf in, or drop its ``_temp``; returns which."""
-        fs, temp = get_filesystem(leaf + "_temp")
+        fs, path = get_filesystem(leaf)
+        temp = path + "_temp"
         outs = outputs[leaf]
         if any(out not in fingerprints for out in outs):
             fs.delete_dir(temp)
@@ -295,7 +294,11 @@ def _compact(spark: SparkSession, leaves: dict[str, list[FsElement]], requested_
             return "skipped"
         with fs.open_output_stream(f"{temp}/_SUCCESS"):
             pass
-        _replace_folder(leaf, leaf + "_temp")
+        # delete old, rename replacement into place (reference:
+        # replaceFolder, Coalesce.scala:77-82)
+        if fs.get_file_info(path).type != pafs.FileType.NotFound:
+            fs.delete_dir(path)
+        fs.move(temp, path)
         return "rewritten"
 
     outcome = dict(zip(outputs, _run_threaded(finish, list(outputs))))
@@ -339,12 +342,3 @@ def do_it_all(
         leaves.update(_leaf_files(top))
     return _compact(spark, leaves, requested_file_size_mb)
 
-
-def _replace_folder(old_uri: str, replacement_uri: str) -> None:
-    """Delete old, rename replacement into place
-    (reference: replaceFolder, Coalesce.scala:77-82)."""
-    fs, old = get_filesystem(old_uri)
-    _, repl = get_filesystem(replacement_uri)
-    if fs.get_file_info(old).type != pafs.FileType.NotFound:
-        fs.delete_dir(old)
-    fs.move(repl, old)

@@ -5,16 +5,30 @@ Listing is a parallel breadth-first walk (reference runs each level's
 listStatus as parallel Futures, fs/package.scala:35-50); here a
 ThreadPoolExecutor walks directories concurrently, which hides
 object-store listing latency the same way.
+
+The path contract of the storage toolkit: a path is taken as written,
+as Hadoop's ``Path(String)`` (and so Spark's readers) takes it.
+:func:`get_filesystem` resolves the scheme and authority (``file:``,
+``file://``, ``s3://bucket``, ``mock://bucket``; none means local) and
+keeps the rest, bar a trailing ``/``: a Hive ``ts=2024-01-01 00%3A00%3A00``
+directory is named just so on disk, so a ``%3A`` or a space is never
+decoded or refused. Listings return in-filesystem paths; :func:`to_uri`
+puts a root's scheme and authority back on one. Spark alone hands out
+percent-encoded URIs (``CatalogTable.location``, ``inputFiles()``), and
+``octopufs_spark.catalog`` decodes them there, once.
 """
 
 from __future__ import annotations
 
+import functools
 import logging
+import re
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyarrow import fs as pafs
 
-from octopufs_spark.fs.model import FsElement, FsOperationResult
+from octopufs_spark.fs.model import FsElement, FsOperationResult, Paths
 
 log = logging.getLogger(__name__)
 
@@ -53,21 +67,95 @@ def retry_failed(run_batch, items: list, what: str) -> list[FsOperationResult]:
     return results
 
 
-def get_filesystem(uri: str) -> tuple[pafs.FileSystem, str]:
-    """Resolve a pyarrow FileSystem + in-fs path for a URI.
+# A path's scheme and authority: ``file:``, ``file://``, ``s3://bucket``.
+_HEAD = re.compile(r"[A-Za-z][A-Za-z0-9+.-]+:(//[^/]*)?")
+_LOCAL = pafs.LocalFileSystem()
+Resolve = Callable[[str], tuple[pafs.FileSystem, str]]
 
-    (reference: getFileSystem, fs/package.scala:23-25; spaces sanitized
-    there — pyarrow handles percent-encoding itself.) ``mock://`` URIs
-    resolve to the in-process object-store stand-in (fs/mockfs.py) so
-    the non-``file://`` code paths run without network access;
-    everything else goes through pyarrow's native scheme dispatch
-    (file, s3, gs, hdfs, ...).
-    """
-    if uri.startswith("mock://"):
+
+def _open(head: str) -> tuple[pafs.FileSystem, str]:
+    """The filesystem ``head`` names and its root's path there (a bucket
+    or ``""``). ``mock://`` is the in-process object-store stand-in
+    (fs/mockfs.py); other schemes go through pyarrow (s3, gs, hdfs)."""
+    if head in ("file:", "file://"):
+        return _LOCAL, ""
+    if head.startswith("mock://"):
         from octopufs_spark.fs import mockfs
 
-        return mockfs.resolve(uri)
-    return pafs.FileSystem.from_uri(uri)
+        return mockfs.mock_filesystem(), head[len(mockfs.SCHEME) :]
+    fs, base = pafs.FileSystem.from_uri(head + "/")
+    return fs, base.rstrip("/")
+
+
+def _resolve(
+    path: str, heads: dict[str, tuple[pafs.FileSystem, str]]
+) -> tuple[pafs.FileSystem, str]:
+    m = _HEAD.match(path)
+    if m is None:
+        return _LOCAL, path.rstrip("/") or path
+    head = m.group(0)
+    opened = heads.get(head)
+    if opened is None:
+        opened = heads[head] = _open(head)
+    fs, base = opened
+    rest = path[len(head) :].strip("/")
+    return fs, f"{base}/{rest}" if rest else base or "/"
+
+
+def get_filesystem(path: str) -> tuple[pafs.FileSystem, str]:
+    """The filesystem ``path`` lives on and its path there, taken as
+    written (see the module docstring; reference: getFileSystem,
+    fs/package.scala:23-25)."""
+    return _resolve(path, {})
+
+
+def resolver() -> Resolve:
+    """:func:`get_filesystem` for a batch of paths: each path resolves
+    on its own filesystem, and each distinct scheme and authority is
+    opened once per resolver."""
+    return functools.partial(_resolve, heads={})
+
+
+@functools.cache
+def _base(head: str) -> str:
+    """``head``'s root path, kept per process: it depends on the head
+    alone, and ``to_uri`` runs once per listed path."""
+    return _open(head)[1]
+
+
+def to_uri(uri: str, path: str) -> str:
+    """The inverse of :func:`get_filesystem`: ``path``, an
+    in-filesystem path as a listing under ``uri`` returns it, spelled
+    with ``uri``'s scheme and authority."""
+    m = _HEAD.match(uri)
+    if m is None:
+        return path
+    head = m.group(0)
+    return f"{head}/{path[len(_base(head)) :].lstrip('/')}"
+
+
+def rebase_paths(paths: list[str], src_uri: str, trg_uri: str) -> list[Paths]:
+    """A (source, target) URI pair for each of ``paths`` — listed
+    in-filesystem paths or URIs, all under ``src_uri`` — whose target
+    is the same relative path under ``trg_uri``."""
+    resolve = resolver()
+    src_root = resolve(src_uri)[1].rstrip("/")
+    trg_root = resolve(trg_uri)[1].rstrip("/")
+    pairs = []
+    for p in paths:
+        path = resolve(p)[1]
+        if not path.startswith(src_root + "/"):
+            raise ValueError(f"{p} is not under {src_uri}")
+        trg = trg_root + path[len(src_root) :]
+        pairs.append(Paths(to_uri(src_uri, path), to_uri(trg_uri, trg)))
+    return pairs
+
+
+def copy_bytes(src_fs: pafs.FileSystem, src: str, trg_fs: pafs.FileSystem, trg: str) -> None:
+    """Stream one file's bytes from ``src`` to ``trg`` (overwritten)."""
+    with src_fs.open_input_stream(src) as r, trg_fs.open_output_stream(trg) as w:
+        while chunk := r.read(8 * 1024 * 1024):
+            w.write(chunk)
 
 
 def _info_to_element(info: pafs.FileInfo) -> FsElement:
@@ -214,12 +302,7 @@ def copy_single_file(src_uri: str, trg_uri: str, overwrite: bool = True) -> bool
         if not overwrite and trg_fs.get_file_info(trg).type != pafs.FileType.NotFound:
             return False
         trg_fs.create_dir(trg.rsplit("/", 1)[0], recursive=True)
-        with src_fs.open_input_stream(src) as r, trg_fs.open_output_stream(trg) as w:
-            while True:
-                chunk = r.read(8 * 1024 * 1024)
-                if not chunk:
-                    break
-                w.write(chunk)
+        copy_bytes(src_fs, src, trg_fs, trg)
         return True
     except Exception:
         log.exception("copy failed %s -> %s", src_uri, trg_uri)

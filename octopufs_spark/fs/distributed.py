@@ -16,6 +16,9 @@ per-task copy uses pyarrow.fs resolved from the URI inside the task
 speculation for copy jobs (README.md:25); copies here are
 overwrite-idempotent, which makes duplicate speculative tasks safe.
 
+Paths follow the contract in the ``fs.core`` docstring: taken as
+written, never percent-decoded, each resolved on its own filesystem.
+
 A copy task's fixed cost is PySpark's, not the copy's: each Python task
 resets the import cache, which before CPython 3.13 re-read
 ``pyspark.zip`` at about 0.22 CPU-s per task, and a reused worker runs
@@ -32,42 +35,25 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from octopufs_spark.fs.core import list_tree, retry_failed
+from octopufs_spark.fs.core import copy_bytes, list_tree, rebase_paths, resolver, retry_failed
 from octopufs_spark.fs.model import FsOperationResult, Paths
 
 
 def _copy_partition(pairs):
-    """Executor-side: copy each (src, dst) pair; FS resolved once.
-
-    Resolution goes through ``core.get_filesystem`` (not raw
-    ``pafs.FileSystem.from_uri``) so scheme dispatch — including the
-    in-process ``mock://`` object-store stand-in — behaves identically
-    in executor tasks and on the driver."""
-    from octopufs_spark.fs.core import get_filesystem
-
-    pairs = list(pairs)
-    if not pairs:
-        return
-    src_fs, _ = get_filesystem(pairs[0][0])
-    trg_fs, _ = get_filesystem(pairs[0][1])
-
-    def rel(fs_uri: str) -> str:
-        return get_filesystem(fs_uri)[1]
-
+    """Executor-side: copy each (src, dst) pair. Each pair resolves
+    inside its own ``try`` through one ``core.resolver`` per task, so
+    a task may mix filesystems, each scheme and authority opens once,
+    and a path that cannot be resolved fails only its own pair."""
+    resolve = resolver()
     for src, dst in pairs:
         try:
-            sp, dp = rel(src), rel(dst)
+            src_fs, sp = resolve(src)
+            trg_fs, dp = resolve(dst)
             if sp == dp and src_fs.type_name == trg_fs.type_name:
                 # self-copy would truncate the source on open-for-write
                 raise ValueError(f"source and target are the same file: {src}")
-            parent = dp.rsplit("/", 1)[0]
-            trg_fs.create_dir(parent, recursive=True)
-            with src_fs.open_input_stream(sp) as r, trg_fs.open_output_stream(dp) as w:
-                while True:
-                    chunk = r.read(8 * 1024 * 1024)
-                    if not chunk:
-                        break
-                    w.write(chunk)
+            trg_fs.create_dir(dp.rsplit("/", 1)[0], recursive=True)
+            copy_bytes(src_fs, sp, trg_fs, dp)
             yield (src, True)
         except Exception:
             yield (src, False)
@@ -99,21 +85,5 @@ def copy_folder(
     """Recursive distributed folder copy (files only — empty dirs are
     not recreated, matching the documented caveat)
     (reference: copyFolder, fs/DistributedExecution.scala:22-30)."""
-    elements = list_tree(src_uri)
-    src_prefix = src_uri.rstrip("/")
-    trg_prefix = trg_uri.rstrip("/")
-
-    def to_uri(path: str) -> str:
-        # list_tree returns fs-relative paths; rebuild full URIs by
-        # swapping the relative source prefix.
-        from octopufs_spark.fs.core import get_filesystem
-
-        _, src_rel = get_filesystem(src_prefix)
-        return src_prefix + path[len(src_rel):]
-
-    pairs = [
-        Paths(to_uri(e.path), to_uri(e.path).replace(src_prefix, trg_prefix, 1))
-        for e in elements
-        if not e.is_dir
-    ]
-    return copy_files(spark, pairs, task_count)
+    files = [e.path for e in list_tree(src_uri) if not e.is_dir]
+    return copy_files(spark, rebase_paths(files, src_uri, trg_uri), task_count)

@@ -9,21 +9,23 @@ README.md:11). Every mutating op retries its failed subset through the
 shared ``core.retry_failed`` (at most 5 attempts, reference:
 README.md:6); renames also reconcile false-negatives (a "failed"
 rename whose source vanished and target exists actually succeeded —
-reference: fs/LocalExecution.scala:151-157).
+reference: fs/LocalExecution.scala:151-157). Paths follow the contract
+in the ``fs.core`` docstring: taken as written, each resolved on its
+own filesystem.
 """
 
 from __future__ import annotations
 
-import re
-from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyarrow import fs as pafs
 
 from octopufs_spark.fs.core import (
+    Resolve,
     check_if_fs_is_the_same,
     does_move_look_safe,
     get_filesystem,
+    resolver,
     retry_failed,
 )
 from octopufs_spark.fs.model import FsOperationResult, Paths
@@ -52,12 +54,10 @@ def _is_false_negative(fs: pafs.FileSystem, p: Paths) -> bool:
 def move_paths(paths: list[Paths]) -> list[FsOperationResult]:
     """Parallel renames with retry + false-negative reconciliation
     (reference: movePaths, fs/LocalExecution.scala:70-97)."""
-    return _move(paths, _resolver())
+    return _move(paths, resolver())
 
 
-def _move(
-    paths: list[Paths], resolve: Callable[[str], tuple[pafs.FileSystem, str]]
-) -> list[FsOperationResult]:
+def _move(paths: list[Paths], resolve: Resolve) -> list[FsOperationResult]:
     """Rename each of ``paths`` (``resolve`` maps a path to its
     filesystem and its path there)."""
 
@@ -79,13 +79,11 @@ def _move(
 def delete_paths(paths: list[str]) -> list[FsOperationResult]:
     """Parallel recursive deletes with retry
     (reference: deletePaths, fs/LocalExecution.scala:106-128). Each
-    path is resolved on its own filesystem (see :func:`_resolver`)."""
-    return _delete(paths, _resolver())
+    path is resolved on its own filesystem (``core.resolver``)."""
+    return _delete(paths, resolver())
 
 
-def _delete(
-    paths: list[str], resolve: Callable[[str], tuple[pafs.FileSystem, str]]
-) -> list[FsOperationResult]:
+def _delete(paths: list[str], resolve: Resolve) -> list[FsOperationResult]:
     """Delete each of ``paths`` (``resolve`` maps one to its filesystem
     and its path there); a path that is already gone counts as deleted."""
 
@@ -158,31 +156,3 @@ def move_folder_content(
         delete_folder(src_uri)
     return results
 
-
-_HEAD = re.compile(r"[A-Za-z][A-Za-z0-9+.-]+:(//[^/]*)?")
-
-
-def _resolver() -> Callable[[str], tuple[pafs.FileSystem, str]]:
-    """A function that maps a path to the filesystem it lives on and
-    its in-filesystem path, by cutting off the path's own scheme and
-    authority. The rest is kept as written: paths come from listings,
-    where a Hive ``k=a%3Ab`` dir is named just so, and parsing them as
-    URIs would percent-decode that (and reject a space). A path with no
-    scheme is a local path and maps to itself. Spark's catalog spells
-    local URIs ``file:/x``, which works too. Each distinct scheme and
-    authority (bucket, container) is resolved once per function."""
-    local = pafs.LocalFileSystem()
-    heads: dict[str, tuple[pafs.FileSystem, str]] = {}
-
-    def resolve(path: str) -> tuple[pafs.FileSystem, str]:
-        m = _HEAD.match(path)
-        if m is None:
-            return local, path
-        head = m.group(0)
-        if head not in heads:
-            fs, base = get_filesystem(head + "/")
-            heads[head] = fs, base.rstrip("/")
-        fs, base = heads[head]
-        return fs, f"{base}/{path[len(head):].lstrip('/')}"
-
-    return resolve

@@ -175,9 +175,3 @@ def mock_filesystem() -> pafs.PyFileSystem:
     build per call, including inside executor tasks)."""
     return pafs.PyFileSystem(MockRemoteHandler())
 
-
-def resolve(uri: str) -> tuple[pafs.FileSystem, str]:
-    """Split a mock:// URI into (filesystem, in-fs path)."""
-    assert uri.startswith(SCHEME), uri
-    return mock_filesystem(), uri[len(SCHEME) :].strip("/")
-

@@ -29,7 +29,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from octopufs_spark.fs.core import list_tree
+from octopufs_spark.fs.core import copy_bytes, list_tree
 from octopufs_spark.manifest_log import (
     _DROPPED_PREFIX,
     _HIVE_NULL,
@@ -1189,13 +1189,7 @@ def clone_table(
                     raise
                 except OSError:
                     pass  # cross-device or link-less fs: fall through to copy
-            with src.fs.open_input_stream(s) as fin:
-                with dest.fs.open_output_stream(d) as fout:
-                    while True:
-                        chunk = fin.read(8 << 20)
-                        if not chunk:
-                            break
-                        fout.write(chunk)
+            copy_bytes(src.fs, s, dest.fs, d)
         except FileNotFoundError:
             # a vacuum deleted a source file between the manifest read
             # and this link/copy: fail TYPED and loud — the clone never

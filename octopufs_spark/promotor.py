@@ -14,10 +14,11 @@ from __future__ import annotations
 
 import logging
 
+from pyarrow import fs as pafs
 from pyspark.sql import SparkSession
 
 from octopufs_spark import catalog
-from octopufs_spark.fs.core import does_move_look_safe
+from octopufs_spark.fs.core import does_move_look_safe, get_filesystem, rebase_paths
 from octopufs_spark.fs.distributed import copy_files
 from octopufs_spark.fs.local import delete_folder, delete_paths, move_folder_content, move_paths
 from octopufs_spark.fs.model import FsOperationResult, Paths
@@ -26,28 +27,14 @@ from octopufs_spark.fs.safety import SafetyFuse
 log = logging.getLogger(__name__)
 
 
-def _rewrite_prefix(file_uri: str, src_loc: str, trg_loc: str) -> str:
-    """Swap a file's location prefix, robust to URI scheme spelling
-    (catalog says ``file:/x`` while inputFiles says ``file:///x``) —
-    compared at filesystem-path level, never by raw string replace."""
-    from octopufs_spark.fs.core import get_filesystem
-
-    _, f_rel = get_filesystem(file_uri)
-    _, s_rel = get_filesystem(src_loc)
-    if not f_rel.startswith(s_rel.rstrip("/") + "/"):
-        raise ValueError(f"{file_uri} is not under {src_loc}")
-    return trg_loc.rstrip("/") + f_rel[len(s_rel.rstrip("/")):]
-
-
 def _paths_for_table_copy(spark: SparkSession, src_table: str, trg_table: str) -> list[Paths]:
     """Zip source files with prefix-rewritten target paths
     (reference: Assistant.getTablesPathsList, Assistant.scala:12-24)."""
-    src_loc = catalog.get_table_location(spark, src_table).rstrip("/")
-    trg_loc = catalog.get_table_location(spark, trg_table).rstrip("/")
-    return [
-        Paths(f, _rewrite_prefix(f, src_loc, trg_loc))
-        for f in catalog.get_list_of_table_files(spark, src_table)
-    ]
+    return rebase_paths(
+        catalog.get_list_of_table_files(spark, src_table),
+        catalog.get_table_location(spark, src_table),
+        catalog.get_table_location(spark, trg_table),
+    )
 
 
 def copy_files_between_tables(
@@ -90,13 +77,12 @@ def copy_table_partitions(
     parts = catalog.filter_partitions(spark, src_table, match_strings)
     if not parts:
         raise ValueError(f"no partitions of {src_table} match {match_strings}")
-    src_loc = catalog.get_table_location(spark, src_table).rstrip("/")
-    trg_loc = catalog.get_table_location(spark, trg_table).rstrip("/")
-    files = catalog.get_files_only_of_folders(parts)
-    scheme = src_loc[: len(src_loc) - len(_rel(src_loc))]
-    pairs = [
-        Paths(scheme + f.path, (scheme + f.path).replace(src_loc, trg_loc, 1)) for f in files
-    ]
+    files = [f.path for f in catalog.get_files_only_of_folders(parts)]
+    pairs = rebase_paths(
+        files,
+        catalog.get_table_location(spark, src_table),
+        catalog.get_table_location(spark, trg_table),
+    )
     results = copy_files(spark, pairs, task_count)
     catalog.refresh_metadata(spark, trg_table)
     return results
@@ -148,8 +134,8 @@ def move_table_partitions(
     parts = catalog.filter_partitions(spark, src_table, match_strings)
     if not parts:
         raise ValueError(f"no partitions of {src_table} match {match_strings}")
-    src_loc = catalog.get_table_location(spark, src_table).rstrip("/")
-    trg_loc = catalog.get_table_location(spark, trg_table).rstrip("/")
+    src_loc = catalog.get_table_location(spark, src_table)
+    trg_loc = catalog.get_table_location(spark, trg_table)
     _delete_partitions(spark, trg_table, match_strings)
     results = move_folders(spark, parts, src_loc, trg_loc)
     catalog.refresh_metadata(spark, src_table)
@@ -162,7 +148,7 @@ def move_folders(
 ) -> list[FsOperationResult]:
     """Safety-checked folder renames inside a SafetyFuse transaction
     (reference: moveFolders, Promotor.scala:204-245)."""
-    pairs = [Paths(f, f.replace(src_root.rstrip("/"), trg_root.rstrip("/"), 1)) for f in folders]
+    pairs = rebase_paths(folders, src_root, trg_root)
     for p in pairs:
         if not does_move_look_safe(p.source_path, p.target_path):
             raise RuntimeError(f"unsafe move {p.source_path} -> {p.target_path}")
@@ -206,18 +192,10 @@ def copy_selected_subfolders_content(
     copyOverwriteSelectedSubfoldersContent, Promotor.scala:138-182)."""
     subs = catalog.filter_paths(catalog.get_subfolder_paths(src_uri), match_strings)
     if overwrite:
-        trg_subs = [
-            s.replace(src_uri.rstrip("/"), trg_uri.rstrip("/"), 1) for s in subs
-        ]
+        trg_subs = [p.target_path for p in rebase_paths(subs, src_uri, trg_uri)]
         delete_paths([t for t in trg_subs if _exists(t)])
-    files = catalog.get_files_only_of_folders(subs)
-    src_root = src_uri.rstrip("/")
-    trg_root = trg_uri.rstrip("/")
-    scheme = src_root[: len(src_root) - len(_rel(src_root))]
-    pairs = [
-        Paths(scheme + f.path, (scheme + f.path).replace(src_root, trg_root, 1)) for f in files
-    ]
-    return copy_files(spark, pairs, task_count)
+    files = [f.path for f in catalog.get_files_only_of_folders(subs)]
+    return copy_files(spark, rebase_paths(files, src_uri, trg_uri), task_count)
 
 
 def move_selected_subfolders(
@@ -261,16 +239,6 @@ def insert_overwrite_partitions(
     catalog.refresh_metadata(spark, trg_table)
 
 
-def _rel(uri: str) -> str:
-    from octopufs_spark.fs.core import get_filesystem
-
-    return get_filesystem(uri)[1]
-
-
 def _exists(uri: str) -> bool:
-    from pyarrow import fs as pafs
-
-    from octopufs_spark.fs.core import get_filesystem
-
     fs, p = get_filesystem(uri)
     return fs.get_file_info(p).type != pafs.FileType.NotFound

@@ -30,6 +30,7 @@ from collections.abc import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamReader,
     DataSourceWriter,
@@ -838,28 +839,28 @@ class _ManifestWriteMsg(WriterCommitMessage):
         self.rows = rows
 
 
-class ManifestBatchWriter(DataSourceWriter):
+class ManifestBatchWriter(DataSourceArrowWriter):
     """Batch WRITER for manifest tables through Spark's native write
     protocol: ``df.write.format("manifest").mode("append").save(root)``.
 
-    Two-phase commit, manifest-style: every task streams its rows into
-    ONE parquet file under a job-unique staging dir (Arrow row-group
-    batches — peak task memory is one batch, not one partition) and
-    reports the file in its commit message; the driver's ``commit()``
-    publishes exactly the REPORTED files as one atomic manifest
-    version. Because the committed file list comes from the messages —
-    not from listing the staging dir — a speculative duplicate or
-    zombie task attempt's orphan file is never published (the classic
-    rename-based committer hazard); it stays invisible staging for
-    ``vacuum``. ``abort()`` removes the whole staging dir, and a
+    Two-phase commit, manifest-style: every task writes Spark's Arrow
+    batches, as they come, into ONE parquet file under a job-unique
+    staging dir, in row groups of ``_BATCH_ROWS`` rows (peak task
+    memory is one row group, not one partition), and reports the file
+    in its commit message; the driver's ``commit()`` publishes exactly
+    the REPORTED files as one atomic manifest version. Because the
+    committed file list comes from the messages — not from listing the
+    staging dir — a speculative duplicate or zombie task attempt's
+    orphan file is never published (the classic rename-based committer
+    hazard); it stays invisible staging for ``vacuum``. ``abort()`` removes the whole staging dir, and a
     driver crash between write and commit leaves only invisible
     orphans — the same crash contract as ``write_and_commit``.
 
     Options: ``stats=true`` records zone-map file stats at commit
     (driver-side footer reads). Overwriting with an EMPTY frame is
     rejected (a manifest snapshot must list files); an empty append is
-    a no-op (no new version). Nested structs round-trip via recursive
-    Row conversion.
+    a no-op (no new version). Nested types (struct, array, map) are
+    written as Arrow holds them: no row is turned into Python objects.
 
     Appends must conform to the table's hidden-partition layout. This
     writer stages plain files (no derived partition columns), so an
@@ -884,7 +885,7 @@ class ManifestBatchWriter(DataSourceWriter):
 
             _check_append_layout(ManifestTable(self.path), None)
 
-    def write(self, rows: Iterator) -> _ManifestWriteMsg | None:
+    def write(self, batches: Iterator) -> _ManifestWriteMsg:
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -895,26 +896,27 @@ class ManifestBatchWriter(DataSourceWriter):
         arrow_schema = to_arrow_schema(self.schema)
         rel = f"{self.staged}/part-{uuid.uuid4().hex[:12]}.parquet"
         writer = None
-        total = 0
-        buf: list[dict] = []
+        pending: list = []  # batches not yet written: fewer than _BATCH_ROWS rows
+        buffered = total = 0
 
-        def flush():
+        def flush(table) -> None:
             nonlocal writer
-            if not buf:
-                return
-            batch = pa.RecordBatch.from_pylist(buf, schema=arrow_schema)
             if writer is None:
                 fs.create_dir(f"{root}/{self.staged}", recursive=True)
                 writer = pq.ParquetWriter(f"{root}/{rel}", arrow_schema, filesystem=fs)
-            writer.write_batch(batch)
-            buf.clear()
+            writer.write_table(table.cast(arrow_schema), row_group_size=self._BATCH_ROWS)
 
-        for row in rows:
-            buf.append(row.asDict(recursive=True))
-            total += 1
-            if len(buf) >= self._BATCH_ROWS:
-                flush()
-        flush()
+        for batch in batches:
+            pending.append(batch)
+            buffered += batch.num_rows
+            total += batch.num_rows
+            if buffered >= self._BATCH_ROWS:
+                table = pa.Table.from_batches(pending)
+                full = buffered - buffered % self._BATCH_ROWS
+                flush(table.slice(0, full))
+                pending, buffered = table.slice(full).to_batches(), buffered - full
+        if buffered:
+            flush(pa.Table.from_batches(pending))
         if writer is None:
             # empty partition: stage nothing (the runtime requires a
             # message object even so; rel_file=None marks "no file")

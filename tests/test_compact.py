@@ -95,6 +95,30 @@ def test_do_it_all_partitioned(spark, tmp_path):
     assert sorted(str(p.relative_to(root)) for p in Path(root).rglob("*")) == names
 
 
+@pytest.mark.parametrize("spelling", ["file:///", "file:/"])
+def test_escaped_and_spaced_leaves_are_rewritten_in_place(spark, tmp_path, spelling):
+    """Spark writes ``p='a:b'`` to a ``p=a%3Ab`` directory and ``p='x y'``
+    to ``p=x y``. Compaction takes both names as written, on every
+    spelling of the root: each leaf is rewritten where it is, and no
+    percent-decoded ``p=a:b`` sibling appears beside the original."""
+    root = tmp_path / "esc"
+    (
+        spark.range(300)
+        .withColumn("p", F.when(F.col("id") % 2 == 0, "a:b").otherwise("x y"))
+        .repartition(6)
+        .write.partitionBy("p")
+        .parquet(str(root))
+    )
+    assert sorted(d.name for d in root.iterdir() if d.is_dir()) == ["p=a%3Ab", "p=x y"]
+    uri = spelling + str(root).lstrip("/")
+    assert compact.do_it_all(spark, [uri], requested_file_size_mb=100) == 2
+    assert sorted(d.name for d in root.iterdir() if d.is_dir()) == ["p=a%3Ab", "p=x y"]
+    assert all(len(_data(root / leaf)) == 1 for leaf in ("p=a%3Ab", "p=x y"))
+    got = spark.read.parquet(str(root))
+    assert got.count() == 300
+    assert {r.p: r["count"] for r in got.groupBy("p").count().collect()} == {"a:b": 150, "x y": 150}
+
+
 def test_own_pool_threads_exit(tmp_path):
     """On empty leaves compaction needs no Spark session, rewrites
     nothing, and the listing's worker threads exit before it returns."""

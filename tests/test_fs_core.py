@@ -3,6 +3,8 @@ TestGetSize.scala, SafetyFuseTest.scala)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from octopufs_spark.fs import (
@@ -81,3 +83,49 @@ def test_safety_fuse_state_machine(tmp_path):
     # ending a never-started transaction is an operator error
     with pytest.raises(RuntimeError):
         fuse.end_transaction()
+
+
+HEADS = ["file:", "file://", "", "mock://b"]
+
+
+def _escaped_file(head: str, tmp_path) -> tuple[str, str]:
+    """(URI, in-filesystem path) of a file under a ``%3A`` directory with
+    a space in its name, written through ``get_filesystem``."""
+    from octopufs_spark.fs.core import get_filesystem
+
+    rest = f"{tmp_path}/t{HEADS.index(head)}/k=a%3Ab/my file.bin"
+    fs, path = get_filesystem(head + rest)
+    fs.create_dir(path.rsplit("/", 1)[0], recursive=True)
+    with fs.open_output_stream(path) as f:
+        f.write(b"x")
+    return head + rest, path
+
+
+def test_paths_are_taken_as_written(monkeypatch, tmp_path):
+    """A ``%3A`` and a space stay as written on every spelling: the
+    scheme and authority are cut off and the rest names the object."""
+    from octopufs_spark.fs import mockfs
+
+    monkeypatch.setattr(mockfs, "MOCKFS_ROOT", str(tmp_path / "mock"))
+    for head in HEADS:
+        uri, path = _escaped_file(head, tmp_path)
+        rest = uri[len(head) :]
+        assert path == ("b" + rest if head == "mock://b" else rest), head
+        disk = tmp_path / "mock" / "b" / rest.lstrip("/") if head == "mock://b" else Path(rest)
+        assert disk.read_bytes() == b"x", head
+
+
+@pytest.mark.parametrize("head", HEADS)
+def test_to_uri_inverts_get_filesystem(monkeypatch, tmp_path, head):
+    """``to_uri`` puts a root's scheme and authority back on what a
+    listing under it returns."""
+    from octopufs_spark.fs import mockfs
+    from octopufs_spark.fs.core import get_filesystem, list_tree, to_uri
+
+    monkeypatch.setattr(mockfs, "MOCKFS_ROOT", str(tmp_path / "mock"))
+    uri, path = _escaped_file(head, tmp_path)
+    root = uri.rsplit("/", 2)[0]
+    (listed,) = [e.path for e in list_tree(root) if not e.is_dir]
+    assert listed == path
+    assert to_uri(root, listed) == uri
+    assert get_filesystem(uri)[1] == path

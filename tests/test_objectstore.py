@@ -126,19 +126,23 @@ def test_move_delete_remote(remote_prefix):
 @pytest.mark.parametrize("scheme", ["file", "remote"])
 def test_escaped_and_spaced_paths(spark, scheme, remote_prefix, tmp_path):
     """Paths are taken as listed: a Hive ``k=a%3Ab`` dir and a name
-    with a space are deleted and moved as named, never percent-decoded
-    into a path that does not exist (which reads as "already gone"),
-    and a folder's listed children are deleted on every scheme."""
+    with a space are deleted, moved and copied as named, never
+    percent-decoded into a path that does not exist (which reads as
+    "already gone"), and a folder's listed children are deleted on
+    every scheme."""
     from octopufs_spark.fs.core import get_filesystem, list_tree
     from octopufs_spark.fs.delta import synchronize
+    from octopufs_spark.fs.distributed import copy_folder
     from octopufs_spark.fs.local import delete_folder, delete_paths, move_paths
     from octopufs_spark.fs.model import Paths
 
     prefix = f"file://{tmp_path}" if scheme == "file" else remote_prefix
     fs, base = get_filesystem(prefix)
+    escaped = ["k=a%3Ab/f.bin", "with space/g 1.bin"]
     names = ["k=a%3Ab/part-0.bin", "k=a%3Ab/keep.bin", "with space/part 1.bin",
              "m/a%3Ab.bin", "src/keep.bin", "trg/keep.bin",
              "trg/ts=2024-01-01 00%3A00%3A00/x.bin"]  # fmt: skip
+    names += [f"src/{rel}" for rel in escaped]
     for rel in names:
         fs.create_dir(f"{base}/{rel}".rsplit("/", 1)[0], recursive=True)
         with fs.open_output_stream(f"{base}/{rel}") as f:
@@ -151,15 +155,24 @@ def test_escaped_and_spaced_paths(spark, scheme, remote_prefix, tmp_path):
     assert all(r.success for r in res)
     res = move_paths([Paths(f"{prefix}/m/a%3Ab.bin", f"{prefix}/m/b%3Ac.bin")])
     assert all(r.success for r in res)
-    rest = {"src/keep.bin", "trg/keep.bin", "trg/ts=2024-01-01 00%3A00%3A00/x.bin"}
+    src = {f"src/{rel}" for rel in ["keep.bin", *escaped]}
+    rest = {*src, "trg/keep.bin", "trg/ts=2024-01-01 00%3A00%3A00/x.bin"}
     assert listed() == {"k=a%3Ab/keep.bin", "m/b%3Ac.bin", *rest}
     delete_paths([f"{prefix}/k=a%3Ab"])  # a directory, recursively
     assert listed() == {"m/b%3Ac.bin", *rest}
-    # synchronize deletes the target's extras by their listed names
+    # synchronize deletes the target's extras and copies what it lacks,
+    # both by their listed names
     synchronize(spark, f"{prefix}/src", f"{prefix}/trg")
-    assert listed() == {"m/b%3Ac.bin", "src/keep.bin", "trg/keep.bin"}
+    trg = {"trg" + rel[3:] for rel in src}
+    assert listed() == {"m/b%3Ac.bin", *src, *trg}
+    res = copy_folder(spark, f"{prefix}/src", f"{prefix}/cp")
+    assert len(res) == 3 and all(r.success for r in res)
+    cp = {"cp" + rel[3:] for rel in src}
+    assert listed() == {"m/b%3Ac.bin", *src, *trg, *cp}
+    with fs.open_input_stream(f"{base}/cp/with space/g 1.bin") as f:
+        assert f.read() == b"x"
     delete_folder(f"{prefix}/trg", delete_content_only=True)
-    assert listed() == {"m/b%3Ac.bin", "src/keep.bin"}
+    assert listed() == {"m/b%3Ac.bin", *src, *cp}
 
 
 def test_batches_span_buckets_and_schemes(monkeypatch, tmp_path):
@@ -193,6 +206,36 @@ def test_batches_span_buckets_and_schemes(monkeypatch, tmp_path):
     assert on_disk(local) == {"c/keep.bin"}
     with pytest.raises(ValueError, match="across filesystems"):
         move_paths([Paths(f"file://{local}/c/keep.bin", "mock://b/t/keep2.bin")])
+
+
+def test_copy_task_resolves_each_pair(monkeypatch, tmp_path):
+    """One copy task may hold pairs on different filesystems: each pair
+    is copied on its own source's and target's filesystem, by the names
+    as written, and a failing pair fails alone."""
+    from octopufs_spark.fs import mockfs
+    from octopufs_spark.fs.distributed import _copy_partition
+
+    monkeypatch.setattr(mockfs, "MOCKFS_ROOT", str(tmp_path / "mock"))
+    local = tmp_path / "local"
+    _put(f"file://{local}/k=a%3Ab/f.bin", b"local")
+    _put("mock://b/src/g 1.bin", b"mock")
+    pairs = [
+        (f"file://{local}/k=a%3Ab/f.bin", "mock://b/trg/k=a%3Ab/f.bin"),
+        ("mock://b/src/g 1.bin", f"file://{local}/trg/g 1.bin"),
+        (f"file://{local}/missing.bin", "mock://b/trg/missing.bin"),
+        (f"file:{local}/k=a%3Ab/f.bin", f"{local}/trg/k=a%3Ab/f.bin"),
+    ]
+    assert list(_copy_partition(iter(pairs))) == [
+        (pairs[0][0], True), (pairs[1][0], True), (pairs[2][0], False), (pairs[3][0], True),
+    ]  # fmt: skip
+
+    def on_disk(root) -> dict[str, bytes]:
+        return {str(p.relative_to(root)): p.read_bytes() for p in root.rglob("*") if p.is_file()}
+
+    assert on_disk(local) == {
+        "k=a%3Ab/f.bin": b"local", "trg/g 1.bin": b"mock", "trg/k=a%3Ab/f.bin": b"local",
+    }  # fmt: skip
+    assert on_disk(tmp_path / "mock") == {"b/src/g 1.bin": b"mock", "b/trg/k=a%3Ab/f.bin": b"local"}
 
 
 def test_move_folder_content_on_mock(monkeypatch, tmp_path):

@@ -11,6 +11,7 @@ TestCopyOverwriteNonpartitionedTable).
 from __future__ import annotations
 
 from collections import Counter
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -223,3 +224,67 @@ def test_copy_between_tables_preserves_target_folder_acls(spark, sales_tables, t
     assert after == {e.key(): e.permission for e in entries}
     # the data really moved both times
     assert spark.table(trg).count() == spark.table(src).count()
+
+
+@pytest.fixture()
+def escaped_tables(spark, tmp_path):
+    """Two tables at locations with a space, partitioned by a string
+    whose values Spark writes as ``p=a%3Ab``, ``p=x y`` and ``p=plain``;
+    the source holds 30 rows, the target none."""
+    names = ("esc_src", "esc_trg")
+    for name, loc in zip(names, (tmp_path / "src tbl", tmp_path / "trg tbl")):
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        spark.sql(
+            f"CREATE TABLE {name} (id BIGINT, p STRING) USING parquet "
+            f"PARTITIONED BY (p) LOCATION '{loc}'"
+        )
+    rows = [(i, ("a:b", "x y", "plain")[i % 3]) for i in range(30)]
+    spark.createDataFrame(rows, "id BIGINT, p STRING").write.insertInto(names[0])
+    yield names
+    for name in names:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def _rows(spark, table) -> Counter:
+    return Counter(tuple(r) for r in spark.table(table).collect())
+
+
+def test_locations_are_spelled_as_spark_prints_them(spark, escaped_tables, tmp_path):
+    """Spark hands out ``file:///…/src%20tbl`` and
+    ``…/p=a%253Ab/part-…``; the catalog helpers decode them once, into
+    the spelling of DESCRIBE FORMATTED, which names the files on disk."""
+    src, _ = escaped_tables
+    described = {
+        r.col_name.strip(): r.data_type.strip()
+        for r in spark.sql(f"DESCRIBE FORMATTED {src}").collect()
+    }["Location"]
+    assert catalog.get_table_location(spark, src) == described
+    assert catalog.get_table_metadata(spark, src)["location"] == described
+    assert described == f"file:{tmp_path}/src tbl"
+    files = catalog.get_list_of_table_files(spark, src)
+    assert {f[len(described) + 1 :].split("/")[0] for f in files} == {"p=a%3Ab", "p=x y", "p=plain"}
+    assert all(Path(f[len("file:") :]).is_file() for f in files)
+
+
+def test_partitions_with_escaped_values_promote(spark, escaped_tables, tmp_path):
+    """Partition exchange and partition move land exactly the source's
+    rows when the location has a space and the partition directories
+    hold a ``%3A`` or a space."""
+    src, trg = escaped_tables
+    source = _rows(spark, src)
+    promotor.copy_overwrite_partitions(spark, src, trg, ["a%3Ab"])
+    promotor.copy_overwrite_partitions(spark, src, trg, ["x y"])
+    promotor.copy_overwrite_partitions(spark, src, trg, ["x y"])  # replaces, never appends
+    assert _rows(spark, trg) == Counter({r: n for r, n in source.items() if r[1] != "plain"})
+    promotor.move_table_partitions(spark, src, trg, ["plain"])
+    assert _rows(spark, trg) == source
+    assert not (tmp_path / "src tbl" / "p=plain").exists()
+    dirs = {d.name for d in (tmp_path / "trg tbl").iterdir() if d.is_dir()}
+    assert dirs == {"p=a%3Ab", "p=x y", "p=plain"}
+
+
+def test_table_copy_with_escaped_values(spark, escaped_tables):
+    src, trg = escaped_tables
+    results = promotor.copy_files_between_tables(spark, src, trg)
+    assert results and all(r.success for r in results)
+    assert _rows(spark, trg) == _rows(spark, src)

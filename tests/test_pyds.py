@@ -629,6 +629,44 @@ def test_manifest_writer_two_phase_commit(spark, tmp_path):
     assert [e["operation"] for e in t.history()] == ["append", "overwrite"]
 
 
+def test_manifest_writer_round_trips_nested_columns(spark, tmp_path):
+    """format("manifest") writes Spark's Arrow batches as they are: a
+    struct nested in a struct, an array and a map read back equal, each
+    task stages one file, in row groups of up to 65,536 rows."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from octopufs_spark.manifest import ManifestTable
+    from octopufs_spark.sources import register_manifest_table_source
+
+    register_manifest_table_source(spark)
+    root = str(tmp_path / "nested")
+    df = spark.range(0, 140000, numPartitions=2).select(
+        "id",
+        F.struct(
+            F.col("id").alias("a"),
+            F.struct(F.concat(F.lit("v"), F.col("id")).alias("b"), F.array("id", F.lit(7)).alias("c")).alias("inner"),
+        ).alias("s"),
+        F.when(F.col("id") % 3 == 0, None).otherwise(F.array(F.col("id") % 5)).alias("arr"),
+        F.create_map(F.lit("k"), F.col("id") * 2).alias("m"),
+    )
+    df.write.format("manifest").mode("overwrite").save(root)
+    t = ManifestTable(root)
+    got = t.read(spark)
+    assert got.schema.simpleString() == df.schema.simpleString()
+
+    def comparable(frame):
+        return frame.select("id", "s", "arr", F.to_json("m").alias("m"))
+
+    assert got.count() == 140000
+    assert comparable(got).exceptAll(comparable(df)).count() == 0
+    files = t.read_manifest().files
+    assert len(files) == 2
+    for rel in files:
+        meta = pq.ParquetFile(f"{t.root_path}/{rel}").metadata
+        assert [meta.row_group(i).num_rows for i in range(meta.num_row_groups)] == [65536, 4464]
+
+
 def test_manifest_writer_failed_job_publishes_nothing(spark, tmp_path):
     """A task failure aborts the whole write: no new manifest version,
     the staged orphans invisible to readers."""

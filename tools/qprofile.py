@@ -9,8 +9,11 @@ For each named query, measures separately:
   - exec1_s / exec2_s / exec3_s: three noop-sink executions, each of a
     freshly built DataFrame (exec1 pays codegen JIT; exec2/3 are
     steady state);
-  - jobs / stages: JVM job+stage counts attributable to the query
-    (build + first exec), from the AppStatusStore;
+  - jobs / stages: the Spark jobs of the query's build + first exec,
+    counted through a job group of its own, and the stages of them that
+    ran (``bench.StageMetrics``); neither reads the status store's list
+    sizes, which stop growing once the store evicts past
+    spark.ui.retainedJobs / retainedStages;
   - optionally writes .explain("formatted") to plans/r11/<q>_<tag>.txt.
 
 Usage:
@@ -29,20 +32,9 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import StageMetrics  # noqa: E402
 from octopufs_spark.registry import all_queries  # noqa: E402
 from octopufs_spark.session import get_spark  # noqa: E402
-
-
-def job_stage_counts(spark) -> tuple[int, int]:
-    store = spark.sparkContext._jsc.sc().statusStore()
-    jobs = store.jobsList(None)
-    quant = spark.sparkContext._gateway.new_array(spark._jvm.double, 1)
-    quant[0] = 1.0
-    stages = store.stageList(
-        spark._jvm.java.util.ArrayList(), False, False, quant,
-        spark._jvm.java.util.ArrayList(),
-    )
-    return jobs.size(), stages.size()
 
 
 def main() -> None:
@@ -73,13 +65,18 @@ def main() -> None:
     if plans_tag:
         os.makedirs(plans_dir, exist_ok=True)
 
+    sc = spark.sparkContext
+    metrics = StageMetrics(spark)
+    bus = sc._jsc.sc().listenerBus()
     print(f"{'query':42s} {'build':>7s} {'exec1':>7s} {'exec2':>7s} {'exec3':>7s} {'jobs':>5s} {'stages':>6s}")
     for name in names:
         if name not in queries:
             print(f"{name}: UNKNOWN", file=sys.stderr)
             continue
-        spark.sparkContext.setJobDescription(f"qprofile:{name}")
-        j0, s0 = job_stage_counts(spark)
+        group = f"qprofile-{name}"
+        sc.setJobGroup(group, f"qprofile:{name}")
+        bus.waitUntilEmpty()
+        metrics.snapshot()
         builds: list[float] = []
         execs: list[float] = []
         df = None
@@ -97,11 +94,13 @@ def main() -> None:
             if len(execs) == 1:
                 # jobs/stages attributed to build+exec1 only, matching
                 # the r10 numbers (one build per profile back then)
-                j1, s1 = job_stage_counts(spark)
+                jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+                bus.waitUntilEmpty()
+                stages = (metrics.collect() or {}).get("stages", -1)
         build = sorted(builds)[1]
         print(
             f"{name:42s} {build:7.2f} {execs[0]:7.2f} {execs[1]:7.2f} {execs[2]:7.2f}"
-            f" {(j1 - j0):5d} {(s1 - s0):6d}",
+            f" {jobs:5d} {stages:6d}",
             flush=True,
         )
         if plans_tag:
@@ -110,7 +109,8 @@ def main() -> None:
                 df.explain("formatted")
             with open(os.path.join(plans_dir, f"{name}_{plans_tag}.txt"), "w") as f:
                 f.write(buf.getvalue())
-        spark.sparkContext.setJobDescription(None)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
 
 
 if __name__ == "__main__":
