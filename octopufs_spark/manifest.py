@@ -29,7 +29,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from octopufs_spark.fs.core import copy_bytes, list_tree
+from octopufs_spark.fs.core import copy_bytes, list_tree, rebase_paths
 from octopufs_spark.manifest_log import (
     _DROPPED_PREFIX,
     _HIVE_NULL,
@@ -1113,21 +1113,16 @@ def promote_table_to_manifest(
     one atomic commit — promotion semantics (bytes move, nothing is
     recomputed or rewritten; reference: copyFilesBetweenTables,
     Promotor.scala:114) with reader atomicity the directory-swap
-    promotor can't give. The copy fans out one file per Spark task
-    (fs/distributed.py); a failed promotion leaves only an uncommitted
-    staging dir for ``vacuum``.
+    promotor can't give. The copy is ``fs.distributed.copy_folder``: a
+    Spark job, or the driver pool for a small table; a failed promotion
+    leaves only an uncommitted staging dir for ``vacuum``.
     """
     from octopufs_spark.catalog import get_table_location
     from octopufs_spark.fs.distributed import copy_folder
 
     src = get_table_location(spark, source_table)
     staged = f"promote-{uuid.uuid4().hex[:12]}"
-    results = copy_folder(spark, src, f"{table.root}/{staged}")
-    failed = [r for r in results if not r.success]
-    if failed:
-        raise RuntimeError(
-            f"promotion copy failed for {len(failed)} file(s), e.g. {failed[0].path}"
-        )
+    copy_folder(spark, src, f"{table.root}/{staged}")  # raises unless every file copied
     return table.commit_overwrite(
         staged, operation="promote", meta={"source": source_table, **(meta or {})}
     )
@@ -1337,21 +1332,17 @@ def promote_partitions_to_manifest(
     order — and a racing rewrite of those files aborts.
     """
     from octopufs_spark import catalog
-    from octopufs_spark.fs.distributed import copy_folder
+    from octopufs_spark.fs.distributed import copy_files
 
     parts = catalog.filter_partitions(spark, source_table, match_strings)
     if not parts:
         raise ValueError(f"no partitions of {source_table} match {match_strings}")
-    src_loc = catalog.get_table_location(spark, source_table).rstrip("/")
+    src_loc = catalog.get_table_location(spark, source_table)
     staged = f"promote-{uuid.uuid4().hex[:12]}"
-    part_names = []
-    for p in parts:
-        name = p.rstrip("/").rsplit("/", 1)[-1]  # e.g. year=2024
-        part_names.append(name)
-        results = copy_folder(spark, f"{src_loc}/{name}", f"{table.root}/{staged}/{name}")
-        failed = [r for r in results if not r.success]
-        if failed:
-            raise RuntimeError(f"copy failed for partition {name}: {failed[0].path}")
+    part_names = [p.rstrip("/").rsplit("/", 1)[-1] for p in parts]  # e.g. year=2024
+    files = [f.path for f in catalog.get_files_only_of_folders(parts)]
+    # one copy for every matched partition; raises unless every file copied
+    copy_files(spark, rebase_paths(files, src_loc, f"{table.root}/{staged}"))
 
     head = table.current_version()  # main lineage: staged WAP content is not ours to replace
     read = table.read_manifest(head) if head is not None else None

@@ -92,9 +92,9 @@ def get_spark(
     """Build (or reuse) a SparkSession with the engine defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback
-    ``local[*]``). ``shuffle_partitions`` defaults to the parallelism of
-    the master — on a real cluster you would leave AQE to coalesce from
-    a higher initial number. The library root goes first on the Python
+    ``local[*]``). ``shuffle_partitions`` defaults to 32, whatever the
+    master's parallelism: AQE coalesces small shuffles from there, as
+    it would on a real cluster. The library root goes first on the Python
     workers' path (``spark.executorEnv.PYTHONPATH``); an ``extra_conf``
     value for that key is kept after it.
     """

@@ -13,6 +13,7 @@ from pathlib import Path
 
 import pytest
 
+from octopufs_spark.fs import distributed
 from octopufs_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -35,6 +36,27 @@ def jobs_of(spark, fn):
         return out, list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.fixture(params=["driver", "spark"])
+def copy_path(request, monkeypatch):
+    """Runs a copy test on each path of ``fs.distributed.copy_files``:
+    ``driver`` keeps the size limit (test batches are far below it),
+    ``spark`` sets it to 0 so that every batch runs a Spark job."""
+    if request.param == "spark":
+        monkeypatch.setattr(distributed, "DRIVER_COPY_BYTES", 0)
+    return request.param
+
+
+def failing_copy_jobs(spark, pairs, match: str) -> list[int]:
+    """The ids of the Spark jobs a ``copy_files(spark, pairs)`` that
+    must raise ``match`` launched."""
+
+    def run():
+        with pytest.raises(RuntimeError, match=match):
+            distributed.copy_files(spark, pairs)
+
+    return jobs_of(spark, run)[1]
 
 
 @pytest.fixture()

@@ -3,11 +3,12 @@ TestSubFolderCopy/Move, retry behavior)."""
 
 from __future__ import annotations
 
+import importlib.util
 from pathlib import Path
 
 import pytest
 
-from octopufs_spark.fs import list_tree
+from octopufs_spark.fs import distributed, list_tree
 from octopufs_spark.fs.core import MAX_ATTEMPTS, retry_failed
 from octopufs_spark.fs.delta import get_delta, synchronize
 from octopufs_spark.fs.distributed import copy_files, copy_folder
@@ -18,7 +19,7 @@ from octopufs_spark.fs.local import (
     move_paths,
 )
 from octopufs_spark.fs.model import FsOperationResult, Paths
-from tests.conftest import build_random_tree
+from tests.conftest import build_random_tree, failing_copy_jobs, jobs_of
 
 
 def _tree_snapshot(root: str) -> set[tuple[str, int]]:
@@ -69,6 +70,89 @@ def test_distributed_copy_retry_exhaustion(spark, tmp_path):
     pairs = [Paths(str(tmp_path / "missing.txt"), str(tmp_path / "out.txt"))]
     with pytest.raises(RuntimeError):
         copy_files(spark, pairs)
+
+
+def test_copy_self_copy_fails_alone(spark, tmp_path, copy_path):
+    """A pair whose target is its own source, spelled another way,
+    fails alone and leaves the source whole; the other pair lands."""
+    (tmp_path / "a.bin").write_bytes(b"a" * 50)
+    (tmp_path / "b.bin").write_bytes(b"b" * 50)
+    pairs = [
+        Paths(str(tmp_path / "a.bin"), str(tmp_path / "out" / "a.bin")),
+        Paths(str(tmp_path / "b.bin"), f"file://{tmp_path}/b.bin"),
+    ]
+    jobs = failing_copy_jobs(spark, pairs, "distributed copy failed")
+    assert (tmp_path / "out" / "a.bin").read_bytes() == b"a" * 50
+    assert (tmp_path / "b.bin").read_bytes() == b"b" * 50
+    assert bool(jobs) == (copy_path == "spark")
+
+
+def test_copy_unresolvable_path_fails_alone(spark, tmp_path, copy_path):
+    (tmp_path / "a.bin").write_bytes(b"a")
+    pairs = [
+        Paths("nosuchscheme://bucket/a.bin", str(tmp_path / "out" / "x.bin")),
+        Paths(str(tmp_path / "a.bin"), str(tmp_path / "out" / "a.bin")),
+    ]
+    jobs = failing_copy_jobs(spark, pairs, "distributed copy failed")
+    assert sorted(p.name for p in (tmp_path / "out").iterdir()) == ["a.bin"]
+    assert bool(jobs) == (copy_path == "spark")
+
+
+def test_copy_missing_source_retries_then_raises(spark, tmp_path, copy_path):
+    """The missing source's pair is retried alone, and that retry,
+    failing every pair it holds, ends the copy."""
+    (tmp_path / "a.bin").write_bytes(b"a")
+    pairs = [
+        Paths(str(tmp_path / "a.bin"), str(tmp_path / "out" / "a.bin")),
+        Paths(str(tmp_path / "gone.bin"), str(tmp_path / "out" / "gone.bin")),
+    ]
+    jobs = failing_copy_jobs(spark, pairs, "distributed copy failed for 1/1 files")
+    assert sorted(p.name for p in (tmp_path / "out").iterdir()) == ["a.bin"]
+    assert len(jobs) == (2 if copy_path == "spark" else 0)
+
+
+def test_copy_batch_failing_every_pair_raises_at_once(spark, tmp_path, copy_path, monkeypatch):
+    calls = []
+    real = distributed._copy_pair
+    monkeypatch.setattr(distributed, "_copy_pair", lambda r, s, d: calls.append(s) or real(r, s, d))
+    pairs = [Paths(str(tmp_path / f"gone{i}.bin"), str(tmp_path / f"out{i}.bin")) for i in range(2)]
+    jobs = failing_copy_jobs(spark, pairs, "distributed copy failed for 2/2 files")
+    if copy_path == "spark":
+        assert len(jobs) == 1  # one attempt, no retry
+    else:
+        assert jobs == [] and len(calls) == 2
+
+
+def test_copy_runs_a_spark_job_only_above_the_limit(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(distributed, "DRIVER_COPY_BYTES", 1000)
+    for name, size in [("small", 400), ("large", 600)]:
+        (tmp_path / name).mkdir()
+        for i in range(2):
+            (tmp_path / name / f"f{i}.bin").write_bytes(bytes([i]) * size)
+    for name, want in [("small", 0), ("large", 1)]:
+        src, dst = str(tmp_path / name), str(tmp_path / f"{name}_copy")
+        results, jobs = jobs_of(spark, lambda: copy_folder(spark, src, dst))
+        assert len(results) == 2 and all(r.success for r in results)
+        assert len(jobs) == want, name
+        assert _tree_snapshot(src) == _tree_snapshot(dst)
+
+
+def test_copy_probe_sweeps_both_paths(spark, tmp_path):
+    """``tools/copy_probe.py`` stays runnable: one tiny point, measured
+    on the driver path and on the Spark path."""
+    tool = Path(__file__).resolve().parents[1] / "tools" / "copy_probe.py"
+    spec = importlib.util.spec_from_file_location("copy_probe", tool)
+    probe = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(probe)
+    limit = distributed.DRIVER_COPY_BYTES
+    (rec,) = probe.sweep(spark, [4096], [8192, 2**40], repeats=1, work=str(tmp_path))
+    assert distributed.DRIVER_COPY_BYTES == limit
+    assert {k: rec[k] for k in ("file_bytes", "files", "batch_bytes")} == {
+        "file_bytes": 4096, "files": 2, "batch_bytes": 8192,
+    }  # fmt: skip
+    for path in ("driver", "spark"):
+        assert rec[f"{path}_cpu_s"] >= 0 and rec[f"{path}_wall_s"] > 0
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_get_delta_directions(spark, tmp_path, seeded_rng):

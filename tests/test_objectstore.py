@@ -331,6 +331,90 @@ def test_mock_partial_failure_merges_with_retry(spark, remote_prefix):
     assert copied == {"good.bin"}
 
 
+def test_copy_contract_on_the_store(spark, remote_prefix, copy_path, monkeypatch):
+    """On the store, as on local disk: a self-copy and an unresolvable
+    path fail only their own pairs, a missing source is retried and
+    then raises, and a batch failing every pair raises at once."""
+    from octopufs_spark.fs import distributed
+    from octopufs_spark.fs.core import list_tree
+    from octopufs_spark.fs.model import Paths
+    from tests.conftest import failing_copy_jobs
+
+    _put(f"{remote_prefix}/src/good.bin", b"ok")
+    _put(f"{remote_prefix}/src/self.bin", b"self")
+    good = Paths(f"{remote_prefix}/src/good.bin", f"{remote_prefix}/trg/good.bin")
+    bad = [
+        Paths(f"{remote_prefix}/src/self.bin", f"{remote_prefix}/src/self.bin"),
+        Paths("nosuchscheme://bucket/x.bin", f"{remote_prefix}/trg/x.bin"),
+        Paths(f"{remote_prefix}/src/gone.bin", f"{remote_prefix}/trg/gone.bin"),
+    ]
+    for pair in bad:
+        jobs = failing_copy_jobs(spark, [good, pair], "distributed copy failed for 1/1 files")
+        assert len(jobs) == (2 if copy_path == "spark" else 0), pair
+    copied = {e.path.rsplit("/", 1)[-1] for e in list_tree(f"{remote_prefix}/trg") if not e.is_dir}
+    assert copied == {"good.bin"}
+    assert _get(f"{remote_prefix}/src/self.bin") == b"self"
+
+    calls = []
+    real = distributed._copy_pair
+    monkeypatch.setattr(distributed, "_copy_pair", lambda r, s, d: calls.append(s) or real(r, s, d))
+    jobs = failing_copy_jobs(spark, bad, "distributed copy failed for 3/3 files")
+    if copy_path == "spark":
+        assert len(jobs) == 1
+    else:
+        assert jobs == [] and len(calls) == 3
+
+
+def test_copy_mixes_schemes_in_one_batch(spark, remote_prefix, tmp_path, copy_path):
+    """One batch copies store to local disk, local disk to the store
+    (by ``file://`` URI and by plain path) and store to store."""
+    from octopufs_spark.fs.distributed import copy_files
+    from octopufs_spark.fs.model import Paths
+    from tests.conftest import jobs_of
+
+    _put(f"{remote_prefix}/src/m.bin", b"mock")
+    _put(f"file://{tmp_path}/src/f.bin", b"file")
+    pairs = [
+        Paths(f"{remote_prefix}/src/m.bin", f"file://{tmp_path}/trg/m.bin"),
+        Paths(f"file://{tmp_path}/src/f.bin", f"{remote_prefix}/trg/f.bin"),
+        Paths(f"{tmp_path}/src/f.bin", f"{remote_prefix}/trg/plain.bin"),
+        Paths(f"{remote_prefix}/src/m.bin", f"{remote_prefix}/trg/m2.bin"),
+    ]
+    results, jobs = jobs_of(spark, lambda: copy_files(spark, pairs))
+    assert [r.success for r in results] == [True] * 4
+    assert len(jobs) == (1 if copy_path == "spark" else 0)
+    assert (tmp_path / "trg" / "m.bin").read_bytes() == b"mock"
+    assert _get(f"{remote_prefix}/trg/f.bin") == b"file"
+    assert _get(f"{remote_prefix}/trg/plain.bin") == b"file"
+    assert _get(f"{remote_prefix}/trg/m2.bin") == b"mock"
+
+
+def test_driver_copy_threads_share_one_resolver(spark, remote_prefix, tmp_path):
+    """The driver pool's threads share one resolver whose heads they
+    open on first use: with a thread switch at nearly every bytecode,
+    a batch spanning three heads copies each file to its own target."""
+    import sys
+
+    from octopufs_spark.fs.distributed import copy_files
+    from octopufs_spark.fs.model import Paths
+    from tests.conftest import jobs_of
+
+    heads = [remote_prefix, f"file://{tmp_path}", f"file:{tmp_path}"]
+    pairs = []
+    for i in range(60):
+        pairs.append(Paths(f"{heads[i % 3]}/src/f{i}.bin", f"{heads[(i + 1) % 3]}/trg/f{i}.bin"))
+        _put(pairs[-1].source_path, str(i).encode() * 50)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        results, jobs = jobs_of(spark, lambda: copy_files(spark, pairs))
+    finally:
+        sys.setswitchinterval(interval)
+    assert jobs == [] and [r.success for r in results] == [True] * 60
+    for i, p in enumerate(pairs):
+        assert _get(p.target_path) == str(i).encode() * 50
+
+
 def test_compaction_on_object_store(spark, remote_prefix):
     """Compaction rewrites in executor tasks through ``core``'s scheme
     dispatch, so a ``mock://`` tree — which Spark's JVM readers cannot

@@ -156,7 +156,6 @@ DRIVER = textwrap.dedent(
     import os, sys
     sys.path.insert(0, {repo!r})
     from octopufs_spark.fs import distributed
-    from octopufs_spark.fs.model import Paths
     from octopufs_spark.session import get_spark
 
     extra = {{"spark.executorEnv.PYTHONPATH": "/caller/path"}}
@@ -169,10 +168,12 @@ DRIVER = textwrap.dedent(
     for name in ("a.bin", "b.bin"):
         with open(os.path.join("src", name), "wb") as f:
             f.write(name.encode() * 100)
-        pairs.append(Paths(os.path.abspath(os.path.join("src", name)),
-                           os.path.abspath(os.path.join("dst", name))))
-    results = distributed.copy_files(spark, pairs)
-    assert all(r.success for r in results) and len(results) == 2, results
+        pairs.append((os.path.abspath(os.path.join("src", name)),
+                      os.path.abspath(os.path.join("dst", name))))
+    # the copy body in Python tasks: the workers import the library
+    copy = distributed._copy_partition
+    results = spark.sparkContext.parallelize(pairs, 2).mapPartitions(copy).collect()
+    assert sorted(results) == [(src, True) for src, _ in pairs], results
     for name in ("a.bin", "b.bin"):
         with open(os.path.join("dst", name), "rb") as f:
             assert f.read() == name.encode() * 100

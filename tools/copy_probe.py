@@ -1,24 +1,29 @@
-"""Measure the reference's only published performance figure
-(README.md:9: distributed copy ~3x faster than read->write) against
-this rebuild — r7 verdict task #6.
+"""Where a copy batch should run: the driver pool or a Spark job.
 
-The claim: copying a parquet tree by moving BYTES (one file per Spark
-task, no decode) beats `spark.read.parquet(src).write.parquet(dst)`
-(decompress -> rows -> shuffle-less rewrite -> recompress) because the
-latter burns CPU on codec work and loses the original file layout.
+``fs.distributed.copy_files`` copies a batch on the driver when its
+sources total fewer than ``DRIVER_COPY_BYTES`` and in a Spark job
+otherwise. This sweep measures both paths at each (file size, batch
+total) point: it writes ``total // size`` files of ``size`` bytes, then
+copies them with the limit forced to each side, and reports the median
+process-tree CPU (driver, JVM and Python workers; see
+``perfbench/trace.py::tree_cpu_s``) and wall time of ``--repeats``
+copies after one warm-up copy. The Spark path runs ``--tasks`` tasks
+(default: the session's default parallelism), as the benchmark's copies
+do. Points with more than ``--max-files`` files are skipped.
 
-The probe generates an N-file parquet tree (default ~2 GB), then
-times: `fs.distributed.copy_folder` at several ``task_count`` settings
-vs the read->write baseline. Prints one JSON line with the ratio.
-
-Run: python tools/copy_probe.py [total_mb] [n_files]
-Measured numbers live in SCALE.md ("reference 3x copy claim").
+Run: python tools/copy_probe.py [--sizes-kb 4,64,1024,4096,20480]
+     [--totals-mb 8,32,64,128,256] [--repeats 3]
+Prints one JSON line per point. Measured numbers live in SCALE.md
+("copies on the driver or in a Spark job").
 """
 
 from __future__ import annotations
 
+import argparse
 import json
+import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -27,74 +32,96 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
 
-from pyspark.sql import functions as F  # noqa: E402
+from octopufs_spark.fs import distributed  # noqa: E402
+from octopufs_spark.fs.model import Paths  # noqa: E402
+from perfbench.trace import tree_cpu_s  # noqa: E402
 
-from octopufs_spark.fs.core import get_size  # noqa: E402
-from octopufs_spark.fs.distributed import copy_folder  # noqa: E402
-from octopufs_spark.session import get_spark  # noqa: E402
+PATHS = {"driver": 1 << 62, "spark": 0}  # DRIVER_COPY_BYTES that forces each path
 
 
-def main() -> None:
-    total_mb = int(sys.argv[1]) if len(sys.argv) > 1 else 2048
-    n_files = int(sys.argv[2]) if len(sys.argv) > 2 else 64
+def _copy_once(spark, pairs: list[Paths], limit: int, tasks: int) -> tuple[float, float]:
+    """(process-tree CPU s, wall s) of one ``copy_files`` with the
+    driver limit set to ``limit``."""
+    saved = distributed.DRIVER_COPY_BYTES
+    distributed.DRIVER_COPY_BYTES = limit
+    try:
+        cpu0, t0 = tree_cpu_s(), time.perf_counter()
+        results = distributed.copy_files(spark, pairs, tasks)
+        wall, cpu = time.perf_counter() - t0, tree_cpu_s() - cpu0
+    finally:
+        distributed.DRIVER_COPY_BYTES = saved
+    assert len(results) == len(pairs) and all(r.success for r in results)
+    return cpu, wall
+
+
+def sweep(
+    spark,
+    sizes: list[int],
+    totals: list[int],
+    repeats: int = 3,
+    tasks: int | None = None,
+    max_files: int = 4096,
+    work: str | None = None,
+) -> list[dict]:
+    """One record per (file size, batch total) point in bytes; each
+    holds the median CPU and wall seconds of each path."""
+    tasks = tasks or spark.sparkContext.defaultParallelism
+    work = tempfile.mkdtemp(prefix="copy_probe_", dir=work)
+    out = []
+    try:
+        for size in sizes:
+            for total in totals:
+                n = total // size
+                if not 1 <= n <= max_files:
+                    continue
+                src = f"{work}/src"
+                os.makedirs(src)
+                payload = os.urandom(size)
+                for i in range(n):
+                    with open(f"{src}/f{i:05d}.bin", "wb") as f:
+                        f.write(payload)
+                rec: dict = {"file_bytes": size, "files": n, "batch_bytes": n * size}
+                for path, limit in PATHS.items():
+                    runs = []
+                    for r in range(repeats + 1):  # run 0 warms up
+                        dst = f"{work}/dst"
+                        pairs = [
+                            Paths(f"{src}/f{i:05d}.bin", f"{dst}/f{i:05d}.bin") for i in range(n)
+                        ]
+                        runs.append(_copy_once(spark, pairs, limit, tasks))
+                        assert os.path.getsize(f"{dst}/f{n - 1:05d}.bin") == size
+                        shutil.rmtree(dst)
+                    rec[f"{path}_cpu_s"] = round(statistics.median(c for c, _ in runs[1:]), 3)
+                    rec[f"{path}_wall_s"] = round(statistics.median(w for _, w in runs[1:]), 3)
+                shutil.rmtree(src)
+                out.append(rec)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return out
+
+
+def main(argv=None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--sizes-kb", default="4,64,1024,4096,20480")
+    ap.add_argument("--totals-mb", default="8,32,64,128,256")
+    ap.add_argument("--repeats", type=int, default=3)
+    ap.add_argument("--tasks", type=int, default=None)
+    ap.add_argument("--max-files", type=int, default=4096)
+    args = ap.parse_args(argv)
+
+    from octopufs_spark.session import get_spark
+
     spark = get_spark("copy_probe")
     spark.sparkContext.setLogLevel("ERROR")
-    work = tempfile.mkdtemp(prefix="copy_probe_")
-    src = f"{work}/src"
-
-    # ~28 bytes/row after snappy for this shape; calibrate roughly
-    rows = total_mb * 1024 * 1024 // 28
-    t0 = time.time()
-    (
-        spark.range(rows)
-        .select(
-            "id",
-            (F.col("id") * 31 % 997).alias("a"),
-            F.rand(7).alias("b"),
-            F.md5(F.col("id").cast("string")).alias("s"),
-        )
-        .repartition(n_files)
-        .write.parquet(src)
-    )
-    gen_s = round(time.time() - t0, 1)
-    size_b = get_size(src).get_size_of_path(src)
-    out: dict = {
-        "src_bytes": size_b,
-        "src_gb": round(size_b / 2**30, 2),
-        "n_files": n_files,
-        "gen_s": gen_s,
-    }
-
-    # min-of-2 per mode: the first pass after generation competes with
-    # the page-cache writeback of the 3 GB just written (observed 16x
-    # inflation on whichever mode runs first), so each mode runs twice
-    # and reports its best — steady-state throughput, same treatment
-    # for both sides.
-    def rw_once(i):
-        t0 = time.time()
-        spark.read.parquet(src).write.parquet(f"{work}/rw{i}")
-        s = round(time.time() - t0, 1)
-        shutil.rmtree(f"{work}/rw{i}")
-        return s
-
-    def copy_once(tc, i):
-        dst = f"{work}/cp_{tc}_{i}"
-        t0 = time.time()
-        res = copy_folder(spark, src, dst, task_count=tc)
-        s = round(time.time() - t0, 1)
-        assert all(r.success for r in res)
-        assert get_size(dst).get_size_of_path(dst) == size_b  # byte-identical
-        shutil.rmtree(dst)
-        return s
-
-    rw_once(0)  # absorb the writeback spike before anything is timed
-    out["read_write_s"] = min(rw_once(1), rw_once(2))
-    for tc in (-1, 32, 8):
-        out[f"copy_s_tasks_{tc}"] = min(copy_once(tc, 1), copy_once(tc, 2))
-
-    out["ratio_rw_over_copy"] = round(out["read_write_s"] / out["copy_s_tasks_-1"], 2)
-    print(json.dumps(out))
-    shutil.rmtree(work, ignore_errors=True)
+    for rec in sweep(
+        spark,
+        [int(kb) * 1024 for kb in args.sizes_kb.split(",")],
+        [int(float(mb) * 1024 * 1024) for mb in args.totals_mb.split(",")],
+        args.repeats,
+        args.tasks,
+        args.max_files,
+    ):
+        print(json.dumps(rec), flush=True)
 
 
 if __name__ == "__main__":
