@@ -42,6 +42,9 @@ a 4-CPU x86 VM.
 
 from __future__ import annotations
 
+import os
+import posixpath
+
 from pyspark.sql import SparkSession
 
 from octopufs_spark.fs.core import (
@@ -68,6 +71,20 @@ DRIVER_COPY_BYTES = 64 * 1024 * 1024
 DRIVER_COPY_WORKERS = 16
 
 
+def _same_file(src_fs, sp: str, trg_fs, dp: str) -> bool:
+    """Whether the target is the source under another spelling: an
+    existing local target by inode (``//``, ``/./``, a symlinked dir), a
+    ``mock://`` path normalized (it maps one-to-one onto local dirs); on
+    an object store ``a//b`` is another key."""
+    if src_fs.type_name != trg_fs.type_name:
+        return False
+    if trg_fs.type_name == "local":
+        return os.path.exists(dp) and os.path.samefile(sp, dp)
+    if trg_fs.type_name.startswith("py::mock"):
+        return posixpath.normpath(sp) == posixpath.normpath(dp)
+    return sp == dp
+
+
 def _copy_pair(resolve: Resolve, src: str, dst: str) -> bool:
     """Copy one (src, dst) pair; True on success. The pair resolves
     inside its own ``try``, so a path that cannot be resolved, a
@@ -75,7 +92,7 @@ def _copy_pair(resolve: Resolve, src: str, dst: str) -> bool:
     try:
         src_fs, sp = resolve(src)
         trg_fs, dp = resolve(dst)
-        if sp == dp and src_fs.type_name == trg_fs.type_name:
+        if _same_file(src_fs, sp, trg_fs, dp):
             # self-copy would truncate the source on open-for-write
             raise ValueError(f"source and target are the same file: {src}")
         trg_fs.create_dir(dp.rsplit("/", 1)[0], recursive=True)

@@ -19,10 +19,11 @@ store:
   here models it as create-exclusive.
 
 A REWRITE — a commit that replaces files it read (MERGE, compaction,
-partition promotion) — publishes through ONE method,
-``ManifestLog.commit_rewrite``, the one home of the read-set rule
-(the validation phase of optimistic concurrency). Each attempt
-validates the snapshot it read against the live parent:
+partition promotion) or adds or retires delete vectors (merge-on-read
+deletes, consolidation) — publishes through ONE method,
+``ManifestLog.commit_rewrite``, the one home of the read-set rule (the
+validation phase of optimistic concurrency). Each attempt validates
+the snapshot it read against the live parent:
 
 1. A replaced file that has left the parent (a racing rewrite took
    it) aborts: the staged rows would duplicate or resurrect it.
@@ -36,11 +37,21 @@ validates the snapshot it read against the live parent:
    ``kept`` is non-empty while its read snapshot had a live equality
    vector: the kept files need the vector, the re-inserted rows must
    escape it, and a snapshot-wide vector cannot do both.
+5. A positional vector the commit adds aborts when a file it names
+   has left the parent: the rows it hides were rewritten without it,
+   so it would delete nothing (a lost update). Files it does not name
+   may go; they held no matching row.
+6. A vector the commit retires (folds into one it adds) aborts when
+   it has left the parent: a racing rewrite materialized and dropped
+   it, and the folded copy would re-hide keys that rewrite freed.
+   Vectors racers added are not retired, and carry.
 
 Every abort raises ``ConcurrentModificationError`` with nothing
 published. A positional vector of ``read`` that names only replaced
 files is dead once the rewrite lands (every row it hides was
 rewritten without it), so the rewrite drops it instead of carrying it.
+Dead and retired vectors leave the carry through the commit's
+``replaced_vector_paths``, which only ``commit_rewrite`` writes.
 
 The log also records the Spark schema of the data files, so readers
 plan without a schema-inference Spark job: meta ``data_schema`` is the
@@ -1176,6 +1187,7 @@ class ManifestLog:
         operation: str,
         meta: dict | None = None,
         *,
+        retired: list[str] = (),
         inserts: bool = False,
         branch: str | None = None,
         txn: tuple[str, int] | None = None,
@@ -1183,6 +1195,10 @@ class ManifestLog:
         """Publish ``staged`` in place of the ``replaced`` files of the
         snapshot ``read`` (None: the table was empty) — the one rewrite
         commit, under the read-set rule of the module docstring.
+        ``meta["delete_vectors"]`` holds only the vectors the commit
+        adds (the live parent's carry at publish; a copy of ``read``'s
+        would resurface what a racing rewrite retired), and ``retired``
+        the paths of vectors of ``read`` it folded into them.
         ``inserts``: the staged rows may re-insert keys an equality
         vector of ``read`` deletes. ``branch`` and ``txn`` are those of
         :meth:`_commit_with_retry`; returns the committed version, or
@@ -1191,13 +1207,18 @@ class ManifestLog:
         replaced_set = set(replaced)
         read_vectors = read.meta.get("delete_vectors", []) if read else []
         read_paths = {dv["path"] for dv in read_vectors}
+        # a commit that replaces nothing (a delete) reads no vector here
         dead = [
             dv["path"]
-            for dv in read_vectors
+            for dv in (read_vectors if replaced_set else [])
             if dv.get("type") == "positional" and self._vector_files(dv) <= replaced_set
         ]
-        if dead:
-            meta = {**(meta or {}), "replaced_vector_paths": dead}
+        if dead or retired:
+            meta = {**(meta or {}), "replaced_vector_paths": dead + list(retired)}
+        added = (meta or {}).get("delete_vectors", [])
+        named = set().union(
+            *(self._vector_files(dv) for dv in added if dv.get("type") == "positional")
+        )
         shadows = inserts and any(not dv.get("type") for dv in read_vectors)
         since = f"v{read.version}" if read else "an empty table"
 
@@ -1212,13 +1233,22 @@ class ManifestLog:
             gone = replaced_set.difference(live)
             if gone:
                 raise conflict(f"{len(gone)} replaced file(s) left, e.g. {min(gone)!r}")
+            lost = named.difference(live)
+            if lost:
+                raise conflict(f"a concurrent rewrite took {min(lost)!r}, named by the added vector")
+            parent_vectors = parent.meta.get("delete_vectors", []) if parent else []
+            unretired = set(retired).difference(dv["path"] for dv in parent_vectors)
+            if unretired:
+                raise conflict(f"retired delete vector {min(unretired)!r} left")
             kept = [f for f in live if f not in replaced_set]
-            for dv in parent.meta.get("delete_vectors", []) if parent else []:
+            for dv in parent_vectors:
                 if dv["path"] in read_paths:
                     continue
                 if not kept:
                     raise conflict(f"delete vector {dv['path']!r} would drop unapplied")
-                if dv.get("type") == "positional" and self._vector_files(dv) & replaced_set:
+                if replaced_set and dv.get("type") == "positional" and (
+                    self._vector_files(dv) & replaced_set
+                ):
                     raise conflict(
                         f"positional delete vector {dv['path']!r} names replaced files"
                     )
@@ -1737,18 +1767,20 @@ class ManifestLog:
         Without this, a plain append/stream-append/partition-promote
         after ``merge.delete_where_mor`` would publish a version whose
         read no longer applies the vectors — silently resurrecting
-        deleted rows while keeping the same data files. Vectors are
-        key-granular equality deletes and apply to the WHOLE snapshot,
-        so re-inserting a MOR-deleted key requires compacting first (a
-        rewrite commit retains no parent files and drops the vectors) —
-        documented behavior, matching Iceberg equality-delete scope.
-        Deduped by vector path so delete_where_mor's own pre-merged
-        list is not doubled. A commit may name parent vectors it has
-        CONSUMED (folded into a vector it carries itself) in
-        ``replaced_vector_paths`` — those are excluded from the carry
-        (else consolidation would re-add what it just replaced) while
-        vectors landed by racers still carry; the marker is dropped
-        from the published meta."""
+        deleted rows while keeping the same data files. An equality
+        vector applies to the WHOLE snapshot, so re-inserting a
+        MOR-deleted key requires compacting first (a rewrite commit
+        retains no parent files and drops the vectors) — documented
+        behavior, matching Iceberg equality-delete scope; a positional
+        vector hides rows of the files it names only. The commit's own
+        ``delete_vectors`` are the vectors it adds, appended after the
+        parent's (a path the parent already has is not doubled).
+        ``replaced_vector_paths``, written only by
+        :meth:`commit_rewrite`, names the parent vectors the commit
+        drops (positional vectors it made dead, vectors it retired) —
+        those are excluded from the carry while vectors landed by
+        racers still carry; the marker is dropped from the published
+        meta."""
         if parent is None or not parent.meta.get("delete_vectors"):
             return {k: v for k, v in meta.items() if k != "replaced_vector_paths"}
         replaced = set(meta.get("replaced_vector_paths", []))

@@ -27,11 +27,12 @@ merged frame is a union this module builds, so a repartition of
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from octopufs_spark.manifest import ManifestTable, _as_nullable, _reader, _right_sized
-from octopufs_spark.manifest_log import ConcurrentModificationError
 
 
 def merge_upsert(
@@ -223,28 +224,25 @@ def manifest_merge_stream_writer(
 
 
 def consolidate_delete_vectors(spark: SparkSession, table: ManifestTable) -> int | None:
-    """Maintenance: fold accumulated key-granular delete vectors into
-    ONE vector per key-column set, without touching any data file.
-    Every MOR delete adds a broadcast anti-join to every subsequent
-    read — after k deletes a scan plans k joins; consolidation returns
-    the read plan to one. Publishes a commit with the SAME file set,
-    the folded vector, and a ``replaced_vector_paths`` marker so the
-    publish-time carry drops exactly the consumed vectors while a
-    racing delete's new vector still carries. A racing rewrite that
-    materialized-and-dropped a consumed vector aborts (re-adding the
-    folded copy would re-shadow keys the rewrite legitimately freed
-    for re-insertion). Old vector files stay for time travel until
-    ``vacuum``. Returns the committed version, or None when there is
-    nothing to fold."""
-    import uuid as _uuid
-
+    """Maintenance: fold accumulated equality delete vectors into ONE
+    vector per key-column set, without touching any data file. Every
+    MOR delete adds a broadcast anti-join to every subsequent read —
+    after k deletes a scan plans k joins; consolidation returns the
+    read plan to one. Publishes a commit with the SAME file set, the
+    folded vectors added and the consumed ones retired through
+    :meth:`ManifestLog.commit_rewrite`: a racing delete's new vector
+    still carries, and a racing rewrite that materialized-and-dropped a
+    consumed vector aborts the commit (re-adding the folded copy would
+    re-shadow keys the rewrite legitimately freed for re-insertion).
+    Old vector files stay for time travel until ``vacuum``. Returns the
+    committed version, or None when there is nothing to fold."""
     m = table.read_manifest()
     key_dvs = [dv for dv in m.meta.get("delete_vectors", []) if not dv.get("type")]
     groups: dict[tuple, list[dict]] = {}
     for dv in key_dvs:
         groups.setdefault(tuple(dv["keys"]), []).append(dv)
     staged_vectors: list[dict] = []
-    replaced: list[str] = []
+    retired: list[str] = []
     for keys, dvs in sorted(groups.items()):
         if len(dvs) < 2:
             continue  # singleton: nothing to fold
@@ -253,37 +251,17 @@ def consolidate_delete_vectors(spark: SparkSession, table: ManifestTable) -> int
         if any(dv.get("schema") != schema for dv in dvs):
             schema = None
         union = _reader(spark, schema).parquet(*[f"{table.root}/{dv['path']}" for dv in dvs])
-        path = f"dv-consolidated-{_uuid.uuid4().hex[:12]}"
+        path = f"dv-consolidated-{uuid.uuid4().hex[:12]}"
         folded = union.select(*keys).distinct()
         folded.coalesce(1).write.parquet(f"{table.root}/{path}")
         staged_vectors.append(
             {"path": path, "keys": list(keys), "schema": _as_nullable(folded.schema.jsonValue())}
         )
-        replaced.extend(dv["path"] for dv in dvs)
+        retired.extend(dv["path"] for dv in dvs)
     if not staged_vectors:
         return None
-
-    def build(parent):
-        parent_paths = {
-            dv["path"] for dv in (parent.meta.get("delete_vectors", []) if parent else [])
-        }
-        gone = [p for p in replaced if p not in parent_paths]
-        if gone:
-            raise ConcurrentModificationError(
-                f"delete-vector consolidation of {table.root} raced a rewrite "
-                f"that materialized {len(gone)} consumed vector(s) — re-run"
-            )
-        return list(parent.files) if parent else []
-
-    return table._commit_with_retry(
-        build,
-        "dv-consolidate",
-        {
-            "delete_vectors": staged_vectors,
-            "replaced_vector_paths": replaced,
-            "consolidated": len(replaced),
-        },
-    )
+    meta = {"delete_vectors": staged_vectors, "consolidated": len(retired)}
+    return table.commit_rewrite(m, [], [], "dv-consolidate", meta, retired=retired)
 
 
 def delete_where_mor(
@@ -307,7 +285,9 @@ def delete_where_mor(
     The key-granular vector is registered in the manifest meta
     (``delete_vectors``: list of {path, keys}); vectors accumulate
     across MOR deletes and each version applies exactly the vectors
-    recorded up to it (time travel stays consistent).
+    recorded up to it (time travel stays consistent). The commit goes
+    through :meth:`ManifestLog.commit_rewrite`, replacing no file:
+    racing appends and vectors carry.
 
     The vector is the key projection as given, duplicates included:
     reads anti-join it and the MV delta fold semi-joins it, and both
@@ -320,45 +300,39 @@ def delete_where_mor(
     frame's own session; no driver-side scan happens here) — kept for
     signature symmetry with :func:`delete_where_mor_positional`, which
     genuinely scans."""
-    import uuid
-
+    try:
+        read = table.read_head(branch)
+    except FileNotFoundError:
+        if branch is not None:
+            raise  # no such branch
+        raise ValueError("MOR delete requires an existing snapshot") from None
     dv_rel = f"_dv/dv-{uuid.uuid4().hex[:12]}.parquet"
     vector = _right_sized(delete_keys.select(*keys))
     vector.write.mode("errorifexists").parquet(f"{table.root}/{dv_rel}")
-
-    def build(parent):
-        if parent is None:
-            raise ValueError("MOR delete requires an existing snapshot")
-        return list(parent.files)
-
-    # contribute ONLY the new vector: file_stats/blooms/evolution/
-    # hidden layout all carry from the LIVE parent at publish time
-    # (_carry_* helpers). Copying this snapshot's meta wholesale would
-    # let a racing full rewrite's retired metadata resurface — the
-    # carry helpers give meta entries precedence, so a stale copy of
-    # hidden_partitions or untrimmed stats would override the truth.
     # the vector records its schema, so reads plan it without inferring
     schema = _as_nullable(vector.schema.jsonValue())
     meta = {"delete_vectors": [{"path": dv_rel, "keys": keys, "schema": schema}]}
-    return table._commit_with_retry(build, "delete_mor", meta, branch=branch)
+    return table.commit_rewrite(read, [], [], "delete_mor", meta, branch=branch)
 
 
 def delete_where_mor_positional(
     spark: SparkSession,
     table: ManifestTable,
     predicate: str,
+    branch: str | None = None,
 ) -> int:
     """POSITION-granular merge-on-read delete — the Delta deletion-
     vector bitmap model, vs :func:`delete_where_mor`'s Iceberg-style
-    equality deletes. The current snapshot is scanned ONCE with the
-    parquet reader's virtual ``_metadata.file_path``/``row_index``
-    columns; rows matching ``predicate`` (a SQL condition string) are
-    recorded as (relative file, row position) pairs in a tiny parquet
-    vector, and a new version commits with the DATA FILE SET UNCHANGED.
+    equality deletes. The head snapshot (of ``branch`` when given) is
+    scanned ONCE with the parquet reader's virtual
+    ``_metadata.file_path``/``row_index`` columns; rows matching
+    ``predicate`` (a SQL condition string) are recorded as (relative
+    file, row position) pairs in a tiny parquet vector, and a new
+    version commits with the DATA FILE SET UNCHANGED.
 
     Why positions beat keys when the predicate identifies exact rows:
 
-    - the vector is scoped to exactly the files scanned — a later
+    - the vector names only the files its rows sit in — a later
       append can re-insert identical values and they stay visible
       (equality vectors shadow re-inserts until compaction);
     - the read-side anti-join is on (file, position) — no dependence
@@ -368,21 +342,16 @@ def delete_where_mor_positional(
       compaction later materializes it (rewrite commits retain no
       parent files, so `_carry_delete_vectors` drops the vector).
 
-    Because the vector is FILE-scoped, a concurrent rewrite of the
-    scanned files is a true conflict: if a compaction publishes
-    between the scan and this commit, the vector would name files the
-    new snapshot no longer reads — the commit would "succeed" while
-    deleting nothing (a lost update). The commit therefore verifies at
-    publish time that every scanned file is still in the parent
-    snapshot and aborts with :class:`ConcurrentModificationError`
-    otherwise (the same publish-time reconciliation
-    ``compact_and_commit`` does from the other side; concurrent
-    APPENDS add files the vector never references and pass through).
+    Because the vector is FILE-scoped, a concurrent rewrite of a file
+    it names is a true conflict: the vector would name a file the new
+    snapshot no longer reads — the commit would "succeed" while
+    deleting nothing (a lost update). The commit goes through
+    :meth:`ManifestLog.commit_rewrite`, which aborts with
+    :class:`ConcurrentModificationError` when a file the vector names
+    has left the parent. Concurrent appends, and rewrites of scanned
+    files that held no matching row, pass through.
     """
-    import uuid
-
-    m = table.read_manifest()
-    scanned = set(m.files)
+    m = table.read_head(branch)
     # evolution-aware grouped scan, positions annotated per group: the
     # predicate is written in LOGICAL column names — a flat multi-file
     # read samples one footer, so on a renamed table half the files
@@ -402,24 +371,5 @@ def delete_where_mor_positional(
         F.col("_dv_pos").cast("long").alias("pos"),
     )
     hits.write.mode("errorifexists").parquet(f"{table.root}/{dv_rel}")
-
-    def build(parent):
-        if parent is None:
-            raise ValueError("MOR delete requires an existing snapshot")
-        rewritten = scanned - set(parent.files)
-        if rewritten:
-            raise ConcurrentModificationError(
-                f"positional delete on {table.root} conflicts with a "
-                f"concurrent rewrite: {len(rewritten)} scanned file(s) "
-                f"left the snapshot, e.g. {sorted(rewritten)[0]!r} — "
-                "re-run the delete against the new snapshot"
-            )
-        return list(parent.files)
-
-    # contribute ONLY the new vector — the LIVE parent's vectors,
-    # stats, evolution log, and hidden layout all merge at publish
-    # time via the _carry_* helpers. Pre-merging this snapshot's meta
-    # would resurrect entries a racing rewrite had already retired
-    # (see delete_where_mor).
     meta = {"delete_vectors": [{"path": dv_rel, "type": "positional"}]}
-    return table._commit_with_retry(build, "delete_mor", meta)
+    return table.commit_rewrite(m, [], [], "delete_mor", meta, branch=branch)

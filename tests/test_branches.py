@@ -471,16 +471,21 @@ def test_merge_into_branch(spark, table):
     assert {(r.id, r.v) for r in table.read(spark).collect()} == want
 
 
-def test_mor_delete_on_branch_fast_forwards_as_replace(spark, table):
-    """A MOR delete on a branch keeps the file set but hides rows, so
-    the fast-forward must be the replace-flavored op — streaming it as
-    a plain append would silently skip the row change (the same
-    contract that makes delete_mor itself a change commit)."""
-    from octopufs_spark.merge import delete_where_mor
+@pytest.mark.parametrize("kind", ["eq", "pos"])
+def test_mor_delete_on_branch_fast_forwards_as_replace(spark, table, kind):
+    """A MOR delete on a branch (by keys or by position) keeps the file
+    set but hides rows, so the fast-forward must be the replace-flavored
+    op — streaming it as a plain append would silently skip the row
+    change (the same contract that makes delete_mor itself a change
+    commit)."""
+    from octopufs_spark.merge import delete_where_mor, delete_where_mor_positional
 
     write_and_commit(_df(spark, 0, 10), table)
     table.create_branch("dev")
-    delete_where_mor(spark, table, spark.range(0, 3), ["id"], branch="dev")
+    if kind == "eq":
+        delete_where_mor(spark, table, spark.range(0, 3), ["id"], branch="dev")
+    else:
+        delete_where_mor_positional(spark, table, "id < 3", branch="dev")
     assert _ids(table.read(spark, branch="dev")) == set(range(3, 10))
     assert _ids(table.read(spark)) == set(range(10))
     pv = table.fast_forward("dev")

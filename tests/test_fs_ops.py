@@ -4,12 +4,13 @@ TestSubFolderCopy/Move, retry behavior)."""
 from __future__ import annotations
 
 import importlib.util
+import uuid
 from pathlib import Path
 
 import pytest
 
 from octopufs_spark.fs import distributed, list_tree
-from octopufs_spark.fs.core import MAX_ATTEMPTS, retry_failed
+from octopufs_spark.fs.core import MAX_ATTEMPTS, get_filesystem, retry_failed
 from octopufs_spark.fs.delta import get_delta, synchronize
 from octopufs_spark.fs.distributed import copy_files, copy_folder
 from octopufs_spark.fs.local import (
@@ -85,6 +86,42 @@ def test_copy_self_copy_fails_alone(spark, tmp_path, copy_path):
     assert (tmp_path / "out" / "a.bin").read_bytes() == b"a" * 50
     assert (tmp_path / "b.bin").read_bytes() == b"b" * 50
     assert bool(jobs) == (copy_path == "spark")
+
+
+@pytest.mark.parametrize(
+    "scheme, spelling",
+    [
+        ("local", "d//a.bin"),
+        ("local", "d/./a.bin"),
+        ("local", "link/a.bin"),
+        ("mock", "d//a.bin"),
+        ("mock", "d/./a.bin"),
+    ],
+    ids=["local-double-slash", "local-dot", "local-symlinked-dir", "mock-double-slash", "mock-dot"],
+)
+def test_copy_aliased_self_copy_fails_alone(spark, tmp_path, copy_path, scheme, spelling):
+    """A target that names its source by another spelling (``//``,
+    ``/./``, a symlinked directory) is a self-copy: the pair fails
+    alone and the source keeps its bytes; the other pair lands."""
+    root = f"mock://self-copy-{uuid.uuid4().hex[:12]}" if scheme == "mock" else str(tmp_path)
+    fs, base = get_filesystem(root)
+    fs.create_dir(f"{base}/d", recursive=True)
+    with fs.open_output_stream(f"{base}/d/a.bin") as f:
+        f.write(b"a" * 50)
+    (tmp_path / "link").symlink_to(tmp_path / "d", target_is_directory=True)
+    (tmp_path / "b.bin").write_bytes(b"b" * 50)
+    pairs = [
+        Paths(f"{root}/d/a.bin", f"{root}/{spelling}"),
+        Paths(str(tmp_path / "b.bin"), str(tmp_path / "out" / "b.bin")),
+    ]
+    try:
+        failing_copy_jobs(spark, pairs, "distributed copy failed for 1/1 files")
+        with fs.open_input_stream(f"{base}/d/a.bin") as f:
+            assert f.read() == b"a" * 50
+    finally:
+        if scheme == "mock":
+            fs.delete_dir(base)
+    assert (tmp_path / "out" / "b.bin").read_bytes() == b"b" * 50
 
 
 def test_copy_unresolvable_path_fails_alone(spark, tmp_path, copy_path):

@@ -3735,3 +3735,23 @@ def test_vectors_and_merge_keep_the_column_order(spark, table):
     assert m.operation == "append" and m.meta["data_schema"]["fields"][0]["name"] == "id"
     got = sorted(r.id for r in table.read(spark).collect())
     assert got == [0, 1] + list(range(3, 25)) + list(range(30, 35))
+
+
+def test_maintenance_probe_runs(spark, tmp_path):
+    """``tools/maintenance_probe.py`` stays runnable: one small probe
+    reports every figure, its row-count check holds, and it removes
+    the tables it built."""
+    import importlib.util
+
+    tool = Path(__file__).resolve().parents[1] / "tools" / "maintenance_probe.py"
+    spec = importlib.util.spec_from_file_location("maintenance_probe", tool)
+    probe = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(probe)
+    out = probe.probe(spark, rows=4000, parts=4, work=str(tmp_path))
+    assert set(out) == {
+        "rows", "partitions", "files_before", "scoped_one_partition_sec",
+        "full_table_sec", "auto_optimize_sec", "auto_optimize_partitions",
+        "files_after_auto", "consolidate_16_vectors_sec",
+    }  # fmt: skip
+    assert (out["rows"], out["partitions"], out["auto_optimize_partitions"]) == (4000, 4, 4)
+    assert list(tmp_path.iterdir()) == []

@@ -168,11 +168,25 @@ _A, _B = "data-0/part-0000.parquet", "data-0/part-0001.parquet"
 _REWRITE, _APPENDED = "rw/part-0000.parquet", "app/part-0000.parquet"
 
 
+def _vector(log: ManifestLog, step: str) -> dict:
+    """Write a delete vector for ``step`` and return its entry: ``eq``
+    (an equality vector on id 1) or ``pos:<file>`` (a positional vector
+    naming row 0 of that file)."""
+    root = Path(log.root_path)
+    (root / "_dv").mkdir(exist_ok=True)
+    path = f"_dv/dv-{len(list((root / '_dv').iterdir()))}.parquet"
+    if step == "eq":
+        pq.write_table(pa.table({"id": [1]}), root / path)
+        return {"path": path, "keys": ["id"]}
+    pq.write_table(pa.table({"file": [step[4:]], "pos": [0]}), root / path)
+    return {"path": path, "type": "positional"}
+
+
 def _commit(log: ManifestLog, step: str) -> str | None:
     """Commit one racer or setup step on ``log``: ``append`` (one
-    file), ``overwrite`` (a new snapshot of fresh files), ``eq`` (an
-    equality delete vector on id 1) or ``pos:<file>`` (a positional
-    vector naming row 0 of that file). Returns a vector's path."""
+    file), ``overwrite`` (a new snapshot of fresh files), ``rw:<file>``
+    (a rewrite of that file) or a merge-on-read delete of a
+    :func:`_vector` step. Returns a vector's path."""
     root = Path(log.root_path)
     if step == "append":
         (root / "app").mkdir()
@@ -184,16 +198,14 @@ def _commit(log: ManifestLog, step: str) -> str | None:
         pq.write_table(pa.table({"id": [9]}), root / "ow" / "part-0000.parquet")
         log.commit_overwrite("ow")
         return None
-    (root / "_dv").mkdir(exist_ok=True)
-    path = f"_dv/dv-{len(list((root / '_dv').iterdir()))}.parquet"
-    if step == "eq":
-        pq.write_table(pa.table({"id": [1]}), root / path)
-        dv = {"path": path, "keys": ["id"]}
-    else:
-        pq.write_table(pa.table({"file": [step[4:]], "pos": [0]}), root / path)
-        dv = {"path": path, "type": "positional"}
-    log._commit_with_retry(lambda p: list(p.files), "delete_mor", {"delete_vectors": [dv]})
-    return path
+    if step.startswith("rw:"):
+        (root / "rw").mkdir()
+        pq.write_table(pa.table({"id": [0]}), root / _REWRITE)
+        log.commit_rewrite(log.read_manifest(), [step[3:]], [_REWRITE], "compact")
+        return None
+    dv = _vector(log, step)
+    log.commit_rewrite(log.read_manifest(), [], [], "delete_mor", {"delete_vectors": [dv]})
+    return dv["path"]
 
 
 @pytest.mark.parametrize(
@@ -260,6 +272,54 @@ def test_commit_rewrite_rule(tmp_path, before, racers, replaced, inserts, publis
     assert (m.version, m.operation, m.files) == (head + 1, "rewrite", published)
     live = [dv["path"] for dv in m.meta.get("delete_vectors", [])]
     assert live == ([p for p in paths if p] if vectors == "carried" else [])
+
+
+@pytest.mark.parametrize(
+    "before, racers, adds, retires, outcome",
+    [
+        # an equality delete carries past a racing append and vector
+        ([], ["append", "eq"], "eq", 0, [_APPENDED, _A, _B]),
+        # a positional delete aborts when a file it names left...
+        ([], [f"rw:{_A}"], f"pos:{_A}", 0, "concurrent rewrite"),
+        # ...and publishes when only a file it does not name was rewritten
+        ([], [f"rw:{_B}"], f"pos:{_A}", 0, [_A, _REWRITE]),
+        # a consolidation aborts when a vector it retires is gone...
+        (["eq", "eq"], ["overwrite"], "eq", 2, "retired delete vector"),
+        # ...and carries a racing equality vector
+        (["eq", "eq"], ["eq"], "eq", 2, [_A, _B]),
+    ],
+    ids=[
+        "eq-delete-carries-racers",
+        "pos-delete-names-rewritten",
+        "pos-delete-names-kept",
+        "consolidate-retired-gone",
+        "consolidate-carries-racing-eq",
+    ],
+)
+def test_commit_rewrite_vector_rule(tmp_path, before, racers, adds, retires, outcome):
+    """The vector rows of the read-set rule: a commit that replaces no
+    file adds the vector ``adds`` and retires the first ``retires``
+    vectors it read. An abort (``outcome``: the message) publishes
+    nothing; a publish keeps the live files (``outcome``) and every
+    vector but the retired ones, its own last."""
+    log = _log_with_versions(tmp_path / "t", versions=1, files=2)
+    paths = [_commit(log, step) for step in before]
+    read = log.read_manifest()
+    racer_paths = [p for p in (_commit(log, step) for step in racers) if p]
+    head = log.latest_version()
+    dv = _vector(log, adds)
+    op = "dv-consolidate" if retires else "delete_mor"
+    args = (read, [], [], op, {"delete_vectors": [dv]})
+    if isinstance(outcome, str):
+        with pytest.raises(ConcurrentModificationError, match=outcome):
+            log.commit_rewrite(*args, retired=paths[:retires])
+        assert log.latest_version() == head
+        return
+    m = log.read_manifest(log.commit_rewrite(*args, retired=paths[:retires]))
+    assert (m.version, m.operation, m.files) == (head + 1, op, outcome)
+    live = [v["path"] for v in m.meta["delete_vectors"]]
+    assert live == paths[retires:] + racer_paths + [dv["path"]]
+    assert "replaced_vector_paths" not in m.meta
 
 
 def _schema(*cols: str) -> dict:

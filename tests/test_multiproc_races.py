@@ -70,20 +70,16 @@ def _race_worker(root: str, wid: int, out: "mp.Queue") -> None:
         op = rng.choice(["append", "append", "wap", "branch_ff", "mor"])
         try:
             if op == "mor":
-                # equality delete vector: the commit half of
-                # delete_where_mor (the vector parquet itself needs no
-                # Spark) — races the meta-carry path against appends
+                # equality delete vector: the commit delete_where_mor
+                # makes (the vector parquet itself needs no Spark) —
+                # races the meta-carry path against appends
                 dv_rel = f"_dv/dv-{marker}.parquet"
                 os.makedirs(f"{root}/_dv", exist_ok=True)
                 pq.write_table(pa.table({"id": [wid]}), f"{root}/{dv_rel}")
-
-                def mor_build(parent):
-                    if parent is None:
-                        raise ValueError("MOR delete requires a snapshot")
-                    return list(parent.files)
-
-                t._commit_with_retry(
-                    mor_build,
+                t.commit_rewrite(
+                    t.read_manifest(),
+                    [],
+                    [],
                     "delete_mor",
                     {"delete_vectors": [{"path": dv_rel, "keys": ["id"]}]},
                 )
