@@ -5,14 +5,26 @@ is rewritten when its upper-median data file is below the target size,
 into as many files as its bytes fill targets (reference:
 figureOutNumberOfPartition, Coalesce.scala:19-31). Its files are split
 into that many groups of whole files, balanced by bytes, and the groups
-of all leaves run as ONE Spark job, one task per group — the pattern of
-the reference's distributed copy (DistributedExecution.scala:42-84),
-not its one read→coalesce→write job per folder from a 10-thread pool
-(Coalesce.scala:13-15, 85-97). A task streams its files' row groups
-through pyarrow into one file in the leaf's ``_temp`` sibling; the
-driver swaps a leaf in once all its groups succeeded with one schema
-(reference: replaceFolder, Coalesce.scala:77-82). Failed groups rerun
-through ``fs.core.retry_failed``.
+of all leaves run as one batch through ``fs.distributed.map_partitions``
+— not the reference's one read→coalesce→write job per folder from a
+10-thread pool (Coalesce.scala:13-15, 85-97). A batch of at least
+``DRIVER_COPY_BYTES`` of input (by the sizes the listing returned) runs
+as ONE Spark job, one task per group, the pattern of the reference's
+distributed copy (DistributedExecution.scala:42-84); a smaller one runs
+on the driver's copy pool and launches no job. Either way a group
+streams its files' row groups through pyarrow into one file in the
+leaf's ``_temp`` sibling; the driver swaps a leaf in once all its groups
+succeeded with one schema (reference: replaceFolder,
+Coalesce.scala:77-82). Failed groups rerun through
+``fs.core.retry_failed``.
+
+On the driver path the rewrites' memory is the driver's: a group
+buffers decoded row groups up to ``ROW_GROUP_BYTES`` before it flushes
+them, so the driver holds the decoded form of at most one batch of
+fewer than ``DRIVER_COPY_BYTES`` encoded bytes, spread over its
+threads, plus the writers' buffers: a batch just under the limit grew
+the driver's RSS by 96–241 MiB on a 4-CPU x86 VM (SCALE.md,
+"Compaction on the driver or in a Spark job").
 
 What the rewrite keeps of Spark's writer: the first file's key-value
 metadata (Spark's row metadata is the schema Spark reads back, e.g.
@@ -50,6 +62,7 @@ from pyarrow import fs as pafs
 from pyspark.sql import SparkSession
 
 from octopufs_spark.fs.core import get_filesystem, list_tree, retry_failed, to_uri
+from octopufs_spark.fs.distributed import map_partitions
 from octopufs_spark.fs.local import _run_threaded
 from octopufs_spark.fs.model import FsElement, FsOperationResult
 
@@ -205,7 +218,7 @@ def _rewrite(fs: pafs.FileSystem, out: str, paths: list[str], codec: str):
                 elif _fingerprint(pf) != fingerprint:
                     return None
                 for i in range(pf.num_row_groups):
-                    # a task holds one slot: no decode threads of its own
+                    # a partition holds one slot: no decode threads of its own
                     buffered.append(pf.read_row_group(i, use_threads=False))
                     size += buffered[-1].nbytes
                     if size >= ROW_GROUP_BYTES:
@@ -220,8 +233,9 @@ def _rewrite(fs: pafs.FileSystem, out: str, paths: list[str], codec: str):
 
 
 def _rewrite_groups(codec: str, groups):
-    """Executor-side: rewrite each (leaf URI, output, inputs) group.
-    Yields (output, ok, fingerprint); ok is False on an I/O error."""
+    """Rewrite each (leaf URI, output, inputs) group of one partition —
+    a Spark task or a driver thread. Yields (output, ok, fingerprint);
+    ok is False on an I/O error."""
     for leaf, out, paths in groups:
         try:
             fs, _ = get_filesystem(leaf)  # core's dispatch, so mock:// works in tasks
@@ -239,14 +253,16 @@ def _prepare_temp(leaf: str) -> None:
 
 
 def _compact(spark: SparkSession, leaves: dict[str, list[FsElement]], requested_mb: int) -> int:
-    """Rewrite every leaf that needs it in one Spark job, then swap each
-    leaf whose groups all succeeded with one fingerprint. Returns the
-    number of leaves swapped; raises naming the leaves whose groups
-    still failed after the retries. Folder preparation and swaps are
-    per-leaf metadata calls, fanned out on driver threads like
+    """Rewrite every leaf that needs it in one batch of
+    ``fs.distributed.map_partitions`` (on the driver, or one Spark job),
+    then swap each leaf whose groups all succeeded with one fingerprint.
+    Returns the number of leaves swapped; raises naming the leaves whose
+    groups still failed after the retries. Folder preparation and swaps
+    are per-leaf metadata calls, fanned out on driver threads like
     ``fs.local``'s moves."""
     run = uuid.uuid4().hex
     tasks, outputs = [], {}  # outputs: leaf -> its groups' output paths
+    sizes = {}  # output -> its group's input bytes, as listed
     for leaf, files in leaves.items():
         n = _partitions([f.byte_size for f in files], requested_mb)
         if n == -1:
@@ -254,18 +270,20 @@ def _compact(spark: SparkSession, leaves: dict[str, list[FsElement]], requested_
         _, temp = get_filesystem(leaf + "_temp")
         groups = _balanced(files, n)
         outputs[leaf] = [f"{temp}/part-{i:05d}-{run}.parquet" for i in range(len(groups))]
-        tasks += [(leaf, out, [f.path for f in g]) for out, g in zip(outputs[leaf], groups)]
+        for out, g in zip(outputs[leaf], groups):
+            tasks.append((leaf, out, [f.path for f in g]))
+            sizes[out] = sum(f.byte_size for f in g)
     if not tasks:
         return 0
     _run_threaded(_prepare_temp, list(outputs))
 
     codec = spark.conf.get("spark.sql.parquet.compression.codec", "snappy").lower()
     rewrite = partial(_rewrite_groups, _CODECS.get(codec, codec))
-    sc = spark.sparkContext
     fingerprints = {}
 
     def run_batch(batch):
-        raw = sc.parallelize(batch, len(batch)).mapPartitions(rewrite).collect()
+        total = sum(sizes[out] for _, out, _ in batch)
+        raw = map_partitions(spark, batch, total, rewrite, len(batch))
         fingerprints.update((out, fp) for out, ok, fp in raw if ok)
         return [FsOperationResult(out, ok) for out, ok, _ in raw]
 
@@ -326,7 +344,7 @@ def do_auto_coalesce(
 def do_partition_coalesce(
     spark: SparkSession, top_uri: str, requested_file_size_mb: int = DEFAULT_TARGET_MB
 ) -> int:
-    """Compact every leaf folder of a tree in one job
+    """Compact every leaf folder of a tree in one batch
     (reference: doPartitionCoalesce, Coalesce.scala:85-93). Returns
     #rewritten."""
     return _compact(spark, _leaf_files(top_uri), requested_file_size_mb)
@@ -335,7 +353,7 @@ def do_partition_coalesce(
 def do_it_all(
     spark: SparkSession, top_uris: list[str], requested_file_size_mb: int = DEFAULT_TARGET_MB
 ) -> int:
-    """Compact every leaf folder under the given roots in one job
+    """Compact every leaf folder under the given roots in one batch
     (reference: doItAll, Coalesce.scala:95-97). Returns #rewritten."""
     leaves: dict[str, list[FsElement]] = {}
     for top in top_uris:

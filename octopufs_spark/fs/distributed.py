@@ -1,5 +1,5 @@
-"""Distributed file copy: byte-copies on the cluster, small batches on
-the driver.
+"""Distributed file copy, and the one rule for where a batch of bytes
+moves: on the cluster, or on the driver when it is small.
 
 Rebuild of the reference's DistributedExecution (reference:
 fs/DistributedExecution.scala:42-84): one file per task by default so
@@ -11,13 +11,17 @@ failed subset re-run through the shared ``core.retry_failed`` (at most
 5 attempts, :72-83). A batch in which every pair failed aborts the
 copy at once instead of retrying, as the reference's loop does.
 
-A batch whose sources total less than ``DRIVER_COPY_BYTES`` copies on
-a small driver thread pool instead: a Spark job of Python tasks has a
-fixed cost that a few hundred KB do not need. Spark draws the same
-line for its own file listing — ``InMemoryFileIndex`` lists on the
-driver below ``spark.sql.sources.parallelPartitionDiscovery.threshold``
-paths and launches a job above it. Both paths run one per-pair body,
-:func:`_copy_pair`, so the copy contract lives in one place.
+A batch of less than ``DRIVER_COPY_BYTES`` runs on a small driver
+thread pool instead: a Spark job of Python tasks has a fixed cost that a
+few hundred KB do not need. Spark draws the same line for its own file
+listing — ``InMemoryFileIndex`` lists on the driver below
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths and
+launches a job above it. :func:`map_partitions` holds that rule for
+every byte-moving batch of the storage toolkit: copies here, and
+``compact``'s rewrites of small files. Each caller hands it one
+per-partition body, which runs in the driver's threads or in Spark's
+tasks alike, so a copy's contract (:func:`_copy_pair`) and a rewrite's
+live in one place each.
 
 Python workers have no py4j bridge to Hadoop FileSystems, so the
 per-task copy uses pyarrow.fs resolved from the URI inside the task
@@ -58,16 +62,16 @@ from octopufs_spark.fs.core import (
 from octopufs_spark.fs.local import _run_threaded
 from octopufs_spark.fs.model import FsOperationResult, Paths
 
-# A batch whose sources total fewer bytes than this copies on the driver.
-# The crossover on a 4-CPU x86 VM (SCALE.md, "copies on the driver or in
-# a Spark job") lies between 64 and 256 MiB; this sits at its low end,
-# because on a real cluster the driver's one NIC and disk are the limit
-# while the executors' bandwidth adds up: 64 MiB is under a second at
-# 100 MB/s, about what a cluster takes to schedule a job, and any larger
-# batch still goes to the cluster.
+# A batch of fewer bytes than this runs on the driver: copies, and
+# compaction's rewrites. The copy crossover on a 4-CPU x86 VM (SCALE.md,
+# "Copies on the driver or in a Spark job") lies between 64 and 256 MiB;
+# this sits at its low end, because on a real cluster the driver's one
+# NIC and disk are the limit while the executors' bandwidth adds up:
+# 64 MiB is under a second at 100 MB/s, about what a cluster takes to
+# schedule a job, and any larger batch still goes to the cluster.
 DRIVER_COPY_BYTES = 64 * 1024 * 1024
 # The driver pool: a few streams hide per-file latency; the bytes, not
-# the thread count, bound a driver copy.
+# the thread count, bound a driver batch.
 DRIVER_COPY_WORKERS = 16
 
 
@@ -103,20 +107,39 @@ def _copy_pair(resolve: Resolve, src: str, dst: str) -> bool:
 
 
 def _copy_partition(pairs):
-    """Executor-side: copy each (src, dst) pair through one
-    ``core.resolver`` per task, so a task may mix filesystems and each
-    scheme and authority opens once."""
+    """Copy each (src, dst) pair of one partition — a Spark task or a
+    driver thread — through one ``core.resolver``, so a partition may
+    mix filesystems and each scheme and authority opens once."""
     resolve = resolver()
     for src, dst in pairs:
         yield (src, _copy_pair(resolve, src, dst))
 
 
-def _fits_on_driver(pairs: list[tuple[str, str]], resolve: Resolve) -> bool:
-    """Whether the sources of ``pairs`` total fewer than
-    ``DRIVER_COPY_BYTES``. The stats run on the driver pool, a chunk at
-    a time, and stop once the total reaches the limit. A source that
+def map_partitions(spark: SparkSession, batch: list, total_bytes: int, body, partitions: int) -> list:
+    """``body`` over ``batch`` in partitions, and its results in batch
+    order: on the driver when the batch moves fewer than
+    ``DRIVER_COPY_BYTES``, in one Spark job otherwise.
+
+    ``body`` maps one partition's items to an iterator of results, as
+    ``RDD.mapPartitions`` takes it. On the driver, the batch is cut into
+    at most ``DRIVER_COPY_WORKERS`` contiguous partitions, each run by a
+    thread of ``fs.local._run_threaded``, whose threads exit before this
+    returns; ``partitions`` names Spark tasks only. In Spark, the batch
+    is ``sc.parallelize(batch, partitions)``."""
+    if total_bytes < DRIVER_COPY_BYTES:
+        n = min(DRIVER_COPY_WORKERS, len(batch))
+        parts = [batch[i * len(batch) // n : (i + 1) * len(batch) // n] for i in range(n)]
+        return [r for part in _run_threaded(lambda p: list(body(p)), parts, n) for r in part]
+    return spark.sparkContext.parallelize(batch, max(1, partitions)).mapPartitions(body).collect()
+
+
+def _source_bytes(pairs: list[tuple[str, str]]) -> int:
+    """The total size of the sources of ``pairs``, or any figure of at
+    least ``DRIVER_COPY_BYTES`` once it is reached. The stats run on the
+    driver pool, a chunk at a time, through one resolver. A source that
     cannot be resolved or is missing counts as 0 bytes: its copy fails
     its own pair on either path."""
+    resolve = resolver()
 
     def size(pair: tuple[str, str]) -> int:
         try:
@@ -129,8 +152,8 @@ def _fits_on_driver(pairs: list[tuple[str, str]], resolve: Resolve) -> bool:
     for i in range(0, len(pairs), step):
         total += sum(_run_threaded(size, pairs[i : i + step], DRIVER_COPY_WORKERS))
         if total >= DRIVER_COPY_BYTES:
-            return False
-    return True
+            break
+    return total
 
 
 def copy_files(
@@ -139,30 +162,21 @@ def copy_files(
     """Copy explicit (source, target) pairs
     (reference: copyFiles, fs/DistributedExecution.scala:42-84).
 
-    Each batch — the first, then each retry of its failed subset —
-    picks its path by the total bytes of its sources. Below
-    ``DRIVER_COPY_BYTES`` the pairs copy on a driver pool of at most
-    ``DRIVER_COPY_WORKERS`` threads (never more than there are pairs),
-    which launches no Spark job; the threads share one resolver, and a
-    head two threads open at once is opened twice, which is harmless.
-    Otherwise one Spark job copies them in ``task_count`` tasks (-1:
-    one task per file); ``task_count`` names Spark tasks only and has
-    no effect on the driver path. A batch in which every pair failed
-    raises at once; failed pairs retry through ``core.retry_failed``."""
+    Each batch — the first, then each retry of its failed subset — runs
+    through :func:`map_partitions` by the total bytes of its sources:
+    on the driver pool below ``DRIVER_COPY_BYTES``, which launches no
+    Spark job, otherwise as one Spark job of ``task_count`` tasks (-1:
+    one task per file); ``task_count`` has no effect on the driver path.
+    Each partition copies through one resolver. A batch in which every
+    pair failed raises at once; failed pairs retry through
+    ``core.retry_failed``."""
     if not paths:
         return []
-    sc = spark.sparkContext
 
     def copy_batch(batch: list[Paths]) -> list[FsOperationResult]:
         pairs = [(p.source_path, p.target_path) for p in batch]
-        resolve = resolver()
-        if _fits_on_driver(pairs, resolve):
-            raw = _run_threaded(
-                lambda pair: (pair[0], _copy_pair(resolve, *pair)), pairs, DRIVER_COPY_WORKERS
-            )
-        else:
-            n = len(batch) if task_count == -1 else task_count
-            raw = sc.parallelize(pairs, max(1, n)).mapPartitions(_copy_partition).collect()
+        n = len(batch) if task_count == -1 else task_count
+        raw = map_partitions(spark, pairs, _source_bytes(pairs), _copy_partition, n)
         if not any(ok for _, ok in raw):
             raise RuntimeError(f"distributed copy failed for {len(batch)}/{len(batch)} files")
         return [FsOperationResult(path, ok) for path, ok in raw]

@@ -8,6 +8,10 @@ a pure-SQL analog (INSERT [OVERWRITE] ... noted per function) for when
 byte-identity of files is not required; the file-level path exists
 because at 100 TB a metadata rename or a 1-file-per-task byte copy is
 far cheaper than a full read→shuffle→write.
+
+An op fetches each table's catalog entry once and hands it to every
+``catalog`` helper it calls (``meta``), rather than letting each helper
+fetch it again over py4j.
 """
 
 from __future__ import annotations
@@ -27,13 +31,20 @@ from octopufs_spark.fs.safety import SafetyFuse
 log = logging.getLogger(__name__)
 
 
-def _paths_for_table_copy(spark: SparkSession, src_table: str, trg_table: str) -> list[Paths]:
+def _entries(spark: SparkSession, *tables: str) -> list:
+    """Each table's catalog entry, fetched once for an op."""
+    return [catalog.catalog_table(spark, t) for t in tables]
+
+
+def _paths_for_table_copy(
+    spark: SparkSession, src_table: str, trg_table: str, src_meta, trg_meta
+) -> list[Paths]:
     """Zip source files with prefix-rewritten target paths
     (reference: Assistant.getTablesPathsList, Assistant.scala:12-24)."""
     return rebase_paths(
         catalog.get_list_of_table_files(spark, src_table),
-        catalog.get_table_location(spark, src_table),
-        catalog.get_table_location(spark, trg_table),
+        catalog.get_table_location(spark, src_table, src_meta),
+        catalog.get_table_location(spark, trg_table, trg_meta),
     )
 
 
@@ -43,8 +54,10 @@ def copy_files_between_tables(
     """Append-copy all source-table files into the target table's
     folder (reference: copyFilesBetweenTables, Promotor.scala:114-126).
     SQL analog: INSERT INTO trg SELECT * FROM src."""
-    catalog.validate_compatibility(spark, src_table, trg_table)
-    results = copy_files(spark, _paths_for_table_copy(spark, src_table, trg_table), task_count)
+    src_meta, trg_meta = _entries(spark, src_table, trg_table)
+    catalog.validate_compatibility(spark, src_table, trg_table, src_meta, trg_meta)
+    pairs = _paths_for_table_copy(spark, src_table, trg_table, src_meta, trg_meta)
+    results = copy_files(spark, pairs, task_count)
     catalog.refresh_metadata(spark, trg_table)
     return results
 
@@ -55,10 +68,12 @@ def copy_overwrite_table(
     """Replace target-table content with source's files; target folder
     node (and its permissions) preserved (reference: copyOverwriteTable,
     Promotor.scala:93-100). SQL analog: INSERT OVERWRITE TABLE."""
-    catalog.validate_compatibility(spark, src_table, trg_table)
-    trg_loc = catalog.get_table_location(spark, trg_table)
+    src_meta, trg_meta = _entries(spark, src_table, trg_table)
+    catalog.validate_compatibility(spark, src_table, trg_table, src_meta, trg_meta)
+    trg_loc = catalog.get_table_location(spark, trg_table, trg_meta)
     delete_folder(trg_loc, delete_content_only=True)
-    results = copy_files(spark, _paths_for_table_copy(spark, src_table, trg_table), task_count)
+    pairs = _paths_for_table_copy(spark, src_table, trg_table, src_meta, trg_meta)
+    results = copy_files(spark, pairs, task_count)
     catalog.refresh_metadata(spark, trg_table)
     return results
 
@@ -73,15 +88,29 @@ def copy_table_partitions(
     """Append-copy the files of substring-matched partitions
     (reference: copyTablePartitions, Promotor.scala:278-298). SQL
     analog: INSERT INTO trg SELECT * FROM src WHERE part IN (...)."""
-    catalog.validate_compatibility(spark, src_table, trg_table)
-    parts = catalog.filter_partitions(spark, src_table, match_strings)
+    src_meta, trg_meta = _entries(spark, src_table, trg_table)
+    return _copy_partitions(spark, src_table, trg_table, match_strings, task_count, src_meta, trg_meta)
+
+
+def _copy_partitions(
+    spark: SparkSession,
+    src_table: str,
+    trg_table: str,
+    match_strings: list[str],
+    task_count: int,
+    src_meta,
+    trg_meta,
+) -> list[FsOperationResult]:
+    """:func:`copy_table_partitions` with both tables' entries in hand."""
+    catalog.validate_compatibility(spark, src_table, trg_table, src_meta, trg_meta)
+    parts = catalog.filter_partitions(spark, src_table, match_strings, src_meta)
     if not parts:
         raise ValueError(f"no partitions of {src_table} match {match_strings}")
     files = [f.path for f in catalog.get_files_only_of_folders(parts)]
     pairs = rebase_paths(
         files,
-        catalog.get_table_location(spark, src_table),
-        catalog.get_table_location(spark, trg_table),
+        catalog.get_table_location(spark, src_table, src_meta),
+        catalog.get_table_location(spark, trg_table, trg_meta),
     )
     results = copy_files(spark, pairs, task_count)
     catalog.refresh_metadata(spark, trg_table)
@@ -99,15 +128,18 @@ def copy_overwrite_partitions(
     (reference: copyOverwritePartitions, Promotor.scala:259-264). SQL
     analog: dynamic-partition INSERT OVERWRITE (the engine default
     partitionOverwriteMode=dynamic exists for exactly this)."""
-    _delete_partitions(spark, trg_table, match_strings)
-    return copy_table_partitions(spark, src_table, trg_table, match_strings, task_count)
+    src_meta, trg_meta = _entries(spark, src_table, trg_table)
+    _delete_partitions(spark, trg_table, match_strings, trg_meta)
+    return _copy_partitions(spark, src_table, trg_table, match_strings, task_count, src_meta, trg_meta)
 
 
-def _delete_partitions(spark: SparkSession, table: str, match_strings: list[str]) -> list[str]:
+def _delete_partitions(
+    spark: SparkSession, table: str, match_strings: list[str], meta=None
+) -> list[str]:
     """Delete the substring-matched partition folders of ``table`` and
     return them; the caller refreshes the table once, after its last
     file-level step."""
-    parts = catalog.filter_partitions(spark, table, match_strings)
+    parts = catalog.filter_partitions(spark, table, match_strings, meta)
     if parts:
         delete_paths(parts)
     return parts
@@ -130,13 +162,14 @@ def move_table_partitions(
     partitions, rename source partition dirs into the target, refresh
     both (reference: moveTablePartitions, Promotor.scala:346-367).
     Driver-threaded — renames need no cluster."""
-    catalog.validate_compatibility(spark, src_table, trg_table)
-    parts = catalog.filter_partitions(spark, src_table, match_strings)
+    src_meta, trg_meta = _entries(spark, src_table, trg_table)
+    catalog.validate_compatibility(spark, src_table, trg_table, src_meta, trg_meta)
+    parts = catalog.filter_partitions(spark, src_table, match_strings, src_meta)
     if not parts:
         raise ValueError(f"no partitions of {src_table} match {match_strings}")
-    src_loc = catalog.get_table_location(spark, src_table)
-    trg_loc = catalog.get_table_location(spark, trg_table)
-    _delete_partitions(spark, trg_table, match_strings)
+    src_loc = catalog.get_table_location(spark, src_table, src_meta)
+    trg_loc = catalog.get_table_location(spark, trg_table, trg_meta)
+    _delete_partitions(spark, trg_table, match_strings, trg_meta)
     results = move_folders(spark, parts, src_loc, trg_loc)
     catalog.refresh_metadata(spark, src_table)
     catalog.refresh_metadata(spark, trg_table)
@@ -168,9 +201,10 @@ def move_files_between_tables(
 ) -> list[FsOperationResult]:
     """Move source-table content into target (target emptied first)
     (reference: moveFilesBetweenTables, Promotor.scala:393-401)."""
-    catalog.validate_compatibility(spark, src_table, trg_table)
-    src_loc = catalog.get_table_location(spark, src_table)
-    trg_loc = catalog.get_table_location(spark, trg_table)
+    src_meta, trg_meta = _entries(spark, src_table, trg_table)
+    catalog.validate_compatibility(spark, src_table, trg_table, src_meta, trg_meta)
+    src_loc = catalog.get_table_location(spark, src_table, src_meta)
+    trg_loc = catalog.get_table_location(spark, trg_table, trg_meta)
     results = move_folder_content(src_loc, trg_loc, keep_source_folder=True)
     catalog.refresh_metadata(spark, src_table)
     catalog.refresh_metadata(spark, trg_table)

@@ -38,14 +38,40 @@ def jobs_of(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
-@pytest.fixture(params=["driver", "spark"])
-def copy_path(request, monkeypatch):
-    """Runs a copy test on each path of ``fs.distributed.copy_files``:
-    ``driver`` keeps the size limit (test batches are far below it),
-    ``spark`` sets it to 0 so that every batch runs a Spark job."""
-    if request.param == "spark":
+BATCH_PATHS = ("driver", "spark")
+
+
+def _send_batches(monkeypatch, path: str) -> None:
+    """Sends every batch of ``fs.distributed.map_partitions`` — copies
+    and compaction's rewrites — down ``path``: ``driver`` keeps the size
+    limit (test batches are far below it), ``spark`` sets it to 0 so
+    that every batch runs a Spark job."""
+    if path == "spark":
         monkeypatch.setattr(distributed, "DRIVER_COPY_BYTES", 0)
+
+
+@pytest.fixture(params=BATCH_PATHS)
+def batch_path(request, monkeypatch):
+    """Runs a test once on each path of ``fs.distributed.map_partitions``
+    (see ``_send_batches``); the test's id names the path."""
+    _send_batches(monkeypatch, request.param)
     return request.param
+
+
+@pytest.fixture()
+def each_batch_path(monkeypatch):
+    """``batch_path`` as a loop inside one test: ``for path in
+    each_batch_path():`` runs the body on the driver path, then again
+    on the Spark path. The test keeps one id, so each run must build
+    its own inputs (under ``tmp_path / path``)."""
+
+    def paths():
+        for path in BATCH_PATHS:
+            with monkeypatch.context() as m:
+                _send_batches(m, path)
+                yield path
+
+    return paths
 
 
 def failing_copy_jobs(spark, pairs, match: str) -> list[int]:

@@ -73,7 +73,7 @@ def test_distributed_copy_retry_exhaustion(spark, tmp_path):
         copy_files(spark, pairs)
 
 
-def test_copy_self_copy_fails_alone(spark, tmp_path, copy_path):
+def test_copy_self_copy_fails_alone(spark, tmp_path, batch_path):
     """A pair whose target is its own source, spelled another way,
     fails alone and leaves the source whole; the other pair lands."""
     (tmp_path / "a.bin").write_bytes(b"a" * 50)
@@ -85,7 +85,7 @@ def test_copy_self_copy_fails_alone(spark, tmp_path, copy_path):
     jobs = failing_copy_jobs(spark, pairs, "distributed copy failed")
     assert (tmp_path / "out" / "a.bin").read_bytes() == b"a" * 50
     assert (tmp_path / "b.bin").read_bytes() == b"b" * 50
-    assert bool(jobs) == (copy_path == "spark")
+    assert bool(jobs) == (batch_path == "spark")
 
 
 @pytest.mark.parametrize(
@@ -99,7 +99,7 @@ def test_copy_self_copy_fails_alone(spark, tmp_path, copy_path):
     ],
     ids=["local-double-slash", "local-dot", "local-symlinked-dir", "mock-double-slash", "mock-dot"],
 )
-def test_copy_aliased_self_copy_fails_alone(spark, tmp_path, copy_path, scheme, spelling):
+def test_copy_aliased_self_copy_fails_alone(spark, tmp_path, batch_path, scheme, spelling):
     """A target that names its source by another spelling (``//``,
     ``/./``, a symlinked directory) is a self-copy: the pair fails
     alone and the source keeps its bytes; the other pair lands."""
@@ -124,7 +124,7 @@ def test_copy_aliased_self_copy_fails_alone(spark, tmp_path, copy_path, scheme, 
     assert (tmp_path / "out" / "b.bin").read_bytes() == b"b" * 50
 
 
-def test_copy_unresolvable_path_fails_alone(spark, tmp_path, copy_path):
+def test_copy_unresolvable_path_fails_alone(spark, tmp_path, batch_path):
     (tmp_path / "a.bin").write_bytes(b"a")
     pairs = [
         Paths("nosuchscheme://bucket/a.bin", str(tmp_path / "out" / "x.bin")),
@@ -132,10 +132,10 @@ def test_copy_unresolvable_path_fails_alone(spark, tmp_path, copy_path):
     ]
     jobs = failing_copy_jobs(spark, pairs, "distributed copy failed")
     assert sorted(p.name for p in (tmp_path / "out").iterdir()) == ["a.bin"]
-    assert bool(jobs) == (copy_path == "spark")
+    assert bool(jobs) == (batch_path == "spark")
 
 
-def test_copy_missing_source_retries_then_raises(spark, tmp_path, copy_path):
+def test_copy_missing_source_retries_then_raises(spark, tmp_path, batch_path):
     """The missing source's pair is retried alone, and that retry,
     failing every pair it holds, ends the copy."""
     (tmp_path / "a.bin").write_bytes(b"a")
@@ -145,16 +145,16 @@ def test_copy_missing_source_retries_then_raises(spark, tmp_path, copy_path):
     ]
     jobs = failing_copy_jobs(spark, pairs, "distributed copy failed for 1/1 files")
     assert sorted(p.name for p in (tmp_path / "out").iterdir()) == ["a.bin"]
-    assert len(jobs) == (2 if copy_path == "spark" else 0)
+    assert len(jobs) == (2 if batch_path == "spark" else 0)
 
 
-def test_copy_batch_failing_every_pair_raises_at_once(spark, tmp_path, copy_path, monkeypatch):
+def test_copy_batch_failing_every_pair_raises_at_once(spark, tmp_path, batch_path, monkeypatch):
     calls = []
     real = distributed._copy_pair
     monkeypatch.setattr(distributed, "_copy_pair", lambda r, s, d: calls.append(s) or real(r, s, d))
     pairs = [Paths(str(tmp_path / f"gone{i}.bin"), str(tmp_path / f"out{i}.bin")) for i in range(2)]
     jobs = failing_copy_jobs(spark, pairs, "distributed copy failed for 2/2 files")
-    if copy_path == "spark":
+    if batch_path == "spark":
         assert len(jobs) == 1  # one attempt, no retry
     else:
         assert jobs == [] and len(calls) == 2
@@ -175,8 +175,9 @@ def test_copy_runs_a_spark_job_only_above_the_limit(spark, tmp_path, monkeypatch
 
 
 def test_copy_probe_sweeps_both_paths(spark, tmp_path):
-    """``tools/copy_probe.py`` stays runnable: one tiny point, measured
-    on the driver path and on the Spark path."""
+    """``tools/copy_probe.py`` stays runnable: one tiny point of each
+    mode, copy and compaction, measured on the driver path and on the
+    Spark path."""
     tool = Path(__file__).resolve().parents[1] / "tools" / "copy_probe.py"
     spec = importlib.util.spec_from_file_location("copy_probe", tool)
     probe = importlib.util.module_from_spec(spec)
@@ -189,6 +190,14 @@ def test_copy_probe_sweeps_both_paths(spark, tmp_path):
     }  # fmt: skip
     for path in ("driver", "spark"):
         assert rec[f"{path}_cpu_s"] >= 0 and rec[f"{path}_wall_s"] > 0
+    assert list(tmp_path.iterdir()) == []
+    # compaction mode: one tiny point of 2 parquet files in 2 leaves
+    (rec,) = probe.sweep(spark, [4096], [8192], repeats=1, tasks=2, work=str(tmp_path), mode="compact")
+    assert distributed.DRIVER_COPY_BYTES == limit
+    assert (rec["mode"], rec["files"]) == ("compact", 2) and rec["batch_bytes"] > 8192
+    for path in ("driver", "spark"):
+        assert rec[f"{path}_cpu_s"] >= 0 and rec[f"{path}_wall_s"] > 0
+    assert rec["driver_peak_rss_mb"] > 0 and rec["driver_rss_growth_mb"] >= 0
     assert list(tmp_path.iterdir()) == []
 
 

@@ -331,7 +331,7 @@ def test_mock_partial_failure_merges_with_retry(spark, remote_prefix):
     assert copied == {"good.bin"}
 
 
-def test_copy_contract_on_the_store(spark, remote_prefix, copy_path, monkeypatch):
+def test_copy_contract_on_the_store(spark, remote_prefix, batch_path, monkeypatch):
     """On the store, as on local disk: a self-copy and an unresolvable
     path fail only their own pairs, a missing source is retried and
     then raises, and a batch failing every pair raises at once."""
@@ -350,7 +350,7 @@ def test_copy_contract_on_the_store(spark, remote_prefix, copy_path, monkeypatch
     ]
     for pair in bad:
         jobs = failing_copy_jobs(spark, [good, pair], "distributed copy failed for 1/1 files")
-        assert len(jobs) == (2 if copy_path == "spark" else 0), pair
+        assert len(jobs) == (2 if batch_path == "spark" else 0), pair
     copied = {e.path.rsplit("/", 1)[-1] for e in list_tree(f"{remote_prefix}/trg") if not e.is_dir}
     assert copied == {"good.bin"}
     assert _get(f"{remote_prefix}/src/self.bin") == b"self"
@@ -359,13 +359,13 @@ def test_copy_contract_on_the_store(spark, remote_prefix, copy_path, monkeypatch
     real = distributed._copy_pair
     monkeypatch.setattr(distributed, "_copy_pair", lambda r, s, d: calls.append(s) or real(r, s, d))
     jobs = failing_copy_jobs(spark, bad, "distributed copy failed for 3/3 files")
-    if copy_path == "spark":
+    if batch_path == "spark":
         assert len(jobs) == 1
     else:
         assert jobs == [] and len(calls) == 3
 
 
-def test_copy_mixes_schemes_in_one_batch(spark, remote_prefix, tmp_path, copy_path):
+def test_copy_mixes_schemes_in_one_batch(spark, remote_prefix, tmp_path, batch_path):
     """One batch copies store to local disk, local disk to the store
     (by ``file://`` URI and by plain path) and store to store."""
     from octopufs_spark.fs.distributed import copy_files
@@ -382,7 +382,7 @@ def test_copy_mixes_schemes_in_one_batch(spark, remote_prefix, tmp_path, copy_pa
     ]
     results, jobs = jobs_of(spark, lambda: copy_files(spark, pairs))
     assert [r.success for r in results] == [True] * 4
-    assert len(jobs) == (1 if copy_path == "spark" else 0)
+    assert len(jobs) == (1 if batch_path == "spark" else 0)
     assert (tmp_path / "trg" / "m.bin").read_bytes() == b"mock"
     assert _get(f"{remote_prefix}/trg/f.bin") == b"file"
     assert _get(f"{remote_prefix}/trg/plain.bin") == b"file"
@@ -390,9 +390,11 @@ def test_copy_mixes_schemes_in_one_batch(spark, remote_prefix, tmp_path, copy_pa
 
 
 def test_driver_copy_threads_share_one_resolver(spark, remote_prefix, tmp_path):
-    """The driver pool's threads share one resolver whose heads they
-    open on first use: with a thread switch at nearly every bytecode,
-    a batch spanning three heads copies each file to its own target."""
+    """The driver pool's threads share one resolver for the size stats,
+    whose heads they open on first use, and the copy partitions run side
+    by side, each with its own: with a thread switch at nearly every
+    bytecode, a batch spanning three heads copies each file to its own
+    target."""
     import sys
 
     from octopufs_spark.fs.distributed import copy_files
@@ -415,28 +417,32 @@ def test_driver_copy_threads_share_one_resolver(spark, remote_prefix, tmp_path):
         assert _get(p.target_path) == str(i).encode() * 50
 
 
-def test_compaction_on_object_store(spark, remote_prefix):
-    """Compaction rewrites in executor tasks through ``core``'s scheme
-    dispatch, so a ``mock://`` tree — which Spark's JVM readers cannot
-    open — compacts like a local one."""
+def test_compaction_on_object_store(spark, remote_prefix, each_batch_path):
+    """Compaction rewrites through ``core``'s scheme dispatch, in driver
+    threads or in executor tasks, so a ``mock://`` tree — which Spark's
+    JVM readers cannot open — compacts like a local one on both paths."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from octopufs_spark import compact
     from octopufs_spark.fs.core import get_filesystem, list_tree
+    from tests.conftest import jobs_of
 
-    for leaf in ("p=0", "p=1"):
-        for i in range(5):
-            buf = pa.BufferOutputStream()
-            pq.write_table(pa.table({"id": [i, i + 10]}), buf)
-            _put(f"{remote_prefix}/t/{leaf}/part-{i}.parquet", buf.getvalue().to_pybytes())
-    assert compact.do_it_all(spark, [f"{remote_prefix}/t"]) == 2
     fs, _ = get_filesystem(remote_prefix)
-    data = [
-        e.path
-        for e in list_tree(f"{remote_prefix}/t")
-        if not e.is_dir and not e.path.rsplit("/", 1)[-1].startswith(("_", "."))
-    ]
-    assert sorted(p.split("/")[-2] for p in data) == ["p=0", "p=1"]
-    assert sum(pq.ParquetFile(fs.open_input_file(p)).metadata.num_rows for p in data) == 20
-    assert compact.do_it_all(spark, [f"{remote_prefix}/t"]) == 0
+    for path in each_batch_path():
+        root = f"{remote_prefix}/{path}/t"
+        for leaf in ("p=0", "p=1"):
+            for i in range(5):
+                buf = pa.BufferOutputStream()
+                pq.write_table(pa.table({"id": [i, i + 10]}), buf)
+                _put(f"{root}/{leaf}/part-{i}.parquet", buf.getvalue().to_pybytes())
+        rewritten, jobs = jobs_of(spark, lambda: compact.do_it_all(spark, [root]))
+        assert rewritten == 2 and len(jobs) == (1 if path == "spark" else 0), path
+        data = [
+            e.path
+            for e in list_tree(root)
+            if not e.is_dir and not e.path.rsplit("/", 1)[-1].startswith(("_", "."))
+        ]
+        assert sorted(p.split("/")[-2] for p in data) == ["p=0", "p=1"]
+        assert sum(pq.ParquetFile(fs.open_input_file(p)).metadata.num_rows for p in data) == 20
+        assert compact.do_it_all(spark, [root]) == 0

@@ -116,9 +116,9 @@ def test_move_files_between_tables(spark, sales_tables):
 
 
 def test_each_op_refreshes_each_table_once(spark, sales_tables, monkeypatch):
-    """A refresh is refreshTable + recoverPartitions, with the
-    partitioning read from the CatalogTable; an op refreshes each table
-    it touched once, at its end."""
+    """A refresh is one partition repair (``MSCK REPAIR TABLE ... SYNC
+    PARTITIONS``), with the partitioning read from the CatalogTable; an
+    op refreshes each table it touched once, at its end."""
     src, trg = sales_tables
     calls = []
     real = catalog.refresh_metadata
@@ -281,6 +281,33 @@ def test_partitions_with_escaped_values_promote(spark, escaped_tables, tmp_path)
     assert not (tmp_path / "src tbl" / "p=plain").exists()
     dirs = {d.name for d in (tmp_path / "trg tbl").iterdir() if d.is_dir()}
     assert dirs == {"p=a%3Ab", "p=x y", "p=plain"}
+
+
+def test_catalog_partitions_follow_the_directories(spark, escaped_tables, tmp_path):
+    """After each partition op, ``SHOW PARTITIONS`` on each table lists
+    exactly its partition directories on disk: the sync drops the
+    partitions whose directories went (the source of a move, a deleted
+    or exchanged partition) as well as adding new ones, for ``%3A`` and
+    spaced values alike."""
+    src, trg = escaped_tables
+    roots = {src: tmp_path / "src tbl", trg: tmp_path / "trg tbl"}
+
+    def check(step):
+        for table, root in roots.items():
+            shown = sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect())
+            assert shown == sorted(d.name for d in root.iterdir() if d.is_dir()), (step, table)
+
+    promotor.copy_overwrite_partitions(spark, src, trg, ["a%3Ab", "x y"])
+    check("copy_overwrite_partitions")
+    promotor.move_table_partitions(spark, src, trg, ["x y"])
+    check("move_table_partitions")
+    assert not (roots[src] / "p=x y").exists()
+    promotor.delete_table_partitions(spark, trg, ["a%3Ab"])
+    check("delete_table_partitions")
+    promotor.delete_table_partitions(spark, src, ["plain"])
+    check("delete_table_partitions of the source")
+    assert sorted(d.name for d in roots[src].iterdir() if d.is_dir()) == ["p=a%3Ab"]
+    assert _rows(spark, src) == Counter({(i, "a:b"): 1 for i in range(0, 30, 3)})
 
 
 def test_table_copy_with_escaped_values(spark, escaped_tables):
