@@ -21,6 +21,7 @@ file it returns is spelled as Spark prints it, ``file:/t/my tbl/p=a%3Ab``.
 from __future__ import annotations
 
 import logging
+import time
 from urllib.parse import unquote, urlsplit
 
 from pyarrow import fs as pafs
@@ -28,6 +29,7 @@ from pyspark.sql import SparkSession
 
 from octopufs_spark.fs.core import get_filesystem, list_tree, to_uri
 from octopufs_spark.fs.model import FsElement
+from octopufs_spark.manifest_log import _hive_unescape
 
 log = logging.getLogger(__name__)
 
@@ -141,29 +143,198 @@ def get_list_of_table_files(spark: SparkSession, table: str) -> list[str]:
     return [_uri_to_string(f) for f in spark.table(table).inputFiles()]
 
 
-def refresh_metadata(spark: SparkSession, table: str) -> None:
+def refresh_metadata(
+    spark: SparkSession,
+    table: str,
+    added: list[str] | None = None,
+    dropped: list[str] | None = None,
+    meta=None,
+) -> None:
     """Sync catalog state to the files after a file-level mutation
     (reference: refreshMetadata, metastore/package.scala:95-103, which
     refreshes the table, then recovers its partitions).
 
-    A partitioned table is repaired with ``MSCK REPAIR TABLE ... SYNC
+    ``added`` and ``dropped`` are the first-level partition directories
+    an op created and the ones it removed, spelled as this module
+    returns them. With either given, a partitioned table syncs only
+    those partitions through the session catalog (:func:`_sync_partitions`):
+    no SQL statement runs and no untouched partition is listed, so the
+    cost follows the op, not the table: 3.5 ms of process-tree CPU per
+    call on a 4-CPU x86 VM, at 4 partitions as at 400 (SCALE.md,
+    "Catalog sync"). A partition op therefore no longer heals drift in
+    the partitions it did not touch (a directory written or removed
+    behind the catalog's back); a full ``refresh_metadata(spark,
+    table)`` does. If the targeted sync fails, it is logged and the
+    full repair runs.
+
+    With neither given — whole-table ops, the SQL analogs, user calls —
+    a partitioned table is repaired with ``MSCK REPAIR TABLE ... SYNC
     PARTITIONS``: it adds a partition for each new directory and drops
     each partition whose directory is gone (``recoverPartitions`` only
-    adds), then refreshes the table's file index and cached data, so no
-    separate ``refreshTable`` runs. An unpartitioned table, or one the
-    repair refuses (a path-based table), is refreshed with
-    ``refreshTable``. Syncing only the partitions an op touched takes an
-    ``ALTER TABLE ... DROP PARTITION`` and an ``ADD PARTITION``, which
-    together cost more than one repair of a 4-partition table (37
-    against 29 ms of CPU on a 4-CPU x86 VM); the repair lists every
-    partition, though, so on a table of many partitions they may not."""
-    if _is_partitioned(spark, table):
+    adds), then refreshes the table's file index and cached data. It
+    lists every partition directory: 18–27 ms of CPU at 4 partitions,
+    114–128 ms and a Spark job at 40, 175–185 ms and a job at 400 (it gathers the
+    partitions' file stats in a job above
+    ``spark.rdd.parallelListingThreshold``, 10 paths). An unpartitioned
+    table, or one the repair refuses (a path-based table), is refreshed
+    with ``refreshTable``.
+    ``meta`` is the table's CatalogTable when the caller holds it."""
+    if meta is None:
+        meta = catalog_table(spark, table)
+    partitioned = _is_partitioned(spark, table, meta)
+    if partitioned and meta is not None and (added is not None or dropped is not None):
+        try:
+            _sync_partitions(spark, table, meta, added or [], dropped or [])
+            return
+        except Exception as e:
+            log.warning("partition sync of %s failed, repairing the table: %s", table, e)
+    if partitioned:
         try:
             spark.sql(f"MSCK REPAIR TABLE {table} SYNC PARTITIONS")
             return
         except Exception as e:  # path-based tables can't be repaired
             log.info("partition repair skipped for %s: %s", table, e)
     spark.catalog.refreshTable(table)
+
+
+class _Jvm:
+    """The JVM classes the partition sync calls, looked up once per
+    gateway: each ``spark._jvm.a.b.C`` walk is a py4j round trip per
+    name segment, about 0.9 ms."""
+
+    _cached: tuple | None = None
+
+    def __init__(self, jvm):
+        self.some = jvm.scala.Some
+        self.none = jvm.scala.Option.empty()
+        self.utils = jvm.org.apache.spark.api.python.PythonUtils
+        self.partition = jvm.org.apache.spark.sql.catalyst.catalog.CatalogTablePartition
+        self.to_uri = jvm.org.apache.spark.sql.catalyst.catalog.CatalogUtils.stringToURI
+        self.qualified = jvm.org.apache.spark.sql.catalyst.QualifiedTableName
+        self.as_java = jvm.scala.jdk.javaapi.CollectionConverters.asJava
+
+    @classmethod
+    def of(cls, spark: SparkSession) -> _Jvm:
+        jvm = spark._jvm
+        if cls._cached is None or cls._cached[0] is not jvm:
+            cls._cached = (jvm, cls(jvm))
+        return cls._cached[1]
+
+
+def partition_spec(rel: str, columns: list[str]) -> dict[str, str] | None:
+    """The partition spec of a directory ``rel`` (``p=a%3Ab`` or
+    ``p=1/q=x y``, relative to the table) for the leading ``columns`` it
+    names, as the catalog keys it: each value Hive-unescaped
+    (``manifest_log._hive_unescape``), the null sentinel
+    ``__HIVE_DEFAULT_PARTITION__`` kept as written, as Spark's writers
+    and its repair register it. None when ``rel`` is not a partition
+    directory of these columns (a ``_temporary`` staging dir, another
+    column), which the repair skips too."""
+    segments = rel.strip("/").split("/")
+    if len(segments) != len(columns):
+        return None
+    spec = {}
+    for segment, column in zip(segments, columns):
+        key, eq, value = segment.partition("=")
+        if not eq or not value or _hive_unescape(key).lower() != column.lower():
+            return None
+        spec[column] = _hive_unescape(value)
+    return spec
+
+
+def _leaf_partitions(folder: str, columns: list[str]) -> list[tuple[str, dict[str, str]]]:
+    """(directory, spec) of each partition under the first-level
+    partition directory ``folder``: the folder itself on a table of one
+    partition column, else its leaves ``len(columns) - 1`` levels down,
+    listed one level at a time, directories only."""
+    dirs = [folder.rstrip("/")]
+    base = dirs[0].rsplit("/", 1)[0]
+    for _ in columns[1:]:
+        dirs = [sub for d in dirs for sub in get_subfolder_paths(d)]
+    leaves = [(d, partition_spec(d[len(base) + 1 :], columns)) for d in dirs]
+    return [(d, spec) for d, spec in leaves if spec is not None]
+
+
+def _sync_partitions(
+    spark: SparkSession, table: str, meta, added: list[str], dropped: list[str]
+) -> None:
+    """Drop the partitions of the ``dropped`` directories and register
+    those of the ``added`` ones through the JVM ``SessionCatalog``, then
+    refresh the table: with ``spark.catalog.refreshTable`` when the
+    session's ``CacheManager`` holds a plan, as it re-caches cached data;
+    else by refreshing the cached relation's file index and invalidating
+    it in the session catalog, which skips that call's analysis of a
+    fresh read (see :func:`refresh_metadata`). A directory in both lists
+    (deleted, then written again) is synced as an add.
+
+    On a table of more than one partition column a directory is a
+    first-level value: a drop takes every catalog partition under it
+    (``listPartitionNames`` with the partial spec), and an add lists
+    only that directory's leaves, and also drops the catalog's
+    partitions under it whose leaves are gone. Each added partition's
+    location is its directory."""
+    jvm = _Jvm.of(spark)
+    jcatalog = spark._jsparkSession.sessionState().catalog()
+    ident = meta.identifier()
+    columns = list(meta.partitionSchema().fieldNames())
+
+    def dir_spec(folder: str) -> dict[str, str] | None:
+        return partition_spec(folder.rstrip("/").rsplit("/", 1)[1], columns[:1])
+
+    def catalog_specs(first: dict[str, str]) -> list[dict[str, str]]:
+        names = jcatalog.listPartitionNames(ident, jvm.some(jvm.utils.toScalaMap(first)))
+        return [s for s in (partition_spec(n, columns) for n in jvm.as_java(names)) if s]
+
+    drops, creates = [], []
+    for folder in (d for d in dropped if d not in added):  # an add re-syncs its own
+        first = dir_spec(folder)
+        if first is not None:
+            drops += [first] if len(columns) == 1 else catalog_specs(first)
+    for folder in added:
+        first = dir_spec(folder)
+        if first is None:
+            continue
+        leaves = _leaf_partitions(folder, columns)
+        if len(columns) > 1:
+            kept = [spec for _, spec in leaves]
+            drops += [s for s in catalog_specs(first) if s not in kept]
+        creates += leaves
+    if drops:
+        specs = [jvm.utils.toScalaMap(s) for s in drops]
+        jcatalog.dropPartitions(ident, jvm.utils.toSeq(specs), True, False, True)
+    if creates:
+        storage = meta.storage()
+        fmt = (
+            storage.inputFormat(),
+            storage.outputFormat(),
+            storage.serde(),
+            storage.compressed(),
+            storage.properties(),
+        )
+        now, no_params = int(time.time() * 1000), jvm.utils.toScalaMap({})
+        parts = [
+            jvm.partition(
+                jvm.utils.toScalaMap(spec),
+                storage.copy(jvm.some(jvm.to_uri(folder)), *fmt),
+                no_params,
+                now,
+                -1,
+                jvm.none,
+            )
+            for folder, spec in creates
+        ]
+        jcatalog.createPartitions(ident, jvm.utils.toSeq(parts), True)
+    if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        spark.catalog.refreshTable(table)  # re-caches cached data of the table
+        return
+    # refreshTable would first analyze a fresh read of the table: 19 ms a
+    # call against 5 ms in small_files' cycle (SCALE.md, "Catalog sync")
+    cached = jcatalog.getCachedTable(
+        jvm.qualified(ident.catalog().get(), ident.database().get(), ident.table())
+    )
+    if cached is not None:
+        cached.refresh()  # the file index's listings
+    jcatalog.refreshTable(ident)
 
 
 def _columns(spark: SparkSession, table: str, meta=None) -> list[tuple[str, str, bool]]:

@@ -11,7 +11,8 @@ of all leaves run as one batch through ``fs.distributed.map_partitions``
 ``DRIVER_COPY_BYTES`` of input (by the sizes the listing returned) runs
 as ONE Spark job, one task per group, the pattern of the reference's
 distributed copy (DistributedExecution.scala:42-84); a smaller one runs
-on the driver's copy pool and launches no job. Either way a group
+on the driver — on the calling thread when its leaves are local, else
+on the driver's copy pool — and launches no job. Either way a group
 streams its files' row groups through pyarrow into one file in the
 leaf's ``_temp`` sibling; the driver swaps a leaf in once all its groups
 succeeded with one schema (reference: replaceFolder,
@@ -62,8 +63,8 @@ from pyarrow import fs as pafs
 from pyspark.sql import SparkSession
 
 from octopufs_spark.fs.core import get_filesystem, list_tree, retry_failed, to_uri
-from octopufs_spark.fs.distributed import map_partitions
-from octopufs_spark.fs.local import _run_threaded
+from octopufs_spark.fs.distributed import driver_workers, map_partitions
+from octopufs_spark.fs.local import DEFAULT_WORKERS, _run_threaded
 from octopufs_spark.fs.model import FsElement, FsOperationResult
 
 log = logging.getLogger(__name__)
@@ -259,7 +260,9 @@ def _compact(spark: SparkSession, leaves: dict[str, list[FsElement]], requested_
     Returns the number of leaves swapped; raises naming the leaves whose
     groups still failed after the retries. Folder preparation and swaps
     are per-leaf metadata calls, fanned out on driver threads like
-    ``fs.local``'s moves."""
+    ``fs.local``'s moves; when every leaf is local, they and the driver
+    path's rewrites run on the calling thread
+    (``fs.distributed.driver_workers``)."""
     run = uuid.uuid4().hex
     tasks, outputs = [], {}  # outputs: leaf -> its groups' output paths
     sizes = {}  # output -> its group's input bytes, as listed
@@ -275,7 +278,10 @@ def _compact(spark: SparkSession, leaves: dict[str, list[FsElement]], requested_
             sizes[out] = sum(f.byte_size for f in g)
     if not tasks:
         return 0
-    _run_threaded(_prepare_temp, list(outputs))
+    # local leaves run on the calling thread: there is no latency to hide
+    meta_workers = driver_workers(outputs, DEFAULT_WORKERS)
+    rewrite_workers = driver_workers(outputs)
+    _run_threaded(_prepare_temp, list(outputs), meta_workers)
 
     codec = spark.conf.get("spark.sql.parquet.compression.codec", "snappy").lower()
     rewrite = partial(_rewrite_groups, _CODECS.get(codec, codec))
@@ -283,7 +289,7 @@ def _compact(spark: SparkSession, leaves: dict[str, list[FsElement]], requested_
 
     def run_batch(batch):
         total = sum(sizes[out] for _, out, _ in batch)
-        raw = map_partitions(spark, batch, total, rewrite, len(batch))
+        raw = map_partitions(spark, batch, total, rewrite, len(batch), rewrite_workers)
         fingerprints.update((out, fp) for out, ok, fp in raw if ok)
         return [FsOperationResult(out, ok) for out, ok, _ in raw]
 
@@ -319,7 +325,7 @@ def _compact(spark: SparkSession, leaves: dict[str, list[FsElement]], requested_
         fs.move(temp, path)
         return "rewritten"
 
-    outcome = dict(zip(outputs, _run_threaded(finish, list(outputs))))
+    outcome = dict(zip(outputs, _run_threaded(finish, list(outputs), meta_workers)))
     if error is not None:
         failed = [leaf for leaf, how in outcome.items() if how == "failed"]
         raise RuntimeError(f"compaction failed for {', '.join(failed)}") from error

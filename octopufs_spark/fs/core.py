@@ -73,6 +73,13 @@ _LOCAL = pafs.LocalFileSystem()
 Resolve = Callable[[str], tuple[pafs.FileSystem, str]]
 
 
+def is_local(path: str) -> bool:
+    """Whether ``path`` is on the local filesystem: no scheme, or
+    ``file:`` / ``file://``."""
+    m = _HEAD.match(path)
+    return m is None or m.group(0) in ("file:", "file://")
+
+
 def _open(head: str) -> tuple[pafs.FileSystem, str]:
     """The filesystem ``head`` names and its root's path there (a bucket
     or ``""``). ``mock://`` is the in-process object-store stand-in

@@ -23,6 +23,20 @@ per-partition body, which runs in the driver's threads or in Spark's
 tasks alike, so a copy's contract (:func:`_copy_pair`) and a rewrite's
 live in one place each.
 
+A driver batch whose every path is local (no scheme, or ``file:``)
+runs on the calling thread (:func:`driver_workers`): a local call has
+no round trip for threads to hide, and threads moving small files
+contend for the GIL. A batch with any object-store path, ``mock://``
+included, keeps the pool of ``DRIVER_COPY_WORKERS``; the reference
+sizes its pools for ADLS's HTTP latency (README.md:10-16). A by-hand
+probe on a 4-CPU x86 VM (process-tree CPU / wall ms, medians; SCALE.md,
+"Driver batches on one thread"): ``copy_folder`` of 80 files of 2–6 KB
+50 / 34 on 16 threads against 10 / 13 on one, their compaction 50 / 29
+against 20 / 20, a compaction of 60 files of 1 MiB 130 / 47 against
+120 / 123. CPU is never higher on one thread; wall time grows on
+byte-heavy local batches, up to 2.6× here. An object store mounted
+through FUSE is reached by a local path, so it loses the pool.
+
 Python workers have no py4j bridge to Hadoop FileSystems, so the
 per-task copy uses pyarrow.fs resolved from the URI inside the task
 (SURVEY.md §7 hard-part 1). The reference recommends disabling
@@ -54,6 +68,7 @@ from pyspark.sql import SparkSession
 from octopufs_spark.fs.core import (
     Resolve,
     copy_bytes,
+    is_local,
     list_tree,
     rebase_paths,
     resolver,
@@ -115,30 +130,41 @@ def _copy_partition(pairs):
         yield (src, _copy_pair(resolve, src, dst))
 
 
-def map_partitions(spark: SparkSession, batch: list, total_bytes: int, body, partitions: int) -> list:
+def driver_workers(paths, pool: int = DRIVER_COPY_WORKERS) -> int:
+    """The driver pool's size for a batch touching ``paths``: one — the
+    calling thread — when every path is on the local filesystem, else
+    ``pool``."""
+    return 1 if all(is_local(p) for p in paths) else pool
+
+
+def map_partitions(
+    spark: SparkSession, batch: list, total_bytes: int, body, partitions: int, workers: int
+) -> list:
     """``body`` over ``batch`` in partitions, and its results in batch
     order: on the driver when the batch moves fewer than
     ``DRIVER_COPY_BYTES``, in one Spark job otherwise.
 
     ``body`` maps one partition's items to an iterator of results, as
     ``RDD.mapPartitions`` takes it. On the driver, the batch is cut into
-    at most ``DRIVER_COPY_WORKERS`` contiguous partitions, each run by a
-    thread of ``fs.local._run_threaded``, whose threads exit before this
-    returns; ``partitions`` names Spark tasks only. In Spark, the batch
-    is ``sc.parallelize(batch, partitions)``."""
+    at most ``workers`` (see :func:`driver_workers`) contiguous
+    partitions, each run by a thread of ``fs.local._run_threaded``,
+    whose threads exit before this returns; one worker runs the whole
+    batch on the calling thread. ``partitions`` names Spark tasks only.
+    In Spark, the batch is ``sc.parallelize(batch, partitions)``."""
     if total_bytes < DRIVER_COPY_BYTES:
-        n = min(DRIVER_COPY_WORKERS, len(batch))
+        n = min(workers, len(batch))
         parts = [batch[i * len(batch) // n : (i + 1) * len(batch) // n] for i in range(n)]
         return [r for part in _run_threaded(lambda p: list(body(p)), parts, n) for r in part]
     return spark.sparkContext.parallelize(batch, max(1, partitions)).mapPartitions(body).collect()
 
 
-def _source_bytes(pairs: list[tuple[str, str]]) -> int:
+def _source_bytes(pairs: list[tuple[str, str]], workers: int) -> int:
     """The total size of the sources of ``pairs``, or any figure of at
-    least ``DRIVER_COPY_BYTES`` once it is reached. The stats run on the
-    driver pool, a chunk at a time, through one resolver. A source that
-    cannot be resolved or is missing counts as 0 bytes: its copy fails
-    its own pair on either path."""
+    least ``DRIVER_COPY_BYTES`` once it is reached. The stats run on
+    ``workers`` driver threads (:func:`driver_workers`), a chunk at a
+    time, through one resolver. A source that cannot be resolved or is
+    missing counts as 0 bytes: its copy fails its own pair on either
+    path."""
     resolve = resolver()
 
     def size(pair: tuple[str, str]) -> int:
@@ -150,7 +176,7 @@ def _source_bytes(pairs: list[tuple[str, str]]) -> int:
 
     total, step = 0, DRIVER_COPY_WORKERS * 8
     for i in range(0, len(pairs), step):
-        total += sum(_run_threaded(size, pairs[i : i + step], DRIVER_COPY_WORKERS))
+        total += sum(_run_threaded(size, pairs[i : i + step], workers))
         if total >= DRIVER_COPY_BYTES:
             break
     return total
@@ -176,7 +202,9 @@ def copy_files(
     def copy_batch(batch: list[Paths]) -> list[FsOperationResult]:
         pairs = [(p.source_path, p.target_path) for p in batch]
         n = len(batch) if task_count == -1 else task_count
-        raw = map_partitions(spark, pairs, _source_bytes(pairs), _copy_partition, n)
+        workers = driver_workers(path for pair in pairs for path in pair)
+        total = _source_bytes(pairs, workers)
+        raw = map_partitions(spark, pairs, total, _copy_partition, n, workers)
         if not any(ok for _, ok in raw):
             raise RuntimeError(f"distributed copy failed for {len(batch)}/{len(batch)} files")
         return [FsOperationResult(path, ok) for path, ok in raw]

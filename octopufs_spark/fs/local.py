@@ -36,8 +36,20 @@ DEFAULT_WORKERS = 256
 
 
 def _run_threaded(fn, items, max_workers: int = DEFAULT_WORKERS) -> list:
-    if not items:
-        return []
+    """``fn`` over ``items`` on a pool of at most ``max_workers``
+    threads, results in item order; one worker is the calling thread.
+    Every item runs even when one raises; the first exception in item
+    order is raised once all have run, on either path."""
+    if max_workers == 1 or len(items) <= 1:
+        results, error = [], None
+        for it in items:
+            try:
+                results.append(fn(it))
+            except Exception as e:
+                error = error or e
+        if error is not None:
+            raise error
+        return results
     with ThreadPoolExecutor(max_workers=min(max_workers, len(items))) as pool:
         futures = [pool.submit(fn, it) for it in items]
         return [f.result(timeout=OP_TIMEOUT_S) for f in futures]

@@ -45,6 +45,11 @@ the snapshot it read against the live parent:
    it has left the parent: a racing rewrite materialized and dropped
    it, and the folded copy would re-hide keys that rewrite freed.
    Vectors racers added are not retired, and carry.
+7. A schema-evolution log (``rename_column``, ``add_column``,
+   ``drop_column``) or hidden-partition layout that changed since
+   ``read`` aborts, as ``publish_wap`` does: the staged files were
+   written under the old contract, and a rewrite that keeps no file
+   would drop the new log with the old files.
 
 Every abort raises ``ConcurrentModificationError`` with nothing
 published. A positional vector of ``read`` that names only replaced
@@ -421,6 +426,16 @@ def _alias_chain(col: str, events: list) -> list[str]:
         elif kind == "add" and args[0] == target:
             break  # column born here: nothing earlier can spell it
     return chain
+
+
+_CONTRACT_KEYS = ("schema_evolution", "hidden_partitions")
+
+
+def _contract(m: Manifest | None) -> tuple:
+    """What a snapshot's files were written under: its schema-evolution
+    log and its hidden-partition layout, each None when absent."""
+    meta = m.meta if m is not None else {}
+    return meta.get("schema_evolution") or None, _layout_key(meta.get("hidden_partitions"))
 
 
 def _layout_key(hidden_partitions: dict | None) -> dict | None:
@@ -1221,6 +1236,7 @@ class ManifestLog:
         )
         shadows = inserts and any(not dv.get("type") for dv in read_vectors)
         since = f"v{read.version}" if read else "an empty table"
+        read_contract = _contract(read)
 
         def conflict(why: str) -> ConcurrentModificationError:
             return ConcurrentModificationError(
@@ -1229,6 +1245,9 @@ class ManifestLog:
             )
 
         def build(parent: Manifest | None) -> list[str]:
+            for key, was, now in zip(_CONTRACT_KEYS, read_contract, _contract(parent)):
+                if was != now:
+                    raise conflict(f"the table's {key} changed")
             live = parent.files if parent else []
             gone = replaced_set.difference(live)
             if gone:
@@ -1427,13 +1446,7 @@ class ManifestLog:
             # s carried the base's evolution log / hidden layout at
             # stage time (a pure append never alters either), so the
             # staged meta doubles as the base's copy for this check.
-            checks = [
-                ("schema_evolution", parent.meta.get("schema_evolution") or None,
-                 s.meta.get("schema_evolution") or None),
-                ("hidden_partitions", _layout_key(parent.meta.get("hidden_partitions")),
-                 _layout_key(s.meta.get("hidden_partitions"))),
-            ]
-            for key, a, b in checks:
+            for key, a, b in zip(_CONTRACT_KEYS, _contract(parent), _contract(s)):
                 if a != b:
                     raise ConcurrentModificationError(
                         f"table {key} changed since v{v} was staged against "

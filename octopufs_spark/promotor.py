@@ -12,6 +12,16 @@ far cheaper than a full read→shuffle→write.
 An op fetches each table's catalog entry once and hands it to every
 ``catalog`` helper it calls (``meta``), rather than letting each helper
 fetch it again over py4j.
+
+Each partition op ends with one ``catalog.refresh_metadata`` per table
+it touched, naming the partition directories it created and the ones it
+removed, so the catalog syncs only those partitions: a copy or move
+adds the target directories it wrote and drops the deleted ones it did
+not write again, the source of a move drops what left it, and a delete
+drops what it deleted. The partitions an op did not touch are left as
+the catalog has them, drift included; a full
+``catalog.refresh_metadata(spark, table)`` repairs every partition.
+The whole-table ops and the SQL analogs run that full repair.
 """
 
 from __future__ import annotations
@@ -100,20 +110,23 @@ def _copy_partitions(
     task_count: int,
     src_meta,
     trg_meta,
+    deleted: list[str] = (),
 ) -> list[FsOperationResult]:
-    """:func:`copy_table_partitions` with both tables' entries in hand."""
+    """:func:`copy_table_partitions` with both tables' entries in hand;
+    ``deleted`` names the target partition directories the op removed
+    before the copy."""
     catalog.validate_compatibility(spark, src_table, trg_table, src_meta, trg_meta)
     parts = catalog.filter_partitions(spark, src_table, match_strings, src_meta)
     if not parts:
         raise ValueError(f"no partitions of {src_table} match {match_strings}")
-    files = [f.path for f in catalog.get_files_only_of_folders(parts)]
-    pairs = rebase_paths(
-        files,
-        catalog.get_table_location(spark, src_table, src_meta),
-        catalog.get_table_location(spark, trg_table, trg_meta),
-    )
+    src_loc = catalog.get_table_location(spark, src_table, src_meta)
+    trg_loc = catalog.get_table_location(spark, trg_table, trg_meta)
+    files = {part: [f.path for f in catalog.get_files_only_of_folders([part])] for part in parts}
+    pairs = rebase_paths([f for part in parts for f in files[part]], src_loc, trg_loc)
     results = copy_files(spark, pairs, task_count)
-    catalog.refresh_metadata(spark, trg_table)
+    # a copy writes only the partition directories that hold files
+    added = [p.target_path for p in rebase_paths([p for p in parts if files[p]], src_loc, trg_loc)]
+    catalog.refresh_metadata(spark, trg_table, added=added, dropped=deleted, meta=trg_meta)
     return results
 
 
@@ -129,8 +142,10 @@ def copy_overwrite_partitions(
     analog: dynamic-partition INSERT OVERWRITE (the engine default
     partitionOverwriteMode=dynamic exists for exactly this)."""
     src_meta, trg_meta = _entries(spark, src_table, trg_table)
-    _delete_partitions(spark, trg_table, match_strings, trg_meta)
-    return _copy_partitions(spark, src_table, trg_table, match_strings, task_count, src_meta, trg_meta)
+    deleted = _delete_partitions(spark, trg_table, match_strings, trg_meta)
+    return _copy_partitions(
+        spark, src_table, trg_table, match_strings, task_count, src_meta, trg_meta, deleted
+    )
 
 
 def _delete_partitions(
@@ -150,9 +165,11 @@ def delete_table_partitions(
 ) -> None:
     """Delete substring-matched partition folders + refresh
     (reference: deleteTablePartitions, Promotor.scala:309-316)."""
-    if not _delete_partitions(spark, table, match_strings) and must_match:
+    (meta,) = _entries(spark, table)
+    deleted = _delete_partitions(spark, table, match_strings, meta)
+    if not deleted and must_match:
         raise ValueError(f"no partitions of {table} match {match_strings}")
-    catalog.refresh_metadata(spark, table)
+    catalog.refresh_metadata(spark, table, dropped=deleted, meta=meta)
 
 
 def move_table_partitions(
@@ -169,10 +186,11 @@ def move_table_partitions(
         raise ValueError(f"no partitions of {src_table} match {match_strings}")
     src_loc = catalog.get_table_location(spark, src_table, src_meta)
     trg_loc = catalog.get_table_location(spark, trg_table, trg_meta)
-    _delete_partitions(spark, trg_table, match_strings, trg_meta)
+    deleted = _delete_partitions(spark, trg_table, match_strings, trg_meta)
     results = move_folders(spark, parts, src_loc, trg_loc)
-    catalog.refresh_metadata(spark, src_table)
-    catalog.refresh_metadata(spark, trg_table)
+    added = [p.target_path for p in rebase_paths(parts, src_loc, trg_loc)]
+    catalog.refresh_metadata(spark, src_table, dropped=parts, meta=src_meta)
+    catalog.refresh_metadata(spark, trg_table, added=added, dropped=deleted, meta=trg_meta)
     return results
 
 

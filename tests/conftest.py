@@ -13,7 +13,7 @@ from pathlib import Path
 
 import pytest
 
-from octopufs_spark.fs import distributed
+from octopufs_spark.fs import distributed, local
 from octopufs_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -36,6 +36,23 @@ def jobs_of(spark, fn):
         return out, list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.fixture()
+def driver_pools(monkeypatch) -> list[int]:
+    """The size of each thread pool ``fs.local._run_threaded`` starts
+    during the test — the driver pools of copies, compaction and the
+    metadata ops — in start order; a batch on the calling thread starts
+    none."""
+    sizes: list[int] = []
+    real = local.ThreadPoolExecutor
+
+    def recording(max_workers=None, **kw):
+        sizes.append(max_workers)
+        return real(max_workers=max_workers, **kw)
+
+    monkeypatch.setattr(local, "ThreadPoolExecutor", recording)
+    return sizes
 
 
 BATCH_PATHS = ("driver", "spark")

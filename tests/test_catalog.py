@@ -114,3 +114,25 @@ def test_l1_partition_paths_require_partitioned_table(spark, make_table):
     table = make_table("cat_unpart", "a INT, b STRING")
     with pytest.raises(ValueError, match="not partitioned"):
         catalog.get_table_l1_partition_paths(spark, table)
+
+
+@pytest.mark.parametrize(
+    "rel, columns, spec",
+    [
+        ("p=a%3Ab", ["p"], {"p": "a:b"}),
+        ("p=50%25", ["p"], {"p": "50%"}),
+        ("p=x y", ["p"], {"p": "x y"}),
+        ("p=__HIVE_DEFAULT_PARTITION__", ["p"], {"p": "__HIVE_DEFAULT_PARTITION__"}),
+        ("p=a%3Ab/q=50%25/", ["p", "q"], {"p": "a:b", "q": "50%"}),
+        # not a partition directory of these columns: skipped, as the repair skips it
+        ("_temporary", ["p"], None),
+        ("q=1", ["p"], None),
+        ("p=", ["p"], None),
+        ("p=1", ["p", "q"], None),
+    ],
+)
+def test_partition_spec_of_a_directory(rel, columns, spec):
+    """A partition directory's name decodes to the spec the catalog
+    keys it by, without a Spark session: Hive escapes undone, the null
+    sentinel kept as written, one segment per partition column."""
+    assert catalog.partition_spec(rel, columns) == spec

@@ -139,6 +139,48 @@ def test_own_pool_threads_exit(spark, tmp_path):
     assert threading.active_count() == baseline
 
 
+def test_local_compaction_starts_no_thread(spark, tmp_path, driver_pools):
+    """A compaction whose leaves are all local prepares, rewrites and
+    swaps them on the calling thread."""
+    for i in range(3):
+        for j in range(3):
+            _pa_file(tmp_path / "t" / f"p={i}" / f"{j}.parquet", pa.table({"id": [j]}))
+    assert _on(spark, "driver", lambda: compact.do_it_all(spark, [f"file:{tmp_path}/t"])) == 3
+    assert driver_pools == []
+    assert all(len(_data(tmp_path / "t" / f"p={i}")) == 1 for i in range(3))
+
+
+def test_a_failed_local_swap_still_finishes_the_other_leaves(spark, tmp_path, driver_pools, monkeypatch):
+    """On the calling thread, as on a pool, one leaf whose swap raises
+    does not stop the others: they are swapped in, and the error is
+    raised once every leaf has run, leaving no other ``_temp`` behind."""
+    for i in range(3):
+        for j in range(3):
+            _pa_file(tmp_path / "t" / f"p={i}" / f"{j}.parquet", pa.table({"id": [j]}))
+    real, failed = compact._run_threaded, []
+
+    def first_swap_fails(fn, items, *args):
+        if fn.__name__ != "finish":
+            return real(fn, items, *args)
+
+        def swap(leaf):
+            if leaf == items[0]:
+                failed.append(Path(leaf).name)
+                raise OSError(f"swap of {leaf} failed")
+            return fn(leaf)
+
+        return real(swap, items, *args)
+
+    monkeypatch.setattr(compact, "_run_threaded", first_swap_fails)
+    with pytest.raises(OSError, match="swap of .* failed"):
+        compact.do_it_all(spark, [str(tmp_path / "t")])
+    assert driver_pools == []
+    leaves = ["p=0", "p=1", "p=2"]
+    assert sorted(os.listdir(tmp_path / "t")) == sorted(leaves + [f"{failed[0]}_temp"])
+    for leaf in leaves:
+        assert len(_data(tmp_path / "t" / leaf)) == (3 if leaf == failed[0] else 1), leaf
+
+
 def test_mixed_schema_folder_is_left_intact(spark, tmp_path, each_batch_path):
     """Spark's non-merging read keeps one file's schema, so rewriting a
     schema-evolved folder would drop the other files' columns: it is

@@ -174,10 +174,28 @@ def test_copy_runs_a_spark_job_only_above_the_limit(spark, tmp_path, monkeypatch
         assert _tree_snapshot(src) == _tree_snapshot(dst)
 
 
+def test_local_copy_batch_starts_no_thread(spark, tmp_path, driver_pools):
+    """A driver batch whose paths are all local — plain, ``file:`` or
+    ``file://`` — stats and copies on the calling thread: a local
+    filesystem has no latency for a pool to hide, and the pool's threads
+    contend for the GIL."""
+    heads = ["", "file:", "file://"]
+    pairs = []
+    for i in range(6):
+        (tmp_path / "src").mkdir(exist_ok=True)
+        (tmp_path / "src" / f"f{i}.bin").write_bytes(bytes([i]) * 100)
+        src, trg = f"{heads[i % 3]}{tmp_path}/src", f"{heads[(i + 1) % 3]}{tmp_path}/trg"
+        pairs.append(Paths(f"{src}/f{i}.bin", f"{trg}/f{i}.bin"))
+    results, jobs = jobs_of(spark, lambda: copy_files(spark, pairs))
+    assert [r.success for r in results] == [True] * 6 and jobs == []
+    assert driver_pools == []
+    assert all((tmp_path / "trg" / f"f{i}.bin").read_bytes() == bytes([i]) * 100 for i in range(6))
+
+
 def test_copy_probe_sweeps_both_paths(spark, tmp_path):
     """``tools/copy_probe.py`` stays runnable: one tiny point of each
-    mode, copy and compaction, measured on the driver path and on the
-    Spark path."""
+    mode — copy and compaction, measured on the driver path and on the
+    Spark path, and the catalog sync, both ways."""
     tool = Path(__file__).resolve().parents[1] / "tools" / "copy_probe.py"
     spec = importlib.util.spec_from_file_location("copy_probe", tool)
     probe = importlib.util.module_from_spec(spec)
@@ -199,6 +217,13 @@ def test_copy_probe_sweeps_both_paths(spark, tmp_path):
         assert rec[f"{path}_cpu_s"] >= 0 and rec[f"{path}_wall_s"] > 0
     assert rec["driver_peak_rss_mb"] > 0 and rec["driver_rss_growth_mb"] >= 0
     assert list(tmp_path.iterdir()) == []
+    # sync mode: the full repair and the targeted sync of a 3-partition table
+    (rec,) = probe.sync_sweep(spark, [3], repeats=1, calls=1, work=str(tmp_path))
+    assert (rec["mode"], rec["partitions"], rec["sync_jobs"]) == ("sync", 3, 0)
+    for way in ("full", "sync"):
+        assert rec[f"{way}_cpu_ms"] >= 0 and rec[f"{way}_wall_ms"] > 0
+    assert list(tmp_path.iterdir()) == []
+    assert not spark.catalog.tableExists("copy_probe_sync")
 
 
 def test_get_delta_directions(spark, tmp_path, seeded_rng):

@@ -168,6 +168,13 @@ _A, _B = "data-0/part-0000.parquet", "data-0/part-0001.parquet"
 _REWRITE, _APPENDED = "rw/part-0000.parquet", "app/part-0000.parquet"
 
 
+_EVOLUTIONS = {
+    "rename": lambda log: log.rename_column("id", "key"),
+    "add": lambda log: log.add_column("x", "long"),
+    "drop": lambda log: log.drop_column("id"),
+}
+
+
 def _vector(log: ManifestLog, step: str) -> dict:
     """Write a delete vector for ``step`` and return its entry: ``eq``
     (an equality vector on id 1) or ``pos:<file>`` (a positional vector
@@ -185,9 +192,18 @@ def _vector(log: ManifestLog, step: str) -> dict:
 def _commit(log: ManifestLog, step: str) -> str | None:
     """Commit one racer or setup step on ``log``: ``append`` (one
     file), ``overwrite`` (a new snapshot of fresh files), ``rw:<file>``
-    (a rewrite of that file) or a merge-on-read delete of a
-    :func:`_vector` step. Returns a vector's path."""
+    (a rewrite of that file), a column change (``rename``, ``add``,
+    ``drop`` of a column ``x``), ``layout`` (a hidden-partition layout
+    adopted in place) or a merge-on-read delete of a :func:`_vector`
+    step. Returns a vector's path."""
     root = Path(log.root_path)
+    if step in _EVOLUTIONS:
+        _EVOLUTIONS[step](log)
+        return None
+    if step == "layout":
+        layout = {"hidden_partitions": {"id_bucket": ["bucket", "id", 4]}}
+        log._commit_with_retry(lambda parent: list(parent.files), "set-layout", layout)
+        return None
     if step == "append":
         (root / "app").mkdir()
         pq.write_table(pa.table({"id": [7]}), root / _APPENDED)
@@ -232,6 +248,14 @@ def _commit(log: ManifestLog, step: str) -> str | None:
         ([f"pos:{_A}"], [], [_A], False, [_B, _REWRITE], "dropped"),
         # ...and one naming a kept file still hides its rows
         ([f"pos:{_B}"], [], [_A], False, [_B, _REWRITE], "carried"),
+        # a column change or a layout since the read: the staged files
+        # predate it, and a full rewrite would drop its log
+        ([], ["rename"], [_A, _B], False, None, None),
+        ([], ["add"], [_A], False, None, None),
+        ([], ["drop"], [_A, _B], False, None, None),
+        ([], ["layout"], [_A], False, None, None),
+        # ...but one the read saw publishes
+        (["rename"], ["append"], [_A, _B], False, [_APPENDED, _REWRITE], "carried"),
     ],
     ids=[
         "append-carried",
@@ -246,6 +270,11 @@ def _commit(log: ManifestLog, step: str) -> str | None:
         "inserts-pos-carried-file",
         "read-pos-names-replaced",
         "read-pos-names-kept",
+        "rename-since-read",
+        "add-since-read",
+        "drop-since-read",
+        "layout-since-read",
+        "rename-before-read",
     ],
 )
 def test_commit_rewrite_rule(tmp_path, before, racers, replaced, inserts, published, vectors):
@@ -272,6 +301,28 @@ def test_commit_rewrite_rule(tmp_path, before, racers, replaced, inserts, publis
     assert (m.version, m.operation, m.files) == (head + 1, "rewrite", published)
     live = [dv["path"] for dv in m.meta.get("delete_vectors", [])]
     assert live == ([p for p in paths if p] if vectors == "carried" else [])
+
+
+def test_rewrite_keeps_a_rename_it_did_not_read(tmp_path):
+    """Two appends, a read, a ``rename_column``, then a full rewrite of
+    the read files: the rewrite aborts, and the rename stays in the log
+    (publishing would have carried no file of the old name, and with
+    them the rename's log)."""
+    root = tmp_path / "t"
+    log = ManifestLog(str(root))
+    for i in range(2):
+        (root / f"app{i}").mkdir(parents=True)
+        pq.write_table(pa.table({"id": [i]}), root / f"app{i}" / "part-0000.parquet")
+        log.commit_append([f"app{i}/part-0000.parquet"])
+    read = log.read_head()
+    log.rename_column("id", "key")
+    head = log.latest_version()
+    (root / "rw").mkdir()
+    pq.write_table(pa.table({"id": [0, 1]}), root / _REWRITE)
+    with pytest.raises(ConcurrentModificationError, match="schema_evolution changed"):
+        log.commit_rewrite(read, list(read.files), [_REWRITE], "compact")
+    assert log.latest_version() == head
+    assert log.read_manifest().meta["schema_evolution"] == [["rename", "id", "key"]]
 
 
 @pytest.mark.parametrize(

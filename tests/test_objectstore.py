@@ -417,6 +417,35 @@ def test_driver_copy_threads_share_one_resolver(spark, remote_prefix, tmp_path):
         assert _get(p.target_path) == str(i).encode() * 50
 
 
+def test_object_store_batches_keep_the_driver_pool(spark, remote_prefix, driver_pools):
+    """A driver batch with an object-store path keeps its pool, which
+    hides each call's latency: a copy's stats and copies run on
+    ``DRIVER_COPY_WORKERS`` threads at most, and a compaction's rewrites
+    too, its folder preparation and swaps on ``fs.local``'s pool."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from octopufs_spark import compact
+    from octopufs_spark.fs.distributed import copy_files
+    from octopufs_spark.fs.model import Paths
+
+    pairs = [
+        Paths(f"{remote_prefix}/src/f{i}.bin", f"{remote_prefix}/trg/f{i}.bin") for i in range(6)
+    ]
+    for p in pairs:
+        _put(p.source_path, b"x" * 10)
+    assert all(r.success for r in copy_files(spark, pairs))
+    assert driver_pools == [6, 6]  # stats, then copies
+    driver_pools.clear()
+    for leaf in ("p=0", "p=1"):
+        for i in range(3):
+            buf = pa.BufferOutputStream()
+            pq.write_table(pa.table({"id": [i]}), buf)
+            _put(f"{remote_prefix}/t/{leaf}/part-{i}.parquet", buf.getvalue().to_pybytes())
+    assert compact.do_it_all(spark, [f"{remote_prefix}/t"]) == 2
+    assert driver_pools == [2, 2, 2]  # preparation, rewrites, swaps
+
+
 def test_compaction_on_object_store(spark, remote_prefix, each_batch_path):
     """Compaction rewrites through ``core``'s scheme dispatch, in driver
     threads or in executor tasks, so a ``mock://`` tree — which Spark's

@@ -13,6 +13,7 @@ from __future__ import annotations
 from collections import Counter
 from pathlib import Path
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -116,16 +117,15 @@ def test_move_files_between_tables(spark, sales_tables):
 
 
 def test_each_op_refreshes_each_table_once(spark, sales_tables, monkeypatch):
-    """A refresh is one partition repair (``MSCK REPAIR TABLE ... SYNC
-    PARTITIONS``), with the partitioning read from the CatalogTable; an
-    op refreshes each table it touched once, at its end."""
+    """An op refreshes each table it touched once, at its end, naming
+    the partitions it changed."""
     src, trg = sales_tables
     calls = []
     real = catalog.refresh_metadata
 
-    def counting_refresh(session, table):
+    def counting_refresh(session, table, **kw):
         calls.append(table)
-        real(session, table)
+        real(session, table, **kw)
 
     monkeypatch.setattr(catalog, "refresh_metadata", counting_refresh)
 
@@ -283,31 +283,136 @@ def test_partitions_with_escaped_values_promote(spark, escaped_tables, tmp_path)
     assert dirs == {"p=a%3Ab", "p=x y", "p=plain"}
 
 
-def test_catalog_partitions_follow_the_directories(spark, escaped_tables, tmp_path):
+def _leaf_dirs(root: Path, depth: int) -> list[str]:
+    """The partition directories ``depth`` levels below ``root``, as
+    ``SHOW PARTITIONS`` names them."""
+    dirs = root.glob("/".join(["*"] * depth))
+    return sorted(str(d.relative_to(root)) for d in dirs if d.is_dir())
+
+
+def _disk_rows(root: Path, columns: list[str]) -> Counter:
+    """The rows of a table's files as they lie on disk: each file's ids,
+    with the partition values its directories name."""
+    rows = Counter()
+    for leaf in _leaf_dirs(root, len(columns)):
+        spec = catalog.partition_spec(leaf, columns)
+        values = tuple(None if v == "__HIVE_DEFAULT_PARTITION__" else v for v in spec.values())
+        for f in (root / leaf).glob("*.parquet"):
+            rows.update((i, *values) for i in pq.read_table(f)["id"].to_pylist())
+    return rows
+
+
+def _follow_the_directories(spark, monkeypatch, src, trg, roots, columns, cached):
+    """Runs each partition op on ``src`` and ``trg`` and checks both
+    tables after it: the op synced each table it touched through the
+    targeted sync, which did not fail over to the full repair;
+    ``SHOW PARTITIONS`` lists exactly the partition directories on disk;
+    and a ``spark.table`` read returns the rows on disk — a fresh one,
+    or with ``cached`` one of ``trg`` cached by
+    ``spark.catalog.cacheTable``, which the sync must re-cache. The two
+    runs take the sync's two ways of refreshing a table."""
+    synced = []
+    real = catalog._sync_partitions
+
+    def sync(*args):
+        real(*args)  # a raise here would fall back to the full repair
+        synced.append(args[1])
+
+    monkeypatch.setattr(catalog, "_sync_partitions", sync)
+    spark.catalog.clearCache()  # so the uncached run refreshes without the CacheManager
+    if cached:
+        spark.catalog.cacheTable(trg)
+
+    def check(step, tables=()):
+        assert synced == list(tables), step
+        synced.clear()
+        for table, root in roots.items():
+            shown = sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect())
+            assert shown == _leaf_dirs(root, len(columns)), (step, table)
+            assert _rows(spark, table) == _disk_rows(root, columns), (step, table)
+
+    check("start")
+    promotor.copy_overwrite_partitions(spark, src, trg, ["a%3Ab", "x y"])
+    check("copy_overwrite_partitions", [trg])
+    promotor.move_table_partitions(spark, src, trg, ["x y"])
+    check("move_table_partitions", [src, trg])
+    assert not (roots[src] / "p=x y").exists()
+    promotor.copy_table_partitions(spark, src, trg, ["plain"])
+    check("copy_table_partitions", [trg])
+    promotor.delete_table_partitions(spark, trg, ["a%3Ab"])
+    check("delete_table_partitions", [trg])
+    promotor.delete_table_partitions(spark, src, ["plain"])
+    check("delete_table_partitions of the source", [src])
+    assert sorted(d.name for d in roots[src].iterdir() if d.is_dir()) == ["p=a%3Ab"]
+    if cached:
+        spark.catalog.uncacheTable(trg)
+
+
+def test_catalog_partitions_follow_the_directories(spark, escaped_tables, tmp_path, monkeypatch):
     """After each partition op, ``SHOW PARTITIONS`` on each table lists
     exactly its partition directories on disk: the sync drops the
     partitions whose directories went (the source of a move, a deleted
     or exchanged partition) as well as adding new ones, for ``%3A`` and
-    spaced values alike."""
+    spaced values alike, and reads see the files. On a table of two
+    partition columns, read through a cached target, a partition op
+    moves first-level directories: an exchanged one drops the target's
+    leaves the source does not have, and ``q`` values include ``%25``
+    and the null sentinel."""
     src, trg = escaped_tables
     roots = {src: tmp_path / "src tbl", trg: tmp_path / "trg tbl"}
-
-    def check(step):
-        for table, root in roots.items():
-            shown = sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect())
-            assert shown == sorted(d.name for d in root.iterdir() if d.is_dir()), (step, table)
-
-    promotor.copy_overwrite_partitions(spark, src, trg, ["a%3Ab", "x y"])
-    check("copy_overwrite_partitions")
-    promotor.move_table_partitions(spark, src, trg, ["x y"])
-    check("move_table_partitions")
-    assert not (roots[src] / "p=x y").exists()
-    promotor.delete_table_partitions(spark, trg, ["a%3Ab"])
-    check("delete_table_partitions")
-    promotor.delete_table_partitions(spark, src, ["plain"])
-    check("delete_table_partitions of the source")
-    assert sorted(d.name for d in roots[src].iterdir() if d.is_dir()) == ["p=a%3Ab"]
+    _follow_the_directories(spark, monkeypatch, src, trg, roots, ["p"], cached=False)
     assert _rows(spark, src) == Counter({(i, "a:b"): 1 for i in range(0, 30, 3)})
+
+    two = ("two_src", "two_trg")
+    roots = {two[0]: tmp_path / "two src", two[1]: tmp_path / "two trg"}
+    for name, loc in roots.items():
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        spark.sql(
+            f"CREATE TABLE {name} (id BIGINT, p STRING, q STRING) USING parquet "
+            f"PARTITIONED BY (p, q) LOCATION '{loc}'"
+        )
+    rows = [(i, ("a:b", "x y", "plain")[i % 3], ("1", "50%", None)[i % 4 % 3]) for i in range(30)]
+    spark.createDataFrame(rows, "id BIGINT, p STRING, q STRING").write.insertInto(two[0])
+    # a target leaf the source lacks, under a value the exchange replaces
+    stale = spark.createDataFrame([(99, "a:b", "stale")], "id BIGINT, p STRING, q STRING")
+    stale.write.insertInto(two[1])
+    try:
+        _follow_the_directories(spark, monkeypatch, *two, roots, ["p", "q"], cached=True)
+    finally:
+        for name in two:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_partition_ops_sync_without_a_spark_job(spark, tmp_path):
+    """On a table of 40 partitions, a partition move and a partition
+    exchange sync the catalog without a Spark job: the sync touches only
+    the partitions the op changed, while a repair lists all 40 in one
+    job."""
+    from tests.conftest import jobs_of
+
+    names = ("wide_src", "wide_trg")
+    for name in names:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        spark.sql(
+            f"CREATE TABLE {name} (id BIGINT, p STRING) USING parquet "
+            f"PARTITIONED BY (p) LOCATION '{tmp_path / name}'"
+        )
+    rows = spark.range(80).selectExpr("id", "lpad(cast(id % 40 as string), 2, '0') AS p")
+    rows.write.insertInto(names[0])
+    try:
+        _, jobs = jobs_of(spark, lambda: promotor.move_table_partitions(spark, *names, ["p=07"]))
+        assert jobs == []
+        assert len(spark.sql(f"SHOW PARTITIONS {names[0]}").collect()) == 39
+        # and back, as an exchange
+        back = (spark, names[1], names[0], ["p=07"])
+        _, jobs = jobs_of(spark, lambda: promotor.copy_overwrite_partitions(*back))
+        assert jobs == []
+        assert len(spark.sql(f"SHOW PARTITIONS {names[0]}").collect()) == 40
+        assert [r[0] for r in spark.sql(f"SHOW PARTITIONS {names[1]}").collect()] == ["p=07"]
+        assert spark.table(names[0]).count() == 80
+    finally:
+        for name in names:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_table_copy_with_escaped_values(spark, escaped_tables):

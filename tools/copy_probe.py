@@ -1,4 +1,5 @@
-"""Where a batch should run: the driver pool or a Spark job.
+"""Where a batch should run — the driver pool or a Spark job — and what
+a catalog sync costs.
 
 ``fs.distributed.map_partitions`` runs a batch on the driver when it
 moves fewer than ``DRIVER_COPY_BYTES`` and in a Spark job otherwise;
@@ -19,6 +20,15 @@ modes:
   point per process for a growth figure that earlier points' freed
   memory does not hide.
 
+- ``sync``: builds a table of ``--partitions`` partitions of one row
+  each, then times ``catalog.refresh_metadata`` both ways on it: the
+  full repair (no partitions named) and the targeted sync, its calls
+  alternately dropping one partition and adding it back: the source's
+  and the target's halves of a partition move. A point reports each way's median process-tree CPU and
+  wall milliseconds per call over ``--repeats`` rounds of ``--calls``
+  calls, after ``--calls`` warm-up calls, and the Spark jobs one call
+  launches.
+
 Each path is forced by setting the limit to either side. A point
 reports the median process-tree CPU (driver, JVM and Python workers;
 see ``perfbench/trace.py::tree_cpu_s``) and wall time of ``--repeats``
@@ -29,14 +39,17 @@ runs after one warm-up run. The Spark path runs ``--tasks`` tasks
 Run: python tools/copy_probe.py [--mode copy|compact]
      [--sizes-kb 4,64,1024,4096,20480] [--totals-mb 8,32,64,128,256]
      [--repeats 3]
+     python tools/copy_probe.py --mode sync [--partitions 4,40,400]
+     [--repeats 3] [--calls 20]
 Prints one JSON line per point. Measured numbers live in SCALE.md
-("Copies on the driver or in a Spark job").
+("Copies on the driver or in a Spark job", "Catalog sync").
 """
 
 from __future__ import annotations
 
 import argparse
 import contextlib
+import itertools
 import json
 import os
 import shutil
@@ -53,7 +66,7 @@ sys.path.insert(0, str(ROOT))
 import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 
-from octopufs_spark import compact  # noqa: E402
+from octopufs_spark import catalog, compact  # noqa: E402
 from octopufs_spark.fs import distributed  # noqa: E402
 from octopufs_spark.fs.model import Paths  # noqa: E402
 from perfbench.trace import tree_cpu_s  # noqa: E402
@@ -203,20 +216,89 @@ def sweep(
         shutil.rmtree(work, ignore_errors=True)
 
 
+def _per_call(fn, calls: int) -> tuple[float, float]:
+    """(process-tree CPU ms, wall ms) per call of ``fn`` over ``calls``
+    calls: one call is below the CPU clock's 10 ms resolution."""
+    cpu0, t0 = tree_cpu_s(), time.perf_counter()
+    for _ in range(calls):
+        fn()
+    return (tree_cpu_s() - cpu0) * 1000 / calls, (time.perf_counter() - t0) * 1000 / calls
+
+
+def _jobs(spark, fn) -> int:
+    """The Spark jobs one ``fn()`` launches."""
+    sc, group = spark.sparkContext, f"copy_probe_{time.monotonic_ns()}"
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def sync_sweep(
+    spark, partitions: list[int], repeats: int = 3, calls: int = 20, work: str | None = None
+):
+    """Yields one record per partition count: the full repair's and the
+    targeted sync's CPU and wall milliseconds per ``refresh_metadata``
+    call (medians of ``repeats`` rounds), and the Spark jobs of one."""
+    table = "copy_probe_sync"
+    work = tempfile.mkdtemp(prefix="copy_probe_", dir=work)
+    try:
+        for n in partitions:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
+            spark.sql(
+                f"CREATE TABLE {table} (id BIGINT, p STRING) USING parquet "
+                f"PARTITIONED BY (p) LOCATION '{work}/t{n}'"
+            )
+            rows = spark.range(n).selectExpr("id", "lpad(cast(id as string), 4, '0') AS p")
+            rows.write.insertInto(table)
+            meta = catalog.catalog_table(spark, table)
+            folder = catalog.get_table_l1_partition_paths(spark, table, meta)[0]
+            ways = {
+                "full": lambda: catalog.refresh_metadata(spark, table, meta=meta),  # noqa: B023
+                "sync": lambda: catalog.refresh_metadata(
+                    spark, table, meta=meta, **next(turns)  # noqa: B023
+                ),
+            }
+            turns = itertools.cycle(({"dropped": [folder]}, {"added": [folder]}))
+            rec: dict = {"mode": "sync", "partitions": n}
+            for way, fn in ways.items():
+                _per_call(fn, calls)  # warm-up
+                runs = [_per_call(fn, calls) for _ in range(repeats)]
+                rec[f"{way}_cpu_ms"] = round(statistics.median(c for c, _ in runs), 2)
+                rec[f"{way}_wall_ms"] = round(statistics.median(w for _, w in runs), 2)
+                rec[f"{way}_jobs"] = _jobs(spark, fn)
+            catalog.refresh_metadata(spark, table, added=[folder], meta=meta)  # if last dropped
+            assert len(spark.sql(f"SHOW PARTITIONS {table}").collect()) == n
+            spark.sql(f"DROP TABLE {table}")
+            yield rec
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def main(argv=None) -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--mode", choices=("copy", "compact"), default="copy")
+    ap.add_argument("--mode", choices=("copy", "compact", "sync"), default="copy")
     ap.add_argument("--sizes-kb", default="4,64,1024,4096,20480")
     ap.add_argument("--totals-mb", default="8,32,64,128,256")
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--tasks", type=int, default=None)
     ap.add_argument("--max-files", type=int, default=4096)
+    ap.add_argument("--partitions", default="4,40,400")
+    ap.add_argument("--calls", type=int, default=20)
     args = ap.parse_args(argv)
 
     from octopufs_spark.session import get_spark
 
     spark = get_spark("copy_probe")
     spark.sparkContext.setLogLevel("ERROR")
+    if args.mode == "sync":
+        partitions = [int(n) for n in args.partitions.split(",")]
+        for rec in sync_sweep(spark, partitions, args.repeats, args.calls):
+            print(json.dumps(rec), flush=True)
+        return
     for rec in sweep(
         spark,
         [int(kb) * 1024 for kb in args.sizes_kb.split(",")],
